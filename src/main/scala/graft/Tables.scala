@@ -11,89 +11,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * with predicate pushdown + column pruning handled by Catalyst).
   */
 object Tables {
-  /** Per-session memo of resolved table frames. A fresh `spark.read.parquet`
-    * re-lists the directory and re-reads footers for schema on every call —
-    * ~0.1–0.25 s per query at bench SF, and at cluster scale an object-store
-    * LIST per query. The testdata is immutable within a session, so the
-    * resolved DataFrame (immutable logical plan) is shared. Weak session
-    * keys: stopped test sessions don't pin their plans.
+  /** Per-session memo of resolved table frames (and of [[InputScale]]'s
+    * decisions). A fresh `spark.read.parquet` re-lists the directory and
+    * re-reads footers for schema on every call — ~0.1–0.25 s per query at
+    * bench SF, and at cluster scale an object-store LIST per query. The
+    * testdata is immutable within a session, so the resolved DataFrame
+    * (immutable logical plan) is shared. Weak session keys: stopped test
+    * sessions don't pin their plans.
     */
-  private val frames =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  private val memos =
+    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, AnyRef]]()
 
-  /** Scan-parallelism floor (r13, re-scoped r14): a parquet file smaller
-    * than `spark.sql.files.maxPartitionBytes` scans as ONE partition — and
-    * because a single small file is also a single row group, raising
-    * `minPartitionNum` would only mint empty splits. Below the floor the
-    * `*Spread` table variants re-spread the scan over the default
-    * parallelism, hash-partitioned on the PRIMARY KEY (deterministic
-    * row→partition assignment — no round-robin, so retries and
-    * engine-compare hashes are unaffected). Data-derived: at any real scale
-    * the scan has more splits than cores and the floor never fires.
-    *
-    * r14 re-scope: in r13 the floor was baked into the ONE memoized frame
-    * per table, which made it a per-query tax once Bench stopped pre-caching
-    * base tables (every consumer execution re-paid the full-table shuffle —
-    * the r13 ADVICE replay-cost note). Measured at sf0.1 local[32] idle,
-    * floor-everywhere vs floor-nowhere was 76.9 s vs 73.4 s with a clean
-    * per-query split: heavy per-row consumers (MinHash shingling, span
-    * grams, PII regexes, quality metrics, rollup decimal aggregation) keep
-    * 0.2–0.9 s/query wins from the spread (c2 +0.86, v2 +0.59, u6 +0.56,
-    * t16 +0.54, u7/t1/c1/d11/d5/q2 +0.2–0.46), while aggregate-first and
-    * light consumers lose 0.13–0.35 s/query paying a shuffle their map-side
-    * partial aggregation never needed (a-family, q3/q6, t4/t15/t17/t19,
-    * j-family). So the floor is now OPT-IN PER CALL SITE: `documents()` /
-    * `lineitem()` / `orders()` return the bare scan; `documentsSpread()` /
-    * `lineitemSpread()` / `ordersSpread()` apply the floor, and only the
-    * measured-heavy call sites use them. events/embeddings/customer stay
-    * raw-only (floored and measured out in r13: s5 +0.76 s, s7 +0.73 s).
-    */
-  private val scanFloorKeys = Map(
-    "documents" -> Seq("doc_id"),
-    "lineitem" -> Seq("l_orderkey", "l_linenumber"),
-    "orders" -> Seq("o_orderkey"))
+  /** The value memoized under `key` for session `s`, computing it with `f`
+    * on a miss. `f` may itself memoize (get + putIfAbsent, not
+    * computeIfAbsent); a racing second computation loses to the first. */
+  private[graft] def memo[T <: AnyRef](s: SparkSession, key: String)(f: => T): T = {
+    val perSession = memos.synchronized {
+      memos.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap[String, AnyRef]())
+    }
+    Option(perSession.get(key)).getOrElse {
+      val fresh = f
+      Option(perSession.putIfAbsent(key, fresh)).getOrElse(fresh)
+    }.asInstanceOf[T]
+  }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    resolve(spark, sfDir, name, spread = false)
+    memo(spark, s"$sfDir/$name")(spark.read.parquet(s"$sfDir/$name.parquet"))
 
-  private def resolve(spark: SparkSession, sfDir: String, name: String,
-      spread: Boolean): DataFrame = {
-    val perSession = frames.synchronized {
-      var m = frames.get(spark)
-      if (m == null) { m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame](); frames.put(spark, m) }
-      m
-    }
-    val key = if (spread) s"$sfDir/$name!spread" else s"$sfDir/$name"
-    perSession.computeIfAbsent(key, { _ =>
-      import org.apache.spark.sql.functions.col
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
-      scanFloorKeys.get(name).filter(_ => spread) match {
-        case Some(pk) =>
-          // full session width: a half-width variant was measured (16 at
-          // local[32]) and lost more on the heavy consumers (c2 +0.17 s,
-          // t20 +0.36 s, q1/q2 +0.11 s) than it saved on the trivial ones
-          val target = spark.sparkContext.defaultParallelism
-          val scanParts = raw.rdd.getNumPartitions
-          if (sys.props.get("graft.scanfloor").contains("off")) raw
-          else if (scanParts * 2 <= target) {
-            // r14 (verdict #6): the guard's decision is LOGGED once per
-            // (session, table) so every rung drive records whether the
-            // floor fired — the "never flips at scale" claim is checkable
-            // from any Verify/ScaleProbe log instead of re-derived.
-            System.err.println(
-              s"[tables] scan floor FIRED for $name: $scanParts scan partition(s) " +
-                s"re-spread to $target (defaultParallelism)")
-            raw.repartition(target, pk.map(col): _*)
-          } else {
-            System.err.println(
-              s"[tables] scan floor idle for $name: $scanParts scan partition(s) " +
-                s">= half of $target cores")
-            raw
-          }
-        case None => raw
-      }
-    })
-  }
+  /** A table under [[InputScale.spread]]'s scan floor (its own read, so a
+    * plan holding both variants keeps distinct attribute ids). */
+  private def spread(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    memo(spark, s"$sfDir/$name!spread")(
+      InputScale.spread(spark, sfDir, name, spark.read.parquet(s"$sfDir/$name.parquet")))
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -140,11 +89,11 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
   /** Scan-floor variants — opt-in for call sites whose pre-shuffle per-row
-    * work is heavy enough to repay the re-spread (see the floor doc above).
+    * work is heavy enough to repay the re-spread ([[InputScale.spread]]).
     * Identical rows; only the scan-side partitioning differs below the
     * floor. At scale these are the same bare scan as the raw accessors.
     */
-  def documentsSpread(s: SparkSession, d: String): DataFrame = resolve(s, d, "documents", spread = true)
-  def lineitemSpread(s: SparkSession, d: String): DataFrame  = resolve(s, d, "lineitem", spread = true)
-  def ordersSpread(s: SparkSession, d: String): DataFrame    = resolve(s, d, "orders", spread = true)
+  def documentsSpread(s: SparkSession, d: String): DataFrame = spread(s, d, "documents")
+  def lineitemSpread(s: SparkSession, d: String): DataFrame  = spread(s, d, "lineitem")
+  def ordersSpread(s: SparkSession, d: String): DataFrame    = spread(s, d, "orders")
 }

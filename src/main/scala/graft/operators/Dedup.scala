@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{InputScale, Tables}
 
 /** Deduplication operator family for the training-data pipeline: exact
   * (hash-groupBy), MinHash signatures + LSH banding, SimHash, token-n-gram
@@ -140,38 +140,9 @@ object Dedup {
       // stage-jobs that each recompute the full MinHash pass (measured at
       // sf1: four parallel 5.4 s jobs splitting the cores). One blocking
       // materialization serves every subsequent scan from memory.
-      docCounts((s, d)) = out.count()
+      out.count()
       out
     }
-
-  /** Corpus row count as observed by the [[lshSigs]] eager materialization —
-    * the data-derived input for [[withSmallBuildPlanner]]. */
-  private val docCounts =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), Long]()
-
-  /** Below this corpus size the LSH-family artifact builds run with AQE
-    * disabled. AQE's value — post-shuffle coalescing, skew-join splitting —
-    * applies to multi-GB shuffle stages; on the KB-sized stages of a
-    * small-corpus build its per-stage re-planning IS the dominant cost
-    * (measured at sf0.1: ~0.6 s across the d9 chain). 1M docs ≈ hundreds of
-    * MB of text — well below where AQE starts paying for itself here. */
-  private val AqeFloorDocs = 1000000L
-
-  /** Data-derived planner mode for artifact builds — see [[BuildPlanner]]
-    * for the rationale and safety notes; the floor input here is the corpus
-    * row count the lshSigs materialization observed.
-    */
-  private def withSmallBuildPlanner[T](s: SparkSession, d: String)(f: => T): T = {
-    val small = docCounts.get((s, d)).exists(_ < AqeFloorDocs)
-    // stacked with an 8-partition shuffle override below the same floor
-    // (r13 optimization): the d9 chain's build stages (band prune, pair
-    // distinct, label-propagation rounds) are KB-sized at small corpus
-    // sizes, so 32-task shuffle floors dominate their wall; restored in
-    // finally, never flips at scale (same pattern as the v3/v7 twin builds)
-    BuildPlanner.withAqeOffWhen(s, small) {
-      BuildPlanner.withShufflePartitionsWhen(s, small, 8)(f)
-    }
-  }
 
   /** Exploded (doc_id, band_idx, band_hash) with degenerate buckets pruned:
     * only buckets of 2..LshMaxBucket members enter the self-join (singletons
@@ -237,8 +208,8 @@ object Dedup {
     */
   private[graft] def scoredPairs(s: SparkSession, d: String): DataFrame =
     ArtifactCache.getOrElseUpdate("dedup.scoredPairs", s, d) {
-      val sigs = lshSigs(s, d) // populates docCounts before the planner gate
-      withSmallBuildPlanner(s, d) {
+      val sigs = lshSigs(s, d)
+      InputScale.withSmallBuild(s, InputScale.smallDocs(s, d)) {
         // bandsDir mode: the exploded band table is the BUCKETED artifact —
         // hash-clustered on the band key, so the prune aggregate, the keep
         // join and the pair self-join all plan with ZERO exchange (the
@@ -682,7 +653,7 @@ object Dedup {
   private[graft] def componentLabels(s: SparkSession, d: String): DataFrame =
     ArtifactCache.getOrElseUpdate("d9_components", s, d) {
       val labels = dupLabels(s, d).select("doc_id", "label")
-      withSmallBuildPlanner(s, d) {
+      InputScale.withSmallBuild(s, InputScale.smallDocs(s, d)) {
       val quality = TextOps.qualityFrame(s, d).select("doc_id", "quality")
       // canonical = argmax(quality, min-doc_id tiebreak) per component via a
       // partial-aggregated max_by over the DUP SUBGRAPH ONLY (labels covers
@@ -718,10 +689,8 @@ object Dedup {
     */
   private[graft] def dupLabels(s: SparkSession, d: String): DataFrame =
     ArtifactCache.getOrElseUpdate("d9_dupLabels", s, d) {
-      // scoredPairs (built first, inside the loop's edge set) populates
-      // docCounts, so the planner gate sees the corpus size
       val pairs = scoredPairs(s, d)
-      withSmallBuildPlanner(s, d) { dupLabelsBuild(pairs) }
+      InputScale.withSmallBuild(s, InputScale.smallDocs(s, d)) { dupLabelsBuild(pairs) }
     }
 
   private def dupLabelsBuild(pairs: DataFrame): DataFrame = {

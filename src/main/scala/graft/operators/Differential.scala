@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{InputScale, Tables}
 
 /** DIFFERENTIAL verification surface (round 10): second, algorithmically
   * different implementations of the chains whose DuckDB oracles are
@@ -175,13 +175,11 @@ object Differential {
       val dupPairs = Dedup.scoredPairs(s, d)
         .where(col("est_jaccard") >= 0.7)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val nEdges = dupPairs.count()
-      // below the floor the star rounds' stages are KB-sized: both AQE
-      // re-planning AND 32-task shuffle floors dominate (same regime as the
-      // v9/v10 degree build below) — drop to 8 shuffle partitions for the
-      // build, restored after; at scale neither conf flips
-      BuildPlanner.withAqeOffWhen(s, nEdges < 10000000L) {
-      BuildPlanner.withShufflePartitionsWhen(s, nEdges < 10000000L, 8) {
+      // on a small corpus the star rounds' stages are KB-sized: both AQE
+      // re-planning AND 32-task shuffle floors dominate — the same gate and
+      // regime as the shipped chain's builds (Dedup.componentLabels);
+      // at scale neither conf flips
+      InputScale.withSmallBuild(s, InputScale.smallDocs(s, d)) {
         val labels = twoStarLabels(dupPairs)
         val quality = TextOps.qualityFrame(s, d).select("doc_id", "quality")
         // canonical = rank-1 of (quality DESC, doc_id ASC) per component —
@@ -203,7 +201,6 @@ object Differential {
           .cache()
         out.count()
         out
-      }
       }
     }
 
@@ -447,10 +444,7 @@ object Differential {
     // both AQE re-planning AND 32-task floors dominate its KB-sized stages,
     // so the build also drops to 8 shuffle partitions (restored after —
     // never flips at scale, where the session's sizing applies)
-    val recon = Similarity.withSmallBuild(s, d) {
-      BuildPlanner.withShufflePartitionsWhen(s, Similarity.smallVecs(s, d), 8)(
-        altRecon(s, d))
-    }
+    val recon = InputScale.withSmallBuild(s, InputScale.smallVecs(s, d))(altRecon(s, d))
     val e = Similarity.vecsD(s, d)
     val cents = altCents(s, d)
     val probeW = Window.partitionBy("vec_id").orderBy(col("dist2"), col("cid"))
@@ -708,24 +702,22 @@ object Differential {
     */
   private[graft] def altFinalAssign(s: SparkSession, d: String): DataFrame =
     ArtifactCache.getOrElseUpdate("diff.kmeans", s, d) {
-      Similarity.withSmallBuild(s, d) {
-        BuildPlanner.withShufflePartitionsWhen(s, Similarity.smallVecs(s, d), 8) {
-          graft.functions.VectorFunctions.register(s)
-          val vecs = Tables.embeddings(s, d)
-            .select(col("vec_id"),
-              expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-          val cents0 = vecs.orderBy("vec_id").limit(Clustering.K)
-            .select(col("vec_id").as("cid"), col("v").as("c"))
-          val cents = kmeansAlt(vecs, cents0, Clustering.Iters)
-          val out = vecs.crossJoin(broadcast(cents))
-            .withColumn("dist2", dist2Col)
-            .groupBy("vec_id")
-            .agg(min(struct(col("dist2"), col("cid"))).as("m"))
-            .select(col("vec_id"), col("m.cid").as("cid"), col("m.dist2").as("dist2"))
-            .cache()
-          out.count()
-          out
-        }
+      InputScale.withSmallBuild(s, InputScale.smallVecs(s, d)) {
+        graft.functions.VectorFunctions.register(s)
+        val vecs = Tables.embeddings(s, d)
+          .select(col("vec_id"),
+            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+        val cents0 = vecs.orderBy("vec_id").limit(Clustering.K)
+          .select(col("vec_id").as("cid"), col("v").as("c"))
+        val cents = kmeansAlt(vecs, cents0, Clustering.Iters)
+        val out = vecs.crossJoin(broadcast(cents))
+          .withColumn("dist2", dist2Col)
+          .groupBy("vec_id")
+          .agg(min(struct(col("dist2"), col("cid"))).as("m"))
+          .select(col("vec_id"), col("m.cid").as("cid"), col("m.dist2").as("dist2"))
+          .cache()
+        out.count()
+        out
       }
     }
 
@@ -832,14 +824,11 @@ object Differential {
         if (weighted) "diff.graphWdeg" else "diff.graphDeg", s, d) {
       altDeg(pairs, weighted).localCheckpoint()
     }
-    val meta = deg.agg(count(lit(1)), sum(col("outdeg"))).first()
-    val nNodes = meta.getLong(0)
-    // each undirected pair carries two directed edges; in weighted mode
-    // outdeg sums cents, so derive the edge count from the pair frame
-    val nEdges = if (weighted) 2L * pairs.count() else meta.getLong(1)
+    val nNodes = deg.count()
     val tele = (PrScale / nNodes * 15L) / 100L
-    BuildPlanner.withAqeOffWhen(s, nEdges < 10000000L) {
-    BuildPlanner.withShufflePartitionsWhen(s, nEdges < 10000000L, 8) {
+    // the same trade-graph gate as GraphOps' edge build, from lineitem
+    val small = InputScale.smallTradeGraph(s, d)
+    InputScale.withSmallBuild(s, small) {
       var (r, release) = checkpointTracked(
         deg.select(col("node"), col("outdeg"), lit(PrScale / nNodes).as("r")))
       for (_ <- 1 to PrIters) {
@@ -879,11 +868,10 @@ object Differential {
         // their files free only after a driver GC collects the dead
         // dependencies — sweep NOW instead of waiting for the periodic
         // timer (the sf300 envelope died twice on accumulated rounds)
-        if (nEdges >= 10000000L) System.gc()
+        if (!small) System.gc()
         r = next; release = releaseNext
       }
       r.select("node", "r")
-    }
     }
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{InputScale, Tables}
 
 /** Graph analytics beyond connected components (d9): PageRank over the
   * customer-supplier transaction graph — the link-analysis quality signal a
@@ -123,12 +123,6 @@ object GraphOps {
   private def rankJoin(edges: DataFrame, shares: DataFrame, bcast: Boolean): DataFrame =
     if (bcast) edges.join(broadcast(shares), "src")
     else edges.join(shares.hint("shuffle_hash"), "src")
-
-  /** Below this edge count the fixed-point loops run AQE-off (see
-    * BuildPlanner): each round is a broadcast + one aggregate over KB-sized
-    * frames, and per-round re-planning dominates; at scale (where a round
-    * shuffles real volume) the conf never flips. */
-  private val AqeFloorEdges = 10000000L
 
   /** Edge-artifact row count above which the bucketed build pauses between
     * its two table-sized write passes for a ContextCleaner sweep (the
@@ -283,24 +277,13 @@ object GraphOps {
     s.table(EdgesTable)
   }
 
-  /** Corpus-size gate for the graph ARTIFACT builds (r14, verdict #4):
-    * lineitem rows upper-bound the distinct trading pairs, so
-    * 2 * |lineitem| < AqeFloorEdges certifies the bidirected edge count is
-    * below the floor BEFORE any graph artifact exists. One memoized count
-    * per (session, dir) — at bench SF it gates the pair/degree/edge build
-    * shuffles down to 8 partitions (the same width the rank rounds already
-    * use, so the 8-partition cached artifacts cost their consumers
-    * nothing); at any real scale the gate never fires and the builds run at
-    * session width exactly as before.
-    */
-  private val lineitemCounts =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), Long]()
-  private def smallGraph(s: SparkSession, d: String): Boolean =
-    2 * lineitemCounts.getOrElseUpdate((s, d),
-      graft.Tables.lineitem(s, d).count()) < AqeFloorEdges
-
+  /** Below [[InputScale.smallTradeGraph]] (decided from lineitem, before
+    * any graph artifact exists) the pair/degree/edge build shuffles run at
+    * 8 partitions — the width the rank rounds already use, so the
+    * 8-partition cached artifacts cost their consumers nothing (r14). */
   private def builtEdges(s: SparkSession, d: String): DataFrame =
-    BuildPlanner.withShufflePartitionsWhen(s, smallGraph(s, d), 8) {
+    InputScale.withShufflePartitionsWhen(s, InputScale.smallTradeGraph(s, d),
+        InputScale.SmallBuildPartitions) {
       val pairs = weightedPairs(s, d)
       val deg = jointDeg(s, d)
       // ONE eager action replaces round 7's pairs.count() + deg.count()
@@ -339,7 +322,7 @@ object GraphOps {
             .coalesce(edgePartitions(s, nEdges))
         } else bidir.repartition(edgePartitions(s, nEdges), col("src"))
       edges.cache()
-    } // end withShufflePartitionsWhen (smallGraph gate)
+    } // end withShufflePartitionsWhen (smallTradeGraph gate)
 
   private def unweightedGraph(s: SparkSession, d: String): Graph = {
     // Integer node ids (custkey*2 / suppkey*2+1) keep every iteration's
@@ -437,12 +420,10 @@ object GraphOps {
     // The loop output is checkpointed, never cached, so the conf flip
     // cannot interact with CacheManager substitution (see
     // TextOps.withSmallTextBuild for that hazard).
-    BuildPlanner.withAqeOffWhen(s, g.nEdges < AqeFloorEdges) {
-      BuildPlanner.withShufflePartitionsWhen(s, g.nEdges < AqeFloorEdges, 8) {
-        var r = prInit(g)
-        for (_ <- 1 to Iters) r = prRound(g, r)
-        r.select("node", "r")
-      }
+    InputScale.withSmallBuild(s, InputScale.smallGraph(g.nEdges)) {
+      var r = prInit(g)
+      for (_ <- 1 to Iters) r = prRound(g, r)
+      r.select("node", "r")
     }
   }
 
@@ -466,7 +447,7 @@ object GraphOps {
   def pageRankConverged(s: SparkSession, d: String, epsFp: Long = 1000L,
       maxIters: Int = 200): (DataFrame, Int) = {
     val g = unweightedGraph(s, d)
-    BuildPlanner.withAqeOffWhen(s, g.nEdges < AqeFloorEdges) {
+    InputScale.withAqeOffWhen(s, InputScale.smallGraph(g.nEdges)) {
     var r = prInit(g)
     var iters = 0
     var delta = Long.MaxValue
@@ -650,8 +631,7 @@ object GraphOps {
     val edges = if (bcast) joint.select("src", "dst", "w", "dst_wout")
                 else joint.select("src", "dst", "w")
     // 8-partition override below the edge floor — see n1RankFrame
-    BuildPlanner.withAqeOffWhen(s, nEdges < AqeFloorEdges) {
-    BuildPlanner.withShufflePartitionsWhen(s, nEdges < AqeFloorEdges, 8) {
+    InputScale.withSmallBuild(s, InputScale.smallGraph(nEdges)) {
     var r = deg.select(col("node"), col("wout"),
       lit(Scale / nNodes).as("r")).localCheckpoint()
     for (_ <- 1 to Iters) {
@@ -672,7 +652,6 @@ object GraphOps {
         .localCheckpoint()
     }
     r.select("node", "r")
-    }
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{InputScale, Tables}
 
 /** Similarity search over the embedding column (training-data surface):
   *
@@ -40,27 +40,16 @@ object Similarity {
   private[operators] val LshMaxBits = 24
   private[operators] val LshTargetBucket = 32
 
-  /** Corpus size memo for [[withSmallBuild]] — one count per (session,
-    * dir); the embeddings frame is session-cached in Bench, so this is a
-    * cached-scan count there and a single cheap parquet count elsewhere. */
-  private val vecCounts =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), Long]()
-  private val AqeFloorVecs = 1000000L
-
-  /** Data-derived AQE gate for the trained-artifact builds (see
-    * [[BuildPlanner]]): below [[AqeFloorVecs]] vectors the quantizer /
-    * ranking builds run AQE-off — their stages are KB-sized and per-stage
-    * re-planning dominates; at scale the conf never flips. */
-  private[operators] def smallVecs(s: SparkSession, d: String): Boolean =
-    vecCounts.getOrElseUpdate((s, d), Tables.embeddings(s, d).count()) < AqeFloorVecs
-
-  // NOTE (r13 optimization round): an 8-partition shuffle override stacked
-  // here was MEASURED and reverted — quantizer-build time was flat (the
-  // builds are vector-compute-bound, not task-floor-bound) while consumers
-  // of the 8-partition cached artifacts lost scan parallelism (s2 +0.15 s,
-  // s6 +0.25 s, d8 +0.31 s at sf0.1 local[32]).
+  /** AQE-off below [[graft.InputScale.TableRowFloor]] vectors for the
+    * trained-artifact builds: their stages are KB-sized and per-stage
+    * re-planning dominates; at scale the conf never flips. An 8-partition
+    * shuffle override stacked here was MEASURED and reverted (r13):
+    * quantizer-build time was flat (the builds are vector-compute-bound,
+    * not task-floor-bound) while consumers of the 8-partition cached
+    * artifacts lost scan parallelism (s2 +0.15 s, s6 +0.25 s, d8 +0.31 s at
+    * sf0.1 local[32]). */
   private[operators] def withSmallBuild[T](s: SparkSession, d: String)(f: => T): T =
-    BuildPlanner.withAqeOffWhen(s, smallVecs(s, d))(f)
+    InputScale.withAqeOffWhen(s, InputScale.smallVecs(s, d))(f)
 
   private[operators] def vecsD(s: SparkSession, d: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.Tables
+import graft.{InputScale, Tables}
 
 /** Text-analysis operators for the training-data pipeline surface
   * (BASELINE.json north star): token counting, quality scoring, language-ID
@@ -1287,33 +1287,19 @@ object TextOps {
         posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "word")))
       .where(col("word") =!= "")
 
-  /** Corpus-size memo for the text-family build gates — one count per
-    * (session, dir), a cached-scan count under Bench (documents is
-    * session-cached there) and a single parquet count elsewhere. Same
-    * data-derived smallness contract as [[Similarity.smallVecs]] /
-    * `Dedup.withSmallBuildPlanner`: below the floor the BPE build chain's
-    * stages are KB-sized and AQE re-planning + full-width task floors
-    * dominate; at scale neither conf ever flips. */
-  private val corpusCounts =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), Long]()
-  private val SmallCorpusFloorDocs = 1000000L
-  private[operators] def smallCorpus(s: SparkSession, d: String): Boolean =
-    corpusCounts.getOrElseUpdate((s, d),
-      Tables.documents(s, d).count()) < SmallCorpusFloorDocs
-
-  /** 8 shuffle partitions for small-corpus text artifact builds (see
-    * [[BuildPlanner]] for the restore-in-finally contract). Deliberately
-    * does NOT flip AQE off: caching a frame while
+  /** 8 shuffle partitions for text artifact builds below
+    * [[graft.InputScale.TableRowFloor]] documents, where the BPE build
+    * chain's stages are KB-sized and full-width task floors dominate.
+    * Deliberately does NOT flip AQE off: caching a frame while
     * `spark.sql.adaptive.enabled` differs from the consumer's session value
     * breaks CacheManager substitution for that entry (measured r13: v6's
     * warm plan re-derived the whole diff.docIdSeqs subtree live — 5→9
     * shuffles +1 BNLJ — when the build ran AQE-off under an AQE-on session;
     * partitions-only keeps the substitution AND removes the 32-task floors,
     * which were the dominant cost). */
-  private[operators] def withSmallTextBuild[T](s: SparkSession, d: String)(f: => T): T = {
-    val small = smallCorpus(s, d)
-    BuildPlanner.withShufflePartitionsWhen(s, small, 8)(f)
-  }
+  private[operators] def withSmallTextBuild[T](s: SparkSession, d: String)(f: => T): T =
+    InputScale.withShufflePartitionsWhen(s, InputScale.smallDocs(s, d),
+      InputScale.SmallBuildPartitions)(f)
 
   private[graft] val seq0Expr = expr(
     s"substring(regexp_replace(word, '(.)', '$$1$BpeSep'), 1, 2 * length(word) - 1)")

@@ -55,6 +55,20 @@ class TablesSpec extends AnyFunSuite {
     assert(e1.schema.fieldNames.contains("ts"))
   }
 
+  test("events.event_id has no nulls at every local scale") {
+    val scales = Seq("sf0.001", "sf0.01", "sf0.1").map(sf => s"/root/testdata/$sf")
+      .filter(d => new java.io.File(s"$d/events.parquet").exists())
+    assume(scales.nonEmpty)
+    for (d <- scales) {
+      val nulls = Tables.events(spark, d).where(col("event_id").isNull).count()
+      assert(nulls == 0,
+        s"$d: $nulls events with a null event_id. r2_ewma's closed-form wsum " +
+          "(StreamingOps.r2Ewma: 2^20 - 2^(20 - min(rn, 20))) counts the present lags " +
+          "by row_number and equals the oracle's lag(event_id, j)-based weight sum " +
+          "only while event_id is never null")
+    }
+  }
+
   test("Tables.events round-trips an NTZ-encoded parquet (current corpora)") {
     import spark.implicits._
     import org.apache.spark.sql.types._

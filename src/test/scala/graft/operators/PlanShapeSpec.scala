@@ -29,9 +29,11 @@ class PlanShapeSpec extends AnyFunSuite {
     * exist to catch — would have been invisible): an explicit repartition
     * sitting directly over a bare base-table file scan (no exchange, join
     * or aggregate below it), hash-keyed on one of the floored tables'
-    * primary keys. Anything else — including a future operator repartition
-    * on its own key — counts as a real exchange again. */
-  private val floorKeys = Set("doc_id", "l_orderkey", "l_linenumber", "o_orderkey")
+    * primary keys ([[graft.InputScale.ScanFloorKeys]]) into exactly the
+    * default parallelism (the floor always re-spreads to session width).
+    * Anything else — including a future operator repartition on its own
+    * key — counts as a real exchange again. */
+  private val floorKeys = graft.InputScale.ScanFloorKeys.values.flatten.toSet
   private def isScanFloor(p: org.apache.spark.sql.execution.SparkPlan): Boolean = {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.FileSourceScanExec
@@ -40,11 +42,13 @@ class PlanShapeSpec extends AnyFunSuite {
       case e: ShuffleExchangeExec
           if e.shuffleOrigin == REPARTITION_BY_NUM || e.shuffleOrigin == REPARTITION_BY_COL =>
         val keysOk = e.outputPartitioning match {
-          case h: HashPartitioning => h.expressions.forall {
-            case a: org.apache.spark.sql.catalyst.expressions.Attribute =>
-              floorKeys(a.name)
-            case _ => false
-          }
+          case h: HashPartitioning =>
+            h.numPartitions == spark.sparkContext.defaultParallelism &&
+              h.expressions.forall {
+                case a: org.apache.spark.sql.catalyst.expressions.Attribute =>
+                  floorKeys(a.name)
+                case _ => false
+              }
           case _ => false
         }
         val below = graft.tools.PlanAudit.liveNodes(e.child)

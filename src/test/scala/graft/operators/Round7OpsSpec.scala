@@ -163,23 +163,4 @@ class Round7OpsSpec extends AnyFunSuite {
     // self-pairs agree on every position
     rows.filter(r => r.get(2) == r.get(3)).foreach(r => assert(r.getInt(0) === 64))
   }
-
-  test("BuildPlanner restores the session's AQE conf after a gated build") {
-    val k = "spark.sql.adaptive.enabled"
-    val before = spark.conf.get(k)
-    // sf0.001 is far below every family floor, so these builds run gated
-    ArtifactCache.invalidateAll()
-    Dedup.componentLabels(spark, sf).count()
-    assert(spark.conf.get(k) == before, "conf leaked after a successful build")
-    // and the off-state is genuinely applied inside the gate
-    var seen: String = null
-    BuildPlanner.withAqeOffWhen(spark, small = true) { seen = spark.conf.get(k) }
-    assert(seen == "false")
-    assert(spark.conf.get(k) == before)
-    // failure path restores too
-    intercept[RuntimeException] {
-      BuildPlanner.withAqeOffWhen(spark, small = true)(throw new RuntimeException("boom"))
-    }
-    assert(spark.conf.get(k) == before)
-  }
 }
