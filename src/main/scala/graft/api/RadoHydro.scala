@@ -1,5 +1,7 @@
 package graft.api
 
+import java.io.InputStream
+import java.nio.charset.StandardCharsets.US_ASCII
 import java.sql.Timestamp
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
@@ -19,8 +21,12 @@ import graft.ingest.{Archives, AsciiGrid, GeoTiff, Regnie, Shp}
   *     -> groupBy(basinID, ts) weighted sum -> sinks
   *
   * The clip window is computed once from the first grid's header + basin
-  * bounds (reference X9/X1) and pushed into the parser as a row/col range, so
-  * tasks never materialize full 900x900 grids. The basin dimension is read
+  * bounds (reference X9/X1) and pushed into the parser as a row/col range.
+  * Each scan task streams its archive through one reused member buffer (one
+  * decoded grid's text at a time, never the whole decoded archive; the
+  * compressed file itself arrives as one binaryFile array), skips the rows
+  * before the window, converts only the window's columns to numbers and
+  * stops reading a grid after the window's last row. The basin dimension is read
   * driver-side (small shapefile), reprojected with closed-form CRS math, and
   * broadcast. Scale notes: the raster side is never shuffled until the final
   * (basinID, ts) aggregation, whose cardinality is |basins| x |timestamps|.
@@ -86,37 +92,130 @@ object RadoHydro {
     }
   }
 
+  /** The raster files of a directory, by name, without the hidden ones
+    * (names starting with '.' or '_', such as Hadoop `.crc` sidecars), which
+    * the `binaryFile` scan skips too.
+    */
+  def gridFiles(dir: String): Array[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .sortBy(_.getName)
+
   /** Peek the first grid member in a directory (driver-side, reference X9:
-    * the cell grid derives from the first grid only).
+    * the cell grid derives from the first grid only). Reads up to the end of
+    * that member and no further.
     */
   def peekFirstGrid(dir: String, datasource: String): GridMeta = {
-    val files = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty).filter(_.isFile).sortBy(_.getName)
+    val files = gridFiles(dir)
     require(files.nonEmpty, s"no grid files in $dir")
-    val bytes = java.nio.file.Files.readAllBytes(files.head.toPath)
-    val members = Archives.expand(files.head.getName, bytes)
-      .flatMap(m => Archives.expand(m.name, m.bytes))
-    require(members.hasNext, s"no members in ${files.head}")
-    val m = members.next()
-    if (datasource == "regnie") {
-      val text = new String(m.bytes, java.nio.charset.StandardCharsets.US_ASCII)
-      // minus the discarded trailer line (radohydro.py:442)
-      val lines = math.max(0, text.linesIterator.size - 1)
-      GridMeta(lines, Regnie.ValuesPerLine,
-        Grid.Transform(Regnie.ulx, Regnie.xres, Regnie.uly, Regnie.yres),
-        Regnie.Nodata.toDouble)
-    } else if (isTiff(m.name)) {
-      val (t, _) = GeoTiff.parse(m.bytes, rowRange = Some((0, 0)))
-      GridMeta(t.nrows, t.ncols, Grid.Transform(t.ulx, t.xres, t.uly, t.yres), t.nodata)
-    } else {
-      val h = AsciiGrid.parseHeader(new String(m.bytes, java.nio.charset.StandardCharsets.US_ASCII))
-      GridMeta(h.nrows, h.ncols, Grid.Transform(h.ulx, h.xres, h.uly, h.yres), h.nodata)
-    }
+    val in = new java.io.BufferedInputStream(new java.io.FileInputStream(files.head), 64 * 1024)
+    try {
+      val members = Archives.members(files.head.getName, in)
+      require(members.hasNext, s"no members in ${files.head}")
+      val m = members.next()
+      if (datasource == "regnie") {
+        val text = new String(m.bytes, 0, m.length, US_ASCII)
+        // minus the discarded trailer line (radohydro.py:442)
+        val lines = math.max(0, text.linesIterator.size - 1)
+        GridMeta(lines, Regnie.ValuesPerLine,
+          Grid.Transform(Regnie.ulx, Regnie.xres, Regnie.uly, Regnie.yres),
+          Regnie.Nodata.toDouble)
+      } else if (isTiff(m.name)) {
+        val (t, _) = GeoTiff.parse(m.copy(), rowRange = Some((0, 0)))
+        GridMeta(t.nrows, t.ncols, Grid.Transform(t.ulx, t.xres, t.uly, t.yres), t.nodata)
+      } else {
+        val h = AsciiGrid.header(m.bytes, m.length)
+        GridMeta(h.nrows, h.ncols, Grid.Transform(h.ulx, h.xres, h.uly, h.yres), h.nodata)
+      }
+    } finally in.close()
   }
 
   private def isTiff(name: String): Boolean = {
     val n = name.toLowerCase
     n.endsWith(".tif") || n.endsWith(".tiff")
+  }
+
+  /** What the scan reads from each raster file: the datasource, the clip
+    * window as inclusive-exclusive raster row/col ranges, and the inclusive
+    * date range.
+    */
+  final case class ScanSpec(datasource: String, rows: (Int, Int), cols: (Int, Int),
+      startTs: Option[Timestamp] = None, endTs: Option[Timestamp] = None) {
+
+    def inRange(ts: Timestamp): Boolean =
+      startTs.forall(!ts.before(_)) && endTs.forall(!ts.after(_))
+
+    /** S4 inter-level pruning (radohydro.py:296-297): false when a member
+      * name carries a day outside the range, so a nested daily archive is
+      * skipped before it is decompressed. RADOLAN names carry yyyyMMdd (8
+      * digits); REGNIE daily members carry yyMMdd (6, Python %y pivot).
+      */
+    def mayHold(name: String): Boolean =
+      if (startTs.isEmpty && endTs.isEmpty) true
+      else {
+        val digits = name.replaceAll("[^0-9]", "")
+        val day8 =
+          if (digits.length >= 8) Some(digits.take(8))
+          else if (digits.length >= 6) {
+            val yy = digits.take(2).toInt
+            val year = if (yy >= 69) 1900 + yy else 2000 + yy
+            Some(f"$year%04d" + digits.slice(2, 6))
+          } else None
+        day8 match {
+          case None => true
+          case Some(d8) =>
+            try {
+              val dayStart = utcTs(LocalDateTime.parse(d8 + "0000", radolanTsFmt))
+              val dayEnd = utcTs(LocalDateTime.parse(d8 + "2359", radolanTsFmt))
+              startTs.forall(!dayEnd.before(_)) && endTs.forall(!dayStart.after(_))
+            } catch { case _: Exception => true }
+        }
+      }
+  }
+
+  /** One decoded grid member: its timestamp, nodata value and window cells. */
+  final case class MemberGrid(ts: Timestamp, nodata: Double, cells: Iterator[AsciiGrid.Cell])
+
+  /** Stream the in-range grid members of raster file `fname`. Members share
+    * one buffer, so consume each member's cells before asking for the next.
+    */
+  def scanFile(fname: String, in: InputStream, spec: ScanSpec): Iterator[MemberGrid] = {
+    val (rows, cols) = (Some(spec.rows), Some(spec.cols))
+    Archives.members(fname, in, spec.mayHold).flatMap { m =>
+      val ts = parseMemberTs(spec.datasource, m.name)
+      if (!spec.inRange(ts)) Iterator.empty
+      else if (spec.datasource == "regnie") {
+        val nodata = Regnie.Nodata.toDouble
+        val (cLo, cHi) = spec.cols
+        val cells = Regnie.parseFile(new String(m.bytes, 0, m.length, US_ASCII), keepNodata = true,
+            rowRange = rows).collect {
+          case c if c.col >= cLo && c.col < cHi =>
+            AsciiGrid.Cell(c.row, c.col, if (c.value.isNaN) nodata else c.value)
+        }
+        Iterator.single(MemberGrid(ts, nodata, cells))
+      } else if (isTiff(m.name)) {
+        val (t, cells) = GeoTiff.parse(m.copy(), rows, cols)
+        Iterator.single(MemberGrid(ts, t.nodata, cells.map(c => AsciiGrid.Cell(c.row, c.col, c.value))))
+      } else {
+        val (h, cells) = AsciiGrid.scan(m.bytes, m.length, rows, cols)
+        Iterator.single(MemberGrid(ts, h.nodata, cells))
+      }
+    }
+  }
+
+  /** The scan task's work on one raster file: window-relative
+    * (ts, row, col, v) readings, v null for nodata when `maskNodata`.
+    */
+  def readings(fname: String, in: InputStream, spec: ScanSpec,
+      maskNodata: Boolean): Iterator[(Timestamp, Int, Int, java.lang.Double)] = {
+    val (rLo, cLo) = (spec.rows._1, spec.cols._1)
+    scanFile(fname, in, spec).flatMap { g =>
+      g.cells.map { c =>
+        val v: java.lang.Double =
+          if (maskNodata && c.value == g.nodata) null else java.lang.Double.valueOf(c.value)
+        (g.ts, c.row - rLo, c.col - cLo, v)
+      }
+    }
   }
 
   /** Run the pipeline. `gridDir` holds raster files (plain .asc, .tar,
@@ -161,79 +260,15 @@ object RadoHydro {
       basinsDf, tShift, win.nrows, win.ncols, divisor, cellCrsName, cfg.outCrs)
 
     // --- distributed raster scan with window pushdown -----------------------
-    val ds = cfg.datasource
-    val (rLo, rHi, cLo, cHi) = (win.rowLo, win.rowHi, win.colLo, win.colHi)
-    val mask = cfg.maskNodata
-    val (startTs, endTs) = (
+    val spec = ScanSpec(cfg.datasource, (win.rowLo, win.rowHi), (win.colLo, win.colHi),
       cfg.startDate.map(s => utcTs(LocalDateTime.parse(s + "0000", radolanTsFmt))),
       cfg.endDate.map(s => utcTs(LocalDateTime.parse(s + "2359", radolanTsFmt))))
+    val mask = cfg.maskNodata
     val bin = spark.read.format("binaryFile").load(gridDir)
       .select("path", "content").as[(String, Array[Byte])]
     val values: Dataset[(Timestamp, Int, Int, java.lang.Double)] = bin.flatMap { case (path, bytes) =>
       val fname = path.substring(path.lastIndexOf('/') + 1)
-      Archives.expand(fname, bytes)
-        .filter { m =>
-          // S4 inter-level pruning (radohydro.py:296-297): skip a nested
-          // daily archive entirely when its name-carried date is out of
-          // range — members are never decompressed. RADOLAN names carry
-          // yyyyMMdd (8 digits); REGNIE daily members carry yyMMdd (6,
-          // Python %y pivot).
-          val digits = m.name.replaceAll("[^0-9]", "")
-          if (startTs.isEmpty && endTs.isEmpty) true
-          else {
-            val day8 =
-              if (digits.length >= 8) Some(digits.take(8))
-              else if (digits.length >= 6) {
-                val yy = digits.take(2).toInt
-                val year = if (yy >= 69) 1900 + yy else 2000 + yy
-                Some(f"$year%04d" + digits.slice(2, 6))
-              } else None
-            day8 match {
-              case None => true
-              case Some(d8) =>
-                try {
-                  val dayStart = utcTs(LocalDateTime.parse(d8 + "0000", radolanTsFmt))
-                  val dayEnd = utcTs(LocalDateTime.parse(d8 + "2359", radolanTsFmt))
-                  startTs.forall(!dayEnd.before(_)) && endTs.forall(!dayStart.after(_))
-                } catch { case _: Exception => true }
-            }
-          }
-        }
-        .flatMap(m => Archives.expand(m.name, m.bytes))
-        .flatMap { m =>
-          val ts = parseMemberTs(ds, m.name)
-          val inRange = startTs.forall(!ts.before(_)) && endTs.forall(!ts.after(_))
-          if (!inRange) Iterator.empty
-          else {
-            val text = new String(m.bytes, java.nio.charset.StandardCharsets.US_ASCII)
-            if (ds == "regnie") {
-              Regnie.parseFile(text, keepNodata = true,
-                  rowRange = Some((rLo, rHi))).flatMap { c =>
-                if (c.col < cLo || c.col >= cHi) Iterator.empty
-                else {
-                  val v: java.lang.Double =
-                    if (c.value.isNaN) { if (mask) null else java.lang.Double.valueOf(Regnie.Nodata.toDouble) }
-                    else java.lang.Double.valueOf(c.value)
-                  Iterator.single((ts, c.row - rLo, c.col - cLo, v))
-                }
-              }
-            } else if (isTiff(m.name)) {
-              val (t, cells) = GeoTiff.parse(m.bytes, Some((rLo, rHi)), Some((cLo, cHi)))
-              cells.map { c =>
-                val v: java.lang.Double =
-                  if (mask && c.value == t.nodata) null else java.lang.Double.valueOf(c.value)
-                (ts, c.row - rLo, c.col - cLo, v)
-              }
-            } else {
-              val (h, cells) = AsciiGrid.parse(text, Some((rLo, rHi)), Some((cLo, cHi)))
-              cells.map { c =>
-                val v: java.lang.Double =
-                  if (mask && c.value == h.nodata) null else java.lang.Double.valueOf(c.value)
-                (ts, c.row - rLo, c.col - cLo, v)
-              }
-            }
-          }
-        }
+      readings(fname, new java.io.ByteArrayInputStream(bytes), spec, mask)
     }
     // the values frame is already window-clipped, so this dedup shuffles only
     // the clipped working set, not the raw raster

@@ -12,7 +12,6 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.ingest.{Archives, AsciiGrid}
 import graft.api.RadoHydro
 
 /** DataSourceV2 for directories of ESRI ASCII grid rasters (plain `.asc` or
@@ -116,10 +115,8 @@ class AsciiGridScan(options: Map[String, String],
   override def planInputPartitions(): Array[InputPartition] = {
     val dir = options.getOrElse("path",
       throw new IllegalArgumentException("asciigrid: missing load path"))
-    val files = new java.io.File(dir).listFiles()
-    require(files != null, s"asciigrid: cannot list $dir")
-    files.filter(_.isFile).sortBy(_.getName)
-      .map(f => AsciiGridFilePartition(f.getAbsolutePath): InputPartition)
+    require(new java.io.File(dir).isDirectory, s"asciigrid: cannot list $dir")
+    RadoHydro.gridFiles(dir).map(f => AsciiGridFilePartition(f.getAbsolutePath): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -137,20 +134,16 @@ class AsciiGridPartitionReader(path: String, datasource: String,
     rowLo: Int, rowHi: Int, colLo: Int, colHi: Int)
     extends PartitionReader[InternalRow] {
 
+  private val in = new java.io.BufferedInputStream(new java.io.FileInputStream(path), 64 * 1024)
+
   private val iter: Iterator[InternalRow] = {
     val name = path.substring(path.lastIndexOf('/') + 1)
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    Archives.expand(name, bytes)
-      .flatMap(m => Archives.expand(m.name, m.bytes))
-      .flatMap { m =>
-        val ts = RadoHydro.parseMemberTs(datasource, m.name)
-        val tsMicros = ts.getTime / 1000 * 1000000L + ts.getNanos / 1000
-        val text = new String(m.bytes, java.nio.charset.StandardCharsets.US_ASCII)
-        val (_, cells) = AsciiGrid.parse(text,
-          Some((rowLo, if (rowHi == Int.MaxValue) Int.MaxValue else rowHi + 1)),
-          Some((colLo, if (colHi == Int.MaxValue) Int.MaxValue else colHi + 1)))
-        cells.map(c => InternalRow(tsMicros, c.row, c.col, c.value))
-      }
+    def until(hi: Int) = if (hi == Int.MaxValue) Int.MaxValue else hi + 1
+    val spec = RadoHydro.ScanSpec(datasource, (rowLo, until(rowHi)), (colLo, until(colHi)))
+    RadoHydro.scanFile(name, in, spec).flatMap { g =>
+      val tsMicros = g.ts.getTime / 1000 * 1000000L + g.ts.getNanos / 1000
+      g.cells.map(c => InternalRow(tsMicros, c.row, c.col, c.value))
+    }
   }
 
   private var current: InternalRow = _
@@ -158,5 +151,5 @@ class AsciiGridPartitionReader(path: String, datasource: String,
     if (iter.hasNext) { current = iter.next(); true } else false
   }
   override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override def close(): Unit = in.close()
 }
