@@ -17,16 +17,17 @@ import graft.ingest.{Archives, AsciiGrid, GeoTiff, Regnie, Shp}
   * re-expressed as one lazy Spark plan:
   *
   *   binaryFile scan -> archive expand -> windowed raster parse (long rows)
-  *     -> broadcast-join basin/cell map -> NaN gate -> weights
-  *     -> groupBy(basinID, ts) weighted sum -> sinks
+  *     -> (ts, row, col) dedup -> broadcast-join basin/cell map -> NaN gate
+  *     -> weights -> groupBy(basinID, ts) weighted sum -> sinks
   *
-  * The clip window is computed once from the first grid's header + basin
-  * bounds (reference X9/X1) and pushed into the parser as a row/col range.
-  * Each scan task streams its archive through one reused member buffer (one
-  * decoded grid's text at a time, never the whole decoded archive; the
-  * compressed file itself arrives as one binaryFile array), skips the rows
-  * before the window, converts only the window's columns to numbers and
-  * stops reading a grid after the window's last row. The basin dimension is read
+  * The dedup keeps overlapping recent and historical archives from
+  * double-counting rain. The clip window is computed once from the first
+  * grid's header + basin bounds (reference X9/X1) and pushed into the parser
+  * as a row/col range. Each scan task streams its archive through one reused
+  * member buffer (one decoded grid's text at a time, never the whole decoded
+  * archive; the compressed file itself arrives as one binaryFile array),
+  * skips the rows before the window, converts only the window's columns to
+  * numbers and stops reading a grid after the window's last row. The basin dimension is read
   * driver-side (small shapefile), reprojected with closed-form CRS math, and
   * broadcast. Scale notes: the raster side is never shuffled until the final
   * (basinID, ts) aggregation, whose cardinality is |basins| x |timestamps|.
@@ -41,10 +42,7 @@ object RadoHydro {
       shapeCrs: String = "epsg:25833",
       bufferCells: Int = 2,            // quirk Q7
       numerator: Double = 10.0,        // F7: 0.1 mm -> mm
-      maskNodata: Boolean = true,      // false = faithful quirk Q1 (RADOLAN)
-      dedupeInputs: Boolean = true)    // drop duplicate (ts,row,col) readings
-                                       // (overlapping recent+historical archives
-                                       // would otherwise double-count rainfall)
+      maskNodata: Boolean = true)      // false = faithful quirk Q1 (RADOLAN)
 
   final case class BasinInfo(basinID: Int, areaOut: Double, attrs: Map[String, Any],
       geomOut: Geom.Polygon)
@@ -272,9 +270,7 @@ object RadoHydro {
     }
     // the values frame is already window-clipped, so this dedup shuffles only
     // the clipped working set, not the raw raster
-    val valuesDf0 = values.toDF("ts", "row", "col", "v")
-    val valuesDf =
-      if (cfg.dedupeInputs) valuesDf0.dropDuplicates("ts", "row", "col") else valuesDf0
+    val valuesDf = values.toDF("ts", "row", "col", "v").dropDuplicates("ts", "row", "col")
 
     // --- weighted aggregation (A2/A3/A4) ------------------------------------
     val series = SpatialPipeline.weightedSeries(valuesDf, cellMap, cfg.numerator)

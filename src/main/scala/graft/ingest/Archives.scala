@@ -258,7 +258,7 @@ object Archives {
   def expand(name: String, bytes: Array[Byte]): Iterator[Member] =
     entries(name, new ByteArrayInputStream(bytes), bytes.length).map(exact)
 
-  /** Build a tar archive (test fixtures only). */
+  /** Build a tar archive (the rendered fixtures: RadolanRender, tests, perfbench). */
   def tar(members: Seq[Member]): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     members.foreach { m =>

@@ -3,58 +3,46 @@ package graft.operators
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.api.RadoHydro
-import graft.geo.{Crs, Geom}
-import graft.ingest.{Archives, AsciiGrid, Shp}
+import graft.geo.Crs
+import graft.ingest.RadolanRender
+import graft.out.ShpWriter
 
 /** The flagship geospatial pipeline as a harness query (SURVEY §3.1): a
-  * deterministic RADOLAN-style fixture (2 days x 3 hourly grids over the
-  * reference's einzugsgebiet basins) through the full
+  * deterministic RADOLAN-style fixture (2 days x 3 hourly grids on a
+  * 30 x 30 km block of the RADOLAN grid, five pentagon basins written in
+  * EPSG:25833) through the full
   * binaryFile -> window-pushdown parse -> spatial join -> NaN gate ->
   * weights -> weighted series chain. Not SQL-expressible in DuckDB (no
   * oracle entry -> driver records the rows-only check); exact-value
-  * correctness is pinned by RadoHydroE2ESpec's independent shadow
-  * computation and the hand-computed goldens in SpatialPipelineGoldenSpec.
+  * correctness is pinned by RadoHydroFixtureSpec's closed-form means and
+  * the hand-computed goldens in SpatialPipelineGoldenSpec.
   */
 object GeoPipelineOps {
 
-  private val examples = "/root/reference/Examples"
-  private val fixtureDir = "/tmp/graft_geo_fixture_v1"
+  private val fixtureDir = "/tmp/graft_geo_fixture_v2"
+  private val gridsDir = s"$fixtureDir/grids"
+  private val basinsShp = s"$fixtureDir/basins.shp"
 
-  private def value(row: Int, col: Int, hour: Int): Int =
-    ((row * 31 + col * 7 + hour * 13) % 400) + hour
+  // placed so that nodata readings fall inside basins: qf1's faithful/sane
+  // delta and g2's gate then have cells to act on
+  private val block = RadolanRender.Block(0, 70, 30, 30)
+  private val basinIds = 1 to 5
 
-  /** Build (once) the deterministic grid fixture next to the basins. */
+  /** Build (once) the grid archives and the basins shapefile. */
   private def ensureFixture(): String = synchronized {
     val marker = Paths.get(fixtureDir, "_done")
-    if (Files.exists(marker)) return fixtureDir
-    val stereoM = Crs.RadolanStereo(unitsKm = false)
-    val layer = Shp.read(s"$examples/einzugsgebiet.shp")
-    val boxes = layer.features.map(f => Geom.bbox(Crs.reproject(f.geom, Crs.Utm33N, stereoM)))
-    val xll = math.floor(boxes.map(_._1).min / 1000).toInt * 1000 - 5000
-    val yll = math.floor(boxes.map(_._2).min / 1000).toInt * 1000 - 5000
-    val ncols = math.ceil((boxes.map(_._3).max - xll) / 1000).toInt + 10
-    val nrows = math.ceil((boxes.map(_._4).max - yll) / 1000).toInt + 10
-    val h = AsciiGrid.Header(ncols, nrows, xll, yll, 1000.0, -1.0)
-    Files.createDirectories(Paths.get(fixtureDir))
-    for (day <- 1 to 2) {
-      val members = (0 until 3).map { hour =>
-        val vals = Array.tabulate(nrows, ncols)((r, c) =>
-          value(r, c, (day - 1) * 3 + hour).toDouble)
-        Archives.Member(f"RW_2018010${day}_$hour%02d50.asc", AsciiGrid.render(h, vals).getBytes)
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(Archives.tar(members)); gz.close()
-      Files.write(Paths.get(fixtureDir, f"RW-2018010$day.tar.gz"), bos.toByteArray)
-    }
+    if (Files.exists(marker)) return gridsDir
+    Files.createDirectories(Paths.get(gridsDir))
+    ShpWriter.write(basinsShp, basinIds.map(id => Crs.reproject(
+        RadolanRender.pentagon(id, block, 20, 20), Crs.RadolanStereo(unitsKm = false), Crs.Utm33N)),
+      basinIds.map(id => Map[String, Any]("BASIN" -> id.toLong)), Seq("BASIN"))
+    for (day <- 1 to 2) RadolanRender.writeDay(gridsDir, block, day, 0 until 3)
     Files.write(marker, Array.emptyByteArray)
-    fixtureDir
+    gridsDir
   }
 
   private def g1Radohydro(s: SparkSession, d: String): DataFrame = {
-    val dir = ensureFixture()
-    val res = RadoHydro.run(s, dir, s"$examples/einzugsgebiet.shp",
-      RadoHydro.Config(datasource = "radolan"))
+    val res = RadoHydro.run(s, ensureFixture(), basinsShp, RadoHydro.Config())
     import org.apache.spark.sql.functions._
     res.series
       .select(col("basinID"),
@@ -90,7 +78,7 @@ object GeoPipelineOps {
     * change without a schema change (schema drift is caught automatically
     * by the fingerprint).
     */
-  private val ExportVersion = "v1"
+  private val ExportVersion = "v2"
 
   /** Fingerprint of what is currently on disk: version + exported parquet
     * schemas (footer-only reads — no job). Throws if the exports are absent
@@ -110,9 +98,7 @@ object GeoPipelineOps {
       if (Files.exists(marker)) new String(Files.readAllBytes(marker), "UTF-8") else ""
     if (markerFp.nonEmpty &&
         scala.util.Try(onDiskFp(s)).toOption.contains(markerFp)) return
-    val dir = ensureFixture()
-    val res = RadoHydro.run(s, dir, s"$examples/einzugsgebiet.shp",
-      RadoHydro.Config(datasource = "radolan"))
+    val res = RadoHydro.run(s, ensureFixture(), basinsShp, RadoHydro.Config())
     import org.apache.spark.sql.functions._
     res.cellMap.write.mode("overwrite").parquet(cellMapExport)
     res.values
@@ -293,19 +279,15 @@ object GeoPipelineOps {
        |      FROM read_parquet('$cellMapExport/*.parquet'))""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    if (Files.exists(Paths.get(s"$examples/einzugsgebiet.shp")))
-      Map("g1_radohydro_pipeline" -> g1Radohydro _,
-          "g2_pipeline_invariants" -> g2Invariants _,
-          "g3_cell_weights" -> g3CellWeights _,
-          "qf1_nodata_delta" -> qf1NodataDelta _,
-          "qf2_zfill_width" -> qf2ZfillWidth _)
-    else Map.empty
+    Map("g1_radohydro_pipeline" -> g1Radohydro _,
+        "g2_pipeline_invariants" -> g2Invariants _,
+        "g3_cell_weights" -> g3CellWeights _,
+        "qf1_nodata_delta" -> qf1NodataDelta _,
+        "qf2_zfill_width" -> qf2ZfillWidth _)
 
   val oracles: Map[String, String] =
-    if (Files.exists(Paths.get(s"$examples/einzugsgebiet.shp")))
-      Map("g2_pipeline_invariants" -> g2Sql, // g1 itself: ScalaTest goldens
-          "g3_cell_weights" -> g3Sql,
-          "qf1_nodata_delta" -> qf1Sql,
-          "qf2_zfill_width" -> qf2Sql)
-    else Map.empty
+    Map("g2_pipeline_invariants" -> g2Sql, // g1 itself: ScalaTest goldens
+        "g3_cell_weights" -> g3Sql,
+        "qf1_nodata_delta" -> qf1Sql,
+        "qf2_zfill_width" -> qf2Sql)
 }

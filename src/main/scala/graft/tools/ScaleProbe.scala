@@ -6,13 +6,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.{Grid, SpatialPipeline}
+import graft.ingest.RadolanRender
 
 /** Scale probes for the flagship spatial pipeline.
   *
-  * Mode 1 (default) — JOIN KERNEL: N synthetic basins (the reference's
-  * published cliff is >10k polygons, README:18 — its GEOS overlay is
-  * per-feature) through `basinCellMap` + a weighted series over T synthetic
-  * timesteps.
+  * Mode 1 (default) — JOIN KERNEL: N pentagon basins, mode 2's layout
+  * (the reference's published cliff is >10k polygons, README:18 — its GEOS
+  * overlay is per-feature) through `basinCellMap` + a weighted series over
+  * T synthetic timesteps.
   *
   * Mode 2 (`full`) — WHOLE FLAGSHIP end-to-end: renders a real fixture
   * (daily `.tar.gz` archives of full 900x900 RADOLAN-layout ASCII grids,
@@ -1227,20 +1228,12 @@ object ScaleProbe {
   private def runJoinKernel(nBasins: Int, nTs: Int): Unit = {
     val spark = session()
 
-    // 900x900 km grid; basins are irregular pentagons ~6x6 km placed on a
-    // hash-scattered layout (deterministic, no RNG-in-plan issues)
+    // 900x900 km grid; basins are the full probe's pentagons, in km
     val t = Grid.Transform(-523.462, 1.0, -3758.645, -1.0)
-    val basins = spark.range(1, nBasins + 1)
-      .select(col("id").cast("int").as("basinID"),
-        (lit(-523.462 + 2.0) + pmod(hash(col("id"), lit(1)), lit(880)).cast("double")).as("x0"),
-        (lit(-3758.645 - 880.0) + pmod(hash(col("id"), lit(2)), lit(878)).cast("double")).as("y0"),
-        (lit(3.0) + pmod(hash(col("id"), lit(3)), lit(40)).cast("double") / 10).as("w"))
-      .select(col("basinID"), array(array(
-        col("x0"), col("y0"),
-        col("x0") + col("w"), col("y0") + 1.0,
-        col("x0") + col("w") + 1.0, col("y0") + col("w"),
-        col("x0") + col("w") / 2, col("y0") + col("w") + 1.0,
-        col("x0"), col("y0") + col("w"))).as("geom"))
+    import spark.implicits._
+    val basins = (1 to nBasins).map { id =>
+      (id, fullPentagon(id).map(_.map(_ / 1000).toSeq).toSeq)
+    }.toDF("basinID", "geom")
     val cellMap = SpatialPipeline.basinCellMap(
       basins, t, 900, 900, 1.0, "radolan_km", "epsg:25833").cache()
 
@@ -1262,38 +1255,13 @@ object ScaleProbe {
     spark.stop()
   }
 
+  /** Basin `id` of both flagship probes, radolan METERS. */
+  private def fullPentagon(id: Int): graft.geo.Geom.Polygon =
+    RadolanRender.pentagon(id, RadolanRender.Full, 876, 870)
+
   // ---------------------------------------------------------------------------
-  // Mode 2 — full flagship
-  private val GridRows = 900
-  private val GridCols = 900
-  // full RADOLAN 900x900 extent in stereographic METERS (the raw ASCII
-  // header CRS; the pipeline divides to km internally, Q8)
-  private val XllM = -523462.0
-  private val YllM = -4658645.0
-
-  /** Deterministic cell value for (row, col, hour): 0..399 rainfall tenths
-    * with ~0.1% nodata — enough missing cells to exercise the A2 gate.
-    */
-  private def cellValue(r: Int, c: Int, hour: Int): Double =
-    if ((r * 7919 + c * 104729 + hour) % 1000 == 0) -1.0
-    else (((r * 31 + c * 7 + hour * 13) % 400) + hour % 24).toDouble
-
-  private def hashIn(seed: String, mod: Int): Int =
-    math.floorMod(scala.util.hashing.MurmurHash3.stringHash(seed), mod)
-
-  /** 100k-pentagon layout in radolan METERS (same shapes as mode 1). */
-  private def pentagon(id: Int): graft.geo.Geom.Polygon = {
-    val x0 = (-523.462 + 2.0 + hashIn(s"sp-x-$id", 876)) * 1000
-    val y0 = (-4658.645 + 2.0 + hashIn(s"sp-y-$id", 870)) * 1000
-    val w = (3.0 + hashIn(s"sp-w-$id", 40) / 10.0) * 1000
-    Array(Array(
-      x0, y0,
-      x0 + w, y0 + 1000.0,
-      x0 + w + 1000.0, y0 + w,
-      x0 + w / 2, y0 + w + 1000.0,
-      x0, y0 + w))
-  }
-
+  // Mode 2 — full flagship: 900x900 grids with ~0.1% nodata and nBasins
+  // pentagons, both rendered by RadolanRender
   private def ensureFullFixture(spark: SparkSession, nBasins: Int, nTs: Int): (String, String) = {
     val root = s"/tmp/graft_scaleprobe_full/${nBasins}x$nTs"
     val gridsDir = s"$root/grids"
@@ -1305,7 +1273,7 @@ object ScaleProbe {
 
     // shapefile: nBasins pentagons, one numeric attribute
     graft.out.ShpWriter.write(shpPath,
-      (1 to nBasins).map(pentagon),
+      (1 to nBasins).map(fullPentagon),
       (1 to nBasins).map(i => Map[String, Any]("FID_" -> i.toLong)),
       Seq("FID_"))
 
@@ -1313,23 +1281,7 @@ object ScaleProbe {
     // in parallel ON SPARK (local executors share the filesystem)
     val nDays = math.max(1, nTs / 24)
     spark.range(1, nDays + 1).repartition(nDays.toInt).foreach { day =>
-      val h = graft.ingest.AsciiGrid.Header(GridCols, GridRows, XllM, YllM, 1000.0, -1.0)
-      val members = (0 until 24).map { hour =>
-        val vals = Array.tabulate(GridRows, GridCols)((r, c) =>
-          cellValue(r, c, (day.toInt - 1) * 24 + hour))
-        graft.ingest.Archives.Member(
-          f"RW_201801${day.toInt}%02d_$hour%02d50.asc",
-          graft.ingest.AsciiGrid.render(h, vals).getBytes("US-ASCII"))
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(graft.ingest.Archives.tar(members)); gz.close()
-      val tmp = Paths.get(gridsDir, f".RW-201801${day.toInt}%02d.tar.gz.tmp")
-      Files.write(tmp, bos.toByteArray)
-      Files.move(tmp, Paths.get(gridsDir, f"RW-201801${day.toInt}%02d.tar.gz"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ()
+      RadolanRender.writeDay(gridsDir, RadolanRender.Full, day.toInt, 0 until 24)
     }
     Files.write(marker, Array.emptyByteArray)
     (gridsDir, shpPath)

@@ -12,7 +12,7 @@ import graft.tools.PlanAudit
   * stored artifact plans).
   *
   * PlanShapeSpec pins a handful of plans in fine detail; this spec is the
-  * broad net — a refactor that silently adds a shuffle to ANY of the 97
+  * broad net — a refactor that silently adds a shuffle to ANY of the 127
   * queries fails here even though the DuckDB oracles would stay green (the
   * results don't change, the 100 TB bill does). Budgets are exact warm
   * counts at sf0.001, regenerated with:
