@@ -6,31 +6,37 @@ import java.sql.Timestamp
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Cells, Grid, SpatialPipeline}
+import graft.core.{Grid, SpatialPipeline}
 import graft.geo.{Crs, Geom}
 import graft.ingest.{Archives, AsciiGrid, GeoTiff, Regnie, Shp}
 
 /** The `radohydro()`-equivalent entry point (reference radohydro.py:503-546),
-  * re-expressed as one lazy Spark plan:
+  * re-expressed as a Spark plan with one row per decoded grid:
   *
-  *   binaryFile scan -> archive expand -> windowed raster parse (long rows)
-  *     -> (ts, row, col) dedup -> broadcast-join basin/cell map -> NaN gate
-  *     -> weights -> groupBy(basinID, ts) weighted sum -> sinks
+  *   binaryFile scan -> archive expand -> windowed raster parse (one
+  *     window-dense row per grid member, persisted)
+  *     -> collect member metadata: overlap dedup + per-cell missing counts
+  *     -> collect basin/cell map -> NaN gate + weights (driver)
+  *     -> map each kept grid to its per-basin weighted sums -> sinks
   *
-  * The dedup keeps overlapping recent and historical archives from
-  * double-counting rain. The clip window is computed once from the first
+  * The dedup keeps one member per timestamp (greatest file name, then last
+  * position in that file; see [[keptMembers]]), so overlapping recent and
+  * historical archives never double-count rain and the surviving copy does
+  * not depend on task order. The clip window is computed once from the first
   * grid's header + basin bounds (reference X9/X1) and pushed into the parser
   * as a row/col range. Each scan task streams its archive through one reused
   * member buffer (one decoded grid's text at a time, never the whole decoded
   * archive; the compressed file itself arrives as one binaryFile array),
   * skips the rows before the window, converts only the window's columns to
-  * numbers and stops reading a grid after the window's last row. The basin dimension is read
-  * driver-side (small shapefile), reprojected with closed-form CRS math, and
-  * broadcast. Scale notes: the raster side is never shuffled until the final
-  * (basinID, ts) aggregation, whose cardinality is |basins| x |timestamps|.
+  * numbers and stops reading a grid after the window's last row. The basin
+  * dimension is read driver-side (small shapefile) and reprojected with
+  * closed-form CRS math. Scale notes: `run` executes two jobs (the scan with
+  * the metadata collect, and the cell map collect); no raster row passes
+  * through a shuffle, a join or a window, and the series leaves the map with
+  * one row per (basin, timestamp).
   */
 object RadoHydro {
 
@@ -201,20 +207,46 @@ object RadoHydro {
     }
   }
 
-  /** The scan task's work on one raster file: window-relative
-    * (ts, row, col, v) readings, v null for nodata when `maskNodata`.
+  /** The scan task's work on one raster file: one [[SpatialPipeline.GridRow]]
+    * per in-range grid member, nodata masked when `maskNodata`.
     */
-  def readings(fname: String, in: InputStream, spec: ScanSpec,
-      maskNodata: Boolean): Iterator[(Timestamp, Int, Int, java.lang.Double)] = {
+  def gridRows(fname: String, in: InputStream, spec: ScanSpec,
+      maskNodata: Boolean): Iterator[SpatialPipeline.GridRow] = {
     val (rLo, cLo) = (spec.rows._1, spec.cols._1)
-    scanFile(fname, in, spec).flatMap { g =>
-      g.cells.map { c =>
-        val v: java.lang.Double =
-          if (maskNodata && c.value == g.nodata) null else java.lang.Double.valueOf(c.value)
-        (g.ts, c.row - rLo, c.col - cLo, v)
+    val ncols = spec.cols._2 - cLo
+    val n = (spec.rows._2 - rLo) * ncols
+    scanFile(fname, in, spec).zipWithIndex.map { case (g, position) =>
+      val values = Array.fill(n)(Double.NaN)
+      val absent = new java.util.BitSet(n)
+      absent.set(0, n)
+      val missing = Array.newBuilder[Int]
+      g.cells.foreach { c =>
+        val i = (c.row - rLo) * ncols + c.col - cLo
+        absent.clear(i)
+        if (maskNodata && c.value == g.nodata) missing += i else values(i) = c.value
       }
+      SpatialPipeline.GridRow(g.ts, fname, position, values, missing.result(), absent.stream.toArray)
     }
   }
+
+  /** Window-relative (ts, row, col, v) readings of one raster file, v null
+    * for nodata when `maskNodata`.
+    */
+  def readings(fname: String, in: InputStream, spec: ScanSpec,
+      maskNodata: Boolean): Iterator[(Timestamp, Int, Int, java.lang.Double)] =
+    gridRows(fname, in, spec, maskNodata).flatMap(_.readings(spec.cols._2 - spec.cols._1))
+
+  /** A grid member's metadata: a [[SpatialPipeline.GridRow]] without values. */
+  final case class Member(ts: Timestamp, file: String, position: Int, missing: Array[Int],
+      absent: Array[Int])
+
+  /** The overlap dedup: one member per timestamp, from the greatest file
+    * name, then the last position in that file, whatever order the members
+    * arrive in. Overlapping recent and historical archives would otherwise
+    * double-count rain.
+    */
+  def keptMembers(members: Seq[Member]): Seq[Member] =
+    members.groupBy(_.ts).values.map(_.maxBy(m => (m.file, m.position))).toSeq
 
   /** Run the pipeline. `gridDir` holds raster files (plain .asc, .tar,
     * .tar.gz or .gz members); `shpPath` the basin polygons.
@@ -257,23 +289,35 @@ object RadoHydro {
     val cellMap = SpatialPipeline.basinCellMap(
       basinsDf, tShift, win.nrows, win.ncols, divisor, cellCrsName, cfg.outCrs)
 
-    // --- distributed raster scan with window pushdown -----------------------
+    // --- distributed raster scan with window pushdown: one row per grid ---
     val spec = ScanSpec(cfg.datasource, (win.rowLo, win.rowHi), (win.colLo, win.colHi),
       cfg.startDate.map(s => utcTs(LocalDateTime.parse(s + "0000", radolanTsFmt))),
       cfg.endDate.map(s => utcTs(LocalDateTime.parse(s + "2359", radolanTsFmt))))
     val mask = cfg.maskNodata
-    val bin = spark.read.format("binaryFile").load(gridDir)
+    val grids = spark.read.format("binaryFile").load(gridDir)
       .select("path", "content").as[(String, Array[Byte])]
-    val values: Dataset[(Timestamp, Int, Int, java.lang.Double)] = bin.flatMap { case (path, bytes) =>
-      val fname = path.substring(path.lastIndexOf('/') + 1)
-      readings(fname, new java.io.ByteArrayInputStream(bytes), spec, mask)
-    }
-    // the values frame is already window-clipped, so this dedup shuffles only
-    // the clipped working set, not the raw raster
-    val valuesDf = values.toDF("ts", "row", "col", "v").dropDuplicates("ts", "row", "col")
+      .flatMap { case (path, bytes) =>
+        val fname = path.substring(path.lastIndexOf('/') + 1)
+        gridRows(fname, new java.io.ByteArrayInputStream(bytes), spec, mask)
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // --- weighted aggregation (A2/A3/A4) ------------------------------------
-    val series = SpatialPipeline.weightedSeries(valuesDf, cellMap, cfg.numerator)
-    Result(series, basinInfos, win, meta, layer.fields.map(_._1), cellMap, valuesDf)
+    // --- dedup and per-cell missing counts from the members' metadata -------
+    val kept = keptMembers(grids.select("ts", "file", "position", "missing", "absent").as[Member]
+      .collect().toSeq)
+    val keep = kept.map(m => (m.file, m.position)).toSet
+    val nMissing = new Array[Long](win.nrows * win.ncols)
+    val nAbsent = new Array[Int](win.nrows * win.ncols)
+    kept.foreach { m => m.missing.foreach(nMissing(_) += 1); m.absent.foreach(nAbsent(_) += 1) }
+    val winners = grids.filter(g => keep((g.file, g.position)))
+
+    // --- gate + weights on the driver, weighted sums per grid (A2/A3/A4) -----
+    val ws = SpatialPipeline.gatedWeights(cellMap, { (r, c) =>
+      val i = r * win.ncols + c
+      if (nAbsent(i) == kept.size) -1L else nMissing(i)
+    })
+    val series = SpatialPipeline.gridSeries(winners, ws, win.ncols, cfg.numerator)
+    val values = winners.flatMap(_.readings(win.ncols)).toDF("ts", "row", "col", "v")
+    Result(series, basinInfos, win, meta, layer.fields.map(_._1), cellMap, values)
   }
 }

@@ -1,9 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.geo.{Clip, Crs, Geom}
 
 /** The flagship operator chain (SURVEY J2 + A2 + A3 + A4): basin polygons x
   * raster cell grid -> area-weighted per-basin time series.
@@ -12,11 +12,13 @@ import graft.geo.{Clip, Crs, Geom}
   * of a geometric overlay (the reference's GEOS `gp.overlay`,
   * geotools.py:215-219 — its published scaling cliff at >10k polygons), each
   * basin's bbox is mapped to the covered cell-index ranges and EXPLODED to
-  * (basinID, row, col) keys; the raster joins on plain (row, col) equi-keys.
-  * Catalyst plans a broadcast hash join (cell map is small: clipped window x
-  * basins), so the raster — the 100 TB side — is never shuffled. The exact
-  * geometry work (Sutherland-Hodgman clip vs an axis-aligned cell) happens
-  * once per (basin, cell), not per (basin, cell, timestamp).
+  * (basinID, row, col) keys. The cell map is small (clipped window x
+  * basins): the NaN gate and the weights are computed from it on the driver
+  * ([[gatedWeights]]) and broadcast, and the series is a map over one row
+  * per decoded grid ([[gridSeries]]), so the raster — the 100 TB side —
+  * passes through no join and no shuffle. The exact geometry work
+  * (Sutherland-Hodgman clip vs an axis-aligned cell) happens once per
+  * (basin, cell), not per (basin, cell, timestamp).
   *
   * Areas are measured in the OUTPUT CRS (quirk Q9: the reference reprojects
   * before computing `gridcellarea` and intersection areas): we clip in grid
@@ -72,53 +74,110 @@ object SpatialPipeline {
     val exploded = explodeToCells(basins, t, nrows, ncols, divisor)
     val boxed = Cells.withCellBox(exploded, t, divisor)
     geo(boxed)
+      // a generator is a barrier to filter pushdown and project collapsing,
+      // so the clip runs once per (basin, cell); as a plain column the
+      // optimizer inlines it into each of its three references
       .withColumn("areas",
-        expr(s"graft_clip_areas(geom, xmin, ymin, xmax, ymax, '$gridCrs', '$outCrs')"))
-      .withColumn("clip_area", col("areas.clip_area"))
-      .withColumn("cell_area", col("areas.cell_area"))
-      .where(col("clip_area") > lit(1e-12) * col("cell_area"))
-      .select("basinID", "row", "col", "clip_area", "cell_area")
+        explode(array(expr(s"graft_clip_areas(geom, xmin, ymin, xmax, ymax, '$gridCrs', '$outCrs')"))))
+      .where(col("areas.clip_area") > lit(1e-12) * col("areas.cell_area"))
+      .select(col("basinID"), col("row"), col("col"),
+        col("areas.clip_area").as("clip_area"), col("areas.cell_area").as("cell_area"))
   }
 
-  /** A2 — the reference's per-basin NaN-cleaning gate over cells
-    * (geotools.py:254-260). Input: joined (basinID,row,col,ts,v) long rows.
-    * Output: (basinID,row,col, keep) per cell. Per basin: if the number of
-    * cells with MORE THAN ONE missing timestamp is smaller than the cell
-    * count, drop cells with ANY missing timestamp; otherwise keep all.
+  /** Each basin's (row, col, clip/cell) cells, by basin, cells by (row, col). */
+  private def ratios(cellMap: DataFrame): Seq[(Int, Seq[(Int, Int, Double)])] =
+    cellMap.select(col("basinID"), col("row"), col("col"), col("clip_area") / col("cell_area")).collect()
+      .toSeq.groupMap(_.getInt(0))(r => (r.getInt(1), r.getInt(2), r.getDouble(3)))
+      .toSeq.sortBy(_._1).map { case (id, cells) => (id, cells.sortBy(c => (c._1, c._2))) }
+
+  /** A3 — weight normalization over one basin's surviving cells
+    * (geotools.py:262): w = (clip/cell) / sum(clip/cell), as
+    * (basinID, row, col, wgt).
     */
-  def nanCleanGate(joined: DataFrame): DataFrame = {
-    val perCell = joined
-      .groupBy("basinID", "row", "col")
-      .agg(count(when(col("v").isNull, lit(1))).as("nan_cnt"))
-    val w = Window.partitionBy("basinID")
-    perCell
-      .withColumn("bad_cells", sum(when(col("nan_cnt") > 1, 1).otherwise(0)).over(w))
-      .withColumn("total_cells", count(lit(1)).over(w))
-      .withColumn("keep",
-        when(col("bad_cells") < col("total_cells"), col("nan_cnt") === 0).otherwise(lit(true)))
-      .select("basinID", "row", "col", "keep")
+  private def normalized(id: Int, cells: Seq[(Int, Int, Double)]): Seq[(Int, Int, Int, Double)] = {
+    val total = cells.map(_._3).sum
+    cells.map { case (r, c, ratio) => (id, r, c, ratio / total) }
   }
 
-  /** A3 — weight normalization over surviving cells (geotools.py:262):
-    * w = (clip/cell) / sum(clip/cell) per basin.
+  /** A2 + A3 on the cell map, collected to the driver: the one home of the
+    * NaN gate and the weight normalization, as (basinID, row, col, wgt).
+    * `missing(row, col)` is the number of missing readings of a cell, or -1
+    * when the cell has no reading at all (it then takes no part in its
+    * basin). A2 (geotools.py:254-260), per basin: if the number of cells
+    * with MORE THAN ONE missing reading is smaller than the cell count, drop
+    * cells with ANY missing reading; otherwise keep all. A3 weighs the kept
+    * cells.
+    */
+  def gatedWeights(cellMap: DataFrame, missing: (Int, Int) => Long): Seq[(Int, Int, Int, Double)] =
+    ratios(cellMap).flatMap { case (id, cells) =>
+      val seen = cells.map(c => (c, missing(c._1, c._2))).filter(_._2 >= 0)
+      val bad = seen.count(_._2 > 1)
+      normalized(id, (if (bad < seen.size) seen.filter(_._2 == 0) else seen).map(_._1))
+    }
+
+  /** A3 over precomputed keep flags: `kept` holds (basinID, row, col, keep).
+    * Collects the kept cells and returns the weights as a local frame.
     */
   def weights(cellMap: DataFrame, kept: DataFrame): DataFrame = {
-    val w = Window.partitionBy("basinID")
-    cellMap
-      .join(kept, Seq("basinID", "row", "col"))
-      .where(col("keep"))
-      .withColumn("ratio", col("clip_area") / col("cell_area"))
-      .withColumn("wgt", col("ratio") / sum(col("ratio")).over(w))
-      .select("basinID", "row", "col", "wgt")
+    val spark = cellMap.sparkSession
+    import spark.implicits._
+    ratios(cellMap.join(kept.where(col("keep")), Seq("basinID", "row", "col")))
+      .flatMap((normalized _).tupled).toDF("basinID", "row", "col", "wgt")
   }
 
-  /** Full chain: values (ts,row,col,v with nodata as null) + basin cell map
-    * -> (basinID, ts, rain). A missing value on a surviving cell propagates
-    * NaN into that basin-timestamp (numpy sum semantics), matching the
-    * reference.
+  /** One decoded grid member of the window, the flagship's raster row.
+    * `values` is window-dense (row-major over the window's columns), NaN at
+    * masked nodata; `missing` holds the window indices of masked nodata
+    * cells and `absent` those the member did not supply (ragged grids).
+    * `file` and `position` (the member's order in its file) identify the
+    * member for the overlap dedup.
+    */
+  final case class GridRow(ts: Timestamp, file: String, position: Int, values: Array[Double],
+      missing: Array[Int], absent: Array[Int]) {
+
+    /** The long-row view: (ts, row, col, v) per supplied cell, v null at
+      * masked nodata.
+      */
+    def readings(ncols: Int): Iterator[(Timestamp, Int, Int, java.lang.Double)] = {
+      val (skip, miss) = (absent.toSet, missing.toSet)
+      values.indices.iterator.filterNot(skip).map { i =>
+        (ts, i / ncols, i % ncols, if (miss(i)) null else java.lang.Double.valueOf(values(i)))
+      }
+    }
+  }
+
+  /** A4 on grid rows: each member's weighted sum per basin over the basin's
+    * kept cells the member supplies, as (basinID, ts, rain). A missing value
+    * on a kept cell propagates NaN (numpy sum semantics, as the reference);
+    * a basin none of whose kept cells the member supplies has no row. The
+    * members must be one per timestamp. Runs as a map over `grids` with the
+    * weights broadcast: no join, no shuffle.
     *
+    * @param ncols     window width, to index `GridRow.values`.
     * @param numerator F7 scale divide (10: 0.1 mm -> mm).
     */
+  def gridSeries(grids: Dataset[GridRow], ws: Seq[(Int, Int, Int, Double)], ncols: Int,
+      numerator: Double): DataFrame = {
+    val spark = grids.sparkSession
+    import spark.implicits._
+    val bw = spark.sparkContext.broadcast(ws.groupBy(_._1).toArray.map { case (id, cells) =>
+      (id, cells.map(w => w._2 * ncols + w._3).toArray, cells.map(_._4).toArray) })
+    grids.flatMap { g =>
+      val absent = new java.util.BitSet(g.values.length)
+      g.absent.foreach(absent.set)
+      bw.value.iterator.flatMap { case (id, idx, wgt) =>
+        var rain = 0.0
+        var supplied = false
+        var k = 0
+        while (k < idx.length) {
+          if (!absent.get(idx(k))) { rain += g.values(idx(k)) / numerator * wgt(k); supplied = true }
+          k += 1
+        }
+        if (supplied) Some((id, g.ts, rain)) else None
+      }
+    }.toDF("basinID", "ts", "rain")
+  }
+
   /** Streaming variant of the weighted aggregation (§2.11 stretch goal):
     * identical join/weight arithmetic over a STREAMING values frame, with a
     * watermark bounding the (basinID, window) state. The NaN-cleaning gate
@@ -139,20 +198,23 @@ object SpatialPipeline {
       .agg(sum(col("contrib")).as("rain"))
       .select(col("basinID"), col("window.start").as("wstart"), col("rain"))
 
+  /** The chain over long rows: values (ts,row,col,v with nodata as null) +
+    * basin cell map -> (basinID, ts, rain), with the same gate and weights
+    * as [[gridSeries]]. Per-cell missing counts come from one
+    * `groupBy(row, col)`; the weights join the readings as a broadcast.
+    * `values` is read twice (counts, then sums): persist it when its lineage
+    * is expensive.
+    *
+    * @param numerator F7 scale divide (10: 0.1 mm -> mm).
+    */
   def weightedSeries(values: DataFrame, cellMap: DataFrame, numerator: Double): DataFrame = {
-    // persist the basin-joined window: it feeds BOTH the NaN gate and the
-    // final aggregation, and without materialization each action would
-    // re-execute the full raster lineage (gunzip + untar + text parse) twice.
-    // This is the clipped window x basins — the same working set the
-    // reference holds as its stacked array, orders of magnitude smaller than
-    // the raw raster.
-    val joined = values
-      .join(broadcast(cellMap.select("basinID", "row", "col")), Seq("row", "col"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val kept = nanCleanGate(joined)
-    val wgts = weights(cellMap, kept)
-    joined
-      .join(broadcast(wgts), Seq("basinID", "row", "col"))
+    val missing = values.groupBy("row", "col").agg(count(when(col("v").isNull, 1)))
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val spark = values.sparkSession
+    import spark.implicits._
+    val ws = gatedWeights(cellMap, (r, c) => missing.getOrElse((r, c), -1L))
+    values
+      .join(broadcast(ws.toDF("basinID", "row", "col", "wgt")), Seq("row", "col"))
       .select(col("basinID"), col("ts"),
         (coalesce(col("v"), lit(Double.NaN)) / lit(numerator) * col("wgt")).as("contrib"))
       .groupBy("basinID", "ts")

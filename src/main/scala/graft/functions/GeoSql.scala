@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** SQL-facing geometry functions (SURVEY §2.9): native Catalyst expressions
   * (see [[GeoExpressions]]) over the packed-ring geometry encoding
@@ -17,8 +18,13 @@ import org.apache.spark.sql.SparkSession
   */
 object GeoSql {
 
+  /** Register the functions in `spark`'s session, once: a session that
+    * already has them (from an earlier call or from [[graft.GraftExtensions]])
+    * is left as it is.
+    */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
+    if (reg.functionExists(FunctionIdentifier("graft_clip_areas"))) return
     reg.createOrReplaceTempFunction("st_area", e => StArea(e.head), "built-in")
     reg.createOrReplaceTempFunction("st_bbox", e => StBBox(e.head), "built-in")
     reg.createOrReplaceTempFunction("st_clip_box",

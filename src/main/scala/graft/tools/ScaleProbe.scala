@@ -1293,10 +1293,13 @@ object ScaleProbe {
     val (gridsDir, shpPath) = ensureFullFixture(spark, nBasins, nTs)
     val tFixture = (System.nanoTime() - tFix0) / 1e9
 
-    // shuffle accounting across the whole run
+    // shuffle and job accounting across the whole run
     val shuffleTotal = new java.util.concurrent.atomic.AtomicLong
     val shuffleMaxStage = new java.util.concurrent.atomic.AtomicLong
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val w = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
         shuffleTotal.addAndGet(w)
@@ -1306,7 +1309,9 @@ object ScaleProbe {
 
     // basins are authored directly in the raw grid CRS (radolan_m), so the
     // windowing path is identity and the output reprojection (Q10 areas)
-    // still exercises the closed-form CRS math
+    // still exercises the closed-form CRS math. `run` scans the archives
+    // into persisted grid rows and computes the gate and weights on the
+    // driver, so plan_sec holds the scan
     val t0 = System.nanoTime()
     val res = graft.api.RadoHydro.run(spark, gridsDir, shpPath,
       graft.api.RadoHydro.Config(datasource = "radolan", shapeCrs = "radolan_m"))
@@ -1319,16 +1324,16 @@ object ScaleProbe {
     val planStr = res.series.queryExecution.executedPlan.toString
     val bnlj = planStr.contains("BroadcastNestedLoopJoin")
 
-    // count executes the full parse -> dedup -> join -> gate -> weights ->
-    // agg chain (the aggregate's inputs cannot be pruned); a second
-    // materializing action would redo the post-persist half for nothing
+    // count runs the per-grid weighted sums over the persisted grid rows
     val t2 = System.nanoTime()
     val nRows = res.series.count()
     val tSeries = (System.nanoTime() - t2) / 1e9
 
+    // what the run keeps persisted once the series is computed
+    val persistedMb = spark.sparkContext.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum / 1e6
     val totMb = shuffleTotal.get() / 1e6
     val maxMb = shuffleMaxStage.get() / 1e6
-    println(f"""{"probe":"full_flagship","n_basins":$nBasins,"n_ts":$nTs,"n_cells":$nCells,"series_rows":$nRows,"fixture_sec":$tFixture%.1f,"plan_sec":$tPlan%.1f,"join_sec":$tJoin%.1f,"series_sec":$tSeries%.1f,"shuffle_total_mb":$totMb%.1f,"shuffle_max_stage_mb":$maxMb%.1f,"bnlj":$bnlj""" + "}")
+    println(f"""{"probe":"full_flagship","n_basins":$nBasins,"n_ts":$nTs,"n_cells":$nCells,"series_rows":$nRows,"fixture_sec":$tFixture%.1f,"plan_sec":$tPlan%.1f,"join_sec":$tJoin%.1f,"series_sec":$tSeries%.1f,"jobs":${jobs.get},"shuffle_total_mb":$totMb%.1f,"shuffle_max_stage_mb":$maxMb%.1f,"persisted_mb":$persistedMb%.1f,"bnlj":$bnlj""" + "}")
     require(!bnlj, "flagship plan regressed to BroadcastNestedLoopJoin")
     spark.stop()
   }

@@ -89,6 +89,7 @@ class SpatialPipelineGoldenSpec extends AnyFunSuite {
     val plan = cm.queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF") && !plan.toLowerCase.contains("batcheval"),
       s"geometry kernels must run as native expressions, plan was:\n$plan")
+    assert("clipareas\\(".r.findAllIn(plan).size == 1, s"the clip must run once per pair, plan was:\n$plan")
     assert(cm.count() == 50 * 4) // each 1.5x1.5 box at integer offsets covers 2x2 cells
   }
 
