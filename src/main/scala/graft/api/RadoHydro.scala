@@ -6,8 +6,12 @@ import java.sql.Timestamp
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.{Grid, SpatialPipeline}
 import graft.geo.{Crs, Geom}
@@ -16,8 +20,9 @@ import graft.ingest.{Archives, AsciiGrid, GeoTiff, Regnie, Shp}
 /** The `radohydro()`-equivalent entry point (reference radohydro.py:503-546),
   * re-expressed as a Spark plan with one row per decoded grid:
   *
-  *   binaryFile scan -> archive expand -> windowed raster parse (one
-  *     window-dense row per grid member, persisted)
+  *   path-only binaryFile listing -> Hadoop FS open -> archive expand
+  *     -> windowed raster parse (one window-dense row per grid member,
+  *     persisted)
   *     -> collect member metadata: overlap dedup + per-cell missing counts
   *     -> collect basin/cell map -> NaN gate + weights (driver)
   *     -> map each kept grid to its per-basin weighted sums -> sinks
@@ -27,9 +32,10 @@ import graft.ingest.{Archives, AsciiGrid, GeoTiff, Regnie, Shp}
   * historical archives never double-count rain and the surviving copy does
   * not depend on task order. The clip window is computed once from the first
   * grid's header + basin bounds (reference X9/X1) and pushed into the parser
-  * as a row/col range. Each scan task streams its archive through one reused
-  * member buffer (one decoded grid's text at a time, never the whole decoded
-  * archive; the compressed file itself arrives as one binaryFile array),
+  * as a row/col range. Spark lists and packs the files (`binaryFile`, path
+  * column only); each scan task opens its files through Hadoop `FileSystem`,
+  * so any Hadoop scheme works, and streams each archive through one reused
+  * member buffer (one decoded grid's text at a time, never a whole file),
   * skips the rows before the window, converts only the window's columns to
   * numbers and stops reading a grid after the window's last row. The basin
   * dimension is read driver-side (small shapefile) and reprojected with
@@ -96,26 +102,32 @@ object RadoHydro {
     }
   }
 
-  /** The raster files of a directory, by name, without the hidden ones
-    * (names starting with '.' or '_', such as Hadoop `.crc` sidecars), which
-    * the `binaryFile` scan skips too.
+  /** The raster files of `dir` as one path-only `binaryFile` relation:
+    * Spark's Hadoop listing (names starting with '.' or '_', such as Hadoop
+    * `.crc` sidecars, are hidden), its file packing into scan tasks, and no
+    * `content` column, so no file's bytes are read into a row.
     */
-  def gridFiles(dir: String): Array[java.io.File] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-      .sortBy(_.getName)
+  private[graft] def rasterFiles(spark: SparkSession, dir: String): DataFrame =
+    spark.read.format("binaryFile").load(dir).select("path")
 
-  /** Peek the first grid member in a directory (driver-side, reference X9:
-    * the cell grid derives from the first grid only). Reads up to the end of
-    * that member and no further.
+  /** The files of a [[rasterFiles]] relation, by name. */
+  private[graft] def paths(files: DataFrame): Seq[Path] =
+    files.inputFiles.toSeq.map(u => new Path(new java.net.URI(u))).sortBy(_.getName)
+
+  /** Open a raster file through its Hadoop `FileSystem`, buffered. */
+  private[graft] def open(path: Path, conf: Configuration): InputStream =
+    new java.io.BufferedInputStream(path.getFileSystem(conf).open(path), 64 * 1024)
+
+  /** Peek the first grid member of the first raster file by name (driver-side,
+    * reference X9: the cell grid derives from the first grid only). Reads up
+    * to the end of that member and no further.
     */
-  def peekFirstGrid(dir: String, datasource: String): GridMeta = {
-    val files = gridFiles(dir)
-    require(files.nonEmpty, s"no grid files in $dir")
-    val in = new java.io.BufferedInputStream(new java.io.FileInputStream(files.head), 64 * 1024)
+  def peekFirstGrid(files: DataFrame, datasource: String): GridMeta = {
+    val first = paths(files).headOption.getOrElse(throw new IllegalArgumentException("no grid files"))
+    val in = open(first, files.sparkSession.sessionState.newHadoopConf())
     try {
-      val members = Archives.members(files.head.getName, in)
-      require(members.hasNext, s"no members in ${files.head}")
+      val members = Archives.members(first.getName, in)
+      require(members.hasNext, s"no members in $first")
       val m = members.next()
       if (datasource == "regnie") {
         val text = new String(m.bytes, 0, m.length, US_ASCII)
@@ -270,7 +282,8 @@ object RadoHydro {
     }
 
     // --- window from first grid + basin bounds (X1/X9, Q6/Q7) --------------
-    val meta = peekFirstGrid(gridDir, cfg.datasource)
+    val files = rasterFiles(spark, gridDir)
+    val meta = peekFirstGrid(files, cfg.datasource)
     val t = meta.t
     val basinsRawCrs = basinsRaw.map { case (id, g, _) => (id, Crs.reproject(g, shapeCrs, rawCrs)) }
     val allBounds = {
@@ -294,11 +307,17 @@ object RadoHydro {
       cfg.startDate.map(s => utcTs(LocalDateTime.parse(s + "0000", radolanTsFmt))),
       cfg.endDate.map(s => utcTs(LocalDateTime.parse(s + "2359", radolanTsFmt))))
     val mask = cfg.maskNodata
-    val grids = spark.read.format("binaryFile").load(gridDir)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val fname = path.substring(path.lastIndexOf('/') + 1)
-        gridRows(fname, new java.io.ByteArrayInputStream(bytes), spec, mask)
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val grids = files.as[String]
+      .flatMap { p =>
+        val path = new Path(p)
+        val in = open(path, conf.value.value)
+        TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
+        val rows = gridRows(path.getName, in, spec, mask)
+        new Iterator[SpatialPipeline.GridRow] {
+          def hasNext: Boolean = rows.hasNext || { in.close(); false }
+          def next(): SpatialPipeline.GridRow = rows.next()
+        }
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
 

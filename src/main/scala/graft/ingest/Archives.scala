@@ -4,7 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream, Pushba
 import java.util.zip.GZIPInputStream
 
 /** Archive expansion (SURVEY S3–S5): tar / tar.gz / gz members streamed
-  * from an `InputStream`, used inside the `binaryFile` scan task so a daily
+  * from an `InputStream`, used inside the flagship's scan task so a daily
   * archive expands to hourly members in the task that read it — the Spark
   * analog of the reference's in-memory `tarfile`/`gzip` streaming
   * (radohydro.py:207-210, 292-306, 440). No temp files, no driver round-trip.

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{InputScale, Tables}
@@ -418,7 +419,7 @@ object Dedup {
       .where(col("bsz") >= 2 && col("bsz") <= SimhashMaxBucket)
       .select("band_idx", "band_key")
     // the broadcast hint is CORRECT here, unlike the MinHash keep-list
-    // (lshBands) and the embedding whale list (embedCandidatePairs), both
+    // (lshBands) and the embedding whale count (embedCandidatePairs), both
     // deliberately un-broadcast: this key space is structurally bounded at
     // 4 bands x 2^15 band values = 131072 rows regardless of corpus size,
     // so the broadcast can never grow with the data
@@ -570,27 +571,27 @@ object Dedup {
   private[operators] val LshBucketCap = 256
 
   /** Candidate pairs from an lshKeys frame with the whale-bucket guard
-    * applied: the anti-join prunes oversized keys before the self-join.
+    * applied: a count over each (tbl, key) bucket drops oversized buckets,
+    * and each kept bucket (at most LshBucketCap ids) lists its pairs.
     *
-    * The whale list is deliberately NOT hint-broadcast (unlike
-    * [[simhashCandidates]]' keep-list, whose key space is bounded at
-    * 4 x 2^15 buckets): its worst case is n/cap keys — LINEAR in the
-    * corpus (~4M keys / ~60 MB at 1B vectors, GBs beyond), the same
-    * unbounded-keep-list reasoning that un-broadcast the MinHash keep
-    * list in [[lshBands]]. The anti-join rides the (tbl, key) shuffle
-    * the self-join needs anyway, and AQE still converts it to a
-    * broadcast at runtime when the OBSERVED list is small — the
-    * data-derived gate, not a hardcoded hint.
+    * Nothing is broadcast (unlike [[simhashCandidates]]' keep-list, whose
+    * key space is bounded at 4 x 2^15 buckets): the whale list's worst case
+    * is n/cap keys — LINEAR in the corpus (~4M keys / ~60 MB at 1B vectors,
+    * GBs beyond), the same unbounded-keep-list reasoning that un-broadcast
+    * the MinHash keep list in [[lshBands]]. The count is a window over the
+    * one (tbl, key) shuffle, and the pairs come from the bucket lists, so
+    * the keyed frame is computed once. An anti-join against a grouped whale
+    * list plus a self-join would compute it twice and leave AQE a race: it
+    * re-plans the anti-join once the whale list is known and keeps any
+    * keyed-side (tbl, key) shuffle that already ran, so d8's live shuffle
+    * count would vary from run to run.
     */
   private[operators] def embedCandidatePairs(keyed: DataFrame): DataFrame = {
-    val whales = keyed.groupBy("tbl", "key").agg(count(lit(1)).as("bsz"))
-      .where(col("bsz") > LshBucketCap)
-    val pruned = keyed.join(whales.select("tbl", "key"), Seq("tbl", "key"), "left_anti")
-    val a = pruned.as("a"); val b = pruned.as("b")
-    a.join(b,
-        col("a.tbl") === col("b.tbl") && col("a.key") === col("b.key") &&
-        col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
+    val buckets = keyed.withColumn("bsz", count(lit(1)).over(Window.partitionBy("tbl", "key")))
+      .where(col("bsz") <= LshBucketCap)
+      .groupBy("tbl", "key").agg(collect_list("vec_id").as("ids"))
+    buckets.select(explode(col("ids")).as("id_a"), col("ids"))
+      .select(col("id_a"), explode(filter(col("ids"), _ > col("id_a"))).as("id_b"))
       .distinct()
   }
 
@@ -846,7 +847,6 @@ object Dedup {
     * [[graft.api.Curation]] composes it as the span-coverage gate.
     */
   private[graft] def dupSpanStats(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val s = docs.sparkSession
     graft.functions.HashRegistry.register(s)
     // gram key = portable 60-bit hash (graft_hash60 == DuckDB's md5-prefix

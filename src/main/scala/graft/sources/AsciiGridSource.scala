@@ -3,6 +3,9 @@ package graft.sources
 import java.util
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -11,6 +14,7 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.api.RadoHydro
 
@@ -106,6 +110,8 @@ class AsciiGridScan(options: Map[String, String],
     rowLo: Int, rowHi: Int, colLo: Int, colHi: Int,
     pushed: Array[Filter]) extends Scan with Batch {
 
+  private def spark = SparkSession.active
+
   override def readSchema(): StructType = AsciiGridSource.schema
   override def description(): String =
     s"AsciiGridScan window rows=[$rowLo,$rowHi] cols=[$colLo,$colHi] " +
@@ -115,29 +121,30 @@ class AsciiGridScan(options: Map[String, String],
   override def planInputPartitions(): Array[InputPartition] = {
     val dir = options.getOrElse("path",
       throw new IllegalArgumentException("asciigrid: missing load path"))
-    require(new java.io.File(dir).isDirectory, s"asciigrid: cannot list $dir")
-    RadoHydro.gridFiles(dir).map(f => AsciiGridFilePartition(f.getAbsolutePath): InputPartition)
+    RadoHydro.paths(RadoHydro.rasterFiles(spark, dir))
+      .map(p => AsciiGridFilePartition(p.toString): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val (rl, rh, cl, ch) = (rowLo, rowHi, colLo, colHi)
     val datasource = options.getOrElse("datasource", "radolan")
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     new PartitionReaderFactory {
       override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new AsciiGridPartitionReader(
-          partition.asInstanceOf[AsciiGridFilePartition].path, datasource, rl, rh, cl, ch)
+        new AsciiGridPartitionReader(new Path(partition.asInstanceOf[AsciiGridFilePartition].path),
+          conf.value.value, datasource, rl, rh, cl, ch)
     }
   }
 }
 
-class AsciiGridPartitionReader(path: String, datasource: String,
+class AsciiGridPartitionReader(path: Path, conf: Configuration, datasource: String,
     rowLo: Int, rowHi: Int, colLo: Int, colHi: Int)
     extends PartitionReader[InternalRow] {
 
-  private val in = new java.io.BufferedInputStream(new java.io.FileInputStream(path), 64 * 1024)
+  private val in = RadoHydro.open(path, conf)
 
   private val iter: Iterator[InternalRow] = {
-    val name = path.substring(path.lastIndexOf('/') + 1)
+    val name = path.getName
     def until(hi: Int) = if (hi == Int.MaxValue) Int.MaxValue else hi + 1
     val spec = RadoHydro.ScanSpec(datasource, (rowLo, until(rowHi)), (colLo, until(colHi)))
     RadoHydro.scanFile(name, in, spec).flatMap { g =>

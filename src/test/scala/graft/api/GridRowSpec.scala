@@ -7,7 +7,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{SpatialPipeline, TestSpark}
@@ -83,6 +83,24 @@ class GridRowSpec extends AnyFunSuite {
 
   private type Series = Map[(Int, Long), Double]
 
+  /** Returns once every listener event posted so far was delivered: the bus
+    * delivers events in order, so once a sentinel job's start is seen, every
+    * earlier stage event was delivered too.
+    */
+  private def awaitListener(sc: org.apache.spark.SparkContext): Unit = {
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val sentinel = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "gridrow-sentinel")) seen.countDown()
+    }
+    sc.addSparkListener(sentinel)
+    try {
+      sc.setJobGroup("gridrow-sentinel", "sentinel")
+      spark.range(1).collect()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the sentinel job")
+    } finally sc.removeSparkListener(sentinel)
+  }
+
   private def collect(df: org.apache.spark.sql.DataFrame): Series =
     df.collect().map(r => (r.getInt(0), r.getTimestamp(1).getTime) -> r.getDouble(2)).toMap
 
@@ -146,15 +164,34 @@ class GridRowSpec extends AnyFunSuite {
       Map("spark.sql.files.openCostInBytes" -> "0", "spark.sql.files.minPartitionNum" -> "1"),
       Map("spark.sql.files.openCostInBytes" -> (64L << 20).toString,
         "spark.sql.files.maxPartitionBytes" -> (64L << 20).toString))
-    val runs = for (dir <- dirs; layout <- layouts) yield {
-      val before = layout.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      layout.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val res = RadoHydro.run(spark, dir, basinsShp)
-        assert(res.values.count() == 3L * res.window.nrows * res.window.ncols)
-        collect(res.series)
-      } finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    // the task counts of the stages that scan the files, per layout
+    val scanTasks = new ConcurrentHashMap[String, java.util.Set[Int]]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_ => e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          .foreach(g => scanTasks.computeIfAbsent(g, _ => ConcurrentHashMap.newKeySet[Int]()).add(e.stageInfo.numTasks))
     }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val runs = try {
+      val runs = for (dir <- dirs; (layout, i) <- layouts.zipWithIndex) yield {
+        val before = layout.keys.map(k => k -> spark.conf.getOption(k)).toMap
+        layout.foreach { case (k, v) => spark.conf.set(k, v) }
+        sc.setJobGroup(s"layout-$i", "layout")
+        try {
+          val res = RadoHydro.run(spark, dir, basinsShp)
+          assert(res.values.count() == 3L * res.window.nrows * res.window.ncols)
+          collect(res.series)
+        } finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      }
+      awaitListener(sc)
+      runs
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(scanTasks.asScala.map { case (g, n) => g -> n.asScala.toSet } == Map("layout-0" -> Set(1), "layout-1" -> Set(2)))
     runs.tail.foreach(r => assert(r == runs.head))
     // the cell-aligned basins are cell means: hour 1 comes from archive b
     rects.zipWithIndex.foreach { case ((r0, c0, r1, c1), i) =>
@@ -189,13 +226,7 @@ class GridRowSpec extends AnyFunSuite {
       val res = RadoHydro.run(spark, dir, basinsShp)
       sc.setJobGroup("gridrow-sink", "sink")
       CsvSink.write(res.series, res.basins, out)
-      // the bus delivers events in order: once the sentinel's start is seen,
-      // every earlier stage completion was delivered too
-      sc.setJobGroup("gridrow-sentinel", "sentinel")
-      spark.range(1).collect()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!jobs.containsValue("gridrow-sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(jobs.containsValue("gridrow-sentinel"), "listener never saw the sentinel job")
+      awaitListener(sc)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

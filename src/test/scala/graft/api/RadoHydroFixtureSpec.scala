@@ -1,9 +1,15 @@
 package graft.api
 
 import java.io.ByteArrayInputStream
+import java.net.URI
 import java.nio.file.{Files, Path}
 import java.time.{LocalDateTime, ZoneOffset}
 
+import org.apache.hadoop.fs.RawLocalFileSystem
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.TestSpark
@@ -19,7 +25,7 @@ import graft.out.ShpWriter
   * repeated in a second daily archive as an `.asc.gz` member, and hidden
   * sidecar files that sort first.
   */
-class RadoHydroFixtureSpec extends AnyFunSuite {
+class RadoHydroFixtureSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
 
   // a 30 x 30 block of the RADOLAN grid, 1 km cells, row 0 north
@@ -86,6 +92,9 @@ class RadoHydroFixtureSpec extends AnyFunSuite {
     (grids.toString, shp)
   }
 
+  private def series(res: RadoHydro.Result): Map[(Int, Long), Double] =
+    res.series.collect().map(r => (r.getInt(0), r.getTimestamp(1).getTime) -> r.getDouble(2)).toMap
+
   /** Expected (basinID, epoch ms) -> mm: the mean of the basin's cells. A
     * masked nodata cell fails the NaN gate and leaves its basin for good.
     */
@@ -101,10 +110,9 @@ class RadoHydroFixtureSpec extends AnyFunSuite {
       (i + 1, ms) -> cells.map { case (r, c) => value(day, hour, r, c) / 10.0 }.sum / cells.size
     }).toMap
 
-  private def check(cfg: RadoHydro.Config, days: Seq[Int]): RadoHydro.Result = {
-    val (grids, shp) = fixture
-    val res = RadoHydro.run(spark, grids, shp, cfg)
-    val got = res.series.collect().map(r => (r.getInt(0), r.getTimestamp(1).getTime) -> r.getDouble(2)).toMap
+  private def check(cfg: RadoHydro.Config, days: Seq[Int], grids: String = fixture._1): RadoHydro.Result = {
+    val res = RadoHydro.run(spark, grids, fixture._2, cfg)
+    val got = series(res)
     val want = expected(days, cfg.maskNodata)
     assert(got.keySet == want.keySet)
     // the corners round-trip through EPSG:25833, which moves edge-cell
@@ -130,6 +138,37 @@ class RadoHydroFixtureSpec extends AnyFunSuite {
     assert(df.count() == 10L * Rows * Cols) // 9 hours + the repeated one
     val v = df.where("row = 9 and col = 7").orderBy("ts").collect().map(_.getDouble(3)).toSeq
     assert(v.size == 10 && v.contains(Nodata.toDouble))
+  }
+
+  test("the flagship scan reads no file content: its binaryFile ReadSchema holds the path only") {
+    val res = RadoHydro.run(spark, fixture._1, fixture._2)
+    def binaryScans(p: SparkPlan): Seq[FileSourceScanExec] = collect(p) {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[BinaryFileFormat] => Seq(s)
+      case m: InMemoryTableScanExec => binaryScans(m.relation.cachedPlan)
+    }.flatten
+    val scans = binaryScans(res.values.queryExecution.executedPlan)
+    assert(scans.map(_.metadata("ReadSchema")) == Seq("struct<path:string>"))
+  }
+
+  test("run, peekFirstGrid and the asciigrid source read through a non-file Hadoop scheme") {
+    // the fixture's files, one of them renamed to hold a space
+    val copy = Files.createTempDirectory("rado_scheme").resolve("grids")
+    Files.createDirectories(copy)
+    Files.list(Path.of(fixture._1)).forEach { f =>
+      val name = f.getFileName.toString
+      Files.copy(f, copy.resolve(if (name == "RW-20180101-00.tar.gz") "RW-20180101-00 again.tar.gz" else name))
+    }
+    spark.sparkContext.hadoopConfiguration.set(s"fs.${OtherSchemeFileSystem.Scheme}.impl",
+      classOf[OtherSchemeFileSystem].getName)
+    val viaScheme = s"${OtherSchemeFileSystem.Scheme}://$copy"
+    val local = series(check(RadoHydro.Config(), Seq(1, 2, 3), copy.toString))
+    val res = check(RadoHydro.Config(), Seq(1, 2, 3), viaScheme)
+    assert(series(res) == local)
+    val files = RadoHydro.rasterFiles(spark, viaScheme)
+    assert(files.inputFiles.length == 3 && files.inputFiles.forall(_.startsWith(OtherSchemeFileSystem.Scheme + ":")))
+    assert(RadoHydro.peekFirstGrid(files, "radolan") == res.meta)
+    val df = spark.read.format("graft.sources.AsciiGridSource").load(viaScheme)
+    assert(df.count() == 10L * Rows * Cols)
   }
 
   test("the scan task allocates less than half the uncompressed size of a 900x900 archive") {
@@ -158,4 +197,16 @@ class RadoHydroFixtureSpec extends AnyFunSuite {
     info(s"allocated $allocated bytes decoding ${tar.length} uncompressed bytes")
     assert(allocated < tar.length / 2)
   }
+}
+
+/** The local filesystem under a scheme of its own, so a test can read through
+  * a Hadoop `FileSystem` that is not `file:` without a network.
+  */
+class OtherSchemeFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create(s"${OtherSchemeFileSystem.Scheme}:///")
+  override def getScheme: String = OtherSchemeFileSystem.Scheme
+}
+
+object OtherSchemeFileSystem {
+  val Scheme = "graftlocal"
 }

@@ -58,7 +58,7 @@ class PlanBudgetSpec extends AnyFunSuite {
       "d5_ngram_jaccard" -> Budget(2, 0),
       "d6_embed_cosine" -> Budget(1, 0),
       "d7_simhash_pairs" -> Budget(2, 0),
-      "d8_embed_lsh_dedup" -> Budget(9, 4),
+      "d8_embed_lsh_dedup" -> Budget(6, 2),
       "d9_dedup_groups" -> Budget(1, 0),
       "e1_kmeans" -> Budget(1, 0),
       "e2_semdedup" -> Budget(3, 0),
