@@ -24,18 +24,7 @@ object CurationOps {
   private def c1Curate(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     // one per-row pass: all row-grain stage verdicts from the same scan
-    val base = docs
-      .withColumn("toks", split(trim(col("text")), "\\s+"))
-      .withColumn("n_tokens", size(col("toks")).cast(DoubleType))
-      .withColumn("punct_ratio",
-        length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast(DoubleType)
-          / length(col("text")))
-      .withColumn("stop_hits",
-        size(expr("filter(toks, t -> t IN ('the','a','of','and','to','in'))")).cast(DoubleType))
-      .withColumn("quality",
-        least(col("n_tokens") / 100, lit(1.0)) * 0.4 +
-          (lit(1.0) - col("punct_ratio")) * 0.3 +
-          least(col("stop_hits") / 10, lit(1.0)) * 0.3)
+    val base = TextOps.withQuality(docs)
       .select(col("doc_id"),
         (col("quality") >= 0.5).as("q_pass"),
         md5(regexp_replace(lower(col("text")), "\\s+", " ")).as("fp"),
@@ -203,18 +192,7 @@ object CurationOps {
   private val PerceptronRounds = 4
 
   private def c4Features(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .withColumn("toks", split(trim(col("text")), "\\s+"))
-      .withColumn("n_tokens", size(col("toks")).cast(DoubleType))
-      .withColumn("punct_ratio",
-        length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast(DoubleType)
-          / length(col("text")))
-      .withColumn("stop_hits",
-        size(expr("filter(toks, t -> t IN ('the','a','of','and','to','in'))")).cast(DoubleType))
-      .withColumn("quality",
-        least(col("n_tokens") / 100, lit(1.0)) * 0.4 +
-          (lit(1.0) - col("punct_ratio")) * 0.3 +
-          least(col("stop_hits") / 10, lit(1.0)) * 0.3)
+    TextOps.withQuality(Tables.documents(s, d))
       .select(
         when(col("quality") >= 0.5, 1L).otherwise(-1L).as("y"),
         lit(1L).as("x0"),

@@ -171,11 +171,13 @@ object TextOps {
   // fixed threshold. Per-row arithmetic only — no cross-row sums, so the
   // score is engine-exact; the filter runs inside whole-stage codegen next
   // to the scan at any scale.
-  /** (doc_id, quality) — t5's per-row composite score, shared with c2's
-    * canonical selection. Row-local arithmetic only, so engine-exact.
+  /** `docs` plus t5's per-row composite score and its parts: `toks`,
+    * `n_tokens`, `punct_ratio`, `stop_hits` and `quality`. Row-local
+    * arithmetic only, so engine-exact; t5/c2 (via [[qualityFrame]]), c1 and
+    * c4 all score through it.
     */
-  private[graft] def qualityFrame(s: SparkSession, d: String): DataFrame =
-    Tables.documentsSpread(s, d)
+  private[operators] def withQuality(docs: DataFrame): DataFrame =
+    docs
       .withColumn("toks", split(trim(col("text")), "\\s+"))
       .withColumn("n_tokens", size(col("toks")).cast(DoubleType))
       .withColumn("punct_ratio",
@@ -187,7 +189,12 @@ object TextOps {
         least(col("n_tokens") / 100, lit(1.0)) * 0.4 +
           (lit(1.0) - col("punct_ratio")) * 0.3 +
           least(col("stop_hits") / 10, lit(1.0)) * 0.3)
-      .select(col("doc_id"), col("quality"))
+
+  /** (doc_id, quality) — t5's per-row composite score, shared with c2's
+    * canonical selection.
+    */
+  private[graft] def qualityFrame(s: SparkSession, d: String): DataFrame =
+    withQuality(Tables.documentsSpread(s, d)).select(col("doc_id"), col("quality"))
 
   /** The matching DuckDB derivation of (doc_id, quality) — a full CTE body. */
   private[operators] val qualitySqlCte: String =
@@ -1394,6 +1401,40 @@ object TextOps {
     s"enc$BpeMerges"
   }
 
+  /** [[bpeEncodeCtes]] plus the id CTEs t21 and t23 share: `chars` (the
+    * base alphabet), `base` (its ids in sorted order), `symtab` (base and
+    * merged symbols to ids) and `wids` (each word's id list). Returns the
+    * final encoding CTE's name.
+    */
+  private def bpeIdCtes(ctes: scala.collection.mutable.ArrayBuffer[String]): String = {
+    val sep = "chr(31)"
+    val enc = bpeEncodeCtes(ctes)
+    val mergeUnion = (1 to BpeMerges).map(k => s"SELECT merge_idx, l, r FROM b$k")
+      .mkString(" UNION ALL ")
+    ctes += s"""chars AS (
+       |  SELECT DISTINCT unnest(string_split(seq, $sep)) AS sym FROM enc0
+       |)""".stripMargin
+    ctes += """base AS MATERIALIZED (
+       |  SELECT sym, row_number() OVER (ORDER BY sym) - 1 AS id FROM chars
+       |)""".stripMargin
+    ctes += s"""symtab AS MATERIALIZED (
+       |  SELECT sym, min(id) AS id FROM (
+       |    SELECT sym, id FROM base
+       |    UNION ALL
+       |    SELECT l || r AS sym, nb.n + merge_idx - 1 AS id
+       |    FROM ($mergeUnion), (SELECT count(*) AS n FROM base) nb
+       |  ) GROUP BY sym
+       |)""".stripMargin
+    ctes += s"""wids AS MATERIALIZED (
+       |  SELECT word, list(id ORDER BY pi) AS ids FROM (
+       |    SELECT word, unnest(range(1, len(ps) + 1)) AS pi, unnest(ps) AS piece
+       |    FROM (SELECT word, string_split(seq, $sep) AS ps FROM $enc)
+       |  ) JOIN symtab ON piece = sym
+       |  GROUP BY word
+       |)""".stripMargin
+    enc
+  }
+
   private val t20Sql: String = {
     val sep = "chr(31)"
     val ctes = new scala.collection.mutable.ArrayBuffer[String]
@@ -1526,32 +1567,8 @@ object TextOps {
   }
 
   private[graft] val t21Sql: String = {
-    val sep = "chr(31)"
     val ctes = new scala.collection.mutable.ArrayBuffer[String]
-    val enc = bpeEncodeCtes(ctes)
-    val mergeUnion = (1 to BpeMerges).map(k => s"SELECT merge_idx, l, r FROM b$k")
-      .mkString(" UNION ALL ")
-    ctes += s"""chars AS (
-       |  SELECT DISTINCT unnest(string_split(seq, $sep)) AS sym FROM enc0
-       |)""".stripMargin
-    ctes += """base AS MATERIALIZED (
-       |  SELECT sym, row_number() OVER (ORDER BY sym) - 1 AS id FROM chars
-       |)""".stripMargin
-    ctes += s"""symtab AS MATERIALIZED (
-       |  SELECT sym, min(id) AS id FROM (
-       |    SELECT sym, id FROM base
-       |    UNION ALL
-       |    SELECT l || r AS sym, nb.n + merge_idx - 1 AS id
-       |    FROM ($mergeUnion), (SELECT count(*) AS n FROM base) nb
-       |  ) GROUP BY sym
-       |)""".stripMargin
-    ctes += s"""wids AS MATERIALIZED (
-       |  SELECT word, list(id ORDER BY pi) AS ids FROM (
-       |    SELECT word, unnest(range(1, len(ps) + 1)) AS pi, unnest(ps) AS piece
-       |    FROM (SELECT word, string_split(seq, $sep) AS ps FROM $enc)
-       |  ) JOIN symtab ON piece = sym
-       |  GROUP BY word
-       |)""".stripMargin
+    bpeIdCtes(ctes)
     ctes += """dseq AS (
        |  SELECT doc_id, flatten(list(ids ORDER BY pos)) AS ids FROM (
        |    SELECT doc_id, pos, word FROM (
@@ -1688,7 +1705,7 @@ object TextOps {
     val sep = "chr(31)"
     val P = PackSize
     val ctes = new scala.collection.mutable.ArrayBuffer[String]
-    val enc = bpeEncodeCtes(ctes)
+    val enc = bpeIdCtes(ctes)
     // The oracle assembles packs at TOKEN level (each token joined to its
     // global stream position, per-pack string_agg/arg_min over scalars) —
     // NOT by re-stating t21's dseq CTE: the per-doc list assembly is the
@@ -1696,29 +1713,6 @@ object TextOps {
     // sf10 and infeasible at sf100), and t23's pack lists would double it.
     // Token-level state is the data itself (the growing per-pack strings),
     // so this formulation gates sf10 where the list form bad-allocates.
-    val mergeUnion = (1 to BpeMerges).map(k => s"SELECT merge_idx, l, r FROM b$k")
-      .mkString(" UNION ALL ")
-    ctes += s"""chars AS (
-       |  SELECT DISTINCT unnest(string_split(seq, $sep)) AS sym FROM enc0
-       |)""".stripMargin
-    ctes += """base AS MATERIALIZED (
-       |  SELECT sym, row_number() OVER (ORDER BY sym) - 1 AS id FROM chars
-       |)""".stripMargin
-    ctes += s"""symtab AS MATERIALIZED (
-       |  SELECT sym, min(id) AS id FROM (
-       |    SELECT sym, id FROM base
-       |    UNION ALL
-       |    SELECT l || r AS sym, nb.n + merge_idx - 1 AS id
-       |    FROM ($mergeUnion), (SELECT count(*) AS n FROM base) nb
-       |  ) GROUP BY sym
-       |)""".stripMargin
-    ctes += s"""wids AS MATERIALIZED (
-       |  SELECT word, list(id ORDER BY pi) AS ids FROM (
-       |    SELECT word, unnest(range(1, len(ps) + 1)) AS pi, unnest(ps) AS piece
-       |    FROM (SELECT word, string_split(seq, $sep) AS ps FROM $enc)
-       |  ) JOIN symtab ON piece = sym
-       |  GROUP BY word
-       |)""".stripMargin
     ctes += s"""bpe_cnt AS (
        |  SELECT doc_id, CAST(sum(cnt * len(string_split(e.seq, $sep))) AS BIGINT) AS n_tokens
        |  FROM pdw JOIN $enc e USING (word)

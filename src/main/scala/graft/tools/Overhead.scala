@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Scratch diagnostics for the per-query constant term (round-7 focus): for
   * each named query, splits wall into DataFrame construction (Tables read +
   * transform build), analysis, optimization, physical planning, and
-  * execution, and counts the Spark jobs the execution submitted. Three runs
-  * so first-run codegen/JIT cost is separable from steady state. Not part of
-  * the driver surface.
+  * execution, and counts the Spark jobs the execution submitted
+  * ([[Probe.query]]). Three runs so first-run codegen/JIT cost is separable
+  * from steady state. Not part of the driver surface.
   */
 object Overhead {
   def main(args: Array[String]): Unit = {
@@ -21,33 +21,19 @@ object Overhead {
       builder.config(kv.split('=')(0), kv.split('=')(1))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
+    val meter = Probe.meter(spark)
     try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // SPARK_GRAFT_WARM_SF=<dir>: run each query once against that (tiny) SF
     // first, so the measured run shows what codegen-cache warmth is worth
     val warmSf = sys.env.get("SPARK_GRAFT_WARM_SF")
     for (sf <- warmSf; name <- args) {
-      val t0 = System.nanoTime()
-      try graft.SparkEntry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      println(f"[warm] $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      val (_, sec) = Probe.secs {
+        try graft.SparkEntry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
+        catch { case _: Throwable => () }
+      }
+      println(f"[warm] $name $sec%.3f s")
     }
-    def t[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    for (name <- args; i <- 1 to 3) {
-      val j0 = jobs.get()
-      val (df, build) = t(graft.SparkEntry.queries(name)(spark, sfDir))
-      val (_, analyze) = t(df.queryExecution.analyzed)
-      val (_, opt) = t(df.queryExecution.optimizedPlan)
-      val (_, plan) = t(df.queryExecution.executedPlan)
-      val (_, exec) = t(df.write.format("noop").mode("overwrite").save())
-      println(f"[ovh] $name%-22s run$i build=$build%.3f analyze=$analyze%.3f opt=$opt%.3f plan=$plan%.3f exec=$exec%.3f jobs=${jobs.get() - j0}")
-    }
+    for (name <- args; i <- 1 to 3) Probe.query(spark, meter, sfDir, name, s"ovh run$i")
     spark.stop()
   }
 }

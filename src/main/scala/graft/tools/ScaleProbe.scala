@@ -2,97 +2,98 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Grid, SpatialPipeline}
 import graft.ingest.RadolanRender
+import graft.operators.ArtifactCache
+import Probe.{fixtureOnce, secs}
 
-/** Scale probes for the flagship spatial pipeline.
+/** Scale probes: each mode synthesizes (or reads) an input well above the
+  * verify corpus, drives the public query surface or the flagship over it,
+  * prints one `{"probe":…}` summary line and `require`s its invariants.
+  * Measuring goes through [[Probe]].
   *
-  * Mode 1 (default) — JOIN KERNEL: N pentagon basins, mode 2's layout
-  * (the reference's published cliff is >10k polygons, README:18 — its GEOS
-  * overlay is per-feature) through `basinCellMap` + a weighted series over
-  * T synthetic timesteps.
-  *
-  * Mode 2 (`full`) — WHOLE FLAGSHIP end-to-end: renders a real fixture
-  * (daily `.tar.gz` archives of full 900x900 RADOLAN-layout ASCII grids,
-  * ~0.1% nodata; a 100k-pentagon shapefile) and drives `RadoHydro.run` —
-  * binaryFile scan -> tar/gz expand -> windowed parse -> dedup -> spatial
-  * join -> NaN gate -> weights -> weighted series — reporting wall time,
-  * total/max-stage shuffle write bytes, and asserting no
-  * BroadcastNestedLoopJoin in the physical plan.
-  *
-  * Usage: runMain graft.tools.ScaleProbe [nBasins] [nTimesteps]
-  *        runMain graft.tools.ScaleProbe full [nBasins] [nTimesteps]
+  * Usage: `runMain graft.tools.ScaleProbe [mode] [args…]`; the default mode
+  * is `full`. Modes and their arguments (defaults in brackets):
+  *  - `full [nBasins=100000] [nTimesteps=240]` — the flagship `RadoHydro.run`
+  *    on rendered 900x900 RADOLAN archives and pentagon basins;
+  *  - `embed [n=200000]` — d8/s3/e2/s5/s7 over n synthetic 64-dim vectors;
+  *  - `docs [n=50000]` — the text-dedup family over n synthetic documents;
+  *  - `graph [nOrders=1500000]` — n1/n2 PageRank, convergence and gate parity;
+  *  - `skew [nRows=6000000]` — a8/j8 salting over one 50% whale key;
+  *  - `spans [nDocs=200000]` — d11 with one whale gram in half the corpus;
+  *  - `bpe [nWords=2000000] [totalMerges=10] [batch=1]` — t19 driver vs
+  *    distributed merge-table parity;
+  *  - `csv [nBasins=100000] [nTimesteps=48]` — the scalable per-basin CSV sink;
+  *  - `admit [nStanding=1000000] [nFeed=200000] [slices=8]` — streaming
+  *    admission across a stop and restart;
+  *  - `curstream [nStanding=1000000] [nFeed=200000] [slices=8]` — the
+  *    composed curation stream across a stop and restart;
+  *  - `curation [dir=/root/testdata/sf0.01]` — `Curation.run` with every stage;
+  *  - `diffv [dir=/root/testdata/sf0.01]` — in-engine differential twins;
+  *  - `graphbuild <dir> <outDir> [buckets=64]` — bucketed pair artifact;
+  *  - `graphedges <dir> <outDir> [buckets=256] [phase=all]` — bucketed edge artifact;
+  *  - `dedupbands <dir> <outDir> [buckets=64]` — bucketed LSH band artifact;
+  *  - `rankdump <dir> <outDir>` then `rankcmp <dir> <dumpDir>` — the graph
+  *    twin compare in two processes;
+  *  - `compdump <dir> <outDir>` then `compcmp <dir> <dumpDir>` — the d9-chain
+  *    twin compare in two processes;
+  *  - `repack <inDir> <outDir>` — re-encode a parquet directory with zstd.
   */
 object ScaleProbe {
 
-  def main(args: Array[String]): Unit =
-    if (args.headOption.contains("full"))
-      runFull(
-        if (args.length > 1) args(1).toInt else 100000,
-        if (args.length > 2) args(2).toInt else 240)
-    else if (args.headOption.contains("embed"))
-      runEmbed(if (args.length > 1) args(1).toInt else 200000)
-    else if (args.headOption.contains("docs"))
-      runDocs(if (args.length > 1) args(1).toInt else 50000)
-    else if (args.headOption.contains("graph"))
-      runGraph(if (args.length > 1) args(1).toInt else 1500000)
-    else if (args.headOption.contains("skew"))
-      runSkew(if (args.length > 1) args(1).toInt else 6000000)
-    else if (args.headOption.contains("spans"))
-      runSpans(if (args.length > 1) args(1).toInt else 200000)
-    else if (args.headOption.contains("bpe"))
-      runBpe(
-        if (args.length > 1) args(1).toInt else 2000000,
-        if (args.length > 2) args(2).toInt else 10,
-        if (args.length > 3) args(3).toInt else 1)
-    else if (args.headOption.contains("admit"))
-      runAdmit(
-        if (args.length > 1) args(1).toInt else 1000000,
-        if (args.length > 2) args(2).toInt else 200000,
-        if (args.length > 3) args(3).toInt else 8)
-    else if (args.headOption.contains("graphbuild"))
-      runGraphBuild(args(1), args(2),
-        if (args.length > 3) args(3).toInt else 64)
-    else if (args.headOption.contains("graphedges"))
-      runGraphEdges(args(1), args(2),
-        if (args.length > 3) args(3).toInt else 256,
-        if (args.length > 4) args(4) else "all")
-    else if (args.headOption.contains("repack"))
-      runRepack(args(1), args(2))
-    else if (args.headOption.contains("rankdump"))
-      runRankDump(args(1), args(2))
-    else if (args.headOption.contains("rankcmp"))
-      runRankCmp(args(1), args(2))
-    else if (args.headOption.contains("compdump"))
-      runCompDump(args(1), args(2))
-    else if (args.headOption.contains("compcmp"))
-      runCompCmp(args(1), args(2))
-    else if (args.headOption.contains("dedupbands"))
-      runDedupBands(args(1), args(2),
-        if (args.length > 3) args(3).toInt else 64)
-    else if (args.headOption.contains("curstream"))
-      runCurStream(
-        if (args.length > 1) args(1).toInt else 1000000,
-        if (args.length > 2) args(2).toInt else 200000,
-        if (args.length > 3) args(3).toInt else 8)
-    else if (args.headOption.contains("curation"))
-      runCuration(if (args.length > 1) args(1) else "/root/testdata/sf0.01")
-    else if (args.headOption.contains("diffv"))
-      runDiffVerify(if (args.length > 1) args(1) else "/root/testdata/sf0.01")
-    else if (args.headOption.contains("csv"))
-      runCsv(
-        if (args.length > 1) args(1).toInt else 100000,
-        if (args.length > 2) args(2).toInt else 48)
-    else
-      runJoinKernel(
-        if (args.nonEmpty) args(0).toInt else 10000,
-        if (args.length > 1) args(1).toInt else 24)
+  private def int(args: Array[String], i: Int, default: Int): Int =
+    if (args.length > i) args(i).toInt else default
+
+  private val modes: Map[String, Array[String] => Unit] = Map(
+    "full" -> (a => runFull(int(a, 1, 100000), int(a, 2, 240))),
+    "embed" -> (a => runEmbed(int(a, 1, 200000))),
+    "docs" -> (a => runDocs(int(a, 1, 50000))),
+    "graph" -> (a => runGraph(int(a, 1, 1500000))),
+    "skew" -> (a => runSkew(int(a, 1, 6000000))),
+    "spans" -> (a => runSpans(int(a, 1, 200000))),
+    "bpe" -> (a => runBpe(int(a, 1, 2000000), int(a, 2, 10), int(a, 3, 1))),
+    "csv" -> (a => runCsv(int(a, 1, 100000), int(a, 2, 48))),
+    "admit" -> (a => runAdmit(int(a, 1, 1000000), int(a, 2, 200000), int(a, 3, 8))),
+    "curstream" -> (a => runCurStream(int(a, 1, 1000000), int(a, 2, 200000), int(a, 3, 8))),
+    "curation" -> (a => runCuration(a.lift(1).getOrElse("/root/testdata/sf0.01"))),
+    "diffv" -> (a => runDiffVerify(a.lift(1).getOrElse("/root/testdata/sf0.01"))),
+    "graphbuild" -> (a => runGraphBuild(a(1), a(2), int(a, 3, 64))),
+    "graphedges" -> (a => runGraphEdges(a(1), a(2), int(a, 3, 256), a.lift(4).getOrElse("all"))),
+    "dedupbands" -> (a => runDedupBands(a(1), a(2), int(a, 3, 64))),
+    "rankdump" -> (a => runRankDump(a(1), a(2))),
+    "rankcmp" -> (a => runRankCmp(a(1), a(2))),
+    "compdump" -> (a => runCompDump(a(1), a(2))),
+    "compcmp" -> (a => runCompCmp(a(1), a(2))),
+    "repack" -> (a => runRepack(a(1), a(2))))
+
+  def main(args: Array[String]): Unit = {
+    val mode = args.headOption.getOrElse("full")
+    val run = modes.getOrElse(mode, throw new IllegalArgumentException(
+      s"unknown mode '$mode'; modes: ${modes.keys.toSeq.sorted.mkString(", ")}"))
+    run(args)
+  }
+
+  // Probe loops run hundreds of shuffle-producing rounds in one JVM — the
+  // shared long-drive recipe (GC sweep + zstd; see LongDrive) applies in
+  // full; probes pin 32 shuffle partitions regardless of core count.
+  private def session(): SparkSession = LongDrive.session("8")(_ => "32")
+
+  /** Times each named query through [[Probe.query]], counts its rows, and
+    * returns the `"name":{"sec":…,"rows":…}` summary members.
+    */
+  private def timeQueries(spark: SparkSession, meter: Probe.Meter, dir: String, tag: String,
+      names: Seq[String]): String =
+    names.map { name =>
+      val r = Probe.query(spark, meter, dir, name, tag)
+      s""""$name":{"sec":${r.sec},"rows":${r.df.count()}}"""
+    }.mkString(",")
+
+  private def diffJson(d: Probe.RowDiff): String =
+    s""""rows_alt":${d.rowsA},"rows_shipped":${d.rowsB},"only_alt":${d.onlyA},"only_shipped":${d.onlyB},"match":${d.matched}"""
 
   // ---------------------------------------------------------------------------
-  // Mode 3 — EMBEDDING OPERATORS AT 100-400x the verify corpus: synthesizes
+  // `embed` — EMBEDDING OPERATORS AT 100-400x the verify corpus: synthesizes
   // n 64-dim vectors (xxhash64-mixed, deterministic — a different generator
   // than SimilaritySpec's splitmix64 vector fixture), writes them as a
   // standalone embeddings.parquet, and drives the PUBLIC query surface —
@@ -105,8 +106,7 @@ object ScaleProbe {
   private def runEmbed(n: Int): Unit = {
     val spark = session()
     val dir = s"/tmp/graft_scaleprobe_embed_$n"
-    val marker = Paths.get(dir, "_done")
-    if (!Files.exists(marker)) {
+    fixtureOnce(dir) {
       // xxhash64-mixed per (vec_id, dim): the SIGNED residue of `% 1000000`
       // gives near-uniform values in (-1, 1), and the mixer can't hit
       // Spark 4's ANSI long-overflow guard
@@ -117,35 +117,15 @@ object ScaleProbe {
           (col("id") % 10).cast("int").as("label"))
         .coalesce(8)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      Files.createFile(marker)
     }
-
-    val shuffleTotal = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleTotal.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-
-    def time(name: String): (String, Double, Long) = {
-      val before = shuffleTotal.get()
-      val t0 = System.nanoTime()
-      // noop sink materializes EVERY column, like the bench: a count() would
-      // let Catalyst eliminate e.g. e2's distinct-keyed left join entirely
-      val df = graft.SparkEntry.queries(name)(spark, dir)
-      df.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val rows = df.count() // cheap second action on the cached/derived frame
-      println(f"""[embed-probe] $name rows=$rows sec=$sec%.1f shuffle_mb=${(shuffleTotal.get() - before) / 1e6}%.1f""")
-      (name, sec, rows)
-    }
-    val results = Seq("d8_embed_lsh_dedup", "s3_ivf_ann", "e2_semdedup", "s5_pq_adc",
-      "s7_ivfpq_ann").map(time)
-    val parts = results.map { case (nm, sec, rows) => s""""$nm":{"sec":$sec,"rows":$rows}""" }
-    println(s"""{"probe":"embed_scale","n":$n,"shuffle_total_mb":${shuffleTotal.get() / 1e6},${parts.mkString(",")}}""")
+    val meter = Probe.meter(spark)
+    val parts = timeQueries(spark, meter, dir, "embed-probe", Seq("d8_embed_lsh_dedup", "s3_ivf_ann",
+      "e2_semdedup", "s5_pq_adc", "s7_ivfpq_ann"))
+    println(s"""{"probe":"embed_scale","n":$n,"shuffle_total_mb":${meter.counts.shuffleBytes / 1e6},$parts}""")
   }
 
   // ---------------------------------------------------------------------------
-  // Mode 4 — TEXT-DEDUP FAMILY AT 100x the verify corpus: synthesizes n
+  // `docs` — TEXT-DEDUP FAMILY AT 100x the verify corpus: synthesizes n
   // documents (30-100 tokens from a 40-word vocabulary, xxhash64-mixed;
   // every 50th document is a near-clone of its predecessor — one appended
   // token — so the MinHash/SimHash blockers and the connected-components
@@ -154,8 +134,7 @@ object ScaleProbe {
   private def runDocs(n: Int): Unit = {
     val spark = session()
     val dir = s"/tmp/graft_scaleprobe_docs_$n"
-    val marker = Paths.get(dir, "_done")
-    if (!Files.exists(marker)) {
+    fixtureOnce(dir) {
       val vocab = Seq("key", "agg", "row", "scan", "slow", "fast", "table", "value", "part",
         "hash", "merge", "batch", "spark", "window", "order", "data", "column", "join",
         "small", "line", "customer", "query", "big", "group", "sort", "stream", "filter",
@@ -171,38 +150,20 @@ object ScaleProbe {
         .withColumn("n_chars", length(col("text")).cast("long"))
         .coalesce(8)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      Files.createFile(marker)
     }
-
-    val shuffleTotal = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleTotal.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-
-    def time(name: String): (String, Double, Long) = {
-      val before = shuffleTotal.get()
-      val t0 = System.nanoTime()
-      val df = graft.SparkEntry.queries(name)(spark, dir)
-      df.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val rows = df.count()
-      println(f"""[docs-probe] $name rows=$rows sec=$sec%.1f shuffle_mb=${(shuffleTotal.get() - before) / 1e6}%.1f""")
-      (name, sec, rows)
-    }
+    val meter = Probe.meter(spark)
     // round-4 additions ride along: decontamination (eval docs are ids
     // % 100 = 0, and every id = 1 mod 100 is a near-clone of one — real
     // shared-shingle work), feature hashing, and the c1 composite
-    val results = Seq("d3_minhash_pairs", "d7_simhash_pairs", "d9_dedup_groups",
-      "t8_gopher_repetition", "t9_tfidf",
+    val parts = timeQueries(spark, meter, dir, "docs-probe", Seq("d3_minhash_pairs", "d7_simhash_pairs",
+      "d9_dedup_groups", "t8_gopher_repetition", "t9_tfidf",
       "d10_decontaminate", "t10_feature_hash", "c1_curation_pipeline",
-      "c2_canonical_keep", "t11_temp_sample", "d11_dup_spans").map(time)
-    val parts = results.map { case (nm, sec, rows) => s""""$nm":{"sec":$sec,"rows":$rows}""" }
-    println(s"""{"probe":"docs_scale","n":$n,"shuffle_total_mb":${shuffleTotal.get() / 1e6},${parts.mkString(",")}}""")
+      "c2_canonical_keep", "t11_temp_sample", "d11_dup_spans"))
+    println(s"""{"probe":"docs_scale","n":$n,"shuffle_total_mb":${meter.counts.shuffleBytes / 1e6},$parts}""")
   }
 
   // ---------------------------------------------------------------------------
-  // Mode 5 — TRANSACTION GRAPH AT 10x the bench SF: synthesizes nOrders
+  // `graph` — TRANSACTION GRAPH AT 10x the bench SF: synthesizes nOrders
   // orders x 4 lineitems (~8x bidirected edges after pair-dedup) over a
   // sqrt(|edges|)-sized node population — the bipartite shape n1/n2 assume —
   // and drives the PUBLIC PageRank queries, reporting wall and shuffle bytes.
@@ -211,8 +172,7 @@ object ScaleProbe {
   private def runGraph(nOrders: Int): Unit = {
     val spark = session()
     val dir = s"/tmp/graft_scaleprobe_graph_$nOrders"
-    val marker = Paths.get(dir, "_done")
-    if (!Files.exists(marker)) {
+    fixtureOnce(dir) {
       val nCust = math.max(64, math.sqrt(nOrders.toDouble).toInt)
       val nSupp = nCust
       spark.range(nOrders).select(col("id").as("o_orderkey"),
@@ -225,24 +185,9 @@ object ScaleProbe {
           // revenue weight for n2: deterministic 2-decimal price
           expr("CAST(pmod(xxhash64(id, ln + 11), 99000) + 1000 AS DOUBLE) / 100.0").as("l_extendedprice"))
         .coalesce(8).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      Files.createFile(marker)
     }
-    val shuffleTotal = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        shuffleTotal.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-    def time(name: String): (String, Double, Long) = {
-      val before = shuffleTotal.get()
-      val t0 = System.nanoTime()
-      val df = graft.SparkEntry.queries(name)(spark, dir)
-      df.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val rows = df.count()
-      println(f"""[graph-probe] $name rows=$rows sec=$sec%.1f shuffle_mb=${(shuffleTotal.get() - before) / 1e6}%.1f""")
-      (name, sec, rows)
-    }
-    val results = Seq("n1_pagerank", "n2_weighted_pagerank").map(time)
+    val meter = Probe.meter(spark)
+    val parts = timeQueries(spark, meter, dir, "graph-probe", Seq("n1_pagerank", "n2_weighted_pagerank"))
     // the volume-derived partition count (no fixed ceiling: grows past 8
     // once the bidirected edge list clears 8M rows)
     val edgeParts = graft.operators.GraphOps.probeEdgePartitions(spark, dir)
@@ -250,10 +195,11 @@ object ScaleProbe {
     // per-round wall (round-6 advisory #8 — the fused delta check makes each
     // round ONE materializing job; this records what 10^-9 relative
     // convergence actually costs at scale)
-    val ct0 = System.nanoTime()
-    val (conv, iters) = graft.operators.GraphOps.pageRankConverged(spark, dir)
-    conv.write.format("noop").mode("overwrite").save()
-    val convSec = (System.nanoTime() - ct0) / 1e9
+    val (iters, convSec) = secs {
+      val (conv, iters) = graft.operators.GraphOps.pageRankConverged(spark, dir)
+      conv.write.format("noop").mode("overwrite").save()
+      iters
+    }
     println(f"[graph-probe] pageRankConverged iters=$iters sec=$convSec%.1f per_round=${convSec / math.max(1, iters)}%.3f")
     // Broadcast-overflow gate parity AT PROBE SCALE: force the shuffle-join
     // rank rounds by dropping the node floor to 1 (the same prop override
@@ -264,28 +210,19 @@ object ScaleProbe {
     // node-sized rank shuffle.
     def ranks(name: String) = graft.SparkEntry.queries(name)(spark, dir)
       .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
-    val bcastN1 = ranks("n1_pagerank")
-    val bcastN2 = ranks("n2_weighted_pagerank")
-    val floorKey = "graft.graph.broadcastFloorNodes"
-    val prevFloor = sys.props.get(floorKey)
-    sys.props(floorKey) = "1"
-    graft.operators.ArtifactCache.invalidate(spark, dir)
-    val st0 = System.nanoTime()
-    val (shufN1, shufN2) = (ranks("n1_pagerank"), ranks("n2_weighted_pagerank"))
-    val shufSec = (System.nanoTime() - st0) / 1e9
-    prevFloor match {
-      case Some(v) => sys.props(floorKey) = v
-      case None => sys.props.remove(floorKey)
+    val (bcastN1, bcastN2) = (ranks("n1_pagerank"), ranks("n2_weighted_pagerank"))
+    val ((shufN1, shufN2), shufSec) = Probe.withProps("graft.graph.broadcastFloorNodes" -> "1") {
+      ArtifactCache.invalidate(spark, dir)
+      secs((ranks("n1_pagerank"), ranks("n2_weighted_pagerank")))
     }
-    graft.operators.ArtifactCache.invalidate(spark, dir)
+    ArtifactCache.invalidate(spark, dir)
     val parity = shufN1 == bcastN1 && shufN2 == bcastN2
     println(f"[graph-probe] shuffle-mode gate parity=$parity sec=$shufSec%.1f (n1+n2, incl. artifact rebuild)")
-    val parts = results.map { case (nm, sec, rows) => s""""$nm":{"sec":$sec,"rows":$rows}""" }
-    println(s"""{"probe":"graph_scale","n_orders":$nOrders,"edge_partitions":$edgeParts,"converged":{"iters":$iters,"sec":$convSec,"per_round_sec":${convSec / math.max(1, iters)}},"gate_parity":$parity,"gate_shuffle_sec":$shufSec,"shuffle_total_mb":${shuffleTotal.get() / 1e6},${parts.mkString(",")}}""")
+    println(s"""{"probe":"graph_scale","n_orders":$nOrders,"edge_partitions":$edgeParts,"converged":{"iters":$iters,"sec":$convSec,"per_round_sec":${convSec / math.max(1, iters)}},"gate_parity":$parity,"gate_shuffle_sec":$shufSec,"shuffle_total_mb":${meter.counts.shuffleBytes / 1e6},$parts}""")
   }
 
   // ---------------------------------------------------------------------------
-  // Mode 6 — ADVERSARIAL SKEW AT 100x the verify corpus: synthesizes a
+  // `skew` — ADVERSARIAL SKEW AT 100x the verify corpus: synthesizes a
   // lineitem where ONE key ('R') holds 50% of all rows (the verify corpus's
   // returnflag split is benign ~25/25/50 over three keys; this is the
   // pathological single-whale case the salting family exists for) and
@@ -299,8 +236,7 @@ object ScaleProbe {
   private def runSkew(nRows: Int): Unit = {
     val spark = session()
     val dir = s"/tmp/graft_scaleprobe_skew_$nRows"
-    val marker = Paths.get(dir, "_done")
-    if (!Files.exists(marker)) {
+    fixtureOnce(dir) {
       // id % 2 == 0 -> 'R': exactly half the corpus on one key
       spark.range(nRows).select(
           col("id").as("l_orderkey"),
@@ -312,27 +248,8 @@ object ScaleProbe {
             .as("l_extendedprice"))
         .coalesce(16)
         .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      Files.createFile(marker)
     }
-
-    // per-stage shuffle write + task durations (to find the phase-1 stage
-    // and show its tasks are evenly sized)
-    val stageShuffle = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    val stageTasks =
-      new java.util.concurrent.ConcurrentHashMap[Int, java.util.List[Long]]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val _ = stageShuffle.put(sc.stageInfo.stageId,
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        stageTasks
-          .computeIfAbsent(te.stageId,
-            _ => java.util.Collections.synchronizedList(new java.util.ArrayList[Long]()))
-          .add(te.taskInfo.duration)
-        ()
-      }
-    })
+    val meter = Probe.meter(spark)
 
     // whale-bucket spread: the salt must shatter 'R' into 16 even buckets
     val buckets = graft.Tables.lineitem(spark, dir)
@@ -343,18 +260,12 @@ object ScaleProbe {
       .collect()(0)
     val (bMin, bMax) = (buckets.getLong(0), buckets.getLong(1))
 
-    def run(name: String): (Double, Array[org.apache.spark.sql.Row]) = {
-      val t0 = System.nanoTime()
-      val rows = graft.SparkEntry.queries(name)(spark, dir).collect()
-      ((System.nanoTime() - t0) / 1e9, rows)
-    }
-    stageShuffle.clear(); stageTasks.clear()
-    val (a8Sec, a8Rows) = run("a8_salted_agg")
+    def run(name: String) = secs(graft.SparkEntry.queries(name)(spark, dir).collect())
+    meter.clearStages()
+    val (a8Rows, a8Sec) = run("a8_salted_agg")
     // heaviest shuffle-write stage during a8 = the salted phase-1 partials
-    val p1Stage = stageShuffle.asScala.maxBy(_._2)._1
-    val durs = stageTasks.get(p1Stage).asScala.toSeq.sorted
-    val (dMed, dMax) = (durs(durs.size / 2), durs.last)
-    val (j8Sec, j8Rows) = run("j8_salted_join")
+    val (dMed, dMax) = meter.heaviestStageTaskMs
+    val (j8Rows, j8Sec) = run("j8_salted_join")
 
     // oracle-green under skew: salted plans stay bit-equal to unsalted
     val a8Plain = graft.Tables.lineitem(spark, dir)
@@ -380,7 +291,7 @@ object ScaleProbe {
   }
 
   // ---------------------------------------------------------------------------
-  // Mode 7 — WHALE-GRAM PROBE for d11: half the corpus embeds ONE identical
+  // `spans` — WHALE-GRAM PROBE for d11: half the corpus embeds ONE identical
   // 5-token boilerplate run (a single gram hash with nDocs/2 occurrences —
   // the adversarial input for which the original count-over-gh window would
   // buffer and sort half the gram stream in ONE task). The aggregate+join
@@ -390,8 +301,7 @@ object ScaleProbe {
   private def runSpans(nDocs: Int): Unit = {
     val spark = session()
     val dir = s"/tmp/graft_scaleprobe_spans_$nDocs"
-    val marker = Paths.get(dir, "_done")
-    if (!Files.exists(marker)) {
+    fixtureOnce(dir) {
       // even ids: 5-token boilerplate at position (id%7)+1 inside 40 unique
       // tokens; odd ids: 40 strictly-unique tokens (u<id>x<w> cannot form a
       // duplicated gram across docs)
@@ -404,31 +314,10 @@ object ScaleProbe {
           lit("en").as("lang"), lit("synth").as("source"))
         .withColumn("n_chars", length(col("text")).cast("long"))
         .coalesce(8).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      Files.createFile(marker)
     }
-    val stageShuffle = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    val stageTasks =
-      new java.util.concurrent.ConcurrentHashMap[Int, java.util.List[Long]]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val _ = stageShuffle.put(sc.stageInfo.stageId,
-          sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        stageTasks
-          .computeIfAbsent(te.stageId,
-            _ => java.util.Collections.synchronizedList(new java.util.ArrayList[Long]()))
-          .add(te.taskInfo.duration)
-        ()
-      }
-    })
-    val t0 = System.nanoTime()
-    val rows = graft.SparkEntry.queries("d11_dup_spans")(spark, dir).collect()
-    val sec = (System.nanoTime() - t0) / 1e9
-    import scala.jdk.CollectionConverters._
-    val heaviest = stageShuffle.asScala.maxBy(_._2)._1
-    val durs = stageTasks.get(heaviest).asScala.toSeq.sorted
-    val (dMed, dMax) = (durs(durs.size / 2), durs.last)
+    val meter = Probe.meter(spark)
+    val (rows, sec) = secs(graft.SparkEntry.queries("d11_dup_spans")(spark, dir).collect())
+    val (dMed, dMax) = meter.heaviestStageTaskMs
     // exact invariants: every even doc (and only those) carries exactly the
     // one boilerplate gram -> 1 dup gram, 5 covered of 40 tokens
     val ok = rows.length == nDocs / 2 &&
@@ -442,7 +331,7 @@ object ScaleProbe {
   }
 
   // ---------------------------------------------------------------------------
-  // Mode 7 — BPE TRAINING ABOVE THE DRIVER FLOOR: synthesizes a corpus whose
+  // `bpe` — BPE TRAINING ABOVE THE DRIVER FLOOR: synthesizes a corpus whose
   // VOCABULARY (not row count) is the scale axis — ~nWords distinct
   // pseudo-random 3-8 letter words, 16 per document — so t19's merge loop
   // crosses graft.bpe.driverFloorVocab and exercises the DISTRIBUTED rounds
@@ -457,11 +346,10 @@ object ScaleProbe {
   // run the SAME batch size, so the bit-identical-table requirement pins
   // the batched pick (independent-prefix, stale-count) across the
   // driver/distributed gate exactly like the strict-greedy form.
-  private def runBpe(nWords: Int, totalMerges: Int = 10, batch: Int = 1): Unit = {
+  private def runBpe(nWords: Int, totalMerges: Int, batch: Int): Unit = {
     val spark = session()
     val dir = s"/tmp/graft_scaleprobe_bpe_$nWords"
-    val marker = Paths.get(dir, "_done")
-    if (!Files.exists(marker)) {
+    fixtureOnce(dir) {
       val az = ('a' to 'z').map(c => s"'$c'").mkString("array(", ", ", ")")
       spark.range(nWords.toLong / 16).select(col("id").as("doc_id"),
           expr(s"""array_join(transform(sequence(0, 15), k ->
@@ -472,36 +360,23 @@ object ScaleProbe {
         .withColumn("n_chars", length(col("text")).cast("long"))
         .coalesce(16)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      Files.createFile(marker)
     }
-    def ranks(): (Seq[(Int, String, String, String, Long)], Double) = {
-      val t0 = System.nanoTime()
-      val out = graft.SparkEntry.queries("t19_bpe_train")(spark, dir)
+    // the merge table under a driver floor of `floor` vocab rows
+    def ranks(floor: Long) = Probe.withProps("graft.bpe.driverFloorVocab" -> floor.toString) {
+      ArtifactCache.invalidate(spark, dir)
+      secs(graft.SparkEntry.queries("t19_bpe_train")(spark, dir)
         .collect().toSeq
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-      (out, (System.nanoTime() - t0) / 1e9)
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4))))
     }
-    val floorKey = "graft.bpe.driverFloorVocab"
-    val mergesKey = "graft.bpe.merges"
-    val batchKey = "graft.bpe.batch"
-    val prevProps = Seq(floorKey, mergesKey, batchKey).map(k => k -> sys.props.get(k))
-    sys.props(mergesKey) = totalMerges.toString
-    sys.props(batchKey) = batch.toString
     // force the distributed branch first (the default driver floor is 8M
     // rows — above any probe vocab — so without the explicit floor both
     // legs would take the driver path and parity would be trivially true),
     // then the forced driver mode
-    sys.props(floorKey) = "1"
-    graft.operators.ArtifactCache.invalidate(spark, dir)
-    val (dist, distSec) = ranks()
-    sys.props(floorKey) = Long.MaxValue.toString
-    graft.operators.ArtifactCache.invalidate(spark, dir)
-    val (drv, drvSec) = ranks()
-    prevProps.foreach {
-      case (k, Some(v)) => sys.props(k) = v
-      case (k, None) => sys.props.remove(k)
+    val ((dist, distSec), (drv, drvSec)) = Probe.withProps(
+        "graft.bpe.merges" -> totalMerges.toString, "graft.bpe.batch" -> batch.toString) {
+      (ranks(1L), ranks(Long.MaxValue))
     }
-    graft.operators.ArtifactCache.invalidate(spark, dir)
+    ArtifactCache.invalidate(spark, dir)
     val parity = dist == drv
     if (totalMerges <= 20)
       println(s"[bpe-probe] merges=${dist.map(m => m._4 + ":" + m._5).mkString(",")}")
@@ -511,7 +386,7 @@ object ScaleProbe {
   }
 
   // ---------------------------------------------------------------------------
-  // Mode 8 — PER-BASIN CSV SINK AT SCALE (verdict r8 #6): the faithful K1
+  // `csv` — PER-BASIN CSV SINK AT SCALE (verdict r8 #6): the faithful K1
   // writer collects the |basins| x |timesteps| series (bounded but
   // driver-sized); the DEFAULT CsvSink.writeScalable path is the cluster
   // story — repartition(basinID) + partitionBy — and until now its E2E
@@ -526,17 +401,15 @@ object ScaleProbe {
       expr(s"timestampadd(HOUR, CAST(id div $nBasins AS INT), TIMESTAMP'2006-01-01 00:00:00')")
         .as("ts"),
       (pmod(hash(col("id")), lit(1000)).cast("double") / 10.0).as("rain"))
-    val t0 = System.nanoTime()
-    graft.out.CsvSink.writeScalable(series, out)
-    val wSec = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val dirs = Files.list(Paths.get(out)).iterator().asScala
-      .count(_.getFileName.toString.startsWith("basinID="))
-    val one = spark.read.option("header", "true")
-      .csv(s"$out/basinID=${nBasins / 2}")
-      .select(col("time")).collect().map(_.getString(0))
-    val total = spark.read.option("header", "true").csv(out).count()
-    val vSec = (System.nanoTime() - t1) / 1e9
+    val (_, wSec) = secs(graft.out.CsvSink.writeScalable(series, out))
+    val ((dirs, one, total), vSec) = secs {
+      val dirs = Files.list(Paths.get(out)).iterator().asScala
+        .count(_.getFileName.toString.startsWith("basinID="))
+      val one = spark.read.option("header", "true")
+        .csv(s"$out/basinID=${nBasins / 2}")
+        .select(col("time")).collect().map(_.getString(0))
+      (dirs, one, spark.read.option("header", "true").csv(out).count())
+    }
     val ok = dirs == nBasins && total == nBasins.toLong * nTs &&
       one.length == nTs && (one sameElements one.sorted)
     println(f"""{"probe":"csv_sink","n_basins":$nBasins,"n_ts":$nTs,"dirs":$dirs,"rows":$total,"write_sec":$wSec%.1f,"verify_sec":$vSec%.1f,"layout_ok":$ok}""")
@@ -545,7 +418,7 @@ object ScaleProbe {
   }
 
   // ---------------------------------------------------------------------------
-  // Mode 11 — STREAMING ADMISSION AT VOLUME (round-10 verdict #4): the soak
+  // `admit` — STREAMING ADMISSION AT VOLUME (round-10 verdict #4): the soak
   // spec proves exactly-once across 100+ micro-batches at fixture SIZE; this
   // probe proves the admission front door at production VOLUME — a >= 1M-doc
   // standing signature snapshot, a multi-slice crawl feed (one parquet file
@@ -555,7 +428,7 @@ object ScaleProbe {
   // every planted exact-duplicate flagged with est = 1.0 against its true
   // standing twin, every unique doc admitted.
   //
-  // Texts are 40 hash-mixed numeric tokens (xxhash64(seed, w)) so distinct
+  // Texts are 40 hash-mixed numeric tokens (Probe.feedText) so distinct
   // seeds share essentially no CHAR SHINGLES — the admission chain
   // fingerprints character n-grams, so structured tokens (u<seed>x<w>) are
   // adversarially WRONG here: seed 100000+k differs from seed k only by a
@@ -568,76 +441,31 @@ object ScaleProbe {
     val spark = session()
     val root = s"/tmp/graft_scaleprobe_admit_${nStanding}_$nFeed"
     // ledger-append + checkpoint must start clean every run
-    if (Files.exists(Paths.get(root))) {
-      Files.walk(Paths.get(root)).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Files.delete(p); () })
-    }
-    val feedDir = s"$root/feed"
+    Probe.freshDir(root)
     val ledgerDir = s"$root/ledger"
     val ckptDir = s"$root/ckpt"
-    Files.createDirectories(Paths.get(feedDir))
 
-    def textOf(seed: String) =
-      s"array_join(transform(sequence(0, 39), w -> CAST(xxhash64($seed, w) AS STRING)), ' ')"
     val standing = spark.range(nStanding)
-      .select(col("id").as("doc_id"), expr(textOf("id")).as("text"))
+      .select(col("id").as("doc_id"), expr(Probe.feedText("id")).as("text"))
     // the production shape: the standing snapshot's signatures are a
     // precomputed artifact — built and cached ONCE, priced separately
-    val t0 = System.nanoTime()
-    val standingSigs = graft.operators.Dedup.minhashSigs(standing).cache()
-    val nSigs = standingSigs.count()
-    val snapshotSec = (System.nanoTime() - t0) / 1e9
-
-    val per = (nFeed + slices - 1) / slices
-    def writeSlice(k: Int): Unit = {
-      val lo = k.toLong * per
-      val hi = math.min((k + 1).toLong * per, nFeed.toLong)
-      // every 4th feed doc is an EXACT copy of standing doc (id % nStanding)
-      spark.range(lo, hi).select(
-          (col("id") + nStanding).as("doc_id"),
-          expr(textOf(s"CASE WHEN id % 4 = 0 THEN id % $nStanding ELSE id + $nStanding END"))
-            .as("text"))
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$root/stage_$k")
-      val part = Files.list(Paths.get(s"$root/stage_$k")).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      Files.move(part, Paths.get(feedDir, f"slice_$k%03d.parquet"))
-      ()
+    val (standingSigs, snapshotSec) = secs {
+      val sigs = graft.operators.Dedup.minhashSigs(standing).cache()
+      sigs.count()
+      sigs
     }
 
     val batchStats = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Double)]()
-    def startStream() = {
-      val feed = spark.readStream
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
+    val (phase1Sec, phase2Sec) = Probe.twoPhaseFeed(spark, root, nStanding, nFeed, slices) { feed =>
       graft.streaming.StreamOps.admitStream(feed, standingSigs,
           checkpoint = Some(ckptDir)) { (verdicts, id) =>
-        val b0 = System.nanoTime()
         val out = verdicts.cache()
-        val n = out.count()
-        out.write.mode("append").parquet(ledgerDir)
+        val (n, sec) = secs { val n = out.count(); out.write.mode("append").parquet(ledgerDir); n }
         out.unpersist()
-        batchStats.add((id, n, (System.nanoTime() - b0) / 1e9))
+        batchStats.add((id, n, sec))
         ()
       }
     }
-
-    // phase 1: half the feed, then a hard stop on the checkpoint
-    (0 until slices / 2).foreach(writeSlice)
-    val t1 = System.nanoTime()
-    val q1 = startStream()
-    q1.processAllAvailable()
-    q1.stop()
-    val phase1Sec = (System.nanoTime() - t1) / 1e9
-    // phase 2: the rest of the crawl lands, the query RESTARTS from the
-    // committed offsets — re-admitting nothing
-    (slices / 2 until slices).foreach(writeSlice)
-    val t2 = System.nanoTime()
-    val q2 = startStream()
-    q2.processAllAvailable()
-    q2.stop()
-    val phase2Sec = (System.nanoTime() - t2) / 1e9
 
     val ledger = spark.read.parquet(ledgerDir).cache()
     val nLedger = ledger.count()
@@ -650,8 +478,7 @@ object ScaleProbe {
       .where(col("is_dup") =!= 0).count()
     val ckptBytes = Files.walk(Paths.get(ckptDir)).iterator().asScala
       .filter(Files.isRegularFile(_)).map(Files.size).sum
-    val procSec = phase1Sec + phase2Sec
-    val docsPerSec = nFeed / procSec
+    val docsPerSec = nFeed / (phase1Sec + phase2Sec)
     val perBatch = batchStats.asScala.toSeq.sortBy(_._1)
       .map { case (id, n, s) => f"$id:$n@$s%.1fs" }.mkString(" ")
     println(s"[admit-probe] batches: $perBatch")
@@ -663,154 +490,10 @@ object ScaleProbe {
   }
 
   // ---------------------------------------------------------------------------
-  // Mode 10 — CURATION COMPOSITE END-TO-END AT THE SCALE RUNGS (round-10
-  // verdict #3): `api.Curation.run` with EVERY stage enabled (mixing, span
-  // gate, per-source cap, admission, redaction) — its 10 stages are
-  // individually oracle-proven at scale but were only ever COMPOSED at
-  // fixture scale (CurationApiSpec). Checks, all in-engine aggregates:
-  //   1. the ledger covers every document exactly once;
-  //   2. kept ⇒ every stage verdict (no row keeps despite a failing gate);
-  //   3. each ledger column equals its oracled query twin where the config
-  //      matches the query's constants — q_pass↔t5, component/canonical↔c2,
-  //      split↔c3, cap_kept↔t17 (cap=10), is_new/admitted↔d12 (5,4),
-  //      span_ok↔d11 at the configured threshold, temp_kept↔t11;
-  //   4. pack layout invariants over the kept snapshot (offsets within the
-  //      window, per-shard token conservation, one row per kept doc).
-  // ---------------------------------------------------------------------------
-  // Mode 10 (r12) — BUCKETED CO-LOCATED EDGE BUILD: lands the weighted pair
-  // artifact via GraphOps.buildPairsBucketed (orders/lineitem bucketed on
-  // the orderkey, exchange-free join) so the rank queries at a scale rung
-  // read it through -Dgraft.graph.pairsDir and the ~NB-row join shuffle
-  // that blew the sf300 disk envelope never happens. The bucketed table
-  // copies (outDir/b_orders, outDir/b_lineitem) are build scaffolding — the
-  // operator deletes them (and may delete the raw orders/lineitem) once
-  // this prints its JSON; only outDir/pairs is served.
-  private def runGraphBuild(dir: String, outDir: String, buckets: Int): Unit = {
-    val spark = session()
-    // the pair aggregate shuffles ~|lineitem| partially-combined rows: at
-    // the probe default of 32 partitions a 1.8B-row rung packs ~50M rows
-    // per reduce task — follow the bucket count instead (the same
-    // granularity the write shuffles already use)
-    spark.conf.set("spark.sql.shuffle.partitions", math.max(32, buckets).toString)
-    val t0 = System.nanoTime()
-    val (nPairs, colocated) =
-      graft.operators.GraphOps.buildPairsBucketed(spark, dir, outDir, buckets)
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(s"""{"probe":"graph_bucketed_build","dir":"$dir","out":"$outDir","buckets":$buckets,"pairs":$nPairs,"colocated_join":$colocated,"sec":$sec}""")
-    require(colocated, "bucketed build shuffled its join inputs")
-    spark.stop()
-  }
-
-  // Mode 11 (r12) — DISK-RESIDENT BIDIRECTED EDGE ARTIFACT: lands the
-  // src-bucketed edge table + degree frame (GraphOps.buildEdgesBucketed)
-  // that `-Dgraft.graph.edgesDir` serves to the rank rounds. At the sf300
-  // rung the thin edge CACHE (3.5B rows) exceeded memory+disk beside its
-  // lineage-pinned repartition shuffle; the bucketed table is scanned per
-  // round with zero edge movement and zero resident cache. Respects
-  // -Dgraft.graph.pairsDir for the pair source (the bucketed-ingest leg).
-  // Modes 12/13 (r12) — the graph diffv STAGED for a tight disk envelope:
-  // `rankdump` computes the TWIN rank frames (v9/v10 — pairs-based, no edge
-  // table needed) and lands them as parquet while only the pair artifact
-  // occupies the disk; `rankcmp` later computes the SHIPPED n1/n2 rank
-  // frames over the disk-edge artifact and compares against the dumps.
-  // Same evidence as one diffv process (full-frame bit-equality), but the
-  // twin's join scratch and the 2x-edge table never co-reside.
-  private def runRankDump(dir: String, outDir: String): Unit = {
-    val spark = session()
-    def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").parquet(s"$outDir/$name")
-      val rows = spark.read.parquet(s"$outDir/$name").count()
-      println(s"""{"probe":"rank_dump","which":"$name","rows":$rows,"sec":${(System.nanoTime() - t0) / 1e9}}""")
-      System.gc()
-    }
-    dump("v9", graft.operators.Differential.v9RankFrame(spark, dir))
-    dump("v10", graft.operators.Differential.v10RankFrame(spark, dir))
-    spark.stop()
-  }
-
-  private def runRankCmp(dir: String, dumpDir: String): Unit = {
-    val spark = session()
-    def cmp(name: String, shipped: => org.apache.spark.sql.DataFrame): Boolean = {
-      val t0 = System.nanoTime()
-      val b = shipped
-      val a = spark.read.parquet(s"$dumpDir/$name")
-      val nA = a.count(); val nB = b.count()
-      val onlyA = a.exceptAll(b).count(); val onlyB = b.exceptAll(a).count()
-      val ok = nA == nB && onlyA == 0 && onlyB == 0
-      println(s"""{"probe":"rank_cmp","which":"$name","rows_alt":$nA,"rows_shipped":$nB,"only_alt":$onlyA,"only_shipped":$onlyB,"match":$ok,"sec":${(System.nanoTime() - t0) / 1e9}}""")
-      System.gc()
-      ok
-    }
-    val ok1 = cmp("v9", graft.operators.GraphOps.n1RankFrame(spark, dir))
-    val ok2 = cmp("v10", graft.operators.GraphOps.n2RankFrame(spark, dir))
-    require(ok1 && ok2, "graph rank-frame differential mismatch")
-    spark.stop()
-  }
-
-  // Modes 16/17 (r13) — the d9-chain diffv STAGED for a tight disk envelope
-  // (the rankdump/rankcmp recipe applied to the component family): at the
-  // sf1000 rung the alt and shipped component builds' shuffle scratch plus
-  // the 50M-doc signature cache co-residing blew the disk; `compdump`
-  // computes the TWIN component frame (alt algorithm) and lands it as
-  // parquet while only its own scratch occupies the disk, then `compcmp` in
-  // a FRESH process computes the shipped frame and compares full-frame.
-  private def runCompDump(dir: String, outDir: String): Unit = {
-    val spark = session()
-    val t0 = System.nanoTime()
-    graft.operators.Differential.altComponentLabels(spark, dir)
-      .write.mode("overwrite").parquet(outDir)
-    val rows = spark.read.parquet(outDir).count()
-    println(s"""{"probe":"comp_dump","dir":"$dir","rows":$rows,"sec":${(System.nanoTime() - t0) / 1e9}}""")
-    spark.stop()
-  }
-
-  private def runCompCmp(dir: String, dumpDir: String): Unit = {
-    val spark = session()
-    val t0 = System.nanoTime()
-    val a = spark.read.parquet(dumpDir)
-    val b = graft.operators.Dedup.componentLabels(spark, dir)
-      .select(a.columns.map(col).toIndexedSeq: _*)
-    val nA = a.count(); val nB = b.count()
-    val onlyA = a.exceptAll(b).count(); val onlyB = b.exceptAll(a).count()
-    val ok = nA == nB && onlyA == 0 && onlyB == 0
-    println(s"""{"probe":"comp_cmp","dir":"$dir","rows_alt":$nA,"rows_shipped":$nB,"only_alt":$onlyA,"only_shipped":$onlyB,"match":$ok,"sec":${(System.nanoTime() - t0) / 1e9}}""")
-    require(ok, "d9-chain component differential mismatch")
-    spark.stop()
-  }
-
-  /** Re-encode a parquet directory with zstd (disk-envelope tool: the rung
-    * artifacts are read many times and disk-bound — zstd buys ~30% of the
-    * envelope back for decode cost that is noise next to the IO).
-    */
-  private def runRepack(inDir: String, outDir: String): Unit = {
-    val spark = session()
-    spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
-    val t0 = System.nanoTime()
-    val df = spark.read.parquet(inDir)
-    df.write.mode("overwrite").parquet(outDir)
-    val rows = spark.read.parquet(outDir).count()
-    println(s"""{"probe":"repack","in":"$inDir","out":"$outDir","rows":$rows,"sec":${(System.nanoTime() - t0) / 1e9}}""")
-    spark.stop()
-  }
-
-  private def runGraphEdges(dir: String, outDir: String, buckets: Int,
-      phase: String = "all"): Unit = {
-    val spark = session()
-    spark.conf.set("spark.sql.shuffle.partitions", math.max(32, buckets).toString)
-    spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
-    val t0 = System.nanoTime()
-    val (nNodes, nEdges) =
-      graft.operators.GraphOps.buildEdgesBucketed(spark, dir, outDir, buckets, phase)
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(s"""{"probe":"graph_edge_build","dir":"$dir","out":"$outDir","buckets":$buckets,"phase":"$phase","nodes":$nNodes,"edges":$nEdges,"sec":$sec}""")
-    spark.stop()
-  }
-
-  // Mode 15 (r13) — COMPOSED CURATION STREAM AT VOLUME: `Curation.stream`
+  // `curstream` — COMPOSED CURATION STREAM AT VOLUME: `Curation.stream`
   // (admission verdicts feeding pack deltas per micro-batch, r12 stretch #8)
   // driven as a checkpointed file stream against a synthesized standing
-  // corpus, with a HARD STOP + RESTART mid-feed — the admit probe's shape
+  // corpus, with a HARD STOP + RESTART mid-feed — the admit probe's feed
   // with the pack half composed in. Checks, all in-engine:
   //   1. every feed doc admitted exactly once across the restart;
   //   2. every 4th feed doc is an EXACT standing clone → is_dup=1 AND
@@ -822,60 +505,33 @@ object ScaleProbe {
   private def runCurStream(nStanding: Int, nFeed: Int, slices: Int): Unit = {
     val spark = session()
     val root = s"/tmp/graft_scaleprobe_curstream_${nStanding}_$nFeed"
-    if (Files.exists(Paths.get(root))) {
-      Files.walk(Paths.get(root)).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Files.delete(p); () })
-    }
-    val feedDir = s"$root/feed"
+    Probe.freshDir(root)
     val ledgerDir = s"$root/ledger"
     val deltaDir = s"$root/deltas"
     val ckptDir = s"$root/ckpt"
-    Files.createDirectories(Paths.get(feedDir))
 
     val P = graft.operators.TextOps.PackSize
     val Shards = graft.operators.TextOps.PackShards
-    def textOf(seed: String) =
-      s"array_join(transform(sequence(0, 39), w -> CAST(xxhash64($seed, w) AS STRING)), ' ')"
     val standingDocs = spark.range(nStanding)
-      .select(col("id").as("doc_id"), expr(textOf("id")).as("text"))
+      .select(col("id").as("doc_id"), expr(Probe.feedText("id")).as("text"))
     // the standing artifacts, priced separately like the admit probe's
     // snapshot: the pack layout is packAppendFrom over empty bases (append
     // to position 0 == the full pack — t24's own invariant)
     import spark.implicits._
-    val t0 = System.nanoTime()
-    val standingCounts = standingDocs.select(col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).as("n_tokens"))
-    val standingPacks = graft.operators.TextOps
-      .packAppendFrom(spark, Seq.empty[(Int, Long)].toDF("shard", "base"),
-        standingCounts, P, Shards)
-      .cache()
-    val nStandPacked = standingPacks.count()
-    val standingEnds = standingPacks.groupBy("shard")
-      .agg(max(col("pack_id").cast("long") * P + col("pack_offset") + col("n_tokens"))
-        .as("stand_end"))
-    val artifactSec = (System.nanoTime() - t0) / 1e9
-
-    val per = (nFeed + slices - 1) / slices
-    def writeSlice(k: Int): Unit = {
-      val lo = k.toLong * per
-      val hi = math.min((k + 1).toLong * per, nFeed.toLong)
-      spark.range(lo, hi).select(
-          (col("id") + nStanding).as("doc_id"),
-          expr(textOf(s"CASE WHEN id % 4 = 0 THEN id % $nStanding ELSE id + $nStanding END"))
-            .as("text"))
-        .repartition(1)
-        .write.mode("overwrite").parquet(s"$root/stage_$k")
-      val part = Files.list(Paths.get(s"$root/stage_$k")).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      Files.move(part, Paths.get(feedDir, f"slice_$k%03d.parquet"))
-      ()
+    val ((standingPacks, nStandPacked, standingEnds), artifactSec) = secs {
+      val standingCounts = standingDocs.select(col("doc_id"),
+        size(split(trim(col("text")), "\\s+")).as("n_tokens"))
+      val packs = graft.operators.TextOps
+        .packAppendFrom(spark, Seq.empty[(Int, Long)].toDF("shard", "base"),
+          standingCounts, P, Shards)
+        .cache()
+      val ends = packs.groupBy("shard")
+        .agg(max(col("pack_id").cast("long") * P + col("pack_offset") + col("n_tokens"))
+          .as("stand_end"))
+      (packs, packs.count(), ends)
     }
 
-    def startStream() = {
-      val feed = spark.readStream
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feedDir)
+    val (phase1Sec, phase2Sec) = Probe.twoPhaseFeed(spark, root, nStanding, nFeed, slices) { feed =>
       graft.api.Curation.stream(feed, standingDocs, standingPacks,
           P, Shards, checkpoint = Some(ckptDir)) { (verdicts, delta, id) =>
         verdicts.write.mode("append").parquet(ledgerDir)
@@ -883,19 +539,6 @@ object ScaleProbe {
         ()
       }
     }
-
-    (0 until slices / 2).foreach(writeSlice)
-    val t1 = System.nanoTime()
-    val q1 = startStream()
-    q1.processAllAvailable()
-    q1.stop()
-    val phase1Sec = (System.nanoTime() - t1) / 1e9
-    (slices / 2 until slices).foreach(writeSlice)
-    val t2 = System.nanoTime()
-    val q2 = startStream()
-    q2.processAllAvailable()
-    q2.stop()
-    val phase2Sec = (System.nanoTime() - t2) / 1e9
 
     val ledger = spark.read.parquet(ledgerDir).cache()
     val nLedger = ledger.count()
@@ -934,46 +577,170 @@ object ScaleProbe {
     spark.stop()
   }
 
-  // Mode 14 (r13) — BUCKETED LSH BAND ARTIFACT: the dedup family's analogue
-  // of the graph family's bucketed ingest. Computes the direct scoredPairs
-  // artifact (the baseline, with its band shuffle), lands the signature +
-  // bucketed band layout via Dedup.buildBandsBucketed, re-derives the same
-  // scored pairs through -Dgraft.dedup.bandsDir, and requires bit-identical
-  // pair sets — recording the serve plan's static exchange count (must be
-  // <= 1: the candidate distinct) beside the direct build's wall.
-  private def runDedupBands(dir: String, outDir: String, buckets: Int): Unit = {
+  // ---------------------------------------------------------------------------
+  // `graphbuild` (r12) — BUCKETED CO-LOCATED EDGE BUILD: lands the weighted
+  // pair artifact via GraphOps.buildPairsBucketed (orders/lineitem bucketed
+  // on the orderkey, exchange-free join) so the rank queries at a scale rung
+  // read it through -Dgraft.graph.pairsDir and the ~NB-row join shuffle
+  // that blew the sf300 disk envelope never happens. The bucketed table
+  // copies (outDir/b_orders, outDir/b_lineitem) are build scaffolding — the
+  // operator deletes them (and may delete the raw orders/lineitem) once
+  // this prints its JSON; only outDir/pairs is served.
+  private def runGraphBuild(dir: String, outDir: String, buckets: Int): Unit = {
     val spark = session()
+    // the pair aggregate shuffles ~|lineitem| partially-combined rows: at
+    // the probe default of 32 partitions a 1.8B-row rung packs ~50M rows
+    // per reduce task — follow the bucket count instead (the same
+    // granularity the write shuffles already use)
     spark.conf.set("spark.sql.shuffle.partitions", math.max(32, buckets).toString)
-    val t0 = System.nanoTime()
-    val direct = graft.operators.Dedup.scoredPairs(spark, dir)
-    direct.write.mode("overwrite").parquet(s"$outDir/pairs_direct")
-    val directSec = (System.nanoTime() - t0) / 1e9
-    graft.operators.ArtifactCache.invalidate(spark, dir)
-    System.gc()
-    val t1 = System.nanoTime()
-    val (nBands, colocated, nEx) =
-      graft.operators.Dedup.buildBandsBucketed(spark, dir, outDir, buckets)
-    val buildSec = (System.nanoTime() - t1) / 1e9
-    sys.props(graft.operators.Dedup.BandsDirProp) = outDir
-    try {
-      val t2 = System.nanoTime()
-      val served = graft.operators.Dedup.scoredPairs(spark, dir)
-      val nServed = served.count()
-      val servedSec = (System.nanoTime() - t2) / 1e9
-      val a = spark.read.parquet(s"$outDir/pairs_direct")
-      val onlyA = a.exceptAll(served).count()
-      val onlyB = served.exceptAll(a).count()
-      val ok = onlyA == 0 && onlyB == 0 && nServed == a.count()
-      println(s"""{"probe":"dedup_bucketed_bands","dir":"$dir","out":"$outDir","buckets":$buckets,"bands":$nBands,"pairs":$nServed,"colocated_pair_plan":$colocated,"serve_exchanges":$nEx,"only_direct":$onlyA,"only_served":$onlyB,"match":$ok,"direct_sec":$directSec,"build_sec":$buildSec,"served_sec":$servedSec}""")
-      require(ok, "bandsDir-served scored pairs differ from the direct build")
-      require(colocated, "bucketed band pair plan shuffled its inputs")
-    } finally {
-      sys.props -= graft.operators.Dedup.BandsDirProp
-      graft.operators.ArtifactCache.invalidate(spark, dir)
-    }
+    val ((nPairs, colocated), sec) =
+      secs(graft.operators.GraphOps.buildPairsBucketed(spark, dir, outDir, buckets))
+    println(s"""{"probe":"graph_bucketed_build","dir":"$dir","out":"$outDir","buckets":$buckets,"pairs":$nPairs,"colocated_join":$colocated,"sec":$sec}""")
+    require(colocated, "bucketed build shuffled its join inputs")
     spark.stop()
   }
 
+  // `graphedges` (r12) — DISK-RESIDENT BIDIRECTED EDGE ARTIFACT: lands the
+  // src-bucketed edge table + degree frame (GraphOps.buildEdgesBucketed)
+  // that `-Dgraft.graph.edgesDir` serves to the rank rounds. At the sf300
+  // rung the thin edge CACHE (3.5B rows) exceeded memory+disk beside its
+  // lineage-pinned repartition shuffle; the bucketed table is scanned per
+  // round with zero edge movement and zero resident cache. Respects
+  // -Dgraft.graph.pairsDir for the pair source (the bucketed-ingest leg).
+  private def runGraphEdges(dir: String, outDir: String, buckets: Int, phase: String): Unit = {
+    val spark = session()
+    spark.conf.set("spark.sql.shuffle.partitions", math.max(32, buckets).toString)
+    spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
+    val ((nNodes, nEdges), sec) =
+      secs(graft.operators.GraphOps.buildEdgesBucketed(spark, dir, outDir, buckets, phase))
+    println(s"""{"probe":"graph_edge_build","dir":"$dir","out":"$outDir","buckets":$buckets,"phase":"$phase","nodes":$nNodes,"edges":$nEdges,"sec":$sec}""")
+    spark.stop()
+  }
+
+  // `rankdump` / `rankcmp` (r12) — the graph diffv STAGED for a tight disk
+  // envelope: `rankdump` computes the TWIN rank frames (v9/v10 — pairs-based,
+  // no edge table needed) and lands them as parquet while only the pair
+  // artifact occupies the disk; `rankcmp` later computes the SHIPPED n1/n2
+  // rank frames over the disk-edge artifact and compares against the dumps.
+  // Same evidence as one diffv process (full-frame bit-equality), but the
+  // twin's join scratch and the 2x-edge table never co-reside.
+  private def runRankDump(dir: String, outDir: String): Unit = {
+    val spark = session()
+    def dump(name: String, df: DataFrame): Unit = {
+      val (rows, sec) = secs {
+        df.write.mode("overwrite").parquet(s"$outDir/$name")
+        spark.read.parquet(s"$outDir/$name").count()
+      }
+      println(s"""{"probe":"rank_dump","which":"$name","rows":$rows,"sec":$sec}""")
+      System.gc()
+    }
+    dump("v9", graft.operators.Differential.v9RankFrame(spark, dir))
+    dump("v10", graft.operators.Differential.v10RankFrame(spark, dir))
+    spark.stop()
+  }
+
+  private def runRankCmp(dir: String, dumpDir: String): Unit = {
+    val spark = session()
+    def cmp(name: String, shipped: => DataFrame): Boolean = {
+      val (d, sec) = secs(Probe.sameRows(spark.read.parquet(s"$dumpDir/$name"), shipped))
+      println(s"""{"probe":"rank_cmp","which":"$name",${diffJson(d)},"sec":$sec}""")
+      System.gc()
+      d.matched
+    }
+    val ok1 = cmp("v9", graft.operators.GraphOps.n1RankFrame(spark, dir))
+    val ok2 = cmp("v10", graft.operators.GraphOps.n2RankFrame(spark, dir))
+    require(ok1 && ok2, "graph rank-frame differential mismatch")
+    spark.stop()
+  }
+
+  // `compdump` / `compcmp` (r13) — the d9-chain diffv STAGED for a tight disk
+  // envelope (the rankdump/rankcmp recipe applied to the component family):
+  // at the sf1000 rung the alt and shipped component builds' shuffle scratch
+  // plus the 50M-doc signature cache co-residing blew the disk; `compdump`
+  // computes the TWIN component frame (alt algorithm) and lands it as
+  // parquet while only its own scratch occupies the disk, then `compcmp` in
+  // a FRESH process computes the shipped frame and compares full-frame.
+  private def runCompDump(dir: String, outDir: String): Unit = {
+    val spark = session()
+    val (rows, sec) = secs {
+      graft.operators.Differential.altComponentLabels(spark, dir)
+        .write.mode("overwrite").parquet(outDir)
+      spark.read.parquet(outDir).count()
+    }
+    println(s"""{"probe":"comp_dump","dir":"$dir","rows":$rows,"sec":$sec}""")
+    spark.stop()
+  }
+
+  private def runCompCmp(dir: String, dumpDir: String): Unit = {
+    val spark = session()
+    val (d, sec) = secs {
+      val a = spark.read.parquet(dumpDir)
+      Probe.sameRows(a, graft.operators.Dedup.componentLabels(spark, dir)
+        .select(a.columns.map(col).toIndexedSeq: _*))
+    }
+    println(s"""{"probe":"comp_cmp","dir":"$dir",${diffJson(d)},"sec":$sec}""")
+    require(d.matched, "d9-chain component differential mismatch")
+    spark.stop()
+  }
+
+  /** `repack` — re-encode a parquet directory with zstd (disk-envelope tool:
+    * the rung artifacts are read many times and disk-bound — zstd buys ~30%
+    * of the envelope back for decode cost that is noise next to the IO).
+    */
+  private def runRepack(inDir: String, outDir: String): Unit = {
+    val spark = session()
+    spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
+    val (rows, sec) = secs {
+      spark.read.parquet(inDir).write.mode("overwrite").parquet(outDir)
+      spark.read.parquet(outDir).count()
+    }
+    println(s"""{"probe":"repack","in":"$inDir","out":"$outDir","rows":$rows,"sec":$sec}""")
+    spark.stop()
+  }
+
+  // `dedupbands` (r13) — BUCKETED LSH BAND ARTIFACT: the dedup family's
+  // analogue of the graph family's bucketed ingest. Computes the direct
+  // scoredPairs artifact (the baseline, with its band shuffle), lands the
+  // signature + bucketed band layout via Dedup.buildBandsBucketed,
+  // re-derives the same scored pairs through -Dgraft.dedup.bandsDir, and
+  // requires bit-identical pair sets — recording the serve plan's static
+  // exchange count (must be <= 1: the candidate distinct) beside the direct
+  // build's wall.
+  private def runDedupBands(dir: String, outDir: String, buckets: Int): Unit = {
+    import graft.operators.Dedup
+    val spark = session()
+    spark.conf.set("spark.sql.shuffle.partitions", math.max(32, buckets).toString)
+    val (_, directSec) = secs(Dedup.scoredPairs(spark, dir).write.mode("overwrite").parquet(s"$outDir/pairs_direct"))
+    ArtifactCache.invalidate(spark, dir)
+    System.gc()
+    val ((nBands, colocated, nEx), buildSec) = secs(Dedup.buildBandsBucketed(spark, dir, outDir, buckets))
+    try Probe.withProps(Dedup.BandsDirProp -> outDir) {
+      val (served, servedSec) = secs {
+        val served = Dedup.scoredPairs(spark, dir)
+        served.count()
+        served
+      }
+      val d = Probe.sameRows(spark.read.parquet(s"$outDir/pairs_direct"), served)
+      println(s"""{"probe":"dedup_bucketed_bands","dir":"$dir","out":"$outDir","buckets":$buckets,"bands":$nBands,"pairs":${d.rowsB},"colocated_pair_plan":$colocated,"serve_exchanges":$nEx,"only_direct":${d.onlyA},"only_served":${d.onlyB},"match":${d.matched},"direct_sec":$directSec,"build_sec":$buildSec,"served_sec":$servedSec}""")
+      require(d.matched, "bandsDir-served scored pairs differ from the direct build")
+      require(colocated, "bucketed band pair plan shuffled its inputs")
+    } finally ArtifactCache.invalidate(spark, dir)
+    spark.stop()
+  }
+
+  // `curation` — CURATION COMPOSITE END-TO-END AT THE SCALE RUNGS (round-10
+  // verdict #3): `api.Curation.run` with EVERY stage enabled (mixing, span
+  // gate, per-source cap, admission, redaction) — its 10 stages are
+  // individually oracle-proven at scale but were only ever COMPOSED at
+  // fixture scale (CurationApiSpec). Checks, all in-engine aggregates:
+  //   1. the ledger covers every document exactly once;
+  //   2. kept ⇒ every stage verdict (no row keeps despite a failing gate);
+  //   3. each ledger column equals its oracled query twin where the config
+  //      matches the query's constants — q_pass↔t5, component/canonical↔c2,
+  //      split↔c3, cap_kept↔t17 (cap=10), is_new/admitted↔d12 (5,4),
+  //      span_ok↔d11 at the configured threshold, temp_kept↔t11;
+  //   4. pack layout invariants over the kept snapshot (offsets within the
+  //      window, per-shard token conservation, one row per kept doc).
   private def runCuration(dir: String): Unit = {
     val spark = session()
     val docs = graft.Tables.documents(spark, dir)
@@ -1015,6 +782,11 @@ object ScaleProbe {
       println(s"[curation] $name violations=$v")
       System.gc()
     }
+    // rows either side holds that the other does not
+    def unmatched(a: DataFrame, b: DataFrame): Long = {
+      val d = Probe.sameRows(a, b)
+      d.onlyA + d.onlyB
+    }
     check("ledger_covers_corpus", math.abs(nLedger - nDocs) +
       ledger.groupBy("doc_id").count().where(col("count") > 1).count())
     check("kept_implies_all_gates", ledger.where(col("kept") &&
@@ -1033,11 +805,8 @@ object ScaleProbe {
     check("split_eq_c3", ledger.select(col("doc_id"), col("split"))
       .join(q("c3_leakage_safe_split").select(col("doc_id"), col("split").as("c3s")), "doc_id")
       .where(col("split") =!= col("c3s")).count())
-    check("cap_kept_eq_t17", {
-      val mine = ledger.where(col("cap_kept")).select("doc_id")
-      val t17 = q("t17_source_cap").select("doc_id")
-      mine.exceptAll(t17).count() + t17.exceptAll(mine).count()
-    })
+    check("cap_kept_eq_t17",
+      unmatched(ledger.where(col("cap_kept")).select("doc_id"), q("t17_source_cap").select("doc_id")))
     check("admission_eq_d12", ledger
       .select(col("doc_id"), col("is_new"), col("admitted"))
       .join(q("d12_incremental").select(col("doc_new").as("doc_id"), col("is_dup")),
@@ -1049,18 +818,13 @@ object ScaleProbe {
     check("span_ok_eq_d11", ledger.select(col("doc_id"), col("span_ok"))
       .join(q("d11_dup_spans").select(col("doc_id"), col("dup_frac")), Seq("doc_id"), "left")
       .where(col("span_ok") =!= (coalesce(col("dup_frac"), lit(0.0)) <= spanFrac)).count())
-    check("temp_kept_eq_t11", {
-      val mine = ledger.where(col("temp_kept")).select("doc_id")
-      val t11 = q("t11_temp_sample").select("doc_id")
-      mine.exceptAll(t11).count() + t11.exceptAll(mine).count()
-    })
+    check("temp_kept_eq_t11",
+      unmatched(ledger.where(col("temp_kept")).select("doc_id"), q("t11_temp_sample").select("doc_id")))
     // r13: with the image gate on, the dropped set must equal m6's doc_b
     // side verbatim (the keep-first rule over the oracle-checked pairs)
-    if (cfg.imageDedup) check("img_kept_eq_m6", {
-      val dropped = ledger.where(!col("img_kept")).select("doc_id")
-      val m6 = q("m6_phash_pairs").select(col("doc_b").as("doc_id")).distinct()
-      dropped.exceptAll(m6).count() + m6.exceptAll(dropped).count()
-    })
+    if (cfg.imageDedup) check("img_kept_eq_m6",
+      unmatched(ledger.where(!col("img_kept")).select("doc_id"),
+        q("m6_phash_pairs").select(col("doc_b").as("doc_id")).distinct()))
     val packs = res.packs.cache()
     val nKept = ledger.where(col("kept")).count()
     check("packs_one_row_per_kept_doc", math.abs(packs.count() - nKept))
@@ -1108,21 +872,17 @@ object ScaleProbe {
     // partitioned snapshot (ledger/snapshot/packs) and records file counts
     // + wall, so the rung's evidence covers the consumable artifact too
     sys.env.get("GRAFT_CURATION_WRITE").foreach { outDir =>
-      val tw = System.nanoTime()
-      val files = graft.api.Curation.write(res, outDir, cfg.packShards)
-      val sec = (System.nanoTime() - tw) / 1e9
+      val (files, sec) = secs(graft.api.Curation.write(res, outDir, cfg.packShards))
       val fjson = files.toSeq.sortBy(_._1)
         .map { case (t, n) => s""""$t":$n""" }.mkString(",")
       // r12: the tensor table's on-disk footprint — the bytes a training
       // loader actually maps (recorded per verdict #2's done-criteria)
-      val tensorBytes = files.keySet.find(_ == "tensors").map { _ =>
+      val tensorBytes = if (!files.contains("tensors")) 0L else {
         val p = new org.apache.hadoop.fs.Path(s"$outDir/tensors")
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        val it = fs.listFiles(p, true)
-        var b = 0L
-        while (it.hasNext) { val f = it.next(); if (f.getPath.getName.startsWith("part-")) b += f.getLen }
-        b
-      }.getOrElse(0L)
+        val it = p.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .filter(_.getPath.getName.startsWith("part-")).map(_.getLen).sum
+      }
       val tensorRows = res.tensors.map(_.count()).getOrElse(0L)
       println(s"""{"probe":"curation_write","out":"$outDir","files":{$fjson},"tensor_rows":$tensorRows,"tensor_bytes":$tensorBytes,"sec":$sec}""")
     }
@@ -1130,7 +890,7 @@ object ScaleProbe {
   }
 
   // ---------------------------------------------------------------------------
-  // Mode 9 — DIFFERENTIAL VERIFICATION AT THE SCALE RUNGS (round-10 verdict
+  // `diffv` — DIFFERENTIAL VERIFICATION AT THE SCALE RUNGS (round-10 verdict
   // #1): DuckDB cannot run the d9-chain / s7-training oracles at sf100
   // (OOM at 44+45 GiB spill / >55 min), so the independent check runs
   // IN-ENGINE — a second, algorithmically different implementation of each
@@ -1142,71 +902,45 @@ object ScaleProbe {
   // leakage-safe split both derive deterministically from these columns).
   private def runDiffVerify(dir: String): Unit = {
     val spark = session()
-    def cmp(name: String, alt: => org.apache.spark.sql.DataFrame,
-        shipped: => org.apache.spark.sql.DataFrame): (String, Boolean, Long, Double) = {
-      val t0 = System.nanoTime()
-      val a = alt
-      val b = shipped
-      val nA = a.count()
-      val nB = b.count()
-      val onlyA = a.exceptAll(b).count()
-      val onlyB = b.exceptAll(a).count()
-      val ok = nA == nB && onlyA == 0 && onlyB == 0
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[diffv] $name rows_alt=$nA rows_shipped=$nB only_alt=$onlyA only_shipped=$onlyB match=$ok sec=$sec%.1f")
+    def cmp(name: String, alt: => DataFrame, shipped: => DataFrame): (String, Boolean, Long, Double) = {
+      val (d, sec) = secs(Probe.sameRows(alt, shipped))
+      println(f"[diffv] $name rows_alt=${d.rowsA} rows_shipped=${d.rowsB} only_alt=${d.onlyA} only_shipped=${d.onlyB} match=${d.matched} sec=$sec%.1f")
       System.gc() // release the compare's dead shuffle deps (sf100 lesson)
-      (name, ok, nB, sec)
+      (name, d.matched, d.rowsB, sec)
     }
-    import graft.operators.{Dedup, Differential, Similarity}
+    import graft.operators.{Dedup, Differential, GraphOps}
     // GRAFT_DIFFV_ONLY: substring filter for resuming a partial rung (the
     // sf100 drive pays ~20 min for d9+d11 — a heap-sized s7 retry should
-    // not re-run them); unset = all three compares.
+    // not re-run them); unset = all compares.
     val onlyFilter = sys.env.get("GRAFT_DIFFV_ONLY")
     // '|'-separated substring alternatives, e.g. 'd9|e1_kmeans|pagerank'
     def wanted(name: String) =
       onlyFilter.forall(_.split('|').exists(f => f.nonEmpty && name.contains(f)))
-    val results = Seq[(String, () => (String, Boolean, Long, Double))](
+    def q(name: String): () => DataFrame = () => graft.SparkEntry.queries(name)(spark, dir)
+    // (compare name, alt twin, shipped artifact)
+    val results = Seq[(String, () => DataFrame, () => DataFrame)](
       // one compare for the whole d9 -> c2/c3 chain: doc_id, component,
       // kept, quality, canonical — every downstream keep/split decision is
       // a deterministic function of these
-      ("d9_component_chain", () => cmp("d9_component_chain",
-        Differential.altComponentLabels(spark, dir),
-        Dedup.componentLabels(spark, dir))),
-      ("d11_dup_spans", () => cmp("d11_dup_spans",
-        Differential.queries("v2_spans_merge")(spark, dir),
-        Dedup.queries("d11_dup_spans")(spark, dir))),
-      ("s7_ivfpq_ann", () => cmp("s7_ivfpq_ann",
-        Differential.queries("v3_ivfpq_adc")(spark, dir),
-        Similarity.queries("s7_ivfpq_ann")(spark, dir))),
-      ("t21_bpe_ids", () => cmp("t21_bpe_ids",
-        Differential.queries("v4_bpe_ids")(spark, dir),
-        graft.operators.TextOps.queries("t21_bpe_ids")(spark, dir))),
-      ("t22_pack_bpe", () => cmp("t22_pack_bpe",
-        Differential.queries("v5_pack_bpe")(spark, dir),
-        graft.operators.TextOps.queries("t22_pack_bpe")(spark, dir))),
+      ("d9_component_chain", () => Differential.altComponentLabels(spark, dir),
+        () => Dedup.componentLabels(spark, dir)),
+      ("d11_dup_spans", q("v2_spans_merge"), q("d11_dup_spans")),
+      ("s7_ivfpq_ann", q("v3_ivfpq_adc"), q("s7_ivfpq_ann")),
+      ("t21_bpe_ids", q("v4_bpe_ids"), q("t21_bpe_ids")),
+      ("t22_pack_bpe", q("v5_pack_bpe"), q("t22_pack_bpe")),
       // r11: the materialized pack tensors (slice-split vs token-explode
       // assembly, both rungs of the chain independently derived) ...
-      ("t23_pack_sequences", () => cmp("t23_pack_sequences",
-        Differential.queries("v6_pack_sequences")(spark, dir),
-        graft.operators.TextOps.queries("t23_pack_sequences")(spark, dir))),
+      ("t23_pack_sequences", q("v6_pack_sequences"), q("t23_pack_sequences")),
       // ... and the clustering family (alt Lloyd vs cell_top/vecsum_dec) —
       // e1's oracle ran at sf100 in r9 but DuckDB degrades at the rung
-      ("e1_kmeans", () => cmp("e1_kmeans",
-        Differential.queries("v7_kmeans")(spark, dir),
-        graft.operators.Clustering.queries("e1_kmeans")(spark, dir))),
-      ("e3_inertia", () => cmp("e3_inertia",
-        Differential.queries("v8_inertia")(spark, dir),
-        graft.operators.Clustering.queries("e3_inertia")(spark, dir))),
+      ("e1_kmeans", q("v7_kmeans"), q("e1_kmeans")),
+      ("e3_inertia", q("v8_inertia"), q("e3_inertia")),
       // r12: the graph family — FULL rank frames (every node, not the
       // 20-row presentation cut); at the bucketed-ingest rungs set
       // -Dgraft.graph.pairsDir so both sides read the landed pair artifact
-      ("n1_pagerank", () => cmp("n1_pagerank",
-        Differential.v9RankFrame(spark, dir),
-        graft.operators.GraphOps.n1RankFrame(spark, dir))),
-      ("n2_pagerank", () => cmp("n2_pagerank",
-        Differential.v10RankFrame(spark, dir),
-        graft.operators.GraphOps.n2RankFrame(spark, dir))))
-      .collect { case (n, run) if wanted(n) => run() }
+      ("n1_pagerank", () => Differential.v9RankFrame(spark, dir), () => GraphOps.n1RankFrame(spark, dir)),
+      ("n2_pagerank", () => Differential.v10RankFrame(spark, dir), () => GraphOps.n2RankFrame(spark, dir)))
+      .collect { case (n, alt, shipped) if wanted(n) => cmp(n, alt(), shipped()) }
     // ADVICE r10: a typo'd GRAFT_DIFFV_ONLY must fail loudly, not emit a
     // vacuous all_match=true (and the empty parts list left malformed JSON)
     require(onlyFilter.isEmpty || results.nonEmpty,
@@ -1218,122 +952,56 @@ object ScaleProbe {
     spark.stop()
   }
 
-  // Probe loops run hundreds of shuffle-producing rounds in one JVM — the
-  // shared long-drive recipe (GC sweep + zstd; see LongDrive) applies in
-  // full; probes pin 32 shuffle partitions regardless of core count.
-  private def session(): SparkSession = LongDrive.session("8")(_ => "32")
-
   // ---------------------------------------------------------------------------
-  // Mode 1 — join kernel
-  private def runJoinKernel(nBasins: Int, nTs: Int): Unit = {
+  // `full` — WHOLE FLAGSHIP end-to-end: renders a real fixture (daily
+  // `.tar.gz` archives of full 900x900 RADOLAN-layout ASCII grids, ~0.1%
+  // nodata; an nBasins-pentagon shapefile, both by RadolanRender) and drives
+  // `RadoHydro.run` — archive scan -> tar/gz expand -> windowed parse ->
+  // dedup -> cell map -> NaN gate -> weights -> weighted series — reporting
+  // wall time, jobs, total/max-stage shuffle write bytes, and asserting no
+  // BroadcastNestedLoopJoin in the physical plan.
+  private def runFull(nBasins: Int, nTs: Int): Unit = {
     val spark = session()
-
-    // 900x900 km grid; basins are the full probe's pentagons, in km
-    val t = Grid.Transform(-523.462, 1.0, -3758.645, -1.0)
-    import spark.implicits._
-    val basins = (1 to nBasins).map { id =>
-      (id, fullPentagon(id).map(_.map(_ / 1000).toSeq).toSeq)
-    }.toDF("basinID", "geom")
-    val cellMap = SpatialPipeline.basinCellMap(
-      basins, t, 900, 900, 1.0, "radolan_km", "epsg:25833").cache()
-
-    var t0 = System.nanoTime()
-    val nCells = cellMap.count()
-    val tJoin = (System.nanoTime() - t0) / 1e9
-
-    // synthetic raster: T timesteps x the covered window, long layout
-    val values = spark.range(nTs).select(col("id").as("tsn"))
-      .crossJoin(cellMap.select("row", "col").distinct())
-      .select(timestamp_millis(col("tsn") * 3600000L).as("ts"), col("row"), col("col"),
-        (pmod(hash(col("row"), col("col"), col("tsn")), lit(4000)).cast("double") / 10).as("v"))
-    t0 = System.nanoTime()
-    val series = SpatialPipeline.weightedSeries(values, cellMap, 10.0)
-    val nRows = series.count()
-    val tSeries = (System.nanoTime() - t0) / 1e9
-
-    println(f"""{"probe":"basin_scale","n_basins":$nBasins,"n_cells":$nCells,"join_sec":$tJoin%.1f,"series_rows":$nRows,"series_sec":$tSeries%.1f}""")
-    spark.stop()
-  }
-
-  /** Basin `id` of both flagship probes, radolan METERS. */
-  private def fullPentagon(id: Int): graft.geo.Geom.Polygon =
-    RadolanRender.pentagon(id, RadolanRender.Full, 876, 870)
-
-  // ---------------------------------------------------------------------------
-  // Mode 2 — full flagship: 900x900 grids with ~0.1% nodata and nBasins
-  // pentagons, both rendered by RadolanRender
-  private def ensureFullFixture(spark: SparkSession, nBasins: Int, nTs: Int): (String, String) = {
     val root = s"/tmp/graft_scaleprobe_full/${nBasins}x$nTs"
     val gridsDir = s"$root/grids"
     val shpPath = s"$root/basins/basins.shp"
-    val marker = Paths.get(root, "_done")
-    if (Files.exists(marker)) return (gridsDir, shpPath)
-    Files.createDirectories(Paths.get(gridsDir))
-    Files.createDirectories(Paths.get(s"$root/basins"))
-
-    // shapefile: nBasins pentagons, one numeric attribute
-    graft.out.ShpWriter.write(shpPath,
-      (1 to nBasins).map(fullPentagon),
-      (1 to nBasins).map(i => Map[String, Any]("FID_" -> i.toLong)),
-      Seq("FID_"))
-
-    // daily tar.gz archives of 24 hourly full-grid ASCII members, rendered
-    // in parallel ON SPARK (local executors share the filesystem)
-    val nDays = math.max(1, nTs / 24)
-    spark.range(1, nDays + 1).repartition(nDays.toInt).foreach { day =>
-      RadolanRender.writeDay(gridsDir, RadolanRender.Full, day.toInt, 0 until 24)
-    }
-    Files.write(marker, Array.emptyByteArray)
-    (gridsDir, shpPath)
-  }
-
-  private def runFull(nBasins: Int, nTs: Int): Unit = {
-    val spark = session()
-    val tFix0 = System.nanoTime()
-    val (gridsDir, shpPath) = ensureFullFixture(spark, nBasins, nTs)
-    val tFixture = (System.nanoTime() - tFix0) / 1e9
-
-    // shuffle and job accounting across the whole run
-    val shuffleTotal = new java.util.concurrent.atomic.AtomicLong
-    val shuffleMaxStage = new java.util.concurrent.atomic.AtomicLong
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val w = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-        shuffleTotal.addAndGet(w)
-        shuffleMaxStage.getAndUpdate(m => math.max(m, w))
+    val (_, tFixture) = secs(fixtureOnce(root) {
+      Files.createDirectories(Paths.get(gridsDir))
+      Files.createDirectories(Paths.get(s"$root/basins"))
+      // shapefile: nBasins pentagons in radolan METERS, one numeric attribute
+      graft.out.ShpWriter.write(shpPath,
+        (1 to nBasins).map(id => RadolanRender.pentagon(id, RadolanRender.Full, 876, 870)),
+        (1 to nBasins).map(i => Map[String, Any]("FID_" -> i.toLong)),
+        Seq("FID_"))
+      // daily tar.gz archives of 24 hourly full-grid ASCII members, rendered
+      // in parallel ON SPARK (local executors share the filesystem)
+      val nDays = math.max(1, nTs / 24)
+      spark.range(1, nDays + 1).repartition(nDays.toInt).foreach { day =>
+        RadolanRender.writeDay(gridsDir, RadolanRender.Full, day.toInt, 0 until 24)
       }
     })
+
+    // shuffle and job accounting across the whole run
+    val meter = Probe.meter(spark)
 
     // basins are authored directly in the raw grid CRS (radolan_m), so the
     // windowing path is identity and the output reprojection (Q10 areas)
     // still exercises the closed-form CRS math. `run` scans the archives
     // into persisted grid rows and computes the gate and weights on the
     // driver, so plan_sec holds the scan
-    val t0 = System.nanoTime()
-    val res = graft.api.RadoHydro.run(spark, gridsDir, shpPath,
-      graft.api.RadoHydro.Config(datasource = "radolan", shapeCrs = "radolan_m"))
-    val tPlan = (System.nanoTime() - t0) / 1e9
+    val (res, tPlan) = secs(graft.api.RadoHydro.run(spark, gridsDir, shpPath,
+      graft.api.RadoHydro.Config(datasource = "radolan", shapeCrs = "radolan_m")))
+    val (nCells, tJoin) = secs(res.cellMap.count())
 
-    val t1 = System.nanoTime()
-    val nCells = res.cellMap.count()
-    val tJoin = (System.nanoTime() - t1) / 1e9
-
-    val planStr = res.series.queryExecution.executedPlan.toString
-    val bnlj = planStr.contains("BroadcastNestedLoopJoin")
+    val bnlj = res.series.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin")
 
     // count runs the per-grid weighted sums over the persisted grid rows
-    val t2 = System.nanoTime()
-    val nRows = res.series.count()
-    val tSeries = (System.nanoTime() - t2) / 1e9
+    val (nRows, tSeries) = secs(res.series.count())
 
     // what the run keeps persisted once the series is computed
     val persistedMb = spark.sparkContext.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum / 1e6
-    val totMb = shuffleTotal.get() / 1e6
-    val maxMb = shuffleMaxStage.get() / 1e6
-    println(f"""{"probe":"full_flagship","n_basins":$nBasins,"n_ts":$nTs,"n_cells":$nCells,"series_rows":$nRows,"fixture_sec":$tFixture%.1f,"plan_sec":$tPlan%.1f,"join_sec":$tJoin%.1f,"series_sec":$tSeries%.1f,"jobs":${jobs.get},"shuffle_total_mb":$totMb%.1f,"shuffle_max_stage_mb":$maxMb%.1f,"persisted_mb":$persistedMb%.1f,"bnlj":$bnlj""" + "}")
+    val c = meter.counts
+    println(f"""{"probe":"full_flagship","n_basins":$nBasins,"n_ts":$nTs,"n_cells":$nCells,"series_rows":$nRows,"fixture_sec":$tFixture%.1f,"plan_sec":$tPlan%.1f,"join_sec":$tJoin%.1f,"series_sec":$tSeries%.1f,"jobs":${c.jobs},"shuffle_total_mb":${c.shuffleBytes / 1e6}%.1f,"shuffle_max_stage_mb":${meter.maxStageShuffleBytes / 1e6}%.1f,"persisted_mb":$persistedMb%.1f,"bnlj":$bnlj""" + "}")
     require(!bnlj, "flagship plan regressed to BroadcastNestedLoopJoin")
     spark.stop()
   }

@@ -42,13 +42,18 @@ class StreamingSoakSpec extends AnyFunSuite {
   }
 
   /** Copy staged files [from, until) into the live feed dir with strictly
-    * increasing mtimes so FileStreamSource discovers them in order.
+    * increasing mtimes so FileStreamSource discovers them in order. Each
+    * file is copied under a '.'-prefixed name, which the source's listing
+    * skips, given its mtime, and only then moved to its final name: a
+    * listing never sees a feed file carrying the current time, which would
+    * age every earlier file past `maxFileAge`.
     */
   private def feedTranche(feed: Path, from: Int, until: Int): Unit =
     (from until until).foreach { i =>
-      val dst = feed.resolve(f"f$i%04d.parquet")
-      Files.copy(staged(i), dst, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dst, FileTime.fromMillis(1000000000000L + i * 1000L))
+      val tmp = feed.resolve(f".f$i%04d.parquet")
+      Files.copy(staged(i), tmp, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(tmp, FileTime.fromMillis(1000000000000L + i * 1000L))
+      Files.move(tmp, feed.resolve(f"f$i%04d.parquet"), StandardCopyOption.ATOMIC_MOVE)
     }
 
   private def cutPaths(cut: Int): Seq[String] = staged.take(cut).map(_.toString).toSeq
