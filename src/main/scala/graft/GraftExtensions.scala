@@ -2,80 +2,32 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions._
+import graft.functions.Catalog
 
-/** Spark-native extension wiring: install the engine's Catalyst expressions
-  * through `SparkSessionExtensions` so any session created with
+/** Spark-native extension wiring: a session created with
   *
   *   SparkSession.builder().withExtensions(new GraftExtensions)...
   *   // or: .config("spark.sql.extensions", "graft.GraftExtensions")
   *
-  * has `graft_dot`, `graft_hash60`, `graft_minhash_sigs`,
-  * `graft_sorted_intersect` available in SQL and `expr(...)` without any
-  * per-module registration call. [[Graft.setup]] is the imperative
-  * equivalent for an existing session (also registers the st_* geometry
-  * UDFs, which need a live session).
+  * has every [[Catalog]] function available in SQL and `expr(...)` from
+  * the start. [[Graft.setup]] is the equivalent for an existing session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - dot product of two double arrays"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_hash60"),
-      info("graft_hash60", "graft_hash60(s) - 60-bit md5-prefix hash"),
-      (exprs: Seq[Expression]) => Hash60(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_sigs"),
-      info("graft_minhash_sigs", "graft_minhash_sigs(shingles[, n]) - n MinHash values (default 8)"),
-      (exprs: Seq[Expression]) => MinHashSigs(exprs.head,
-        if (exprs.size > 1) exprs(1).eval().asInstanceOf[Number].intValue() else 8)))
-    ext.injectFunction((FunctionIdentifier("graft_sorted_intersect"),
-      info("graft_sorted_intersect", "graft_sorted_intersect(a, b) - |A intersect B| for sorted arrays"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_simhash_agg"),
-      info("graft_simhash_agg", "graft_simhash_agg(h) - 60-bit SimHash aggregate over token hashes"),
-      (exprs: Seq[Expression]) => SimHashAgg(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_vecsum_dec"),
-      info("graft_vecsum_dec", "graft_vecsum_dec(array<decimal>) - exact element-wise vector-sum aggregate"),
-      (exprs: Seq[Expression]) => VecSumDec(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_cell_top"),
-      info("graft_cell_top", "graft_cell_top(v, cents, n) - n nearest centroids as sorted array<struct<dist2, cid>>"),
-      (exprs: Seq[Expression]) => CellTopN(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((FunctionIdentifier("st_area"),
-      info("st_area", "st_area(geom) - shoelace area, holes negative"),
-      (e: Seq[Expression]) => StArea(e.head)))
-    ext.injectFunction((FunctionIdentifier("st_bbox"),
-      info("st_bbox", "st_bbox(geom) - struct(xmin,ymin,xmax,ymax)"),
-      (e: Seq[Expression]) => StBBox(e.head)))
-    ext.injectFunction((FunctionIdentifier("st_clip_box"),
-      info("st_clip_box", "st_clip_box(geom, xmin, ymin, xmax, ymax) - box clip"),
-      (e: Seq[Expression]) => StClipBox(e(0), e(1), e(2), e(3), e(4))))
-    ext.injectFunction((FunctionIdentifier("st_clip_area"),
-      info("st_clip_area", "st_clip_area(geom, xmin, ymin, xmax, ymax) - area of the clip"),
-      (e: Seq[Expression]) => StClipArea(e(0), e(1), e(2), e(3), e(4))))
-    ext.injectFunction((FunctionIdentifier("st_contains_point"),
-      info("st_contains_point", "st_contains_point(geom, x, y) - even-odd point-in-polygon"),
-      (e: Seq[Expression]) => StContainsPoint(e(0), e(1), e(2))))
-    ext.injectFunction((FunctionIdentifier("st_reproject"),
-      info("st_reproject", "st_reproject(geom, src, dst) - closed-form CRS transform"),
-      (e: Seq[Expression]) => StReproject(e(0), e(1), e(2))))
-    ext.injectFunction((FunctionIdentifier("graft_clip_areas"),
-      info("graft_clip_areas", "graft_clip_areas(geom, box..., src, dst) - clip+cell areas in output CRS"),
-      (e: Seq[Expression]) => ClipAreas(e(0), e(1), e(2), e(3), e(4), e(5), e(6))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    for (f <- Catalog.entries) ext.injectFunction((FunctionIdentifier(f.name), f.info, f.build))
 }
 
-/** One-call setup for an existing session. */
 object Graft {
+  /** Register the [[Catalog]] functions `spark`'s registry lacks. Idempotent:
+    * a session built with [[GraftExtensions]], or one already set up,
+    * registers nothing. Operators call it before their first `graft_*` or
+    * `st_*` expression, so sessions built without the extension work too.
+    */
   def setup(spark: SparkSession): SparkSession = {
-    HashRegistry.register(spark)
-    VectorFunctions.register(spark)
-    GeoSql.register(spark)
+    val reg = spark.sessionState.functionRegistry
+    for (f <- Catalog.entries if !reg.functionExists(FunctionIdentifier(f.name)))
+      reg.createOrReplaceTempFunction(f.name, f.build, "built-in")
     spark
   }
 }

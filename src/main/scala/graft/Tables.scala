@@ -16,8 +16,10 @@ object Tables {
     * re-reads footers for schema on every call — ~0.1–0.25 s per query at
     * bench SF, and at cluster scale an object-store LIST per query. The
     * testdata is immutable within a session, so the resolved DataFrame
-    * (immutable logical plan) is shared. Weak session keys: stopped test
-    * sessions don't pin their plans.
+    * (immutable logical plan) is shared. The weak session keys free
+    * nothing: each memoized DataFrame holds its own SparkSession, so an
+    * entry's value keeps its key reachable and a session's memos, plans
+    * included, stay for the life of the JVM even after the session stops.
     */
   private val memos =
     new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, AnyRef]]()

@@ -378,22 +378,13 @@ object Curation {
       threshold: Double = 0.7, checkpoint: Option[String] = None)
       (sink: (DataFrame, DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Dedup, TextOps}
     import graft.streaming.StreamOps
-    import org.apache.hadoop.fs.Path
-    val spark = newDocs.sparkSession
     // the standing artifacts both stages reuse every batch: the signature
     // snapshot (admission's join side) and the layout's resume positions
     val standingSigs = Dedup.minhashSigs(standingDocs).cache()
-    val stateDir = checkpoint.map(c => new Path(c, "graft-pack-bases"))
-    val fs = stateDir.map(_.getFileSystem(spark.sessionState.newHadoopConf()))
-    def seed(): Map[Int, Long] =
-      TextOps.packResume(standingPacks, packSize).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val bases = scala.collection.mutable.Map[Int, Long]() ++ seed()
+    val packs = new StreamOps.PackResume(standingPacks, packSize, shards, checkpoint)
     val w = newDocs.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        import spark.implicits._
         val verdicts = StreamOps
           .admissionVerdicts(batch, standingSigs, threshold)
           .localCheckpoint() // one materialization serves sink AND the gate
@@ -402,23 +393,7 @@ object Curation {
             .select(col("doc_new").as("doc_id")), "doc_id")
           .select(col("doc_id"),
             size(split(trim(col("text")), "\\s+")).as("n_tokens"))
-        val input: Map[Int, Long] = (stateDir, fs) match {
-          case (Some(dir), Some(f)) => StreamOps.priorBases(f, dir, id).getOrElse(seed())
-          case _ => bases.toMap
-        }
-        val delta = TextOps
-          .packAppendFrom(spark, input.toSeq.toDF("shard", "base"),
-            admitted, packSize, shards)
-          .localCheckpoint()
-        val advanced = delta.groupBy("shard")
-          .agg(max(col("pack_id").cast("long") * packSize + col("pack_offset")
-            + col("n_tokens")).as("end"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1))
-        sink(verdicts, delta, id)
-        (stateDir, fs) match {
-          case (Some(dir), Some(f)) => StreamOps.writeBases(f, dir, id, input ++ advanced)
-          case _ => advanced.foreach { case (sh, b) => bases(sh) = b }
-        }
+        packs.append(id, admitted)(sink(verdicts, _, id))
       }
     checkpoint.foreach(c => w.option("checkpointLocation", c))
     w.start()

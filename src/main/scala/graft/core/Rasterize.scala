@@ -22,7 +22,7 @@ object Rasterize {
     * @return (row, col, attr) for touched cells.
     */
   def rasterize(polys: DataFrame, t: Grid.Transform, nrows: Int, ncols: Int): DataFrame = {
-    graft.functions.GeoSql.register(polys.sparkSession)
+    graft.Graft.setup(polys.sparkSession)
     val boxed = Cells.withCellBox(
       SpatialPipeline.explodeToCells(polys, t, nrows, ncols, 1.0), t, 1.0)
     boxed

@@ -29,13 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object SpatialPipeline {
 
-  // geometry kernels are native Catalyst expressions (functions/GeoExpressions
-  // .scala — no ScalaUDF row boxing); registered per session, idempotent
-  private def geo(df: DataFrame): DataFrame = {
-    graft.functions.GeoSql.register(df.sparkSession)
-    df
-  }
-
   /** Build the basin->cell map: one row per (basin, covered cell) with areas.
     *
     * @param basins   (basinID, geom) with geometry in GRID CRS units (already
@@ -54,7 +47,11 @@ object SpatialPipeline {
       divisor: Double): DataFrame = {
     val tx = t.ulx / divisor; val rx = t.xres / divisor
     val ty = t.uly / divisor; val ry = t.yres / divisor // ry < 0
-    geo(polys)
+    // geometry kernels are native Catalyst expressions (functions/
+    // GeoExpressions.scala, no ScalaUDF row boxing); this also registers
+    // them for basinCellMap
+    graft.Graft.setup(polys.sparkSession)
+    polys
       // empty geometries would bbox to +/-Infinity and blow up the ANSI int
       // casts below — drop them here (they cover no cells by definition)
       .where(size(col("geom")) > 0)
@@ -73,7 +70,7 @@ object SpatialPipeline {
       divisor: Double, gridCrs: String, outCrs: String): DataFrame = {
     val exploded = explodeToCells(basins, t, nrows, ncols, divisor)
     val boxed = Cells.withCellBox(exploded, t, divisor)
-    geo(boxed)
+    boxed
       // a generator is a barrier to filter pushdown and project collapsing,
       // so the clip runs once per (basin, cell); as a plain column the
       // optimizer inlines it into each of its three references

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -451,27 +450,4 @@ case class KMinAgg(
   override def withNewInputAggBufferOffset(newOffset: Int): KMinAgg =
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(c: Expression): KMinAgg = copy(child = c)
-}
-
-object HashRegistry {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_minhash_sigs", exprs => MinHashSigs(exprs.head,
-      if (exprs.size > 1) exprs(1).eval().asInstanceOf[Number].intValue() else 8), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_text", exprs => MinHashText(exprs.head,
-      if (exprs.size > 1) exprs(1).eval().asInstanceOf[Number].intValue() else 8), "built-in")
-    reg.createOrReplaceTempFunction("graft_gram_hashes",
-      exprs => GramHashes(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_hash60", exprs => Hash60(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_sorted_intersect",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash_agg",
-      exprs => SimHashAgg(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_kmin",
-      exprs => KMinAgg(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("graft_top_bigram",
-      exprs => TopBigramRun(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_sig_agree",
-      exprs => SigAgreeCount(exprs(0), exprs(1)), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -319,21 +318,4 @@ case class VecSumDec(
   override def withNewInputAggBufferOffset(newOffset: Int): VecSumDec =
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(c: Expression): VecSumDec = copy(child = c)
-}
-
-object VectorFunctions {
-  /** Idempotently register `graft_dot` / `graft_vecsum_dec` in the session's
-    * function registry so query builders can use them via `expr(...)`.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_vecsum_dec", exprs => VecSumDec(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_cell_top", exprs => CellTopN(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_dist2", exprs => SquaredDistance(exprs(0), exprs(1)), "built-in")
-  }
 }

@@ -197,7 +197,7 @@ object AnalyticOps {
   // rank runs on already-deduped (flag, hash) rows. The estimator applies
   // the same full/unfull split as a9 per group.
   private def a10GroupedKmv(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     // ONE dedup shuffle on the raw key, then ONE grouped aggregation that
     // carries both the KMV heap (graft_kmin: O(k) state, map-side partial)
     // and the exact count — the window-rank formulation sorted every
@@ -504,7 +504,7 @@ object AnalyticOps {
   private val BloomWords = (BloomBits + BloomWordBits - 1) / BloomWordBits
 
   private def j10BloomPrune(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     val urgent = Tables.orders(s, d)
       .where(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey").as("key")).distinct()

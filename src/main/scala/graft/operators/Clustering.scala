@@ -178,7 +178,7 @@ object Clustering {
   private def finalAssign(s: SparkSession, d: String): DataFrame =
     ArtifactCache.getOrElseUpdate("clustering.assign", s, d) {
       Similarity.withSmallBuild(s, d) {
-        graft.functions.VectorFunctions.register(s)
+        graft.Graft.setup(s)
         val vecs = Tables.embeddings(s, d)
           .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
           .cache()

@@ -74,7 +74,6 @@ object Dedup {
   // d2 — MinHash signatures: 8 independent min-hashes over character 5-gram
   // shingles, plus the banded LSH bucket keys used for candidate joins.
   private def d2Minhash(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashRegistry.register(s)
     // derived from the cached 64-hash frame: affine pairs 0..7 are the
     // original d2 constants, so sig[0..7] IS the 8-hash signature — one
     // shared materialization serves d2, d3 and d5
@@ -121,7 +120,7 @@ object Dedup {
     * admission micro-batches ([[graft.streaming.StreamOps.admissionVerdicts]]).
     */
   private[graft] def minhashSigs(docs: DataFrame): DataFrame = {
-    graft.functions.HashRegistry.register(docs.sparkSession)
+    graft.Graft.setup(docs.sparkSession)
     docs
       .withColumn("norm", expr(normExpr))
       // fused shingle+hash expression: no per-row 300-element shingle array
@@ -222,7 +221,7 @@ object Dedup {
         val cand = lshCandidatePairs(pruneBands(rawBands))
         val sa = sigs.select(col("doc_id").as("doc_a"), col("sig").as("siga"))
         val sb = sigs.select(col("doc_id").as("doc_b"), col("sig").as("sigb"))
-        graft.functions.HashRegistry.register(s)
+        graft.Graft.setup(s)
         val out = cand.join(sa, "doc_a").join(sb, "doc_b")
           .select(col("doc_a"), col("doc_b"),
             // compiled position-agreement count (functions.SigAgreeCount) —
@@ -363,7 +362,7 @@ object Dedup {
   // the widest prefix DuckDB casts to BIGINT without sign overflow); the
   // round-2 fingerprint was 32 bits, whose byte-bands made d7 quadratic.
   private def d4Simhash(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     Tables.documentsSpread(s, d)
       .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
       .withColumn("h", expr("graft_hash60(tok)")) // JVM-native, not conv/BigInteger
@@ -465,7 +464,7 @@ object Dedup {
   // collides in >= 1 band wherever its doc_ids fall), then the exact Jaccard
   // verifies each candidate. LSH proposes, exact set math disposes.
   private def d5NgramJaccard(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     // set ops run over hashed grams (long equality), not strings — ~10x on
     // the intersect/union inner loops; both engines share the hash
     // fused tokenize+gram+hash expression (sorted distinct; <3 tokens ->
@@ -527,7 +526,7 @@ object Dedup {
     * the bit-identical pair set. Not registered as a query.
     */
   private[operators] def d6CrossJoinReference(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.Graft.setup(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))
@@ -596,7 +595,7 @@ object Dedup {
   }
 
   private def d8EmbedLshDedup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.Graft.setup(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))
@@ -848,7 +847,7 @@ object Dedup {
     */
   private[graft] def dupSpanStats(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     // gram key = portable 60-bit hash (graft_hash60 == DuckDB's md5-prefix
     // cast): an 8-byte long through the gh shuffle instead of a 32-char md5
     // string — measured 252 -> 107 MB shuffle, 10.7 -> 3.3 s at the 100x

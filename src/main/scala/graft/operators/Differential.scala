@@ -219,7 +219,7 @@ object Differential {
     * coalesce(prev, pos - SpanN).
     */
   private def v2SpansMerge(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     val SpanN = Dedup.SpanN
     val grams = Tables.documentsSpread(s, d)
       .withColumn("toks", split(expr(Dedup.normExpr), " "))
@@ -600,7 +600,6 @@ object Differential {
     */
   private[graft] def altDocIdSeqs(s: SparkSession, d: String): DataFrame =
     ArtifactCache.getOrElseUpdate("diff.docIdSeqs", s, d) {
-      graft.functions.HashRegistry.register(s)
       val pieces = altEncodedPieces(s, d)
       val chars = pieces
         .select(explode(split(TextOps.seq0Expr, TextOps.BpeSep)).as("sym"))
@@ -628,7 +627,7 @@ object Differential {
     }
 
   private def v4BpeIds(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     altDocIdSeqs(s, d)
       .select(col("doc_id"),
         size(col("ids")).cast("long").as("n_bpe_tokens"),
@@ -703,7 +702,7 @@ object Differential {
   private[graft] def altFinalAssign(s: SparkSession, d: String): DataFrame =
     ArtifactCache.getOrElseUpdate("diff.kmeans", s, d) {
       InputScale.withSmallBuild(s, InputScale.smallVecs(s, d)) {
-        graft.functions.VectorFunctions.register(s)
+        graft.Graft.setup(s)
         val vecs = Tables.embeddings(s, d)
           .select(col("vec_id"),
             expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
@@ -752,7 +751,7 @@ object Differential {
     * are the shared result contract; everything is integer arithmetic.
     */
   private def v6PackSequences(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     val P = TextOps.PackSize
     val toks = altDocIdSeqs(s, d)
       .select(col("doc_id"), posexplode(col("ids")).as(Seq("ti", "id")))

@@ -52,7 +52,7 @@ object Similarity {
     InputScale.withAqeOffWhen(s, InputScale.smallVecs(s, d))(f)
 
   private[operators] def vecsD(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.Graft.setup(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))

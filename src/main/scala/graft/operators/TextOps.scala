@@ -27,7 +27,7 @@ object TextOps {
     * paths; the conv form above stays for registration-free contexts.
     */
   def hash60F(s: SparkSession, c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     call_function("graft_hash60", c)
   }
 
@@ -258,7 +258,7 @@ object TextOps {
   private val CmsRows = 4
   private val CmsWidth = 256
   private def t7CountMin(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     val freq = Tables.documents(s, d)
       .select(explode(split(trim(col("text")), "\\s+")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("true_n"))
@@ -320,7 +320,7 @@ object TextOps {
   // ORDER BY n DESC, bg (the oracle keeps the explode + window form;
   // values are identical, pinned by Round7OpsSpec against the HOF form).
   private def t8GopherRepetition(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     Tables.documents(s, d)
       .withColumn("toks", split(trim(col("text")), "\\s+"))
       .where(size(col("toks")) >= 2)
@@ -1475,7 +1475,6 @@ object TextOps {
     */
   private[graft] def docIdSeqs(s: SparkSession, d: String): DataFrame =
     ArtifactCache.getOrElseUpdate("text.docIdSeqs", s, d) {
-      graft.functions.HashRegistry.register(s)
       withSmallTextBuild(s, d) {
         val enc = encodedVocab(s, d)
         val (symtab, _) = trainedSymtab(s, d)
@@ -1530,7 +1529,6 @@ object TextOps {
     * engine-reproducible because it is a pure function of the trained table.
     */
   private[graft] def idSeqsOf(s: SparkSession, d: String, docs: DataFrame): DataFrame = {
-    graft.functions.HashRegistry.register(s)
     val words = docs
       .select(col("doc_id"),
         posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "word")))
@@ -1555,7 +1553,7 @@ object TextOps {
   }
 
   private def t21BpeIds(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     docIdSeqs(s, d)
       .select(col("doc_id"),
         size(col("ids")).cast("long").as("n_bpe_tokens"),
@@ -1689,7 +1687,7 @@ object TextOps {
   }
 
   private def t23PackSequences(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashRegistry.register(s)
+    graft.Graft.setup(s)
     val layout = t22PackBpe(s, d) // (doc_id, shard, n_tokens, pack_id, pack_offset)
     assemblePacks(layout, docIdSeqs(s, d), PackSize)
       .select(col("shard"), col("pack_id"), col("n_docs"),

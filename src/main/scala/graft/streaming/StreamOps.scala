@@ -245,8 +245,7 @@ object StreamOps {
   def admissionVerdicts(newDocs: DataFrame, standingSigs: DataFrame,
       threshold: Double = 0.7): DataFrame = {
     import graft.operators.Dedup
-    graft.functions.HashRegistry.register(newDocs.sparkSession)
-    val newSigs = Dedup.minhashSigs(newDocs)
+    val newSigs = Dedup.minhashSigs(newDocs) // registers the graft_* functions
     def bands(sigs: DataFrame, as: String) = sigs.select(col("doc_id").as(as),
       posexplode(expr(Dedup.bandHashArrayExpr)).as(Seq("band_idx", "band_hash")))
     val newBands = bands(newSigs, "doc_new")
@@ -332,42 +331,61 @@ object StreamOps {
       packSize: Int, shards: Int, checkpoint: Option[String] = None)
       (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = newCounts.sparkSession
-    import graft.operators.TextOps
-    import org.apache.hadoop.fs.Path
-    val stateDir = checkpoint.map(c => new Path(c, "graft-pack-bases"))
-    val fs = stateDir.map(_.getFileSystem(spark.sessionState.newHadoopConf()))
-    def seed(): Map[Int, Long] =
-      TextOps.packResume(standing, packSize).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // driver-held resume positions (the session-only mode's only state;
-    // in checkpointed mode just a warm-start of the per-batch file read)
-    val bases = scala.collection.mutable.Map[Int, Long]() ++ seed()
+    val packs = new PackResume(standing, packSize, shards, checkpoint)
     val w = newCounts.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        import spark.implicits._
-        val input: Map[Int, Long] = (stateDir, fs) match {
-          case (Some(dir), Some(f)) => priorBases(f, dir, id).getOrElse(seed())
-          case _ => bases.toMap
-        }
-        val baseDf = input.toSeq.toDF("shard", "base")
-        val delta = TextOps
-          .packAppendFrom(spark, baseDf, batch.select("doc_id", "n_tokens"),
-            packSize, shards)
-          .localCheckpoint() // one deterministic materialization: the sink
-                             // and the base advance must see the same rows
-        val advanced = delta.groupBy("shard")
-          .agg(max(col("pack_id").cast("long") * packSize + col("pack_offset")
-            + col("n_tokens")).as("end"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1))
-        sink(delta, id)
-        (stateDir, fs) match {
-          case (Some(dir), Some(f)) => writeBases(f, dir, id, input ++ advanced)
-          case _ => advanced.foreach { case (sh, b) => bases(sh) = b }
-        }
+        packs.append(id, batch.select("doc_id", "n_tokens"))(sink(_, id))
       }
     checkpoint.foreach(c => w.option("checkpointLocation", c))
     w.start()
+  }
+
+  /** The per-shard pack resume positions a pack-appending stream carries
+    * across micro-batches ([[packStream]], [[graft.api.Curation.stream]]):
+    * seeded from the `standing` layout, advanced by each batch's delta. With
+    * a `checkpoint` the positions are versioned per batch under
+    * `<checkpoint>/graft-pack-bases/` through the checkpoint's own Hadoop
+    * FileSystem (batch `id` starts from the state `id-1` committed, so a
+    * replayed batch recomputes the same delta); without one they live on
+    * the driver for the session only.
+    */
+  private[graft] final class PackResume(standing: DataFrame, packSize: Int, shards: Int,
+      checkpoint: Option[String]) {
+    import graft.operators.TextOps
+    private val spark = standing.sparkSession
+    private val state = checkpoint.map { c =>
+      val dir = new org.apache.hadoop.fs.Path(c, "graft-pack-bases")
+      (dir.getFileSystem(spark.sessionState.newHadoopConf()), dir)
+    }
+    private def seed(): Map[Int, Long] =
+      TextOps.packResume(standing, packSize).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    // driver-held positions (the session-only mode's only state; in
+    // checkpointed mode just a warm start of the per-batch file read)
+    private val bases = scala.collection.mutable.Map[Int, Long]() ++ seed()
+
+    /** Append `counts` (doc_id, n_tokens) of batch `id` to the layout, hand
+      * the delta to `sink`, then commit the advanced positions. */
+    def append(id: Long, counts: DataFrame)(sink: DataFrame => Unit): Unit = {
+      import spark.implicits._
+      val input = state match {
+        case Some((fs, dir)) => priorBases(fs, dir, id).getOrElse(seed())
+        case None => bases.toMap
+      }
+      val delta = TextOps
+        .packAppendFrom(spark, input.toSeq.toDF("shard", "base"), counts, packSize, shards)
+        .localCheckpoint() // one deterministic materialization: the sink
+                           // and the base advance must see the same rows
+      val advanced = delta.groupBy("shard")
+        .agg(max(col("pack_id").cast("long") * packSize + col("pack_offset")
+          + col("n_tokens")).as("end"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1))
+      sink(delta)
+      state match {
+        case Some((fs, dir)) => writeBases(fs, dir, id, input ++ advanced)
+        case None => advanced.foreach { case (sh, b) => bases(sh) = b }
+      }
+    }
   }
 
   private val BasesName = "bases-([0-9]+)".r
@@ -375,10 +393,9 @@ object StreamOps {
   /** The latest resume state committed STRICTLY BEFORE batch `id` under
     * `dir` (None if no prior state exists): a replayed id re-reads its
     * predecessor, never its own output — the idempotence half of the
-    * restart contract, shared by [[packStream]] and
-    * [[graft.api.Curation.stream]].
+    * restart contract.
     */
-  private[graft] def priorBases(fs: org.apache.hadoop.fs.FileSystem,
+  private def priorBases(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, id: Long): Option[Map[Int, Long]] = {
     val prior =
       if (fs.exists(dir))
@@ -400,7 +417,7 @@ object StreamOps {
 
   /** Commit the post-batch resume state for `id` (temp+rename; overwrite-
     * safe, so a replayed batch re-commits identical content). */
-  private[graft] def writeBases(fs: org.apache.hadoop.fs.FileSystem,
+  private def writeBases(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path, id: Long, m: Map[Int, Long]): Unit = {
     fs.mkdirs(dir)
     val tmp = new org.apache.hadoop.fs.Path(dir, s".bases-$id.tmp")

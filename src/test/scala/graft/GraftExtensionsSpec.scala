@@ -1,11 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.Catalog
 
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("withExtensions installs graft_* functions for SQL use") {
+  /** Runs `f` on a new session built with [[GraftExtensions]]. */
+  private def withExtensionSession(f: SparkSession => Unit): Unit = {
     // getOrCreate returns any existing session (ignoring extensions), so
     // clear the active/default first: a NEW SparkSession is built on the
     // same SparkContext with the extensions applied, then restored below
@@ -19,7 +23,53 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    try {
+    try f(spark)
+    finally {
+      // do not stop (other suites share the SparkContext); restore the
+      // previous default session so later suites see their own functions
+      prior.foreach { p =>
+        SparkSession.setDefaultSession(p)
+        SparkSession.setActiveSession(p)
+      }
+    }
+  }
+
+  private def ids = Catalog.entries.map(f => FunctionIdentifier(f.name))
+
+  /** The registry's current ExpressionInfo per catalog name: a
+    * re-registration replaces it with a new instance. */
+  private def infos(spark: SparkSession) =
+    ids.map(id => spark.sessionState.functionRegistry.lookupFunction(id).orNull)
+
+  test("the catalog declares each function once") {
+    assert(Catalog.entries.map(_.name).distinct.size == Catalog.entries.size)
+  }
+
+  test("every catalog function resolves in an extensions-built session, and Graft.setup adds nothing there") {
+    withExtensionSession { spark =>
+      val missing = ids.filterNot(spark.sessionState.functionRegistry.functionExists)
+      assert(missing.isEmpty, s"not injected: ${missing.mkString(", ")}")
+      val before = infos(spark)
+      Graft.setup(spark)
+      assert(infos(spark).zip(before).forall { case (a, b) => a eq b })
+    }
+  }
+
+  test("every catalog function resolves after Graft.setup, and a second setup replaces nothing") {
+    val spark = graft.core.TestSpark.spark
+    Graft.setup(spark)
+    val missing = ids.filterNot(spark.sessionState.functionRegistry.functionExists)
+    assert(missing.isEmpty, s"not registered: ${missing.mkString(", ")}")
+    val before = infos(spark)
+    assert(before.forall(_ != null))
+    Graft.setup(spark)
+    val replaced = Catalog.entries.map(_.name).zip(infos(spark).zip(before))
+      .collect { case (n, (a, b)) if !(a eq b) => n }
+    assert(replaced.isEmpty, s"replaced: ${replaced.mkString(", ")}")
+  }
+
+  test("withExtensions installs graft_* functions for SQL use") {
+    withExtensionSession { spark =>
       val dot = spark.sql("SELECT graft_dot(array(1D,2D,3D), array(4D,5D,6D)) AS d")
         .collect()(0).getDouble(0)
       assert(dot === 32.0)
@@ -41,13 +91,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(spark.sql(
         "SELECT graft_simhash_agg(h) AS s FROM VALUES (1L), (3L) AS t(h)")
         .collect()(0).getLong(0) == 1L) // bit0: +2; bit1: 0 (tie -> 0); rest negative
-    } finally {
-      // do not stop (other suites share the SparkContext); restore the
-      // previous default session so later suites see their own functions
-      prior.foreach { p =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
-      }
     }
   }
 

@@ -87,7 +87,7 @@ class RasterizeSpec extends AnyFunSuite {
   }
 
   test("geo functions are callable from SQL") {
-    graft.functions.GeoSql.register(spark)
+    graft.Graft.setup(spark)
     val area = spark.sql(
       "SELECT st_area(array(array(0D,0D, 4D,0D, 4D,3D))) AS a").collect()(0).getDouble(0)
     assert(area === 6.0)

@@ -78,7 +78,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("graft_minhash_sigs(_, 64): first 8 values equal the default-8 signature") {
-    graft.functions.HashRegistry.register(spark)
+    graft.Graft.setup(spark)
     val row = spark.sql(
       "SELECT graft_minhash_sigs(array('abcde','bcdef','cdefg')) AS s8, " +
         "graft_minhash_sigs(array('abcde','bcdef','cdefg'), 64) AS s64").collect()(0)
@@ -91,7 +91,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("graft_minhash_text equals the explicit shingle-array formulation") {
-    graft.functions.HashRegistry.register(spark)
+    graft.Graft.setup(spark)
     // incl. multibyte (ü, 雨), short (<5 chars) and empty strings
     val samples = Seq("the quick brown fox", "grün über 雨雲 falls", "abc", "", "exact")
     samples.foreach { t =>
@@ -105,7 +105,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("graft_gram_hashes equals the explicit split/concat formulation") {
-    graft.functions.HashRegistry.register(spark)
+    graft.Graft.setup(spark)
     val samples = Seq("the quick brown fox jumps", "  padded   tokens  here now ",
       "grün über 雨雲 falls again", "two tokens", "", "a b c", "x x x x x",
       // leading non-space whitespace: split(trim(s)) yields a LEADING empty

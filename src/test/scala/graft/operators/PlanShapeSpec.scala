@@ -88,7 +88,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("Lloyd assignment is a projection — no exchange between scan and argmin") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
+    graft.Graft.setup(spark)
     val vecs = (0 until 100)
       .map(i => (i.toLong, Array.tabulate(8)(d => (i * 31 + d) % 7 * 1.0)))
       .toDF("vec_id", "v")
@@ -122,7 +122,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("centroid update aggregates via the vector-sum buffer, not an explode") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
+    graft.Graft.setup(spark)
     val vecs = (0 until 100)
       .map(i => (i.toLong, Array.tabulate(8)(d => (i * 13 + d) % 5 * 1.0)))
       .toDF("vec_id", "v")

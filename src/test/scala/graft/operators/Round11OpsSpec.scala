@@ -57,7 +57,7 @@ class Round11OpsSpec extends AnyFunSuite {
   }
 
   test("t23 full-sequence hashes match the driver-side assembly") {
-    graft.functions.HashRegistry.register(spark)
+    graft.Graft.setup(spark)
     import spark.implicits._
     val want = reference.toSeq
       .map { case ((shard, pi), (_, chunk)) => (shard, pi, chunk.mkString(",")) }

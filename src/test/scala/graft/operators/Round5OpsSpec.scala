@@ -75,7 +75,7 @@ class Round5OpsSpec extends AnyFunSuite {
 
   test("kernel matches the declarative plan on randomized adversarial corpora") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
+    graft.Graft.setup(spark)
     // hand-rolled property loop (no scalatestplus in this env): xorshift-mixed
     // deterministic vectors with adversarial shapes — unequal dims (dot over
     // min length), exact duplicates (cos exactly 1), sparse ids. No

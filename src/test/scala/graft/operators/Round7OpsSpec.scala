@@ -74,7 +74,7 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   test("graft_top_bigram matches the interpreted sort+run-length fold exactly") {
-    graft.functions.HashRegistry.register(spark)
+    graft.Graft.setup(spark)
     // the retained HOF form — t8's previous implementation, kept here as the
     // independent reference: array_sort + strict-`>` run-length fold (first
     // max run in sorted order == (count desc, bytes asc) argmin)
@@ -144,7 +144,7 @@ class Round7OpsSpec extends AnyFunSuite {
   }
 
   test("graft_sig_agree matches the zip_with equality-count form exactly") {
-    graft.functions.HashRegistry.register(spark)
+    graft.Graft.setup(spark)
     // all signature pairs of the corpus's first 40 docs (includes full-agree
     // self-pairs, partial agreements between near-dups, and zero-agreement
     // unrelated pairs), both measures side by side

@@ -161,7 +161,7 @@ class SimilaritySpec extends AnyFunSuite {
     // buckets must stay near n / 2^nbits — the property that keeps the
     // band self-join from degenerating toward a cross product at scale
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
+    graft.Graft.setup(spark)
     val n = 20000
     val dim = 8
     // splitmix64-mixed coordinates: near-uniform, unlike a linear lattice
@@ -211,7 +211,7 @@ class SimilaritySpec extends AnyFunSuite {
     // one key); without the cap the band self-join is quadratic. With it,
     // candidate pairs stay bounded by cap^2 x #buckets.
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
+    graft.Graft.setup(spark)
     val n = 4000
     val vecs = (0 until n).map { i =>
       (i.toLong, Array.tabulate(8)(d => (((i * 761L + d * 503L) % 1000) - 500) / 500.0))
