@@ -3,19 +3,19 @@ package graft.api
 import java.io.InputStream
 import java.nio.charset.StandardCharsets.US_ASCII
 import java.sql.Timestamp
-import java.time.LocalDateTime
+import java.time.{LocalDate, LocalDateTime}
 import java.time.format.DateTimeFormatter
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.{Grid, SpatialPipeline}
 import graft.geo.{Crs, Geom}
-import graft.ingest.{Archives, AsciiGrid, GeoTiff, Regnie, Shp}
+import graft.ingest.{Archives, AsciiGrid, Cell, GeoTiff, Regnie, Shp}
 
 /** The `radohydro()`-equivalent entry point (reference radohydro.py:503-546),
   * re-expressed as a Spark plan with one row per decoded grid:
@@ -42,7 +42,8 @@ import graft.ingest.{Archives, AsciiGrid, GeoTiff, Regnie, Shp}
   * closed-form CRS math. Scale notes: `run` executes two jobs (the scan with
   * the metadata collect, and the cell map collect); no raster row passes
   * through a shuffle, a join or a window, and the series leaves the map with
-  * one row per (basin, timestamp).
+  * one row per (basin, timestamp). [[stream]] runs the same scan and series
+  * map over files as they arrive, with a batch run's window and weights.
   */
 object RadoHydro {
 
@@ -64,9 +65,12 @@ object RadoHydro {
     */
   final case class GridMeta(nrows: Int, ncols: Int, t: Grid.Transform, nodata: Double)
 
+  /** A run's output. `weights` are the gated (basinID, row, col, wgt) cell
+    * weights the series was computed with, window-relative like `cellMap`.
+    */
   final case class Result(series: DataFrame, basins: Seq[BasinInfo],
       window: Grid.Window, meta: GridMeta, attrOrder: Seq[String],
-      cellMap: DataFrame, values: DataFrame)
+      cellMap: DataFrame, values: DataFrame, weights: Seq[(Int, Int, Int, Double)])
 
   private def gridCrsNames(cfg: Config): (String, String, Double) = cfg.datasource match {
     // (CRS for windowing in raw units, CRS of cell/divided coords, divisor Q8)
@@ -84,21 +88,24 @@ object RadoHydro {
   private def utcTs(ldt: LocalDateTime): Timestamp =
     Timestamp.from(ldt.toInstant(java.time.ZoneOffset.UTC))
 
-  /** Digits-concat filename timestamp parse (reference radohydro.py:64-78).
-    * REGNIE member names carry 2-digit years parsed with Python's %y pivot
-    * (69-99 -> 19xx, 00-68 -> 20xx; radohydro.py:434) — Java's 'yy' (base
-    * 2000) would push 1999 data into 2099.
+  /** The day of a REGNIE name's leading yyMMdd digits, the 2-digit year
+    * read with Python's %y pivot (69-99 -> 19xx, 00-68 -> 20xx;
+    * radohydro.py:434) — Java's 'yy' (base 2000) would push 1999 data into
+    * 2099.
+    */
+  private def regnieDay(digits: String): LocalDate = {
+    val yy = digits.take(2).toInt
+    LocalDate.of(if (yy >= 69) 1900 + yy else 2000 + yy, digits.slice(2, 4).toInt, digits.slice(4, 6).toInt)
+  }
+
+  /** Digits-concat filename timestamp parse (reference radohydro.py:64-78):
+    * yyyyMMddHHmm for RADOLAN, [[regnieDay]] otherwise.
     */
   def parseMemberTs(datasource: String, name: String): Timestamp = {
     val digits = name.replaceAll("[^0-9]", "")
     datasource match {
-      case "radolan" =>
-        utcTs(LocalDateTime.parse(digits.take(12), radolanTsFmt))
-      case _ =>
-        val yy = digits.take(2).toInt
-        val year = if (yy >= 69) 1900 + yy else 2000 + yy
-        val d = java.time.LocalDate.of(year, digits.slice(2, 4).toInt, digits.slice(4, 6).toInt)
-        utcTs(d.atStartOfDay)
+      case "radolan" => utcTs(LocalDateTime.parse(digits.take(12), radolanTsFmt))
+      case _         => utcTs(regnieDay(digits).atStartOfDay)
     }
   }
 
@@ -118,37 +125,18 @@ object RadoHydro {
   private[graft] def open(path: Path, conf: Configuration): InputStream =
     new java.io.BufferedInputStream(path.getFileSystem(conf).open(path), 64 * 1024)
 
-  /** Peek the first grid member of the first raster file by name (driver-side,
-    * reference X9: the cell grid derives from the first grid only). Reads up
-    * to the end of that member and no further.
+  /** The first grid member's metadata, from the first raster file by name
+    * (driver-side, reference X9: the cell grid derives from the first grid
+    * only), read through [[scanFile]] with an empty window: it reads up to
+    * the end of that member and decodes no cell.
     */
   def peekFirstGrid(files: DataFrame, datasource: String): GridMeta = {
     val first = paths(files).headOption.getOrElse(throw new IllegalArgumentException("no grid files"))
     val in = open(first, files.sparkSession.sessionState.newHadoopConf())
     try {
-      val members = Archives.members(first.getName, in)
-      require(members.hasNext, s"no members in $first")
-      val m = members.next()
-      if (datasource == "regnie") {
-        val text = new String(m.bytes, 0, m.length, US_ASCII)
-        // minus the discarded trailer line (radohydro.py:442)
-        val lines = math.max(0, text.linesIterator.size - 1)
-        GridMeta(lines, Regnie.ValuesPerLine,
-          Grid.Transform(Regnie.ulx, Regnie.xres, Regnie.uly, Regnie.yres),
-          Regnie.Nodata.toDouble)
-      } else if (isTiff(m.name)) {
-        val (t, _) = GeoTiff.parse(m.copy(), rowRange = Some((0, 0)))
-        GridMeta(t.nrows, t.ncols, Grid.Transform(t.ulx, t.xres, t.uly, t.yres), t.nodata)
-      } else {
-        val h = AsciiGrid.header(m.bytes, m.length)
-        GridMeta(h.nrows, h.ncols, Grid.Transform(h.ulx, h.xres, h.uly, h.yres), h.nodata)
-      }
+      scanFile(first.getName, in, ScanSpec(datasource, (0, 0), (0, 0))).nextOption()
+        .getOrElse(throw new IllegalArgumentException(s"no members in $first")).meta
     } finally in.close()
-  }
-
-  private def isTiff(name: String): Boolean = {
-    val n = name.toLowerCase
-    n.endsWith(".tif") || n.endsWith(".tiff")
   }
 
   /** What the scan reads from each raster file: the datasource, the clip
@@ -170,52 +158,50 @@ object RadoHydro {
       if (startTs.isEmpty && endTs.isEmpty) true
       else {
         val digits = name.replaceAll("[^0-9]", "")
-        val day8 =
-          if (digits.length >= 8) Some(digits.take(8))
-          else if (digits.length >= 6) {
-            val yy = digits.take(2).toInt
-            val year = if (yy >= 69) 1900 + yy else 2000 + yy
-            Some(f"$year%04d" + digits.slice(2, 6))
-          } else None
-        day8 match {
-          case None => true
-          case Some(d8) =>
-            try {
-              val dayStart = utcTs(LocalDateTime.parse(d8 + "0000", radolanTsFmt))
-              val dayEnd = utcTs(LocalDateTime.parse(d8 + "2359", radolanTsFmt))
-              startTs.forall(!dayEnd.before(_)) && endTs.forall(!dayStart.after(_))
-            } catch { case _: Exception => true }
-        }
+        try {
+          val day =
+            if (digits.length >= 8) Some(LocalDate.parse(digits.take(8), DateTimeFormatter.BASIC_ISO_DATE))
+            else if (digits.length >= 6) Some(regnieDay(digits))
+            else None
+          day.forall { d =>
+            startTs.forall(!utcTs(d.atTime(23, 59)).before(_)) && endTs.forall(!utcTs(d.atStartOfDay).after(_))
+          }
+        } catch { case _: Exception => true }
       }
   }
 
-  /** One decoded grid member: its timestamp, nodata value and window cells. */
-  final case class MemberGrid(ts: Timestamp, nodata: Double, cells: Iterator[AsciiGrid.Cell])
+  private def isTiff(name: String): Boolean = {
+    val n = name.toLowerCase
+    n.endsWith(".tif") || n.endsWith(".tiff")
+  }
 
-  /** Stream the in-range grid members of raster file `fname`. Members share
-    * one buffer, so consume each member's cells before asking for the next.
+  /** One decoded grid member: its timestamp, grid metadata and window cells. */
+  final case class MemberGrid(ts: Timestamp, meta: GridMeta, cells: Iterator[Cell])
+
+  /** Stream the in-range grid members of raster file `fname`: the one place
+    * that picks a decoder (REGNIE text by datasource, GeoTIFF by member
+    * name, ESRI ASCII otherwise). Members share one buffer, so consume each
+    * member's cells before asking for the next.
     */
   def scanFile(fname: String, in: InputStream, spec: ScanSpec): Iterator[MemberGrid] = {
     val (rows, cols) = (Some(spec.rows), Some(spec.cols))
     Archives.members(fname, in, spec.mayHold).flatMap { m =>
       val ts = parseMemberTs(spec.datasource, m.name)
       if (!spec.inRange(ts)) Iterator.empty
-      else if (spec.datasource == "regnie") {
-        val nodata = Regnie.Nodata.toDouble
+      else Iterator.single(if (spec.datasource == "regnie") {
+        val text = new String(m.bytes, 0, m.length, US_ASCII)
         val (cLo, cHi) = spec.cols
-        val cells = Regnie.parseFile(new String(m.bytes, 0, m.length, US_ASCII), keepNodata = true,
-            rowRange = rows).collect {
-          case c if c.col >= cLo && c.col < cHi =>
-            AsciiGrid.Cell(c.row, c.col, if (c.value.isNaN) nodata else c.value)
-        }
-        Iterator.single(MemberGrid(ts, nodata, cells))
+        // minus the discarded trailer line (radohydro.py:442)
+        MemberGrid(ts, GridMeta(math.max(0, text.linesIterator.size - 1), Regnie.ValuesPerLine,
+            Grid.Transform(Regnie.ulx, Regnie.xres, Regnie.uly, Regnie.yres), Regnie.Nodata.toDouble),
+          Regnie.parseFile(text, keepNodata = true, rowRange = rows).filter(c => c.col >= cLo && c.col < cHi))
       } else if (isTiff(m.name)) {
         val (t, cells) = GeoTiff.parse(m.copy(), rows, cols)
-        Iterator.single(MemberGrid(ts, t.nodata, cells.map(c => AsciiGrid.Cell(c.row, c.col, c.value))))
+        MemberGrid(ts, GridMeta(t.nrows, t.ncols, Grid.Transform(t.ulx, t.xres, t.uly, t.yres), t.nodata), cells)
       } else {
         val (h, cells) = AsciiGrid.scan(m.bytes, m.length, rows, cols)
-        Iterator.single(MemberGrid(ts, h.nodata, cells))
-      }
+        MemberGrid(ts, GridMeta(h.nrows, h.ncols, Grid.Transform(h.ulx, h.xres, h.uly, h.yres), h.nodata), cells)
+      })
     }
   }
 
@@ -235,18 +221,40 @@ object RadoHydro {
       g.cells.foreach { c =>
         val i = (c.row - rLo) * ncols + c.col - cLo
         absent.clear(i)
-        if (maskNodata && c.value == g.nodata) missing += i else values(i) = c.value
+        if (maskNodata && c.value == g.meta.nodata) missing += i else values(i) = c.value
       }
       SpatialPipeline.GridRow(g.ts, fname, position, values, missing.result(), absent.stream.toArray)
     }
   }
 
-  /** Window-relative (ts, row, col, v) readings of one raster file, v null
-    * for nodata when `maskNodata`.
+  /** The scan: [[gridRows]] over each file of a path relation, batch or
+    * streaming. Each task opens its files through Hadoop `FileSystem` and
+    * closes each stream once its members are consumed, and again on task
+    * completion.
     */
-  def readings(fname: String, in: InputStream, spec: ScanSpec,
-      maskNodata: Boolean): Iterator[(Timestamp, Int, Int, java.lang.Double)] =
-    gridRows(fname, in, spec, maskNodata).flatMap(_.readings(spec.cols._2 - spec.cols._1))
+  def scanGrids(files: DataFrame, spec: ScanSpec, maskNodata: Boolean): Dataset[SpatialPipeline.GridRow] = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    files.as[String].flatMap { p =>
+      val path = new Path(p)
+      val in = open(path, conf.value.value)
+      TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
+      val rows = gridRows(path.getName, in, spec, maskNodata)
+      new Iterator[SpatialPipeline.GridRow] {
+        def hasNext: Boolean = rows.hasNext || { in.close(); false }
+        def next(): SpatialPipeline.GridRow = rows.next()
+      }
+    }
+  }
+
+  /** What a run over `win` with `cfg` reads: the window's rows and columns
+    * and the config's inclusive date range.
+    */
+  private def scanSpec(cfg: Config, win: Grid.Window): ScanSpec =
+    ScanSpec(cfg.datasource, (win.rowLo, win.rowHi), (win.colLo, win.colHi),
+      cfg.startDate.map(s => utcTs(LocalDateTime.parse(s + "0000", radolanTsFmt))),
+      cfg.endDate.map(s => utcTs(LocalDateTime.parse(s + "2359", radolanTsFmt))))
 
   /** A grid member's metadata: a [[SpatialPipeline.GridRow]] without values. */
   final case class Member(ts: Timestamp, file: String, position: Int, missing: Array[Int],
@@ -303,23 +311,7 @@ object RadoHydro {
       basinsDf, tShift, win.nrows, win.ncols, divisor, cellCrsName, cfg.outCrs)
 
     // --- distributed raster scan with window pushdown: one row per grid ---
-    val spec = ScanSpec(cfg.datasource, (win.rowLo, win.rowHi), (win.colLo, win.colHi),
-      cfg.startDate.map(s => utcTs(LocalDateTime.parse(s + "0000", radolanTsFmt))),
-      cfg.endDate.map(s => utcTs(LocalDateTime.parse(s + "2359", radolanTsFmt))))
-    val mask = cfg.maskNodata
-    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    val grids = files.as[String]
-      .flatMap { p =>
-        val path = new Path(p)
-        val in = open(path, conf.value.value)
-        TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
-        val rows = gridRows(path.getName, in, spec, mask)
-        new Iterator[SpatialPipeline.GridRow] {
-          def hasNext: Boolean = rows.hasNext || { in.close(); false }
-          def next(): SpatialPipeline.GridRow = rows.next()
-        }
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val grids = scanGrids(files, scanSpec(cfg, win), cfg.maskNodata).persist(StorageLevel.MEMORY_AND_DISK)
 
     // --- dedup and per-cell missing counts from the members' metadata -------
     val kept = keptMembers(grids.select("ts", "file", "position", "missing", "absent").as[Member]
@@ -337,6 +329,21 @@ object RadoHydro {
     })
     val series = SpatialPipeline.gridSeries(winners, ws, win.ncols, cfg.numerator)
     val values = winners.flatMap(_.readings(win.ncols)).toDF("ts", "row", "col", "v")
-    Result(series, basinInfos, win, meta, layer.fields.map(_._1), cellMap, values)
+    Result(series, basinInfos, win, meta, layer.fields.map(_._1), cellMap, values, ws)
+  }
+
+  /** The pipeline over the raster files of `gridDir` as they arrive: a
+    * streaming (basinID, ts, rain) frame with one append-mode row per
+    * (basin, arriving grid), from the scan of [[run]] and
+    * [[SpatialPipeline.gridSeries]] with `res`'s window and gated weights.
+    * The NaN gate and the overlap dedup need the whole history, so they stay
+    * with the batch `res`: the stream keeps no state, and a timestamp that
+    * arrives twice gives its rows twice. `cfg` is the config `res` ran with.
+    */
+  def stream(spark: SparkSession, gridDir: String, res: Result, cfg: Config = Config()): DataFrame = {
+    val files = spark.readStream.format("binaryFile")
+      .schema(spark.read.format("binaryFile").load(gridDir).schema).load(gridDir).select("path")
+    SpatialPipeline.gridSeries(scanGrids(files, scanSpec(cfg, res.window), cfg.maskNodata),
+      res.weights, res.window.ncols, cfg.numerator)
   }
 }

@@ -87,40 +87,24 @@ object SpatialPipeline {
       .toSeq.groupMap(_.getInt(0))(r => (r.getInt(1), r.getInt(2), r.getDouble(3)))
       .toSeq.sortBy(_._1).map { case (id, cells) => (id, cells.sortBy(c => (c._1, c._2))) }
 
-  /** A3 — weight normalization over one basin's surviving cells
-    * (geotools.py:262): w = (clip/cell) / sum(clip/cell), as
-    * (basinID, row, col, wgt).
-    */
-  private def normalized(id: Int, cells: Seq[(Int, Int, Double)]): Seq[(Int, Int, Int, Double)] = {
-    val total = cells.map(_._3).sum
-    cells.map { case (r, c, ratio) => (id, r, c, ratio / total) }
-  }
-
   /** A2 + A3 on the cell map, collected to the driver: the one home of the
     * NaN gate and the weight normalization, as (basinID, row, col, wgt).
     * `missing(row, col)` is the number of missing readings of a cell, or -1
     * when the cell has no reading at all (it then takes no part in its
     * basin). A2 (geotools.py:254-260), per basin: if the number of cells
     * with MORE THAN ONE missing reading is smaller than the cell count, drop
-    * cells with ANY missing reading; otherwise keep all. A3 weighs the kept
-    * cells.
+    * cells with ANY missing reading; otherwise keep all. A3
+    * (geotools.py:262) weighs the kept cells: w = (clip/cell) /
+    * sum(clip/cell) over the basin.
     */
   def gatedWeights(cellMap: DataFrame, missing: (Int, Int) => Long): Seq[(Int, Int, Int, Double)] =
     ratios(cellMap).flatMap { case (id, cells) =>
       val seen = cells.map(c => (c, missing(c._1, c._2))).filter(_._2 >= 0)
       val bad = seen.count(_._2 > 1)
-      normalized(id, (if (bad < seen.size) seen.filter(_._2 == 0) else seen).map(_._1))
+      val kept = (if (bad < seen.size) seen.filter(_._2 == 0) else seen).map(_._1)
+      val total = kept.map(_._3).sum
+      kept.map { case (r, c, ratio) => (id, r, c, ratio / total) }
     }
-
-  /** A3 over precomputed keep flags: `kept` holds (basinID, row, col, keep).
-    * Collects the kept cells and returns the weights as a local frame.
-    */
-  def weights(cellMap: DataFrame, kept: DataFrame): DataFrame = {
-    val spark = cellMap.sparkSession
-    import spark.implicits._
-    ratios(cellMap.join(kept.where(col("keep")), Seq("basinID", "row", "col")))
-      .flatMap((normalized _).tupled).toDF("basinID", "row", "col", "wgt")
-  }
 
   /** One decoded grid member of the window, the flagship's raster row.
     * `values` is window-dense (row-major over the window's columns), NaN at
@@ -146,9 +130,9 @@ object SpatialPipeline {
   /** A4 on grid rows: each member's weighted sum per basin over the basin's
     * kept cells the member supplies, as (basinID, ts, rain). A missing value
     * on a kept cell propagates NaN (numpy sum semantics, as the reference);
-    * a basin none of whose kept cells the member supplies has no row. The
-    * members must be one per timestamp. Runs as a map over `grids` with the
-    * weights broadcast: no join, no shuffle.
+    * a basin none of whose kept cells the member supplies has no row, and a
+    * timestamp held by two members has two. Runs as a map over `grids`
+    * (batch or streaming) with the weights broadcast: no join, no shuffle.
     *
     * @param ncols     window width, to index `GridRow.values`.
     * @param numerator F7 scale divide (10: 0.1 mm -> mm).
@@ -175,32 +159,14 @@ object SpatialPipeline {
     }.toDF("basinID", "ts", "rain")
   }
 
-  /** Streaming variant of the weighted aggregation (§2.11 stretch goal):
-    * identical join/weight arithmetic over a STREAMING values frame, with a
-    * watermark bounding the (basinID, window) state. The NaN-cleaning gate
-    * is inherently retrospective (it needs the cell's full history), so the
-    * streaming path takes precomputed weights — e.g. from a previous batch
-    * run or `weights(cellMap, allKept)` — which is also the correct
-    * production shape: the cell map is static dimension state.
-    */
-  def weightedSeriesStream(valuesStream: DataFrame, wgts: DataFrame,
-      numerator: Double, window_ : String = "1 hour",
-      watermark: String = "2 hours"): DataFrame =
-    valuesStream
-      .withWatermark("ts", watermark)
-      .join(broadcast(wgts), Seq("row", "col"))
-      .select(col("basinID"), col("ts"),
-        (coalesce(col("v"), lit(Double.NaN)) / lit(numerator) * col("wgt")).as("contrib"))
-      .groupBy(col("basinID"), window(col("ts"), window_))
-      .agg(sum(col("contrib")).as("rain"))
-      .select(col("basinID"), col("window.start").as("wstart"), col("rain"))
-
-  /** The chain over long rows: values (ts,row,col,v with nodata as null) +
-    * basin cell map -> (basinID, ts, rain), with the same gate and weights
-    * as [[gridSeries]]. Per-cell missing counts come from one
-    * `groupBy(row, col)`; the weights join the readings as a broadcast.
-    * `values` is read twice (counts, then sums): persist it when its lineage
-    * is expensive.
+  /** The chain over long rows, kept as the reference [[gridSeries]] is
+    * checked against (GridRowSpec, SpatialPipelineGoldenSpec) and timed
+    * against (perfbench's traced split); no production path runs it.
+    * values (ts,row,col,v with nodata as null) + basin cell map ->
+    * (basinID, ts, rain), with the same gate and weights as [[gridSeries]].
+    * Per-cell missing counts come from one `groupBy(row, col)`; the weights
+    * join the readings as a broadcast. `values` is read twice (counts, then
+    * sums): persist it when its lineage is expensive.
     *
     * @param numerator F7 scale divide (10: 0.1 mm -> mm).
     */

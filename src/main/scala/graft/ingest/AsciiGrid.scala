@@ -28,8 +28,6 @@ object AsciiGrid {
     def yres: Double = -cellsize
   }
 
-  final case class Cell(row: Int, col: Int, value: Double)
-
   private def isEol(b: Byte): Boolean = b == '\n' || b == '\r'
 
   /** Bytes <= 0x20 are whitespace (what `String.trim` strips). */

@@ -27,8 +27,6 @@ object GeoTiff {
   final case class Meta(ncols: Int, nrows: Int,
       ulx: Double, uly: Double, xres: Double, yres: Double, nodata: Double)
 
-  final case class Cell(row: Int, col: Int, value: Double)
-
   private final case class Entry(tag: Int, typ: Int, count: Int, valueOffset: Long)
 
   /** Number of IFDs (pages) in the file — a GDAL overview pyramid is the

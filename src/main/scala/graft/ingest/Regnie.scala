@@ -69,13 +69,12 @@ object Regnie {
     repaired.map(_.toInt).toArray
   }
 
-  final case class Cell(row: Int, col: Int, value: Double)
-
   /** Parse a whole REGNIE daily file (possibly gzipped upstream): emits
     * non-nodata cells as (row, col, mm*10); nodata (-999) → dropped here,
     * matching the reference's -999→NaN then weighted-sum-over-valid
     * semantics (radohydro.py:448). Pass `keepNodata = true` to keep them as
-    * NaN for the A2 cleaning path.
+    * -999 cells, for callers that mask by the grid's nodata value (the A2
+    * cleaning path).
     */
   def parseFile(text: String, keepNodata: Boolean = false,
       rowRange: Option[(Int, Int)] = None): Iterator[Cell] = {
@@ -90,8 +89,7 @@ object Regnie {
       else {
         val vals = parseLine(line)
         vals.iterator.zipWithIndex.collect {
-          case (v, col) if v != Nodata => Cell(row, col, v.toDouble)
-          case (v, col) if keepNodata  => Cell(row, col, Double.NaN)
+          case (v, col) if keepNodata || v != Nodata => Cell(row, col, v.toDouble)
         }
       }
     }

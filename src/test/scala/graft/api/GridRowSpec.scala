@@ -15,37 +15,36 @@ import graft.geo.{Crs, Geom}
 import graft.ingest.Archives
 import graft.out.{CsvSink, ShpWriter}
 
-/** The flagship's grid-row core against the long-row chain, the overlap
-  * dedup rule, and the job and shuffle shape of a call. Fixtures are
-  * generated here (a 30 x 30 block of the RADOLAN grid, seeded values with
-  * nodata inside basins, a ragged member), so the spec runs wherever the
-  * tests run.
+/** Seeded RADOLAN grid fixtures, generated in the test: a 30 x 30 block of
+  * the RADOLAN grid (1 km cells, row 0 north), hourly grids of seeded
+  * values with nodata, optionally ragged, packed in daily `.tar.gz`
+  * archives, and basins written with `ShpWriter` in EPSG:25833.
   */
-class GridRowSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private val Rows = 30
-  private val Cols = 30
-  private val Xll = -123462.0
-  private val Uly = -4188645.0
-  private val Nodata = -1
+object GridFixture {
+  val Rows = 30
+  val Cols = 30
+  val Xll = -123462.0
+  val Uly = -4188645.0
+  val Nodata = -1
 
   /** Cell-aligned basins as (row0, col0, row1, col1), half-open. */
-  private val rects = Seq((8, 6, 11, 10), (12, 14, 16, 17), (18, 9, 20, 13))
+  val rects = Seq((8, 6, 11, 10), (12, 14, 16, 17), (18, 9, 20, 13))
 
-  /** A tilted quadrilateral over fractions of cells, in grid meters. */
-  private val tilted = Array(Array(Xll + 3300.0, Uly - 22500.0, Xll + 9800.0, Uly - 21100.0,
-    Xll + 8700.0, Uly - 26900.0, Xll + 2100.0, Uly - 27400.0, Xll + 3300.0, Uly - 22500.0))
+  /** A tilted quadrilateral over fractions of cells, in grid meters: an
+    * outer ring in the engine's convention (counter-clockwise, not closed).
+    */
+  val tilted = Array(Array(Xll + 2100.0, Uly - 27400.0, Xll + 8700.0, Uly - 26900.0,
+    Xll + 9800.0, Uly - 21100.0, Xll + 3300.0, Uly - 22500.0))
 
   /** One hour's grid: row-major values, `width(r)` values in row r. */
-  private final case class Hour(day: Int, hour: Int, values: Array[Int], width: Int => Int = _ => Cols)
+  final case class Hour(day: Int, hour: Int, values: Array[Int], width: Int => Int = _ => Cols)
 
-  private def seeded(seed: Long, day: Int, hour: Int, nodataFrac: Double): Hour = {
+  def seeded(seed: Long, day: Int, hour: Int, nodataFrac: Double): Hour = {
     val rnd = new scala.util.Random(seed * 1000 + day * 24 + hour)
     Hour(day, hour, Array.fill(Rows * Cols)(if (rnd.nextDouble() < nodataFrac) Nodata else rnd.nextInt(400)))
   }
 
-  private def ascii(h: Hour): Array[Byte] = {
+  def ascii(h: Hour): Array[Byte] = {
     val sb = new StringBuilder
     sb ++= s"ncols $Cols\nnrows $Rows\nxllcorner $Xll\nyllcorner ${Uly - Rows * 1000}\n"
     sb ++= s"cellsize 1000\nNODATA_value $Nodata\n"
@@ -53,17 +52,20 @@ class GridRowSpec extends AnyFunSuite {
     sb.toString.getBytes("US-ASCII")
   }
 
-  private def gzip(b: Array[Byte]): Array[Byte] = {
+  def gzip(b: Array[Byte]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val gz = new java.util.zip.GZIPOutputStream(bos)
     gz.write(b); gz.close()
     bos.toByteArray
   }
 
-  private def archive(hours: Seq[Hour]): Array[Byte] =
-    gzip(Archives.tar(hours.map(h => Archives.Member(f"RW_2018010${h.day}_${h.hour}%02d50.asc", ascii(h)))))
+  /** A daily `.tar.gz` of `hours`, each rendered to a member by `member`. */
+  def archive(hours: Seq[Hour], member: Hour => Archives.Member = h =>
+      Archives.Member(f"RW_2018010${h.day}_${h.hour}%02d50.asc", ascii(h))): Array[Byte] =
+    gzip(Archives.tar(hours.map(member)))
 
-  private lazy val basinsShp: String = {
+  /** The rectangles, then the tilted quadrilateral: basins 1 to 4. */
+  lazy val basinsShp: String = {
     val shp = Files.createTempDirectory("gridrow_basins").resolve("basins.shp").toString
     val (grid, shape) = (Crs.of("radolan_m"), Crs.of("epsg:25833"))
     val polys = rects.map { case (r0, c0, r1, c1) =>
@@ -75,13 +77,27 @@ class GridRowSpec extends AnyFunSuite {
   }
 
   /** A directory holding `files` (name -> bytes), written in the given order. */
-  private def gridDir(files: Seq[(String, Array[Byte])]): String = {
+  def gridDir(files: Seq[(String, Array[Byte])]): String = {
     val dir = Files.createTempDirectory("gridrow_grids")
     files.foreach { case (name, b) => Files.write(dir.resolve(name), b) }
     dir.toString
   }
 
-  private type Series = Map[(Int, Long), Double]
+  type Series = Map[(Int, Long), Double]
+
+  def collect(df: org.apache.spark.sql.DataFrame): Series =
+    df.collect().map(r => (r.getInt(0), r.getTimestamp(1).getTime) -> r.getDouble(2)).toMap
+}
+
+/** The flagship's grid-row core against the long-row chain, the overlap
+  * dedup rule, and the job and shuffle shape of a call, on [[GridFixture]]
+  * grids (nodata inside basins, a ragged member), so the spec runs wherever
+  * the tests run.
+  */
+class GridRowSpec extends AnyFunSuite {
+  import GridFixture._
+
+  private lazy val spark = TestSpark.spark
 
   /** Returns once every listener event posted so far was delivered: the bus
     * delivers events in order, so once a sentinel job's start is seen, every
@@ -100,9 +116,6 @@ class GridRowSpec extends AnyFunSuite {
       assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never saw the sentinel job")
     } finally sc.removeSparkListener(sentinel)
   }
-
-  private def collect(df: org.apache.spark.sql.DataFrame): Series =
-    df.collect().map(r => (r.getInt(0), r.getTimestamp(1).getTime) -> r.getDouble(2)).toMap
 
   private def closeTo(a: Series, b: Series, rel: Double): Unit = {
     assert(a.keySet == b.keySet)
@@ -134,7 +147,7 @@ class GridRowSpec extends AnyFunSuite {
       closeTo(grid, long, 1e-12)
       val ragged = LocalDateTime.of(2018, 1, 1, 2, 50).toInstant(ZoneOffset.UTC).toEpochMilli
       assert(!grid.contains((2, ragged)) && grid.contains((1, ragged)), s"seed $seed")
-      assert(grid.keySet.map(_._2).size == 8, s"seed $seed")
+      assert(grid.keySet.map(_._2).size == 8 && grid.keySet.map(_._1) == Set(1, 2, 3, 4), s"seed $seed")
       val inBasins = rects.flatMap { case (r0, c0, r1, c1) => for (r <- r0 until r1; c <- c0 until c1) yield r * Cols + c }
       assert(hours.exists(h => inBasins.exists(h.values(_) == Nodata)), s"seed $seed: no nodata inside a basin")
     }

@@ -186,7 +186,8 @@ class RadoHydroFixtureSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val archive = gzip(tar)
     val spec = RadoHydro.ScanSpec("radolan", (400, 430), (400, 430))
     def decode(): Int =
-      RadoHydro.readings("RW-20180101.tar.gz", new ByteArrayInputStream(archive), spec, maskNodata = true).size
+      RadoHydro.gridRows("RW-20180101.tar.gz", new ByteArrayInputStream(archive), spec, maskNodata = true)
+        .flatMap(_.readings(30)).size
     assert(decode() == 6 * 30 * 30)
     val mx = java.lang.management.ManagementFactory.getThreadMXBean
       .asInstanceOf[com.sun.management.ThreadMXBean]

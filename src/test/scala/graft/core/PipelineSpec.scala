@@ -20,6 +20,10 @@ object TestSpark {
   * identity-CRS grid: cell (row,col) spans x [col,col+1], y [2-row, 3-row];
   * values v = 10*(row*3+col+1); numerator 10 => mm = row*3+col+1.
   *
+  * The goldens run through both A4 kernels: `gridSeries` (production, over
+  * one grid row per timestamp with `gatedWeights`) and the long-row
+  * reference `weightedSeries`.
+  *
   * Basins exercise all three NaN-gate branches (geotools.py:254-260):
   *  - basin 1 (6 cells, one cell with 2 missing ts): gate passes, NaN cell
   *    dropped, weights renormalize over the 5 survivors;
@@ -33,6 +37,7 @@ class SpatialPipelineGoldenSpec extends AnyFunSuite {
   private val t = Grid.Transform(0.0, 1.0, 3.0, -1.0)
   private def ts(i: Int) = Timestamp.valueOf(f"2018-01-01 0$i:00:00")
 
+  /** The cell map and (kernel, series) for both A4 kernels. */
   private def runPipeline() = {
     import spark.implicits._
     val basins = Seq(
@@ -48,7 +53,16 @@ class SpatialPipelineGoldenSpec extends AnyFunSuite {
         if (row == 1 && col == 1 && k >= 2) null else java.lang.Double.valueOf(10.0 * (row * 3 + col + 1))
       (ts(k), row, col, v)
     }).toDF("ts", "row", "col", "v")
-    (cellMap, SpatialPipeline.weightedSeries(values, cellMap, 10.0))
+    // the same readings as one window-dense row per timestamp
+    val grids = (1 to 3).map { k =>
+      val missing = if (k >= 2) Array(1 * 3 + 1) else Array.empty[Int]
+      SpatialPipeline.GridRow(ts(k), "golden", k,
+        Array.tabulate(9)(i => if (missing.contains(i)) Double.NaN else 10.0 * (i + 1)), missing, Array.empty)
+    }
+    val ws = SpatialPipeline.gatedWeights(cellMap, (r, c) => grids.count(_.missing.contains(r * 3 + c)).toLong)
+    (cellMap, Seq(
+      "gridSeries" -> SpatialPipeline.gridSeries(grids.toDS(), ws, 3, 10.0),
+      "weightedSeries" -> SpatialPipeline.weightedSeries(values, cellMap, 10.0)))
   }
 
   test("basin-cell map covers exactly the overlapped cells with exact clip areas") {
@@ -65,18 +79,20 @@ class SpatialPipelineGoldenSpec extends AnyFunSuite {
   }
 
   test("weighted series matches hand-computed goldens incl. NaN-gate branches") {
-    val (_, series) = runPipeline()
-    val got = series.collect()
-      .map(r => (r.getInt(0), r.getTimestamp(1), r.getDouble(2))).toSeq
-      .groupBy(_._1).view.mapValues(_.map(x => x._2 -> x._3).toMap).toMap
+    val (_, kernels) = runPipeline()
+    for ((kernel, series) <- kernels) {
+      val got = series.collect()
+        .map(r => (r.getInt(0), r.getTimestamp(1), r.getDouble(2))).toSeq
+        .groupBy(_._1).view.mapValues(_.map(x => x._2 -> x._3).toMap).toMap
 
-    // basin 1: cell(1,1) dropped; survivors' area*mm = 4.5, ratio sum 1.5 -> 3.0
-    for (k <- 1 to 3) assert(math.abs(got(1)(ts(k)) - 3.0) < 1e-12, s"basin1 ts$k")
-    // basin 2: all weight on cell (1,2): mm = 6
-    for (k <- 1 to 3) assert(math.abs(got(2)(ts(k)) - 6.0) < 1e-12, s"basin2 ts$k")
-    // basin 3: kept bad cell: mm=5 at ts1, NaN at ts2/ts3
-    assert(math.abs(got(3)(ts(1)) - 5.0) < 1e-12)
-    assert(got(3)(ts(2)).isNaN && got(3)(ts(3)).isNaN)
+      // basin 1: cell(1,1) dropped; survivors' area*mm = 4.5, ratio sum 1.5 -> 3.0
+      for (k <- 1 to 3) assert(math.abs(got(1)(ts(k)) - 3.0) < 1e-12, s"$kernel basin1 ts$k")
+      // basin 2: all weight on cell (1,2): mm = 6
+      for (k <- 1 to 3) assert(math.abs(got(2)(ts(k)) - 6.0) < 1e-12, s"$kernel basin2 ts$k")
+      // basin 3: kept bad cell: mm=5 at ts1, NaN at ts2/ts3
+      assert(math.abs(got(3)(ts(1)) - 5.0) < 1e-12, kernel)
+      assert(got(3)(ts(2)).isNaN && got(3)(ts(3)).isNaN, kernel)
+    }
   }
 
   test("basinCellMap plan is UDF-free (native Catalyst geometry expressions)") {
@@ -94,13 +110,9 @@ class SpatialPipelineGoldenSpec extends AnyFunSuite {
   }
 
   test("weights sum to 1 per basin (A3 invariant)") {
-    import spark.implicits._
     val (cellMap, _) = runPipeline()
-    val kept = cellMap.select("basinID", "row", "col")
-      .withColumn("keep", org.apache.spark.sql.functions.lit(true))
-    val w = SpatialPipeline.weights(cellMap, kept)
-    val sums = w.groupBy("basinID").sum("wgt").collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val sums = SpatialPipeline.gatedWeights(cellMap, (_, _) => 0L).groupMapReduce(_._1)(_._4)(_ + _)
+    assert(sums.keySet == Set(1, 2, 3))
     sums.values.foreach(s => assert(math.abs(s - 1.0) < 1e-12))
   }
 }

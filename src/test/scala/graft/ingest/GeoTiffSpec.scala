@@ -343,4 +343,22 @@ class GeoTiffSpec extends AnyFunSuite {
     assert(a.nonEmpty && a.keySet == t.keySet)
     a.foreach { case (k, va) => assert(math.abs(va - t(k)) < 1e-12, s"$k") }
   }
+
+  test("pipeline parity on generated basins: .tif members produce the same series as .asc members") {
+    import graft.api.{GridFixture, RadoHydro}
+    import GridFixture._
+    val spark = graft.core.TestSpark.spark
+    val hours = (0 to 2).map(h => seeded(41, 1, h, nodataFrac = 0.05))
+    // the same grids as deflate + predictor-2 tiles, 16 x 16 over 30 x 30
+    // so the edge tiles are padded
+    def tif(h: Hour) = Archives.Member(f"RW_20180101_${h.hour}%02d50.tif",
+      TiffFixture.build(Rows, Cols, Xll, Uly, 1000.0, Nodata, (r, c) => h.values(r * Cols + c),
+        compression = 8, tile = Some((16, 16)), predictor = 2))
+    val asc = RadoHydro.run(spark, gridDir(Seq("RW-20180101.tar.gz" -> archive(hours))), basinsShp)
+    val tiff = RadoHydro.run(spark, gridDir(Seq("RW-20180101.tar.gz" -> archive(hours, tif))), basinsShp)
+    assert(tiff.meta == asc.meta && tiff.meta.nodata == Nodata)
+    val (a, t) = (collect(asc.series), collect(tiff.series))
+    assert(a.size == 4 * 3 && a.keySet == t.keySet)
+    a.foreach { case (k, va) => assert(math.abs(va - t(k)) < 1e-12, s"$k") }
+  }
 }

@@ -28,8 +28,8 @@ class AsciiGridSpec extends AnyFunSuite {
     val (_, cells) = AsciiGrid.parse(fixture)
     val m = cells.toSeq
     assert(m.size == 9)
-    assert(m.head == AsciiGrid.Cell(0, 0, 1.0)) // north-west corner
-    assert(m.last == AsciiGrid.Cell(2, 2, 9.0))
+    assert(m.head == Cell(0, 0, 1.0)) // north-west corner
+    assert(m.last == Cell(2, 2, 9.0))
   }
 
   test("window pushdown prunes rows and cols at parse time") {
@@ -151,7 +151,7 @@ object LineSplitGrid {
   }
 
   def parse(text: String, rowRange: Option[(Int, Int)], colRange: Option[(Int, Int)])
-      : (AsciiGrid.Header, Seq[AsciiGrid.Cell]) = {
+      : (AsciiGrid.Header, Seq[Cell]) = {
     val h = parseHeader(text)
     val (r0, r1) = rowRange.getOrElse((0, h.nrows))
     val (c0, c1) = colRange.getOrElse((0, h.ncols))
@@ -163,7 +163,7 @@ object LineSplitGrid {
       if (row < r0 || row >= r1) Iterator.empty
       else {
         val toks = line.trim.split("\\s+")
-        Iterator.range(math.max(c0, 0), math.min(c1, toks.length)).map(col => AsciiGrid.Cell(row, col, toks(col).toDouble))
+        Iterator.range(math.max(c0, 0), math.min(c1, toks.length)).map(col => Cell(row, col, toks(col).toDouble))
       }
     }
     (h, cells.toVector)
@@ -323,7 +323,7 @@ class RegnieSpec extends AnyFunSuite {
     val l2 = Seq(-999, 50, -999).map(v => f"$v%4d").mkString("")
     // real REGNIE files end with a metadata trailer the reference discards
     val cells = Regnie.parseFile(l1 + "\n" + l2 + "\nTRAILER METADATA\n").toSeq
-    assert(cells == Seq(Regnie.Cell(0, 0, 10), Regnie.Cell(0, 2, 30), Regnie.Cell(1, 1, 50)))
+    assert(cells == Seq(Cell(0, 0, 10), Cell(0, 2, 30), Cell(1, 1, 50)))
   }
 
   test("REGNIE georeferencing constants") {
