@@ -10,6 +10,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, concat, lit}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.SerializableConfiguration
 
@@ -20,11 +21,13 @@ import graft.ingest.{Archives, AsciiGrid, Cell, GeoTiff, Regnie, Shp}
 /** The `radohydro()`-equivalent entry point (reference radohydro.py:503-546),
   * re-expressed as a Spark plan with one row per decoded grid:
   *
-  *   path-only binaryFile listing -> Hadoop FS open -> archive expand
-  *     -> windowed raster parse (one window-dense row per grid member,
-  *     persisted)
-  *     -> collect member metadata: overlap dedup + per-cell missing counts
-  *     -> collect basin/cell map -> NaN gate + weights (driver)
+  *   basin/cell map (one map over the basins, collected as primitive
+  *     arrays; its distinct cells are the covered slots)
+  *   -> path-only binaryFile listing -> Hadoop FS open -> archive expand
+  *     -> windowed raster parse (one row per grid member over the covered
+  *     slots, persisted)
+  *     -> collect member metadata: overlap dedup + per-slot missing counts
+  *     -> NaN gate + weights (driver)
   *     -> map each kept grid to its per-basin weighted sums -> sinks
   *
   * The dedup keeps one member per timestamp (greatest file name, then last
@@ -39,8 +42,8 @@ import graft.ingest.{Archives, AsciiGrid, Cell, GeoTiff, Regnie, Shp}
   * skips the rows before the window, converts only the window's columns to
   * numbers and stops reading a grid after the window's last row. The basin
   * dimension is read driver-side (small shapefile) and reprojected with
-  * closed-form CRS math. Scale notes: `run` executes two jobs (the scan with
-  * the metadata collect, and the cell map collect); no raster row passes
+  * closed-form CRS math. Scale notes: `run` executes two jobs (the cell map
+  * collect, and the scan with the metadata collect); no raster row passes
   * through a shuffle, a join or a window, and the series leaves the map with
   * one row per (basin, timestamp). [[stream]] runs the same scan and series
   * map over files as they arrive, with a batch run's window and weights.
@@ -65,12 +68,30 @@ object RadoHydro {
     */
   final case class GridMeta(nrows: Int, ncols: Int, t: Grid.Transform, nodata: Double)
 
-  /** A run's output. `weights` are the gated (basinID, row, col, wgt) cell
-    * weights the series was computed with, window-relative like `cellMap`.
+  /** A run's output. `cells` is the basin -> cell map, window-relative,
+    * `slots` its covered cells, which index every grid row, `weights` the
+    * gated weights the series was computed with, and `grids` the kept grid
+    * rows (persisted). `cellMap` and `values` are frame views of them, built
+    * on first access.
     */
   final case class Result(series: DataFrame, basins: Seq[BasinInfo],
       window: Grid.Window, meta: GridMeta, attrOrder: Seq[String],
-      cellMap: DataFrame, values: DataFrame, weights: Seq[(Int, Int, Int, Double)])
+      cells: SpatialPipeline.CellMap, slots: SpatialPipeline.Slots,
+      weights: SpatialPipeline.Weights, grids: Dataset[SpatialPipeline.GridRow]) {
+
+    /** (basinID, row, col, clip_area, cell_area) per (basin, covered cell). */
+    lazy val cellMap: DataFrame = cells.toDF(grids.sparkSession)
+
+    /** (ts, row, col, v) per covered cell a kept member supplies, v null at
+      * masked nodata.
+      */
+    lazy val values: DataFrame = {
+      val spark = grids.sparkSession
+      import spark.implicits._
+      val s = slots
+      grids.flatMap(_.readings(s)).toDF("ts", "row", "col", "v")
+    }
+  }
 
   private def gridCrsNames(cfg: Config): (String, String, Double) = cfg.datasource match {
     // (CRS for windowing in raw units, CRS of cell/divided coords, divisor Q8)
@@ -206,22 +227,28 @@ object RadoHydro {
   }
 
   /** The scan task's work on one raster file: one [[SpatialPipeline.GridRow]]
-    * per in-range grid member, nodata masked when `maskNodata`.
+    * over the covered `slots` per in-range grid member, nodata masked when
+    * `maskNodata`.
     */
-  def gridRows(fname: String, in: InputStream, spec: ScanSpec,
+  def gridRows(fname: String, in: InputStream, spec: ScanSpec, slots: SpatialPipeline.Slots,
       maskNodata: Boolean): Iterator[SpatialPipeline.GridRow] = {
     val (rLo, cLo) = (spec.rows._1, spec.cols._1)
     val ncols = spec.cols._2 - cLo
-    val n = (spec.rows._2 - rLo) * ncols
+    val slotOf = slots.index
+    val n = slots.size
     scanFile(fname, in, spec).zipWithIndex.map { case (g, position) =>
-      val values = Array.fill(n)(Double.NaN)
+      val values = new Array[Double](n)
+      java.util.Arrays.fill(values, Double.NaN)
       val absent = new java.util.BitSet(n)
       absent.set(0, n)
       val missing = Array.newBuilder[Int]
       g.cells.foreach { c =>
         val i = (c.row - rLo) * ncols + c.col - cLo
-        absent.clear(i)
-        if (maskNodata && c.value == g.meta.nodata) missing += i else values(i) = c.value
+        val s = if (i < slotOf.length) slotOf(i) else -1
+        if (s >= 0) {
+          absent.clear(s)
+          if (maskNodata && c.value == g.meta.nodata) missing += s else values(s) = c.value
+        }
       }
       SpatialPipeline.GridRow(g.ts, fname, position, values, missing.result(), absent.stream.toArray)
     }
@@ -232,7 +259,8 @@ object RadoHydro {
     * closes each stream once its members are consumed, and again on task
     * completion.
     */
-  def scanGrids(files: DataFrame, spec: ScanSpec, maskNodata: Boolean): Dataset[SpatialPipeline.GridRow] = {
+  def scanGrids(files: DataFrame, spec: ScanSpec, slots: SpatialPipeline.Slots,
+      maskNodata: Boolean): Dataset[SpatialPipeline.GridRow] = {
     val spark = files.sparkSession
     import spark.implicits._
     val conf = spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
@@ -240,7 +268,7 @@ object RadoHydro {
       val path = new Path(p)
       val in = open(path, conf.value.value)
       TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
-      val rows = gridRows(path.getName, in, spec, maskNodata)
+      val rows = gridRows(path.getName, in, spec, slots, maskNodata)
       new Iterator[SpatialPipeline.GridRow] {
         def hasNext: Boolean = rows.hasNext || { in.close(); false }
         def next(): SpatialPipeline.GridRow = rows.next()
@@ -256,7 +284,9 @@ object RadoHydro {
       cfg.startDate.map(s => utcTs(LocalDateTime.parse(s + "0000", radolanTsFmt))),
       cfg.endDate.map(s => utcTs(LocalDateTime.parse(s + "2359", radolanTsFmt))))
 
-  /** A grid member's metadata: a [[SpatialPipeline.GridRow]] without values. */
+  /** A grid member's metadata: a [[SpatialPipeline.GridRow]] without values
+    * (`missing` and `absent` are slots).
+    */
   final case class Member(ts: Timestamp, file: String, position: Int, missing: Array[Int],
       absent: Array[Int])
 
@@ -282,7 +312,11 @@ object RadoHydro {
     // --- basin dimension (driver-side: small; broadcast below) -------------
     val layer = Shp.read(shpPath)
     val basinsRaw = layer.features.zipWithIndex.map { case (f, i) =>
-      (i + 1, f.geom, f.attrs) // basinID in polygon order (geotools.py:213)
+      // rings adding up to a negative area are wound backwards (an outer
+      // ring stored counter-clockwise in the .shp reads as a hole): turn
+      // them, or the basin would get no cells and a negative area
+      val g = if (Geom.area(f.geom) < 0) f.geom.map(Geom.reversed) else f.geom
+      (i + 1, g, f.attrs) // basinID in polygon order (geotools.py:213)
     }
     val basinInfos = basinsRaw.map { case (id, g, attrs) =>
       val gOut = Crs.reproject(g, shapeCrs, outCrs)
@@ -302,34 +336,30 @@ object RadoHydro {
     val tShift = Grid.shifted(t, win)
 
     // --- basin -> cell map (grid-bucketed spatial join, J2) -----------------
-    val basinsDf = basinsRawCrs.map { case (id, g) =>
-      // cell coordinates are divided by `divisor` (Q8) — bring basins to the
-      // same space: raw grid CRS coords / divisor == cellCrsName units
-      (id, g.map(r => r.map(_ / divisor).toSeq).toSeq)
-    }.toDF("basinID", "geom")
-    val cellMap = SpatialPipeline.basinCellMap(
-      basinsDf, tShift, win.nrows, win.ncols, divisor, cellCrsName, cfg.outCrs)
+    // cell coordinates are divided by `divisor` (Q8) — bring basins to the
+    // same space: raw grid CRS coords / divisor == cellCrsName units
+    val cells = SpatialPipeline.cellMap(spark, basinsRawCrs.map { case (id, g) => (id, g.map(_.map(_ / divisor))) },
+      tShift, win.nrows, win.ncols, divisor, cellCrsName, cfg.outCrs)
+    val slots = SpatialPipeline.Slots.of(cells, win.ncols)
 
     // --- distributed raster scan with window pushdown: one row per grid ---
-    val grids = scanGrids(files, scanSpec(cfg, win), cfg.maskNodata).persist(StorageLevel.MEMORY_AND_DISK)
+    val grids = scanGrids(files, scanSpec(cfg, win), slots, cfg.maskNodata).persist(StorageLevel.MEMORY_AND_DISK)
 
-    // --- dedup and per-cell missing counts from the members' metadata -------
+    // --- dedup and per-slot missing counts from the members' metadata -------
     val kept = keptMembers(grids.select("ts", "file", "position", "missing", "absent").as[Member]
       .collect().toSeq)
-    val keep = kept.map(m => (m.file, m.position)).toSet
-    val nMissing = new Array[Long](win.nrows * win.ncols)
-    val nAbsent = new Array[Int](win.nrows * win.ncols)
+    val nMissing = new Array[Long](slots.size)
+    val nAbsent = new Array[Int](slots.size)
     kept.foreach { m => m.missing.foreach(nMissing(_) += 1); m.absent.foreach(nAbsent(_) += 1) }
-    val winners = grids.filter(g => keep((g.file, g.position)))
+    // a column predicate on the kept (position, file) keys: a typed filter
+    // would deserialize every member's values just to read two fields
+    val winners = grids.where(concat(col("position").cast("string"), lit("/"), col("file"))
+      .isin(kept.map(m => s"${m.position}/${m.file}"): _*))
 
     // --- gate + weights on the driver, weighted sums per grid (A2/A3/A4) -----
-    val ws = SpatialPipeline.gatedWeights(cellMap, { (r, c) =>
-      val i = r * win.ncols + c
-      if (nAbsent(i) == kept.size) -1L else nMissing(i)
-    })
-    val series = SpatialPipeline.gridSeries(winners, ws, win.ncols, cfg.numerator)
-    val values = winners.flatMap(_.readings(win.ncols)).toDF("ts", "row", "col", "v")
-    Result(series, basinInfos, win, meta, layer.fields.map(_._1), cellMap, values, ws)
+    val ws = SpatialPipeline.gatedWeights(cells, slots, s => if (nAbsent(s) == kept.size) -1L else nMissing(s))
+    val series = SpatialPipeline.gridSeries(winners, ws, cfg.numerator)
+    Result(series, basinInfos, win, meta, layer.fields.map(_._1), cells, slots, ws, winners)
   }
 
   /** The pipeline over the raster files of `gridDir` as they arrive: a
@@ -343,7 +373,7 @@ object RadoHydro {
   def stream(spark: SparkSession, gridDir: String, res: Result, cfg: Config = Config()): DataFrame = {
     val files = spark.readStream.format("binaryFile")
       .schema(spark.read.format("binaryFile").load(gridDir).schema).load(gridDir).select("path")
-    SpatialPipeline.gridSeries(scanGrids(files, scanSpec(cfg, res.window), cfg.maskNodata),
-      res.weights, res.window.ncols, cfg.numerator)
+    SpatialPipeline.gridSeries(scanGrids(files, scanSpec(cfg, res.window), res.slots, cfg.maskNodata),
+      res.weights, cfg.numerator)
   }
 }

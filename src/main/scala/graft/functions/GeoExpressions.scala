@@ -142,8 +142,8 @@ case class StReproject(geom: Expression, srcName: Expression, dstName: Expressio
 /** `graft_clip_areas(geom, xmin, ymin, xmax, ymax, srcCrs, dstCrs)
   *   -> struct<clip_area: double, cell_area: double>`
   *
-  * The flagship join's hot kernel (quirk Q9 semantics): clip in grid CRS
-  * where cells are axis-aligned (exact), then measure BOTH the clipped
+  * [[Clip.clipAreas]] as an expression (quirk Q9 semantics): clip in grid
+  * CRS where cells are axis-aligned (exact), then measure BOTH the clipped
   * basin fragment and the full cell after reprojection to the output CRS.
   * One expression call per (basin, cell) — no per-row Seq boxing, no
   * repeated CRS lookup.
@@ -163,19 +163,10 @@ case class ClipAreas(geom: Expression, xmin: Expression, ymin: Expression,
     val x0e = xmin.eval(input); val y0e = ymin.eval(input)
     val x1e = xmax.eval(input); val y1e = ymax.eval(input)
     if (g == null || x0e == null || y0e == null || x1e == null || y1e == null) return null
-    val p = GeoExpr.toPoly(g.asInstanceOf[ArrayData])
-    val x0 = x0e.asInstanceOf[Double]
-    val y0 = y0e.asInstanceOf[Double]
-    val x1 = x1e.asInstanceOf[Double]
-    val y1 = y1e.asInstanceOf[Double]
-    val clipped = Clip.clipPolygonToBox(p, x0, y0, x1, y1)
-    if (clipped.isEmpty) InternalRow(0.0, 0.0)
-    else {
-      val clipArea = Geom.area(Crs.reproject(clipped, src, dst))
-      val cellRing: Geom.Polygon = Array(Geom.boxRing(x0, y0, x1, y1))
-      val cellArea = Geom.area(Crs.reproject(cellRing, src, dst))
-      InternalRow(clipArea, cellArea)
-    }
+    val (clipArea, cellArea) = Clip.clipAreas(GeoExpr.toPoly(g.asInstanceOf[ArrayData]),
+      x0e.asInstanceOf[Double], y0e.asInstanceOf[Double], x1e.asInstanceOf[Double], y1e.asInstanceOf[Double],
+      src, dst)
+    InternalRow(clipArea, cellArea)
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(geom = c(0), xmin = c(1), ymin = c(2), xmax = c(3), ymax = c(4),

@@ -94,4 +94,17 @@ object Clip {
     }
     s
   }
+
+  /** The spatial join's per-(basin, cell) kernel (quirk Q9): clip in the
+    * grid CRS `src`, where the cell is an axis-aligned box (exact), then
+    * measure both the clipped basin fragment and the whole cell after
+    * reprojection to the output CRS `dst`. (0, 0) when nothing remains.
+    */
+  def clipAreas(p: Polygon, xmin: Double, ymin: Double, xmax: Double, ymax: Double,
+      src: Crs, dst: Crs): (Double, Double) = {
+    val clipped = clipPolygonToBox(p, xmin, ymin, xmax, ymax)
+    if (clipped.isEmpty) (0.0, 0.0)
+    else (Geom.area(Crs.reproject(clipped, src, dst)),
+      Geom.area(Crs.reproject(Array(Geom.boxRing(xmin, ymin, xmax, ymax)), src, dst)))
+  }
 }

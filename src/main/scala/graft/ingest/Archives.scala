@@ -21,9 +21,11 @@ object Archives {
 
   /** A streamed leaf member: `bytes(0 until length)` is its content, valid
     * until the iterator that produced it advances. The buffer grows by
-    * doubling only when it is full and more bytes arrive, never past the
-    * member's declared size, so it is at most twice what was actually read
-    * — a size field that lies about its body cannot make it allocate.
+    * doubling, and only when it is full and more bytes arrive, so it is at
+    * most twice what was actually read — a size field that lies about its
+    * body cannot make it allocate. No growth is capped at a member's
+    * declared size: a later, larger member of the archive would then copy
+    * the whole buffer again.
     */
   final class MemberBuffer {
     private var buf = new Array[Byte](8 * 1024)
@@ -51,7 +53,7 @@ object Archives {
           val b = e.in.read()
           if (b < 0) eof = true
           else {
-            val want = math.min(math.min(2L * len, if (e.size > len) e.size else Long.MaxValue), MaxMember)
+            val want = math.min(2L * len, MaxMember)
             require(want > len, s"archive member '${e.name}' exceeds $MaxMember bytes")
             buf = java.util.Arrays.copyOf(buf, want.toInt)
             buf(len) = b.toByte
@@ -67,9 +69,9 @@ object Archives {
   private val MaxMember = Int.MaxValue - 8
 
   /** One expansion-level item: a name and its content stream, valid until
-    * the next item is requested. `size` is the declared length, -1 if unknown.
+    * the next item is requested.
     */
-  private final case class Entry(name: String, in: InputStream, size: Long)
+  private final case class Entry(name: String, in: InputStream)
 
   private val GzipBufferBytes = 16 * 1024
 
@@ -91,11 +93,11 @@ object Archives {
   /** One level of expansion with gz-awareness: tar → members; bare gzip →
     * single decoded member (name minus `.gz`); anything else → itself.
     */
-  private def entries(name: String, raw: InputStream, size: Long): Iterator[Entry] = {
+  private def entries(name: String, raw: InputStream): Iterator[Entry] = {
     val (in, gz) = decoded(raw)
     if (isTarName(name)) new TarEntries(in)
-    else if (gz) Iterator.single(Entry(name.stripSuffix(".gz"), in, -1))
-    else Iterator.single(Entry(name, in, size))
+    else if (gz) Iterator.single(Entry(name.stripSuffix(".gz"), in))
+    else Iterator.single(Entry(name, in))
   }
 
   /** Stream the grid members of file `name`: two expansion levels, which
@@ -106,8 +108,8 @@ object Archives {
     */
   def members(name: String, in: InputStream, keep: String => Boolean = _ => true): Iterator[MemberBuffer] = {
     val out = new MemberBuffer
-    entries(name, in, -1).filter(e => keep(e.name))
-      .flatMap(e => entries(e.name, e.in, e.size))
+    entries(name, in).filter(e => keep(e.name))
+      .flatMap(e => entries(e.name, e.in))
       .map(out.fill)
   }
 
@@ -157,7 +159,7 @@ object Archives {
           if (typeFlag == '0' || typeFlag == 0) {
             open = new TarMember(in, name, size)
             padding = padded - size
-            pending = Entry(name, open, size)
+            pending = Entry(name, open)
           } else if (!skipFully(in, padded)) finish()
         }
       }
@@ -256,7 +258,7 @@ object Archives {
     * monthly-tar-of-daily-tars path (S4).
     */
   def expand(name: String, bytes: Array[Byte]): Iterator[Member] =
-    entries(name, new ByteArrayInputStream(bytes), bytes.length).map(exact)
+    entries(name, new ByteArrayInputStream(bytes)).map(exact)
 
   /** Build a tar archive (the rendered fixtures: RadolanRender, tests, perfbench). */
   def tar(members: Seq[Member]): Array[Byte] = {

@@ -184,9 +184,23 @@ object AsciiGrid {
     }
   }
 
-  /** `java.lang.Double.parseDouble` of the ASCII token `b(s until e)`. */
-  private def number(b: Array[Byte], s: Int, e: Int): Double =
-    java.lang.Double.parseDouble(new String(b, s, e - s, US_ASCII))
+  /** The value of token `b(s until e)`. An integer token (a sign and at
+    * most 15 digits, so the value is exact) is read without a String; any
+    * other goes through `parseDouble`, whose value the fast path equals.
+    */
+  private def number(b: Array[Byte], s: Int, e: Int): Double = {
+    val neg = b(s) == '-'
+    var i = if (neg || b(s) == '+') s + 1 else s
+    if (i == e || e - i > 15) return java.lang.Double.parseDouble(new String(b, s, e - s, US_ASCII))
+    var v = 0L
+    while (i < e) {
+      val d = b(i) - '0'
+      if (d < 0 || d > 9) return java.lang.Double.parseDouble(new String(b, s, e - s, US_ASCII))
+      v = v * 10 + d
+      i += 1
+    }
+    if (neg) -v.toDouble else v.toDouble
+  }
 
   /** Render a grid to ASCII text (test fixtures + GeoTIFF-stub replacement). */
   def render(h: Header, values: Array[Array[Double]]): String = {

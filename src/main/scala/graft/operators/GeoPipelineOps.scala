@@ -78,7 +78,7 @@ object GeoPipelineOps {
     * change without a schema change (schema drift is caught automatically
     * by the fingerprint).
     */
-  private val ExportVersion = "v2"
+  private val ExportVersion = "v3"
 
   /** Fingerprint of what is currently on disk: version + exported parquet
     * schemas (footer-only reads — no job). Throws if the exports are absent
@@ -114,11 +114,15 @@ object GeoPipelineOps {
     val vals = s.read.parquet(valuesExport)
     val miss = vals.groupBy("row", "col")
       .agg(count(when(col("v").isNull, 1)).as("nmiss"))
-    val pc = cm.join(miss, Seq("row", "col"))
+    // the export is the fixed five-basin fixture's: pin the cell-map side as
+    // the build side of both joins, so the streamed side keeps its hash
+    // partitioning and the per-basin aggregates below need no exchange of
+    // their own, whichever export file is larger
+    val pc = broadcast(cm).join(miss, Seq("row", "col"))
     val gate = pc.groupBy("basinID").agg(
       count(lit(1)).as("n_cells"),
       count(when(col("nmiss") > 1, 1)).as("n_bad"))
-    val kept = pc.join(gate, "basinID")
+    val kept = broadcast(pc).join(gate, "basinID")
       .where(col("n_bad") >= col("n_cells") || col("nmiss") === 0)
       .select("basinID", "row", "col", "clip_area")
     val wden = kept.groupBy("basinID")

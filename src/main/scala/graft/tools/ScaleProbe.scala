@@ -956,10 +956,11 @@ object ScaleProbe {
   // `full` — WHOLE FLAGSHIP end-to-end: renders a real fixture (daily
   // `.tar.gz` archives of full 900x900 RADOLAN-layout ASCII grids, ~0.1%
   // nodata; an nBasins-pentagon shapefile, both by RadolanRender) and drives
-  // `RadoHydro.run` — archive scan -> tar/gz expand -> windowed parse ->
-  // dedup -> cell map -> NaN gate -> weights -> weighted series — reporting
-  // wall time, jobs, total/max-stage shuffle write bytes, and asserting no
-  // BroadcastNestedLoopJoin in the physical plan.
+  // `RadoHydro.run` — cell map -> archive scan -> tar/gz expand -> windowed
+  // parse of the covered cells -> dedup -> NaN gate -> weights -> weighted
+  // series — reporting wall time, jobs, total/max-stage shuffle write bytes,
+  // the cell map's pairs and covered cells next to what stays persisted, and
+  // asserting no BroadcastNestedLoopJoin in the physical plan.
   private def runFull(nBasins: Int, nTs: Int): Unit = {
     val spark = session()
     val root = s"/tmp/graft_scaleprobe_full/${nBasins}x$nTs"
@@ -986,12 +987,11 @@ object ScaleProbe {
 
     // basins are authored directly in the raw grid CRS (radolan_m), so the
     // windowing path is identity and the output reprojection (Q10 areas)
-    // still exercises the closed-form CRS math. `run` scans the archives
-    // into persisted grid rows and computes the gate and weights on the
-    // driver, so plan_sec holds the scan
+    // still exercises the closed-form CRS math. `run` builds the cell map,
+    // scans the archives into persisted grid rows over the covered cells and
+    // computes the gate and weights on the driver, so plan_sec holds all three
     val (res, tPlan) = secs(graft.api.RadoHydro.run(spark, gridsDir, shpPath,
       graft.api.RadoHydro.Config(datasource = "radolan", shapeCrs = "radolan_m")))
-    val (nCells, tJoin) = secs(res.cellMap.count())
 
     val bnlj = res.series.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin")
 
@@ -1001,7 +1001,7 @@ object ScaleProbe {
     // what the run keeps persisted once the series is computed
     val persistedMb = spark.sparkContext.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum / 1e6
     val c = meter.counts
-    println(f"""{"probe":"full_flagship","n_basins":$nBasins,"n_ts":$nTs,"n_cells":$nCells,"series_rows":$nRows,"fixture_sec":$tFixture%.1f,"plan_sec":$tPlan%.1f,"join_sec":$tJoin%.1f,"series_sec":$tSeries%.1f,"jobs":${c.jobs},"shuffle_total_mb":${c.shuffleBytes / 1e6}%.1f,"shuffle_max_stage_mb":${meter.maxStageShuffleBytes / 1e6}%.1f,"persisted_mb":$persistedMb%.1f,"bnlj":$bnlj""" + "}")
+    println(f"""{"probe":"full_flagship","n_basins":$nBasins,"n_ts":$nTs,"series_rows":$nRows,"fixture_sec":$tFixture%.1f,"plan_sec":$tPlan%.1f,"series_sec":$tSeries%.1f,"jobs":${c.jobs},"shuffle_total_mb":${c.shuffleBytes / 1e6}%.1f,"shuffle_max_stage_mb":${meter.maxStageShuffleBytes / 1e6}%.1f,"persisted_mb":$persistedMb%.1f,"pairs":${res.cells.size},"covered_cells":${res.slots.size},"window_cells":${res.window.nrows * res.window.ncols},"bnlj":$bnlj""" + "}")
     require(!bnlj, "flagship plan regressed to BroadcastNestedLoopJoin")
     spark.stop()
   }

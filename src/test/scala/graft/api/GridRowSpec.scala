@@ -148,8 +148,13 @@ class GridRowSpec extends AnyFunSuite {
       val ragged = LocalDateTime.of(2018, 1, 1, 2, 50).toInstant(ZoneOffset.UTC).toEpochMilli
       assert(!grid.contains((2, ragged)) && grid.contains((1, ragged)), s"seed $seed")
       assert(grid.keySet.map(_._2).size == 8 && grid.keySet.map(_._1) == Set(1, 2, 3, 4), s"seed $seed")
-      val inBasins = rects.flatMap { case (r0, c0, r1, c1) => for (r <- r0 until r1; c <- c0 until c1) yield r * Cols + c }
-      assert(hours.exists(h => inBasins.exists(h.values(_) == Nodata)), s"seed $seed: no nodata inside a basin")
+      // grid rows and the long-row view hold the covered cells only, nodata
+      // among them
+      val covered = res.slots.cells.indices.map(s =>
+        (res.window.rowLo + res.slots.row(s)) * Cols + res.window.colLo + res.slots.col(s))
+      assert(res.slots.size < res.window.nrows * res.window.ncols, s"seed $seed")
+      assert(res.values.select("row", "col").distinct().count() == res.slots.size, s"seed $seed")
+      assert(hours.exists(h => covered.exists(h.values(_) == Nodata)), s"seed $seed: no nodata on a covered cell")
     }
   }
 
@@ -194,7 +199,7 @@ class GridRowSpec extends AnyFunSuite {
         sc.setJobGroup(s"layout-$i", "layout")
         try {
           val res = RadoHydro.run(spark, dir, basinsShp)
-          assert(res.values.count() == 3L * res.window.nrows * res.window.ncols)
+          assert(res.values.count() == 3L * res.slots.size)
           collect(res.series)
         } finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       }
@@ -215,6 +220,22 @@ class GridRowSpec extends AnyFunSuite {
         assert(math.abs(got - want) <= 1e-6 * math.max(1.0, want), s"basin ${i + 1} hour $h: $got vs $want")
       }
     }
+  }
+
+  test("a basin wound clockwise gets the series and the positive area of its counter-clockwise twin") {
+    val dir = gridDir(Seq("RW-20180101.tar.gz" -> archive((0 to 2).map(h => seeded(51, 1, h, 0.0)))))
+    val (grid, shape) = (Crs.of("radolan_m"), Crs.of("epsg:25833"))
+    def run(ring: Geom.Ring): RadoHydro.Result = {
+      val shp = Files.createTempDirectory("gridrow_winding").resolve("basin.shp").toString
+      ShpWriter.write(shp, Seq(Crs.reproject(Array(ring), grid, shape)), Seq(Map[String, Any]("BASIN" -> 1L)),
+        Seq("BASIN"))
+      RadoHydro.run(spark, dir, shp)
+    }
+    val (ccw, cw) = (run(tilted(0)), run(Geom.reversed(tilted(0))))
+    val area = ccw.basins.head.areaOut
+    assert(area > 0 && cw.basins.head.areaOut == area)
+    val series = collect(ccw.series)
+    assert(series.size == 3 && collect(cw.series) == series)
   }
 
   test("run + CsvSink.write take at most 5 jobs, and only the sink's stage writes shuffle bytes") {

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.TestSpark
+import graft.core.{SpatialPipeline, TestSpark}
 import graft.geo.{Crs, Geom}
 import graft.ingest.Archives
 import graft.out.ShpWriter
@@ -124,8 +124,10 @@ class RadoHydroFixtureSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("masked run over every archive layout equals closed-form cell means; the repeated hour counts once") {
     val res = check(RadoHydro.Config(), Seq(1, 2, 3))
     assert(res.meta.nrows == Rows && res.meta.ncols == Cols)
-    // 9 distinct hours; without the dedup day 1 hour 0 would appear twice
-    assert(res.values.count() == 9L * res.window.nrows * res.window.ncols)
+    // 9 distinct hours of the covered cells; without the dedup day 1 hour 0
+    // would appear twice
+    assert(res.slots.size < res.window.nrows * res.window.ncols)
+    assert(res.values.count() == 9L * res.slots.size)
   }
 
   test("unmasked run with a date range prunes the nested day 3 archive and keeps nodata as a value") {
@@ -185,9 +187,10 @@ class RadoHydroFixtureSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val tar = Archives.tar(members)
     val archive = gzip(tar)
     val spec = RadoHydro.ScanSpec("radolan", (400, 430), (400, 430))
+    val slots = SpatialPipeline.Slots(Array.range(0, 30 * 30), 30) // every window cell covered
     def decode(): Int =
-      RadoHydro.gridRows("RW-20180101.tar.gz", new ByteArrayInputStream(archive), spec, maskNodata = true)
-        .flatMap(_.readings(30)).size
+      RadoHydro.gridRows("RW-20180101.tar.gz", new ByteArrayInputStream(archive), spec, slots, maskNodata = true)
+        .flatMap(_.readings(slots)).size
     assert(decode() == 6 * 30 * 30)
     val mx = java.lang.management.ManagementFactory.getThreadMXBean
       .asInstanceOf[com.sun.management.ThreadMXBean]

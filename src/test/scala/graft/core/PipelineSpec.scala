@@ -21,8 +21,8 @@ object TestSpark {
   * values v = 10*(row*3+col+1); numerator 10 => mm = row*3+col+1.
   *
   * The goldens run through both A4 kernels: `gridSeries` (production, over
-  * one grid row per timestamp with `gatedWeights`) and the long-row
-  * reference `weightedSeries`.
+  * one grid row per timestamp over the covered slots, with `gatedWeights`)
+  * and the long-row reference `weightedSeries`.
   *
   * Basins exercise all three NaN-gate branches (geotools.py:254-260):
   *  - basin 1 (6 cells, one cell with 2 missing ts): gate passes, NaN cell
@@ -41,11 +41,13 @@ class SpatialPipelineGoldenSpec extends AnyFunSuite {
   private def runPipeline() = {
     import spark.implicits._
     val basins = Seq(
-      (1, Seq(Seq(0.5, 1.5, 2.5, 1.5, 2.5, 2.5, 0.5, 2.5))), // rect (0.5,1.5)-(2.5,2.5)
-      (2, Seq(Seq(1.0, 1.0, 3.0, 1.0, 3.0, 2.0, 1.0, 2.0))), // cells (1,1)+(1,2)
-      (3, Seq(Seq(1.0, 1.0, 2.0, 1.0, 2.0, 2.0, 1.0, 2.0)))  // cell (1,1) only
-    ).toDF("basinID", "geom")
-    val cellMap = SpatialPipeline.basinCellMap(basins, t, 3, 3, 1.0, "epsg:4326", "epsg:4326")
+      (1, Array(Array(0.5, 1.5, 2.5, 1.5, 2.5, 2.5, 0.5, 2.5))), // rect (0.5,1.5)-(2.5,2.5)
+      (2, Array(Array(1.0, 1.0, 3.0, 1.0, 3.0, 2.0, 1.0, 2.0))), // cells (1,1)+(1,2)
+      (3, Array(Array(1.0, 1.0, 2.0, 1.0, 2.0, 2.0, 1.0, 2.0)))  // cell (1,1) only
+    )
+    val cells = SpatialPipeline.cellMap(spark, basins, t, 3, 3, 1.0, "epsg:4326", "epsg:4326")
+    val slots = SpatialPipeline.Slots.of(cells, 3)
+    val cellMap = cells.toDF(spark)
     val values = (for {
       k <- 1 to 3; row <- 0 until 3; col <- 0 until 3
     } yield {
@@ -53,15 +55,17 @@ class SpatialPipelineGoldenSpec extends AnyFunSuite {
         if (row == 1 && col == 1 && k >= 2) null else java.lang.Double.valueOf(10.0 * (row * 3 + col + 1))
       (ts(k), row, col, v)
     }).toDF("ts", "row", "col", "v")
-    // the same readings as one window-dense row per timestamp
+    // the same readings as one row per timestamp over the covered slots
+    assert(slots.cells.toSeq == (0 until 6))
     val grids = (1 to 3).map { k =>
-      val missing = if (k >= 2) Array(1 * 3 + 1) else Array.empty[Int]
+      val missing = if (k >= 2) Array(slots.index(1 * 3 + 1)) else Array.empty[Int]
       SpatialPipeline.GridRow(ts(k), "golden", k,
-        Array.tabulate(9)(i => if (missing.contains(i)) Double.NaN else 10.0 * (i + 1)), missing, Array.empty)
+        Array.tabulate(slots.size)(s => if (missing.contains(s)) Double.NaN else 10.0 * (slots.cells(s) + 1)),
+        missing, Array.empty)
     }
-    val ws = SpatialPipeline.gatedWeights(cellMap, (r, c) => grids.count(_.missing.contains(r * 3 + c)).toLong)
+    val ws = SpatialPipeline.gatedWeights(cells, slots, s => grids.count(_.missing.contains(s)).toLong)
     (cellMap, Seq(
-      "gridSeries" -> SpatialPipeline.gridSeries(grids.toDS(), ws, 3, 10.0),
+      "gridSeries" -> SpatialPipeline.gridSeries(grids.toDS(), ws, 10.0),
       "weightedSeries" -> SpatialPipeline.weightedSeries(values, cellMap, 10.0)))
   }
 
@@ -100,7 +104,7 @@ class SpatialPipelineGoldenSpec extends AnyFunSuite {
     val basins = (1 to 50).map { i =>
       (i, Seq(Seq(i * 2.0, 0.0, i * 2.0 + 1.5, 0.0, i * 2.0 + 1.5, 1.5, i * 2.0, 1.5)))
     }.toDF("basinID", "geom")
-    val cm = SpatialPipeline.basinCellMap(basins, Grid.Transform(0, 1, 10, -1),
+    val cm = CellMapOracle.basinCellMap(basins, Grid.Transform(0, 1, 10, -1),
       10, 120, 1.0, "epsg:25833", "epsg:25833")
     val plan = cm.queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF") && !plan.toLowerCase.contains("batcheval"),
@@ -111,7 +115,9 @@ class SpatialPipelineGoldenSpec extends AnyFunSuite {
 
   test("weights sum to 1 per basin (A3 invariant)") {
     val (cellMap, _) = runPipeline()
-    val sums = SpatialPipeline.gatedWeights(cellMap, (_, _) => 0L).groupMapReduce(_._1)(_._4)(_ + _)
+    val cells = SpatialPipeline.CellMap.of(cellMap)
+    val ws = SpatialPipeline.gatedWeights(cells, SpatialPipeline.Slots.of(cells, 3), _ => 0L)
+    val sums = ws.basinID.indices.map(k => ws.basinID(k) -> (ws.offsets(k) until ws.offsets(k + 1)).map(ws.wgt(_)).sum).toMap
     assert(sums.keySet == Set(1, 2, 3))
     sums.values.foreach(s => assert(math.abs(s - 1.0) < 1e-12))
   }
