@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.LongDrive
 object Bench {
   def main(args: Array[String]): Unit = {
     // machine-load fingerprint, sampled BEFORE this JVM does any work: the
@@ -12,32 +12,16 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // parallelismFirst=false (coalesce post-shuffle partitions to the
-      // 64 MB advisory instead of max parallelism) was MEASURED at local[32]
-      // sf0.1 and kept at the default: 78.8 s vs 73.3 s — single-partition
-      // reduce stages serialize the mid-weight queries' real work for more
-      // than the task-floor savings on the light ones.
-      .config("spark.sql.session.timeZone", "UTC")
-      // set at construction so Tables.events never mutates conf mid-session
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the suite compiles ~600+ generated classes across 103 queries; the
-      // default 100-entry codegen source cache LRU-evicts the warm pass's
-      // classes before the measured pass reaches them (measured: u5's
-      // compile transfer only appears once the cache holds the whole suite)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // parallelismFirst=false (coalesce post-shuffle partitions to the
+    // 64 MB advisory instead of max parallelism) was MEASURED at local[32]
+    // sf0.1 and kept at the default: 78.8 s vs 73.3 s — single-partition
+    // reduce stages serialize the mid-weight queries' real work for more
+    // than the task-floor savings on the light ones.
+    val spark = LongDrive.session(LongDrive.Latency, "4")
     // a failed warm step only costs the measured pass its warmth, so the run
-    // goes on; the failure is printed so a cold measurement is explained
-    def warm(step: String)(f: => Unit): Boolean =
-      try { f; true }
-      catch { case e: Throwable => System.err.println(s"[bench] warm $step failed: $e"); false }
+    // goes on; the guarded run prints the failure so a cold measurement is
+    // explained
+    def warm(step: String)(f: => Unit): Boolean = LongDrive.guarded("bench", s"warm $step")(f).isDefined
     // warmup: absorb session init + codegen compilation so the first measured
     // query isn't charged for it (flagship touches scan/join/agg paths; the
     // events read flips the nanos conf and compiles its own codegen)
@@ -61,30 +45,21 @@ object Bench {
       "events" -> ((sf: String) => graft.Tables.events(spark, sf)),
       "customer" -> ((sf: String) => graft.Tables.customer(spark, sf)))
     for ((table, load) <- warmedTables)
-      warm(s"table $table")(load(sfDir).write.format("noop").mode("overwrite").save())
+      warm(s"table $table")(LongDrive.noop(load(sfDir)))
     // calibration: a fixed 10M-row codegen aggregation, measured AFTER
     // warmup. Its idle-machine time is ~0.1 s and data-independent, so a
     // loaded/contended bench environment is detectable from the JSON alone
     // (round 2's driver total was 2x the judge's idle re-run; this line
     // makes that divergence visible without re-measuring). Run twice and
     // keep the second: the first pays the noop sink's one-time codegen.
-    def calibOnce(): Double = {
-      val c0 = System.nanoTime()
-      spark.range(10000000L).selectExpr("sum(id * 2 + 1) AS s")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - c0) / 1e9
-    }
+    def calibOnce(): Double =
+      tools.Probe.secs(LongDrive.noop(spark.range(10000000L).selectExpr("sum(id * 2 + 1) AS s")))._2
     calibOnce()
     val calib = calibOnce()
-    // deterministic name order: per-query numbers are comparable across
-    // rounds (map hash order isn't), and shared caches get materialized by
-    // the cheapest family member (d2 before d3/d5, g1 before g2)
-    // SPARK_GRAFT_ONLY=<regex> restricts the run for targeted iteration on
-    // one query family; the driver never sets it, so the gate always runs
-    // the full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
+    // shared caches get materialized by the cheapest family member in name
+    // order (d2 before d3/d5, g1 before g2)
+    val selected = LongDrive.select()
+    val queries = SparkEntry.queries
     // Per-query codegen warm pass at sf0.001 (1/100th the bench corpus,
     // declared in the JSON as "warm_sf"): each query's generated stages
     // compile once here, so the measured pass times the ENGINE on the bench
@@ -97,8 +72,8 @@ object Bench {
     // disables the pass.
     val warmSf = sys.env.getOrElse("SPARK_GRAFT_WARM_SF", "/root/testdata/sf0.001")
     if (warmSf.nonEmpty && new java.io.File(warmSf).isDirectory)
-      for ((name, fn) <- selected)
-        warm(s"query $name")(fn(spark, warmSf).write.format("noop").mode("overwrite").save())
+      for (name <- selected)
+        warm(s"query $name")(LongDrive.noop(queries(name)(spark, warmSf)))
     // Fit-once graph artifact pre-build at the MEASURED SF (round-7 verdict
     // #1b): n1 is the alphabetically-first consumer of the shared graph
     // artifacts, so without this its per-query number priced the one-time
@@ -106,29 +81,21 @@ object Bench {
     // the JSON ("prewarmed") and still visible in the artifact stats
     // (graph.*@<sf> builds report under the warm section's wall).
     val prewarmed =
-      if (selected.exists(_._1.startsWith("n")) &&
+      if (selected.exists(_.startsWith("n")) &&
           warm("graph")(graft.operators.GraphOps.prewarm(spark, sfDir))) Seq("graph")
       else Seq()
-    val runs = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // noop sink materializes EVERY column (count() would let Catalyst
-      // prune the expensive projections and undercount the real work)
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
-      (name, (System.nanoTime() - t0) / 1e9, ok)
-    }
     // a failed query is not a timing: it is listed under "failed" and left
     // out of the per-query map and of value
-    val results = runs.collect { case (name, t, true) => name -> t }
-    val failedList = runs.collect { case (name, _, false) => "\"" + name + "\"" }
-      .mkString("[", ",", "]")
+    val runs = selected.map(name =>
+      name -> LongDrive.guarded("bench", name)(LongDrive.noop(queries(name)(spark, sfDir))))
+    val results = runs.collect { case (name, Some(t)) => name -> t }
+    def list(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     // 3-decimal (ms-granular) seconds keep the one-line record compact; the
     // harness stores only the last ~2000 chars of output, so every byte of
     // the line competes for survival in that window
     def sec(v: Double): String = f"$v%.3f"
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + sec(v) }
-      .mkString("{", ",", "}")
+    def obj(fields: Seq[(String, String)]): String =
+      fields.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     // stdout-line query map: the 50 slowest only. The full 103-entry map is
     // 2.3 KB — larger than the harness's ~2000-char stored tail, so a full
     // line can NEVER survive to the parser intact (the r6 record lost its
@@ -136,13 +103,8 @@ object Bench {
     // covering everything that materially contributes to `value`; the full
     // map lives in the committed sidecar.
     val topNames = results.sortBy(-_._2).take(50).map(_._1).toSet
-    val qsTop = results.filter(r => topNames(r._1))
-      .map { case (k, v) => s"\"" + k + "\":" + sec(v) }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // "cached_tables" is empty from r14 on (see the methodology note above);
-    // "warmed_tables" records the page-cache/footer warm reads instead.
-    val warmedList = warmedTables.map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    def queryMap(keep: String => Boolean): String =
+      obj(results.collect { case (k, v) if keep(k) => k -> sec(v) })
     // per-artifact fit-once attribution: which query paid each shared
     // artifact's build (alphabetical first consumer) and what it cost, so a
     // "slow" first consumer (c2 paying d9's component labeling) is explained
@@ -151,10 +113,10 @@ object Bench {
     // sf0.001 report separately from measured-SF builds) and self_ms is the
     // build EXCLUSIVE of nested artifact builds (d9_components -> scoredPairs
     // -> lshSigs would otherwise triple-count up the chain)
-    val artifacts = graft.operators.ArtifactCache.statsSnapshot.toSeq.sortBy(_._1)
+    val artifacts = obj(graft.operators.ArtifactCache.statsSnapshot.toSeq.sortBy(_._1)
       .map { case (n, a) =>
-        s"\"" + n + s"\":{\"builds\":${a.builds},\"hits\":${a.hits},\"build_ms\":${a.buildMillis},\"self_ms\":${a.selfMillis}}"
-      }.mkString("{", ",", "}")
+        n -> s"{\"builds\":${a.builds},\"hits\":${a.hits},\"build_ms\":${a.buildMillis},\"self_ms\":${a.selfMillis}}"
+      })
     // second calibration sample AFTER the suite: round 4's driver bench hit
     // late-run contention the start-of-run calib couldn't see (s-family 4x
     // inflated, calib normal) — bracketing the suite makes steal at either
@@ -162,22 +124,37 @@ object Bench {
     val calibEnd = calibOnce()
     val loadEnd = loadAvg() // inflated by the bench itself; big deltas vs
     // steady-state (~cpus-utilized) still expose late-run contention
+    // the fields both records carry, in the stdout line's order
+    val shared = Seq(
+      "sf" -> s"\"$sfDir\"",
+      "warm_sf" -> s"\"$warmSf\"",
+      "prewarmed" -> list(prewarmed),
+      "calib" -> sec(calib),
+      "calib_end" -> sec(calibEnd),
+      "load_start" -> sec(loadStart),
+      "load_end" -> sec(loadEnd),
+      // the thresholds of the load fingerprint note at the top of main
+      "contended" -> (loadStart > 2 || calib > 0.3).toString,
+      "cpus" -> spark.sparkContext.defaultParallelism.toString,
+      "failed" -> list(runs.collect { case (name, None) => name }))
+    val head = Seq("metric" -> "\"total\"", "unit" -> "\"sec\"")
+    val value = "value" -> sec(results.map(_._2).sum)
     // summary fields LAST: the harness keeps only the final ~2000 chars of
     // output, so tail truncation eats the line's head — put the per-query
     // map there and let value/calib survive at the end (json.loads is
     // order-blind; the line still starts with {"metric" for any
     // prefix-based detection)
-    val prewarmList = prewarmed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // the thresholds of the load fingerprint note at the top of main
-    val contended = loadStart > 2 || calib > 0.3
-    val line =
-      s"""{"metric":"total","unit":"sec","queries":$qsTop,"queries_omitted":${results.size - topNames.size},"sf":"$sfDir","warm_sf":"$warmSf","prewarmed":$prewarmList,"calib":${sec(calib)},"calib_end":${sec(calibEnd)},"load_start":${sec(loadStart)},"load_end":${sec(loadEnd)},"contended":$contended,"cpus":${spark.sparkContext.defaultParallelism},"failed":$failedList,"value":${sec(total)}}"""
+    val line = obj(head ++ Seq("queries" -> queryMap(topNames),
+      "queries_omitted" -> (results.size - topNames.size).toString) ++ shared :+ value)
     // Full-fidelity record (plus cache/artifact detail) goes to a sidecar in
     // the repo: the stdout line is size-constrained and historically got
     // truncated/prefixed beyond parseability, so the file is the durable
-    // artifact a later reader can trust.
-    val full =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$qs,"failed":$failedList,"cpus":${spark.sparkContext.defaultParallelism},"sf":"$sfDir","warm_sf":"$warmSf","prewarmed":$prewarmList,"calib":${sec(calib)},"calib_end":${sec(calibEnd)},"load_start":${sec(loadStart)},"load_end":${sec(loadEnd)},"contended":$contended,"cached_tables":[],"warmed_tables":$warmedList,"artifacts":$artifacts}"""
+    // artifact a later reader can trust. "cached_tables" is empty from r14
+    // on (see the methodology note above); "warmed_tables" records the
+    // page-cache/footer warm reads instead.
+    val full = obj(head ++ Seq("queries" -> queryMap(_ => true)) ++ shared ++ Seq(
+      "cached_tables" -> "[]", "warmed_tables" -> list(warmedTables.map(_._1)),
+      "artifacts" -> artifacts, value))
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")), full + "\n")
     catch { case _: Throwable => () }

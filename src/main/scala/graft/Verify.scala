@@ -1,20 +1,15 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.tools.LongDrive
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // shared long-drive recipe (shuffle-file GC sweep, zstd, pinned TZ,
-    // nanosAsLong at construction) — see graft.tools.LongDrive for the
-    // sf100 disk-envelope rationale; shuffle partitions track the cores
-    val spark = tools.LongDrive.session("4")(cpus => cpus)
+    // shuffle partitions track the cores
+    val spark = LongDrive.session(LongDrive.LongRun, "4")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=<regex> restricts the dump (and the oracle json) for
-    // targeted spot-checks; the driver never sets it, so the gate is always
-    // the full surface
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
-    def selected(name: String) = only.forall(_.findFirstIn(name).isDefined)
+    val names = LongDrive.select()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -30,26 +25,19 @@ object Verify {
     // Oracle json goes FIRST: if the harness wall-clock-kills a long dump,
     // every query parquet already on disk stays comparable instead of the
     // whole round silently shrinking (round-5 lesson).
-    val json = SparkEntry.oracleSql.filter(e => selected(e._1))
+    val json = SparkEntry.oracleSql.filter(e => names.contains(e._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Alphabetical order so a partial dump is a deterministic prefix and the
-    // stderr timing log pinpoints where a kill landed.
-    SparkEntry.queries.toSeq.sortBy(_._1).filter(e => selected(e._1))
-      .foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        // Release this query's dead shuffle dependencies NOW so the
-        // ContextCleaner can delete their files before the next query
-        // starts spilling (sf100 lesson above); artifacts stay referenced.
-        System.gc()
-      }
+    val queries = SparkEntry.queries
+    for (name <- names) {
+      for (t <- LongDrive.guarded("verify", name)(
+          queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")))
+        System.err.println(f"[verify] $name ok $t%.1fs")
+      // Release this query's dead shuffle dependencies NOW so the
+      // ContextCleaner can delete their files before the next query
+      // starts spilling (see LongDrive.LongRun); artifacts stay referenced.
+      System.gc()
+    }
     spark.stop()
   }
 }

@@ -36,11 +36,6 @@ object Multimodal {
       }
       Array(sum / payload.length, mn, mx, energy / payload.length)
     }
-
-    /** "Frame sampling": take every `stride`-th byte window of size `w`. */
-    def sampleFrames(payload: Array[Byte], w: Int, stride: Int): Seq[Array[Byte]] =
-      (0 until math.max(0, (payload.length - w) / stride + 1))
-        .map(i => java.util.Arrays.copyOfRange(payload, i * stride, i * stride + w))
   }
 
   val mediaSchema: StructType = StructType(Seq(

@@ -1,31 +1,33 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Dump formatted physical plans (and optionally timings) for queries —
-  * the .explain feedback loop: check PushedFilters, broadcast choices, and
-  * WholeStageCodegen spans per query.
+/** Dump each query's formatted physical plan — the .explain feedback loop:
+  * check PushedFilters, broadcast choices, and WholeStageCodegen spans per
+  * query — then three [[Probe.query]] runs, each printing one
+  * `[explain runN] name build=… analyze=… opt=… plan=… exec=… jobs=…` line,
+  * so the first run's codegen/JIT cost is separable from steady state. A
+  * query that throws prints one `failed` line and no time; the next query
+  * still runs.
+  *
+  * SPARK_GRAFT_WARM_SF=<dir>: run each query once against that (tiny) SF
+  * first, so the measured runs show what codegen-cache warmth is worth.
   *
   * Usage: runMain graft.tools.Explain <sfDir> [queryName ...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val names = if (args.length > 1) args.drop(1).toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { n =>
-      println(s"\n========== $n ==========")
-      val df = graft.SparkEntry.queries(n)(spark, sfDir)
-      df.explain("formatted")
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      println(f"[time] $n: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    val names = LongDrive.select(args.drop(1).toSeq)
+    val spark = LongDrive.session(LongDrive.Latency, "8")
+    val meter = Probe.meter(spark)
+    for (sf <- sys.env.get("SPARK_GRAFT_WARM_SF"); name <- names;
+         sec <- LongDrive.guarded("warm", name)(LongDrive.noop(graft.SparkEntry.queries(name)(spark, sf))))
+      println(f"[warm] $name $sec%.3f s")
+    for (name <- names) {
+      println(s"\n========== $name ==========")
+      LongDrive.guarded("explain", name) {
+        graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+        for (i <- 1 to 3) Probe.query(spark, meter, sfDir, name, s"explain run$i")
+      }
     }
     spark.stop()
   }

@@ -79,21 +79,15 @@ object PlanAudit {
     */
   def warm(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
-    df.write.format("noop").mode("overwrite").save()
+    LongDrive.noop(df)
     df
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val budgetsMode = args.length > 1 && args(1) == "budgets"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
+    val spark = LongDrive.session(LongDrive.LongRun, "8")
+    val names = LongDrive.select()
     names.foreach(n => warm(spark, sfDir, n)) // pass 1: build artifacts
     val rows = names.map { n =>
       val df = warm(spark, sfDir, n)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The measuring code the scale probes (ScaleProbe) and the per-query
-  * overhead split (Overhead) share: one listener, one timed query run, one
+  * phase split (Explain) share: one listener, one timed query run, one
   * frame compare, a fixture guard, scoped system properties and the
   * two-phase stream feeder.
   */
@@ -98,7 +98,7 @@ object Probe {
     val (_, analyze) = secs(df.queryExecution.analyzed)
     val (_, opt) = secs(df.queryExecution.optimizedPlan)
     val (_, plan) = secs(df.queryExecution.executedPlan)
-    val (_, exec) = secs(df.write.format("noop").mode("overwrite").save())
+    val (_, exec) = secs(LongDrive.noop(df))
     val c = meter.counts - c0
     println(f"[$tag] $name%-22s build=$build%.3f analyze=$analyze%.3f opt=$opt%.3f plan=$plan%.3f exec=$exec%.3f " +
       f"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks} shuffle_mb=${c.shuffleBytes / 1e6}%.1f spill_mb=${c.spillBytes / 1e6}%.1f")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.api.RadoHydro
 import graft.out.CsvSink
 
@@ -30,14 +29,7 @@ object RadoHydroDemo {
       datasource = datasource,
       startDate = if (args.length > 4) Some(args(4)) else None,
       endDate = if (args.length > 5) Some(args(5)) else None)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("radohydro")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LongDrive.session(LongDrive.Latency, "8", _ => "32")
     val res = RadoHydro.run(spark, gridDir, shpPath, cfg)
     println(s"window=${res.window} meta=${res.meta}")
     res.series.orderBy("basinID", "ts").show(24, truncate = false)

@@ -75,9 +75,9 @@ object ScaleProbe {
   }
 
   // Probe loops run hundreds of shuffle-producing rounds in one JVM — the
-  // shared long-drive recipe (GC sweep + zstd; see LongDrive) applies in
-  // full; probes pin 32 shuffle partitions regardless of core count.
-  private def session(): SparkSession = LongDrive.session("8")(_ => "32")
+  // long-drive mode (GC sweep + zstd) applies in full; probes pin 32
+  // shuffle partitions regardless of core count.
+  private def session(): SparkSession = LongDrive.session(LongDrive.LongRun, "8", _ => "32")
 
   /** Times each named query through [[Probe.query]], counts its rows, and
     * returns the `"name":{"sec":…,"rows":…}` summary members.
@@ -197,7 +197,7 @@ object ScaleProbe {
     // convergence actually costs at scale)
     val (iters, convSec) = secs {
       val (conv, iters) = graft.operators.GraphOps.pageRankConverged(spark, dir)
-      conv.write.format("noop").mode("overwrite").save()
+      LongDrive.noop(conv)
       iters
     }
     println(f"[graph-probe] pageRankConverged iters=$iters sec=$convSec%.1f per_round=${convSec / math.max(1, iters)}%.3f")
