@@ -155,7 +155,7 @@ object RadoHydro {
     val first = paths(files).headOption.getOrElse(throw new IllegalArgumentException("no grid files"))
     val in = open(first, files.sparkSession.sessionState.newHadoopConf())
     try {
-      scanFile(first.getName, in, ScanSpec(datasource, (0, 0), (0, 0))).nextOption()
+      scanFile(first.getName, in, ScanSpec(datasource, (0, 0), (0, 0)), new Archives.MemberBuffer).nextOption()
         .getOrElse(throw new IllegalArgumentException(s"no members in $first")).meta
     } finally in.close()
   }
@@ -201,12 +201,13 @@ object RadoHydro {
 
   /** Stream the in-range grid members of raster file `fname`: the one place
     * that picks a decoder (REGNIE text by datasource, GeoTIFF by member
-    * name, ESRI ASCII otherwise). Members share one buffer, so consume each
-    * member's cells before asking for the next.
+    * name, ESRI ASCII otherwise). Members are read into `buf`, so consume
+    * each member's cells before asking for the next.
     */
-  def scanFile(fname: String, in: InputStream, spec: ScanSpec): Iterator[MemberGrid] = {
+  def scanFile(fname: String, in: InputStream, spec: ScanSpec,
+      buf: Archives.MemberBuffer): Iterator[MemberGrid] = {
     val (rows, cols) = (Some(spec.rows), Some(spec.cols))
-    Archives.members(fname, in, spec.mayHold).flatMap { m =>
+    Archives.members(fname, in, buf, spec.mayHold).flatMap { m =>
       val ts = parseMemberTs(spec.datasource, m.name)
       if (!spec.inRange(ts)) Iterator.empty
       else Iterator.single(if (spec.datasource == "regnie") {
@@ -228,15 +229,15 @@ object RadoHydro {
 
   /** The scan task's work on one raster file: one [[SpatialPipeline.GridRow]]
     * over the covered `slots` per in-range grid member, nodata masked when
-    * `maskNodata`.
+    * `maskNodata`, its members read into `buf`.
     */
   def gridRows(fname: String, in: InputStream, spec: ScanSpec, slots: SpatialPipeline.Slots,
-      maskNodata: Boolean): Iterator[SpatialPipeline.GridRow] = {
+      maskNodata: Boolean, buf: Archives.MemberBuffer): Iterator[SpatialPipeline.GridRow] = {
     val (rLo, cLo) = (spec.rows._1, spec.cols._1)
     val ncols = spec.cols._2 - cLo
     val slotOf = slots.index
     val n = slots.size
-    scanFile(fname, in, spec).zipWithIndex.map { case (g, position) =>
+    scanFile(fname, in, spec, buf).zipWithIndex.map { case (g, position) =>
       val values = new Array[Double](n)
       java.util.Arrays.fill(values, Double.NaN)
       val absent = new java.util.BitSet(n)
@@ -254,21 +255,30 @@ object RadoHydro {
     }
   }
 
-  /** The scan: [[gridRows]] over each file of a path relation, batch or
-    * streaming. Each task opens its files through Hadoop `FileSystem` and
-    * closes each stream once its members are consumed, and again on task
-    * completion.
+  /** The scan: [[scanTask]] over each partition of a path relation, batch
+    * or streaming.
     */
   def scanGrids(files: DataFrame, spec: ScanSpec, slots: SpatialPipeline.Slots,
       maskNodata: Boolean): Dataset[SpatialPipeline.GridRow] = {
     val spark = files.sparkSession
     import spark.implicits._
     val conf = spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
-    files.as[String].flatMap { p =>
+    files.as[String].mapPartitions(paths => scanTask(paths, conf.value.value, spec, slots, maskNodata))
+  }
+
+  /** One scan task: [[gridRows]] over each of its `paths`, all read into one
+    * [[Archives.MemberBuffer]], so the buffer grows once per task, not once
+    * per file. Each file opens through Hadoop `FileSystem` and closes once
+    * its members are consumed, and again on task completion.
+    */
+  private[graft] def scanTask(paths: Iterator[String], conf: Configuration, spec: ScanSpec,
+      slots: SpatialPipeline.Slots, maskNodata: Boolean): Iterator[SpatialPipeline.GridRow] = {
+    val buf = new Archives.MemberBuffer
+    paths.flatMap { p =>
       val path = new Path(p)
-      val in = open(path, conf.value.value)
-      TaskContext.get().addTaskCompletionListener[Unit](_ => in.close())
-      val rows = gridRows(path.getName, in, spec, slots, maskNodata)
+      val in = open(path, conf)
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
+      val rows = gridRows(path.getName, in, spec, slots, maskNodata, buf)
       new Iterator[SpatialPipeline.GridRow] {
         def hasNext: Boolean = rows.hasNext || { in.close(); false }
         def next(): SpatialPipeline.GridRow = rows.next()

@@ -100,18 +100,17 @@ object Archives {
     else Iterator.single(Entry(name, in))
   }
 
-  /** Stream the grid members of file `name`: two expansion levels, which
-    * cover plain members, `.gz` members, daily tar(.gz) archives and the
-    * reference's monthly-tar-of-daily-tars path (S4). `keep` sees each
-    * first-level name and prunes it before any of its bytes are decoded.
-    * All members share one [[MemberBuffer]].
+  /** Stream the grid members of file `name` into `out`: two expansion
+    * levels, which cover plain members, `.gz` members, daily tar(.gz)
+    * archives and the reference's monthly-tar-of-daily-tars path (S4).
+    * `keep` sees each first-level name and prunes it before any of its bytes
+    * are decoded. A scan task passes one buffer for all its files.
     */
-  def members(name: String, in: InputStream, keep: String => Boolean = _ => true): Iterator[MemberBuffer] = {
-    val out = new MemberBuffer
+  def members(name: String, in: InputStream, out: MemberBuffer,
+      keep: String => Boolean = _ => true): Iterator[MemberBuffer] =
     entries(name, in).filter(e => keep(e.name))
       .flatMap(e => entries(e.name, e.in))
       .map(out.fill)
-  }
 
   /** Regular-file members of a tar stream. Each is a bounded view of `in`;
     * requesting the next skips whatever the caller left unread. After the

@@ -37,23 +37,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object BruteForce {
 
+  /** Default corpus-size ceiling for the driver collect (a spec passes a
+    * tiny `maxRows` to trip the guard). 2M rows x 64 dims x 8 B is ~1 GB
+    * collected+broadcast — the edge of sane for a declared baseline; beyond
+    * it the collect is a silent driver OOM and the answer is the LSH-blocked
+    * twin, not a bigger driver.
+    */
+  private val MaxRows = 2000000L
+
   /** All unordered pairs (id_a < id_b) with cosine >= threshold over a
     * frame of (vec_id: long, v: array<double>); returns (id_a, id_b, cos)
     * with cos unrounded — callers apply their own `round` so the final
     * decimal rounding stays in one (Spark-expression) place. Rows with a
     * null vector drop out, matching the null-intolerant dot in the
-    * declarative plan.
+    * declarative plan. A corpus over `maxRows` vectors is refused.
     */
-  /** Corpus-size ceiling for the driver collect, overridable via the
-    * `graft.brute.maxRows` system property (spec pin). 2M rows x 64 dims x
-    * 8 B is ~1 GB collected+broadcast — the edge of sane for a declared
-    * baseline; beyond it the collect is a silent driver OOM and the answer
-    * is the LSH-blocked twin, not a bigger driver.
-    */
-  private[operators] def maxRows: Long =
-    sys.props.get("graft.brute.maxRows").map(_.toLong).getOrElse(2000000L)
-
-  def cosinePairs(e: DataFrame, threshold: Double): DataFrame = {
+  def cosinePairs(e: DataFrame, threshold: Double, maxRows: Long = MaxRows): DataFrame = {
     val s = e.sparkSession
     import s.implicits._
     val n0 = e.count()

@@ -600,7 +600,7 @@ object Dedup {
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("nrm", sqrt(expr("graft_dot(v, v)")))
       .cache()
-    val cand = embedCandidatePairs(Similarity.lshKeys(e))
+    val cand = embedCandidatePairs(Similarity.lshKeys(s, d))
     val va = e.select(col("vec_id").as("id_a"), col("v").as("ad"), col("nrm").as("na"))
     val vb = e.select(col("vec_id").as("id_b"), col("v").as("bd"), col("nrm").as("nb"))
     cand.join(va, "id_a").join(vb, "id_b")

@@ -531,7 +531,7 @@ object Differential {
       // shares normExpr — char-splitting must agree or nothing downstream can
       var (cur, releaseCur) = checkpointTracked(vocab
         .select(col("word"), split(TextOps.seq0Expr, TextOps.BpeSep).as("ps")))
-      val maxRounds = TextOps.bpeMergeCount + 64
+      val maxRounds = TextOps.BpeMerges + 64
       var done = false
       var round = 0
       while (!done) {

@@ -24,9 +24,9 @@ import graft.{InputScale, Tables}
   * bipartite graph |nodes| ~ sqrt(|edges|), so the per-iteration rank frame
   * BROADCASTS against the edge scan and the only shuffle per round is the
   * map-side-combined groupBy(dst). For a web-scale graph whose node set
-  * outgrows broadcast, a DATA-DERIVED gate (observed |nodes| vs
-  * [[broadcastFloorNodes]], decided once at artifact build) switches every
-  * per-round rank join to the classic shuffle plan: the edge frame caches
+  * outgrows broadcast, a DATA-DERIVED gate (observed |nodes| vs a node
+  * floor, [[BroadcastFloorNodes]] unless the caller passes another) switches
+  * every per-round rank join to the classic shuffle plan: the edge frame caches
   * HASH-PARTITIONED on src, so each round shuffles only the node-sized
   * rank frame to meet it (shuffled-hash build on the rank side — the edge
   * side is never re-shuffled or sorted). Both modes are bit-identical
@@ -82,14 +82,9 @@ object GraphOps {
   private final case class Graph(edges: DataFrame, deg: DataFrame, nNodes: Long,
       nEdges: Long,
       /** Broadcast the node-sized rank frame each round (fat edge layout), or
-        * shuffle it to meet the hash-partitioned THIN edge cache. This is the
-        * layout flag RECORDED AT ARTIFACT BUILD (jointEdges), not a live
-        * re-read of the floor property: the cached edge frame's columns and
-        * partitioning were fixed then, so the per-round join strategy must
-        * follow the frame that actually exists — a prop flip after the build
-        * would otherwise throw on the missing dst_outdeg column (thin cache,
-        * broadcast plan) or silently reshuffle the full edge volume every
-        * round (fat coalesced cache, shuffle plan).
+        * shuffle it to meet the hash-partitioned THIN edge cache: the layout
+        * of `edges`, which [[jointEdges]] memoizes per layout, so the round
+        * plan and the edge frame always agree.
         *
         * INVARIANT the thin-mode rounds rely on: the graph is BIDIRECTED by
         * construction (jointEdges unions both edge directions), so every node
@@ -104,16 +99,11 @@ object GraphOps {
     * a (node, outdeg|wout, r) row is ~3 BIGINTs (~40 B unsafe-row), so 8M
     * nodes is a ~300 MB broadcast — past the point where per-round
     * driver-collect + rebroadcast beats one node-sized shuffle against a
-    * pre-partitioned edge cache. Overridable via the
-    * `graft.graph.broadcastFloorNodes` system property so specs (and an
-    * operator forcing either mode) can pin the flip on small fixtures.
+    * pre-partitioned edge cache. The n1/n2 queries use it; specs and
+    * ScaleProbe pass their own `nodeFloor` to pin either mode on a small
+    * fixture.
     */
-  private[graft] def broadcastFloorNodes: Long =
-    sys.props.get("graft.graph.broadcastFloorNodes").map(_.toLong)
-      .getOrElse(8000000L)
-
-  private[graft] def broadcastRanks(nNodes: Long): Boolean =
-    nNodes <= broadcastFloorNodes
+  private[graft] val BroadcastFloorNodes = 8000000L
 
   /** One per-round rank join under the gate: broadcast below the floor;
     * above it, shuffle the node-sized `shares` frame to the edge cache's
@@ -129,17 +119,39 @@ object GraphOps {
     * disk-envelope rungs); below it the pause is pure suite latency. */
   private val PausePassRows = 100000000L
 
-  /** Graph constants observed while materializing the joint graph state,
-    * plus the edge-cache LAYOUT decided then: `fatEdges` records which frame
-    * was actually built (fat + coalesced vs thin + src-hash-partitioned), so
-    * every query-side projection/join gates on the frame that exists instead
-    * of re-evaluating the floor property (which a spec-style override could
-    * have changed since the build).
-    */
-  private final case class GraphMeta(nNodes: Long, nEdges: Long, fatEdges: Boolean)
+  /** Node and bidirected-edge counts of `d`'s graph. */
+  private[operators] final case class GraphCounts(nNodes: Long, nEdges: Long)
 
-  private val graphMeta =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), GraphMeta]()
+  /** [[GraphCounts]], observed once per (session, dir) in the Tables memo.
+    * ONE eager action (round 7 had pairs.count() + deg.count(), two driver
+    * jobs before the rounds started): this aggregate materializes the pair
+    * AND degree caches in a single job chain, and sum(outdeg) over the
+    * degree frame IS the bidirected edge count (every edge contributes to
+    * exactly one node's out-degree). Built graphs observe it under the
+    * [[InputScale.smallTradeGraph]] gate, like the rest of the build.
+    */
+  private[operators] def graphCounts(s: SparkSession, d: String): GraphCounts =
+    Tables.memo(s, s"$d!graph.counts") {
+      def observe() = {
+        val meta = jointDeg(s, d).agg(count(lit(1)), sum(col("outdeg"))).first()
+        GraphCounts(meta.getLong(0), meta.getLong(1))
+      }
+      if (edgesDirProp.isDefined) observe() else smallTradeBuild(s, d)(observe())
+    }
+
+  /** Below [[InputScale.smallTradeGraph]] (decided from lineitem, before
+    * any graph artifact exists) the pair/degree/edge build shuffles run at
+    * 8 partitions — the width the rank rounds already use, so the
+    * 8-partition cached artifacts cost their consumers nothing (r14). */
+  private def smallTradeBuild[T](s: SparkSession, d: String)(f: => T): T =
+    InputScale.withShufflePartitionsWhen(s, InputScale.smallTradeGraph(s, d),
+      InputScale.SmallBuildPartitions)(f)
+
+  /** The layout for `nodeFloor`: FAT edges and broadcast rank joins for a
+    * built graph of at most `nodeFloor` nodes; THIN edges and shuffled rank
+    * joins above it and for the disk edge table. */
+  private def fatLayout(s: SparkSession, d: String, nodeFloor: Long): Boolean =
+    edgesDirProp.isEmpty && graphCounts(s, d).nNodes <= nodeFloor
 
   /** ONE joint degree frame (node, outdeg, wout) serving BOTH PageRank
     * variants: the bidirected frame's rows are exactly the distinct pairs
@@ -154,15 +166,18 @@ object GraphOps {
           // disk-edge mode: the degree frame was landed by
           // buildEdgesBucketed — node-sized, cache it like the built one
           s.read.parquet(s"$dir/deg").cache()
-        case None =>
-          val pairs = weightedPairs(s, d)
-          val bidir = pairs.union(
-            pairs.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-          bidir.groupBy(col("src").as("node"))
-            .agg(count(lit(1)).as("outdeg"), sum(col("w")).as("wout"))
-            .cache()
+        case None => degrees(weightedPairs(s, d)).cache()
       }
     }
+
+  /** The (dst, src, w) direction of the (src, dst, w) `pairs`. */
+  private def reversed(pairs: DataFrame): DataFrame =
+    pairs.select(col("dst").as("src"), col("src").as("dst"), col("w"))
+
+  /** (node, outdeg, wout) over both directions of `pairs`. */
+  private def degrees(pairs: DataFrame): DataFrame =
+    pairs.union(reversed(pairs)).groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("outdeg"), sum(col("w")).as("wout"))
 
   /** Fourth-decade edge layout (r12): when set, the bidirected edge frame
     * is a BUCKETED PARQUET TABLE on disk (built once by
@@ -177,18 +192,16 @@ object GraphOps {
 
   private val EdgesTable = "graft_b_edges"
 
-  /** Register the landed edge table in this session's catalog (fresh
-    * processes have an empty in-memory catalog; the DDL just points at the
-    * existing bucketed part files).
+  /** Register the edge table landed under `dir` in `buckets` src buckets in
+    * this session's catalog, unless it is there (fresh processes have an
+    * empty in-memory catalog; the DDL just points at the existing bucketed
+    * part files).
     */
-  private def registerEdgeTable(s: SparkSession, dir: String): Unit = {
-    val buckets = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "edges.buckets"))).trim.toInt
+  private def registerEdgeTable(s: SparkSession, dir: String, buckets: Int): Unit =
     if (!s.catalog.tableExists(EdgesTable))
       s.sql(s"""CREATE TABLE $EdgesTable (src BIGINT, dst BIGINT, w BIGINT)
                |USING parquet CLUSTERED BY (src) INTO $buckets BUCKETS
                |LOCATION '$dir/edges'""".stripMargin)
-  }
 
   /** Land the bidirected edge artifact as a src-bucketed parquet table plus
     * the node-sized degree frame under `outDir`, for serving through
@@ -203,13 +216,7 @@ object GraphOps {
       buckets: Int = 256, phase: String = "all"): (Long, Long) = {
     val pairs = weightedPairs(s, d)
     def in(p: String) = phase == "all" || phase == p
-    if (in("deg")) {
-      val bidir = pairs.union(
-        pairs.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      bidir.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("outdeg"), sum(col("w")).as("wout"))
-        .write.mode("overwrite").parquet(s"$outDir/deg")
-    }
+    if (in("deg")) degrees(pairs).write.mode("overwrite").parquet(s"$outDir/deg")
     if (in("fwd")) {
       s.sql(s"DROP TABLE IF EXISTS $EdgesTable")
       pairs.repartition(buckets, col("src"))
@@ -232,12 +239,8 @@ object GraphOps {
       // one-directional graph whose rounds drain to empty (the sf300 rung
       // hit exactly this). Register the existing table first so the append
       // is a true insert.
-      if (!s.catalog.tableExists(EdgesTable))
-        s.sql(s"""CREATE TABLE $EdgesTable (src BIGINT, dst BIGINT, w BIGINT)
-                 |USING parquet CLUSTERED BY (src) INTO $buckets BUCKETS
-                 |LOCATION '$outDir/edges'""".stripMargin)
-      pairs.select(col("dst").as("src"), col("src").as("dst"), col("w"))
-        .repartition(buckets, col("src"))
+      registerEdgeTable(s, outDir, buckets)
+      reversed(pairs).repartition(buckets, col("src"))
         .write.bucketBy(buckets, "src")
         .mode("append").saveAsTable(EdgesTable)
       java.nio.file.Files.write(java.nio.file.Paths.get(outDir, "edges.buckets"),
@@ -250,56 +253,37 @@ object GraphOps {
 
   /** ONE joint bidirected edge frame serving both variants — fat
     * (src, dst, w, dst_outdeg, dst_wout) in broadcast mode, THIN
-    * (src, dst, w) in shuffle/scale mode (see the layout comment in the
-    * body); n1 projects the counts, n2 the weights; the InMemoryTableScan
-    * prunes the untouched columns, so neither query pays for the other's
-    * data. Memoized: the second graph query's build cost drops to a cache
-    * hit.
+    * (src, dst, w) in shuffle/scale mode (see the layout comment in
+    * [[builtEdges]]); n1 projects the counts, n2 the weights; the
+    * InMemoryTableScan prunes the untouched columns, so neither query pays
+    * for the other's data. Memoized per layout (`graph.edges.fat`,
+    * `graph.edges.thin`): the second graph query's build cost drops to a
+    * cache hit, and one session serves both layouts. In disk-edge mode the
+    * frame IS the bucketed table — hash-clustered on src, so every round's
+    * rank join plans with zero edge-side exchange (the thin-mode round code
+    * runs verbatim on it).
     */
-  private def jointEdges(s: SparkSession, d: String): DataFrame =
-    ArtifactCache.getOrElseUpdate("graph.edges", s, d) {
+  private def jointEdges(s: SparkSession, d: String, nodeFloor: Long): DataFrame = {
+    val fat = fatLayout(s, d, nodeFloor)
+    ArtifactCache.getOrElseUpdate(if (fat) "graph.edges.fat" else "graph.edges.thin", s, d) {
       edgesDirProp match {
-        case Some(dir) => diskEdges(s, d, dir)
-        case None => builtEdges(s, d)
+        case Some(dir) =>
+          registerEdgeTable(s, dir,
+            java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "edges.buckets")).trim.toInt)
+          s.table(EdgesTable)
+        case None => builtEdges(s, d, fat)
       }
     }
-
-  /** Disk-edge mode: the bidirected frame IS the bucketed table —
-    * hash-clustered on src, so every round's rank join plans with zero
-    * edge-side exchange (the thin-mode round code runs verbatim on it).
-    */
-  private def diskEdges(s: SparkSession, d: String, dir: String): DataFrame = {
-    registerEdgeTable(s, dir)
-    val deg = jointDeg(s, d)
-    val meta = deg.agg(count(lit(1)), sum(col("outdeg"))).first()
-    graphMeta((s, d)) = GraphMeta(meta.getLong(0), meta.getLong(1),
-      fatEdges = false)
-    s.table(EdgesTable)
   }
 
-  /** Below [[InputScale.smallTradeGraph]] (decided from lineitem, before
-    * any graph artifact exists) the pair/degree/edge build shuffles run at
-    * 8 partitions — the width the rank rounds already use, so the
-    * 8-partition cached artifacts cost their consumers nothing (r14). */
-  private def builtEdges(s: SparkSession, d: String): DataFrame =
-    InputScale.withShufflePartitionsWhen(s, InputScale.smallTradeGraph(s, d),
-        InputScale.SmallBuildPartitions) {
+  private def builtEdges(s: SparkSession, d: String, fat: Boolean): DataFrame =
+    smallTradeBuild(s, d) {
       val pairs = weightedPairs(s, d)
       val deg = jointDeg(s, d)
-      // ONE eager action replaces round 7's pairs.count() + deg.count()
-      // pair (two driver jobs before the rounds started — the residual
-      // cost round 7's verdict flagged): this aggregate materializes the
-      // pair AND degree caches in a single job chain, and sum(outdeg) over
-      // the degree frame IS the bidirected edge count (every edge
-      // contributes to exactly one node's out-degree).
-      val meta = deg.agg(count(lit(1)), sum(col("outdeg"))).first()
-      val (nNodes, nEdges) = (meta.getLong(0), meta.getLong(1))
-      val fat = broadcastRanks(nNodes) // layout decision, recorded for queries
-      graphMeta((s, d)) = GraphMeta(nNodes, nEdges, fat)
+      val nEdges = graphCounts(s, d).nEdges
       // the customer/supplier id spaces are disjoint, so the union of two
       // distinct sets is already distinct — no second dedup shuffle
-      val bidir = pairs.union(
-        pairs.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+      val bidir = pairs.union(reversed(pairs))
       // Layout follows the gate. Broadcast mode (bench-scale graphs): FAT
       // edges — dst's deg/wout ride every edge (one broadcast-joined deg
       // pass here, node frame is tiny), so a round's output comes straight
@@ -322,9 +306,9 @@ object GraphOps {
             .coalesce(edgePartitions(s, nEdges))
         } else bidir.repartition(edgePartitions(s, nEdges), col("src"))
       edges.cache()
-    } // end withShufflePartitionsWhen (smallTradeGraph gate)
+    }
 
-  private def unweightedGraph(s: SparkSession, d: String): Graph = {
+  private def unweightedGraph(s: SparkSession, d: String, nodeFloor: Long): Graph = {
     // Integer node ids (custkey*2 / suppkey*2+1) keep every iteration's
     // hashing, shuffling and codegen on one BIGINT column; the c:/s: string
     // labels only materialize in the final 20-row projection. The mapping is
@@ -332,12 +316,13 @@ object GraphOps {
     // oracle exactly. Both graph queries ride the joint edge/degree
     // artifacts; this view projects the unweighted columns (thin scale-mode
     // edges don't carry dst_outdeg — see jointEdges).
-    val joint = jointEdges(s, d)
-    val meta = graphMeta((s, d))
-    val edges = if (meta.fatEdges) joint.select("src", "dst", "dst_outdeg")
+    val joint = jointEdges(s, d, nodeFloor)
+    val fat = fatLayout(s, d, nodeFloor)
+    val c = graphCounts(s, d)
+    val edges = if (fat) joint.select("src", "dst", "dst_outdeg")
                 else joint.select("src", "dst")
-    Graph(edges, jointDeg(s, d).select("node", "outdeg"), meta.nNodes,
-      meta.nEdges, broadcastRanks = meta.fatEdges)
+    Graph(edges, jointDeg(s, d).select("node", "outdeg"), c.nNodes, c.nEdges,
+      broadcastRanks = fat)
   }
 
   /** Initial uniform rank frame. localCheckpoint flattens the node-sized
@@ -406,14 +391,16 @@ object GraphOps {
   /** The full converged (3-round) rank frame (node, r) — n1's result
     * before the top-20 presentation cut. Exposed for the differential rank
     * compare (`ScaleProbe diffv`): at the scale rungs the v9 twin matches
-    * this WHOLE frame, not just the 20 displayed rows.
+    * this WHOLE frame, not just the 20 displayed rows. Rank joins broadcast
+    * up to `nodeFloor` nodes.
     */
-  private[graft] def n1RankFrame(s: SparkSession, d: String): DataFrame = {
+  private[graft] def n1RankFrame(s: SparkSession, d: String,
+      nodeFloor: Long = BroadcastFloorNodes): DataFrame = {
     // Per-round localCheckpoint measured AGAIN in round 7 against a fully
     // nested 3-round plan and a checkpoint-every-2nd variant (sf0.1, idle):
     // 5.98 s vs 7.16 s vs 7.02 s — the flat identical-shape rounds (codegen
     // compiled once, later rounds hit the source cache) keep winning.
-    val g = unweightedGraph(s, d)
+    val g = unweightedGraph(s, d, nodeFloor)
     // 8-partition override below the same edge floor (r13 optimization):
     // broadcast-mode rounds shuffle only the node-sized contribution
     // aggregate — KB stages whose 32-task floors dominate the round wall.
@@ -446,7 +433,7 @@ object GraphOps {
     */
   def pageRankConverged(s: SparkSession, d: String, epsFp: Long = 1000L,
       maxIters: Int = 200): (DataFrame, Int) = {
-    val g = unweightedGraph(s, d)
+    val g = unweightedGraph(s, d, BroadcastFloorNodes)
     InputScale.withAqeOffWhen(s, InputScale.smallGraph(g.nEdges)) {
     var r = prInit(g)
     var iters = 0
@@ -618,16 +605,16 @@ object GraphOps {
   }
 
   /** n2's full rank frame (node, r) — see [[n1RankFrame]]. */
-  private[graft] def n2RankFrame(s: SparkSession, d: String): DataFrame = {
+  private[graft] def n2RankFrame(s: SparkSession, d: String,
+      nodeFloor: Long = BroadcastFloorNodes): DataFrame = {
     // same round-7 shape as n1: in broadcast mode dst's weight-out rides
     // the fat edge frame (one broadcast + one map-side-combined aggregate
     // per round); in thin-edge scale mode the round re-acquires wout via
     // the node-sized degree join, exactly like n1's nextRank
-    val joint = jointEdges(s, d)
+    val joint = jointEdges(s, d, nodeFloor)
     val deg = jointDeg(s, d).select("node", "wout")
-    val meta = graphMeta((s, d))
-    val (nNodes, nEdges) = (meta.nNodes, meta.nEdges)
-    val bcast = meta.fatEdges // the layout recorded at artifact build
+    val GraphCounts(nNodes, nEdges) = graphCounts(s, d)
+    val bcast = fatLayout(s, d, nodeFloor)
     val edges = if (bcast) joint.select("src", "dst", "w", "dst_wout")
                 else joint.select("src", "dst", "w")
     // 8-partition override below the edge floor — see n1RankFrame
@@ -700,8 +687,9 @@ object GraphOps {
     * (prRound's localCheckpoint truncates the lineage before the join would
     * be visible in the returned top-20 frame).
     */
-  private[graft] def probeRound(s: SparkSession, d: String): DataFrame = {
-    val g = unweightedGraph(s, d)
+  private[graft] def probeRound(s: SparkSession, d: String,
+      nodeFloor: Long = BroadcastFloorNodes): DataFrame = {
+    val g = unweightedGraph(s, d, nodeFloor)
     val shares = prInit(g)
       .select(col("node").as("src"), expr("r div outdeg").as("share"))
     nextRank(g, shares)
@@ -717,7 +705,7 @@ object GraphOps {
     * ITERATIONS (the engine under test), not the one-time graph build.
     */
   def prewarm(s: SparkSession, d: String): Unit = {
-    val _ = jointEdges(s, d).count()
+    val _ = jointEdges(s, d, BroadcastFloorNodes).count()
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -105,7 +105,8 @@ object Similarity {
     * silently loses planes — and key bits, and recall — whenever the low id
     * range is sparse or non-contiguous), so both engines derive identical
     * planes without a shared RNG. Only 8-byte ids ride the one-task rank
-    * sort; the winners' vectors join back by id. Shared by s2 and Dedup.d8.
+    * sort; the winners' vectors join back by id. Shared by s2, s8, d13 and
+    * Dedup.d8 through the artifact below.
     */
   private[operators] def lshKeys(e: DataFrame): DataFrame = {
     val params = e.agg(count(lit(1)).as("n"))
@@ -126,6 +127,13 @@ object Similarity {
       .agg(sum(when(col("dot") > 0,
         expr("shiftleft(CAST(1 AS BIGINT), bit)")).otherwise(0L)).as("key"))
   }
+
+  /** [[lshKeys]] of `d`'s [[vecsD]], one cached artifact per (session, dir):
+    * each consumer reads the keys instead of deriving them again (the corpus
+    * x planes dot products, the plane-rank sort and the key aggregate). */
+  private[operators] def lshKeys(s: SparkSession, d: String): DataFrame =
+    ArtifactCache.getOrElseUpdate("similarity.lshKeys", s, d)(
+      withSmallBuild(s, d)(lshKeys(vecsD(s, d).cache()).cache()))
 
   /** Oracle CTE chain mirroring [[lshKeys]]: defines ev/params/planes/keyed.
     * DuckDB `//` floors and Spark `div` truncates, but every operand here is
@@ -170,8 +178,8 @@ object Similarity {
   // on (table, key) — the keyed corpus is L x rows of (key, id) pairs,
   // vectors rejoin by id after the (tiny) candidate dedup.
   private def s2LshAnn(s: SparkSession, d: String): DataFrame = {
-    val e = vecsD(s, d).cache() // reused: planes, signatures, query, corpus
-    val keyed = lshKeys(e)
+    val e = vecsD(s, d).cache() // reused: query, corpus
+    val keyed = lshKeys(s, d)
     val qk = keyed.where(col("vec_id") >= 100 && col("vec_id") < 105)
       .select(col("vec_id").as("qid"), col("tbl"), col("key"))
     val cand = broadcast(qk).join(keyed.select(col("vec_id").as("cid"), col("tbl"), col("key")),
@@ -1031,7 +1039,7 @@ object Similarity {
         Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))))
       .where(col("rk") <= RecallK)
       .select(col("qid"), col("cid"))
-    val keyed = lshKeys(e)
+    val keyed = lshKeys(s, d)
     val qk = keyed.where(col("vec_id") >= 100 && col("vec_id") < 105)
       .select(col("vec_id").as("qid"), col("tbl"), col("key"))
     val lshCand = broadcast(qk)
@@ -1245,7 +1253,7 @@ object Similarity {
   private def d13EmbedDecontaminate(s: SparkSession, d: String): DataFrame =
     withSmallBuild(s, d) {
       val e = vecsD(s, d).cache()
-      val keyed = lshKeys(e)
+      val keyed = lshKeys(s, d)
       val isEval = col("vec_id") % 50 === 0
       val evalK = keyed.where(isEval)
         .select(col("vec_id").as("eid"), col("tbl"), col("key"))

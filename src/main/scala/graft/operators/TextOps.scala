@@ -918,8 +918,8 @@ object TextOps {
   // The merge loop itself is GATED on the observed vocab size (the same
   // data-derived-gate idiom as PageRank's broadcast-vs-shuffle rank join):
   //
-  //  - vocab <= [[bpeDriverFloorVocab]] (default 8M rows — ~200 MB
-  //    collected; `ScaleProbe bpe 2000000` measured the driver loop still
+  //  - vocab <= the driver floor ([[BpeDriverFloorVocab]] for t19: 8M rows —
+  //    ~200 MB collected; `ScaleProbe bpe 2000000` measured the driver loop still
   //    2x FASTER than the distributed rounds at a 2M-word vocab, so the
   //    floor is a driver-memory bound, not a speed crossover):
   //    collect the word-frequency table and run the merge loop on the
@@ -936,43 +936,33 @@ object TextOps {
   //    no-ops, and the round emits no rule.
   //
   // Gate parity is pinned by Round8OpsSpec: both modes produce the identical
-  // merge table on the same corpus (the floor property forces the
-  // distributed path on a small fixture).
-  private val BpeMerges = 10
+  // merge table on the same corpus ([[bpeTrain]]'s `driverFloor` argument
+  // forces the distributed path on a small fixture).
+  private val BpeDriverFloorVocab = 8000000L
+  /** Merges the ORACLED t19/t20 queries learn (the DuckDB SQL hardcodes it);
+    * ScaleProbe passes a production-sized (32k+) count to [[bpeTrain]]. */
+  private[graft] val BpeMerges = 10
   private[graft] val BpeSep = "\u001f"
-  private[graft] def bpeDriverFloorVocab: Long =
-    sys.props.get("graft.bpe.driverFloorVocab").map(_.toLong).getOrElse(8000000L)
 
-  /** Total merges to learn — overridable so ScaleProbe can train a
-    * production-sized (32k+) vocabulary; the ORACLED t19/t20 queries run at
-    * the default, which the DuckDB SQL hardcodes.
-    */
-  private[graft] def bpeMergeCount: Int =
-    sys.props.get("graft.bpe.merges").map(_.toInt).getOrElse(BpeMerges)
-
-  /** Merges learned per counting round (default 1 = strict greedy, the
-    * oracle-matched mode). Batching is the standard distributed-BPE
-    * scaling trick: a 32k-merge vocab at batch 512 is ~64 counting jobs
-    * instead of 32768. A batch is a rank-ordered prefix of the pair
-    * counts filtered to INDEPENDENT pairs — no symbol appears in two
-    * accepted pairs — so (a) applying the batch in any order yields the
-    * same vocab, and (b) every accepted pair's recorded count is still
-    * its exact occurrence count at application time (an accepted merge
-    * can neither create nor destroy another accepted pair's adjacencies,
-    * since that would require a shared symbol). Divergence from strict
-    * greedy: after applying pick 1, a recount could promote a
-    * NEWLY-CREATED pair (one involving the just-merged symbol) above
-    * pick 2; batching uses the pre-round counts for all picks, so its
-    * picks 2..B can be "stale-best". The oracled queries always run at
-    * batch 1; ScaleProbe pins batched-vs-strict behavior at probe scale.
-    */
-  private[graft] def bpeBatchSize: Int =
-    sys.props.get("graft.bpe.batch").map(_.toInt).getOrElse(1)
-
-  /** Rank-ordered independent-prefix pick: walk candidates in
-    * (count DESC, l, r UTF-8) order, accept a pair iff neither symbol was
-    * used by an earlier accepted pair this round. Shared verbatim by the
-    * driver loop and the distributed rounds — the gate-parity contract.
+  /** One counting round's picks when `batch` merges are learned per round
+    * (1 = strict greedy, the oracle-matched mode t19 runs). Batching is the
+    * standard distributed-BPE scaling trick: a 32k-merge vocab at batch 512
+    * is ~64 counting jobs instead of 32768. A batch is a rank-ordered prefix
+    * of the pair counts filtered to INDEPENDENT pairs — no symbol appears in
+    * two accepted pairs — so (a) applying the batch in any order yields the
+    * same vocab, and (b) every accepted pair's recorded count is still its
+    * exact occurrence count at application time (an accepted merge can
+    * neither create nor destroy another accepted pair's adjacencies, since
+    * that would require a shared symbol). Divergence from strict greedy:
+    * after applying pick 1, a recount could promote a NEWLY-CREATED pair
+    * (one involving the just-merged symbol) above pick 2; batching uses the
+    * pre-round counts for all picks, so its picks 2..B can be "stale-best".
+    * ScaleProbe pins batched-vs-strict behavior at probe scale.
+    *
+    * The pick walks candidates in (count DESC, l, r UTF-8) order and accepts
+    * a pair iff neither symbol was used by an earlier accepted pair this
+    * round. Shared verbatim by the driver loop and the distributed rounds —
+    * the gate-parity contract.
     */
   private def pickIndependent(
       sorted: Iterator[((String, String), Long)], want: Int)
@@ -1039,17 +1029,15 @@ object TextOps {
     if (c != 0) c < 0 else cmp(a._2, b._2) < 0
   }
 
-  /** Driver-side greedy merge loop over the collected vocab — bit-identical
-    * to the distributed rounds (same freq weighting, same (count DESC, l, r)
-    * tie-break in UTF-8 byte order, same left-to-right non-overlapping
-    * within-word merge).
+  /** Driver-side greedy merge loop over the collected vocab: `total` merges,
+    * `batch` per counting round — bit-identical to the distributed rounds
+    * (same freq weighting, same (count DESC, l, r) tie-break in UTF-8 byte
+    * order, same left-to-right non-overlapping within-word merge).
     */
-  private def bpeDriverMerges(vocab0: Array[(Array[String], Long)])
+  private def bpeDriverMerges(vocab0: Array[(Array[String], Long)], total: Int, batch: Int)
       : Seq[(Int, String, String, Long)] = {
     var vocab = vocab0
     val out = Seq.newBuilder[(Int, String, String, Long)]
-    val total = bpeMergeCount
-    val batch = bpeBatchSize
     var emitted = 0
     var exhausted = false
     while (emitted < total && !exhausted) {
@@ -1115,106 +1103,106 @@ object TextOps {
     else s"trim($core, chr(31))"
   }
 
+  /** t19's merge table, memoized per (session, dir): [[BpeMerges]] strict
+    * greedy merges, collected below [[BpeDriverFloorVocab]] vocab rows. */
   private[graft] def t19BpeTrain(s: SparkSession, d: String): DataFrame =
-    ArtifactCache.getOrElseUpdate("bpe.merges", s, d) {
-      val freq = Tables.documents(s, d)
-        .select(explode(split(trim(col("text")), "\\s+")).as("word"))
-        .where(col("word") =!= "")
-        .groupBy("word").agg(count(lit(1)).as("freq"))
-      // chars -> SEP-joined symbols; drop the trailing separator the regex
-      // appends (result length is exactly 2*len(word)-1)
-      var words = freq.select(
-        expr(s"substring(regexp_replace(word, '(.)', '$$1$BpeSep'), 1, 2 * length(word) - 1)")
-          .as("seq"),
-        col("freq"))
-        .localCheckpoint()
-      val nVocab = words.count()
-      if (nVocab <= bpeDriverFloorVocab) {
-        val vocab0 = words.collect().map { r =>
-          (r.getString(0).split(BpeSep, -1), r.getLong(1))
-        }
-        import s.implicits._
-        bpeDriverMerges(vocab0)
-          .toDF("merge_idx", "lhs", "rhs", "pair_n")
-          .select(col("merge_idx"), col("lhs"), col("rhs"),
-            concat(col("lhs"), col("rhs")).as("merged"), col("pair_n"))
-          .orderBy("merge_idx")
-          .cache()
-      } else {
-        import s.implicits._
-        // distributed rounds: one vocab-sized pair-count job per round, a
-        // bounded TakeOrdered collect of the candidate pool (batch x 8
-        // rows — independence rejections skip down the ranking, and an
-        // under-filled batch just re-counts sooner, degrading toward
-        // strict greedy), then ONE projection applying the round's rules
-        // as a literal-array fold — no join. Only `words` checkpoints, so
-        // the per-round tree stays flat (e1's Lloyd-loop precedent).
-        val total = bpeMergeCount
-        val batch = bpeBatchSize
-        val merges = Seq.newBuilder[(Int, String, String, Long)]
-        var emitted = 0
-        var exhausted = false
-        while (emitted < total && !exhausted) {
-          val want = math.min(batch, total - emitted)
-          val pool = words
-            .where(instr(col("seq"), BpeSep) > 0) // >= 2 symbols
-            .select(col("freq"), split(col("seq"), BpeSep).as("a"))
-            .select(col("freq"), explode(
-              expr("transform(sequence(0, size(a) - 2), i -> struct(a[i] AS l, a[i + 1] AS r))"))
-              .as("p"))
-            .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-            .agg(sum(col("freq")).as("pair_n"))
-            .orderBy(col("pair_n").desc, col("l"), col("r"))
-            .limit(math.max(want * 8, 8))
-            .collect()
-            .map(r => ((r.getString(0), r.getString(1)), r.getLong(2)))
-          val picked = pickIndependent(pool.iterator, want)
-          if (picked.isEmpty) exhausted = true
-          else {
-            picked.foreach { case (l, r, c) =>
-              emitted += 1
-              merges += ((emitted, l, r, c))
-            }
-            // the whole INDEPENDENT batch applies in ONE pass over the
-            // symbol array (same argument as [[applyRules]]): each
-            // adjacency is checked once against the broadcast rule map —
-            // O(len) per word, where a per-rule replace chain would be
-            // O(len x batch) and dominated wall-clock at batch 512.
-            // try_element_at(__a, i+1) past the end -> NULL key -> no hit,
-            // so no bounds CASE is needed; the leading separator the fold
-            // accumulates is stripped by the final substring.
-            val mapCol = map(picked.flatMap { case (l, r, _) =>
-              Seq(lit(l + BpeSep + r), lit(l + r)) }: _*)
-            words = words
-              .withColumn("__m", mapCol)
-              .withColumn("__a", split(col("seq"), BpeSep))
-              .select(
-                expr(s"""CASE WHEN instr(seq, '$BpeSep') = 0 THEN seq ELSE
-                  substring(aggregate(
-                    sequence(1, size(__a)),
-                    named_struct('out', '', 'skip', false),
-                    (s, i) -> CASE
-                      WHEN s.skip THEN named_struct('out', s.out, 'skip', false)
-                      WHEN try_element_at(__m, concat(element_at(__a, i), '$BpeSep',
-                             try_element_at(__a, i + 1))) IS NOT NULL
-                        THEN named_struct('out', concat(s.out, '$BpeSep',
-                               element_at(__a, i), element_at(__a, i + 1)), 'skip', true)
-                      ELSE named_struct('out',
-                             concat(s.out, '$BpeSep', element_at(__a, i)), 'skip', false)
-                    END,
-                    s -> s.out), 2) END""").as("seq"),
-                col("freq"))
-              .localCheckpoint()
-          }
-        }
-        merges.result()
-          .toDF("merge_idx", "lhs", "rhs", "pair_n")
-          .select(col("merge_idx"), col("lhs"), col("rhs"),
-            concat(col("lhs"), col("rhs")).as("merged"), col("pair_n"))
-          .orderBy("merge_idx")
-          .cache()
+    ArtifactCache.getOrElseUpdate("bpe.merges", s, d)(bpeTrain(s, d, BpeDriverFloorVocab, BpeMerges, 1))
+
+  /** The (cached, unmemoized) merge table of `d`'s corpus: `merges` merges,
+    * `batch` per counting round, merged on the driver when the vocab has at
+    * most `driverFloor` rows and in distributed rounds above it. */
+  private[graft] def bpeTrain(s: SparkSession, d: String, driverFloor: Long, merges: Int,
+      batch: Int): DataFrame = {
+    val freq = Tables.documents(s, d)
+      .select(explode(split(trim(col("text")), "\\s+")).as("word"))
+      .where(col("word") =!= "")
+      .groupBy("word").agg(count(lit(1)).as("freq"))
+    // chars -> SEP-joined symbols; drop the trailing separator the regex
+    // appends (result length is exactly 2*len(word)-1)
+    var words = freq.select(
+      expr(s"substring(regexp_replace(word, '(.)', '$$1$BpeSep'), 1, 2 * length(word) - 1)")
+        .as("seq"),
+      col("freq"))
+      .localCheckpoint()
+    val nVocab = words.count()
+    val learned = if (nVocab <= driverFloor) {
+      val vocab0 = words.collect().map { r =>
+        (r.getString(0).split(BpeSep, -1), r.getLong(1))
       }
+      bpeDriverMerges(vocab0, merges, batch)
+    } else {
+      // distributed rounds: one vocab-sized pair-count job per round, a
+      // bounded TakeOrdered collect of the candidate pool (batch x 8
+      // rows — independence rejections skip down the ranking, and an
+      // under-filled batch just re-counts sooner, degrading toward
+      // strict greedy), then ONE projection applying the round's rules
+      // as a literal-array fold — no join. Only `words` checkpoints, so
+      // the per-round tree stays flat (e1's Lloyd-loop precedent).
+      val out = Seq.newBuilder[(Int, String, String, Long)]
+      var emitted = 0
+      var exhausted = false
+      while (emitted < merges && !exhausted) {
+        val want = math.min(batch, merges - emitted)
+        val pool = words
+          .where(instr(col("seq"), BpeSep) > 0) // >= 2 symbols
+          .select(col("freq"), split(col("seq"), BpeSep).as("a"))
+          .select(col("freq"), explode(
+            expr("transform(sequence(0, size(a) - 2), i -> struct(a[i] AS l, a[i + 1] AS r))"))
+            .as("p"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum(col("freq")).as("pair_n"))
+          .orderBy(col("pair_n").desc, col("l"), col("r"))
+          .limit(math.max(want * 8, 8))
+          .collect()
+          .map(r => ((r.getString(0), r.getString(1)), r.getLong(2)))
+        val picked = pickIndependent(pool.iterator, want)
+        if (picked.isEmpty) exhausted = true
+        else {
+          picked.foreach { case (l, r, c) =>
+            emitted += 1
+            out += ((emitted, l, r, c))
+          }
+          // the whole INDEPENDENT batch applies in ONE pass over the
+          // symbol array (same argument as [[applyRules]]): each
+          // adjacency is checked once against the broadcast rule map —
+          // O(len) per word, where a per-rule replace chain would be
+          // O(len x batch) and dominated wall-clock at batch 512.
+          // try_element_at(__a, i+1) past the end -> NULL key -> no hit,
+          // so no bounds CASE is needed; the leading separator the fold
+          // accumulates is stripped by the final substring.
+          val mapCol = map(picked.flatMap { case (l, r, _) =>
+            Seq(lit(l + BpeSep + r), lit(l + r)) }: _*)
+          words = words
+            .withColumn("__m", mapCol)
+            .withColumn("__a", split(col("seq"), BpeSep))
+            .select(
+              expr(s"""CASE WHEN instr(seq, '$BpeSep') = 0 THEN seq ELSE
+                substring(aggregate(
+                  sequence(1, size(__a)),
+                  named_struct('out', '', 'skip', false),
+                  (s, i) -> CASE
+                    WHEN s.skip THEN named_struct('out', s.out, 'skip', false)
+                    WHEN try_element_at(__m, concat(element_at(__a, i), '$BpeSep',
+                           try_element_at(__a, i + 1))) IS NOT NULL
+                      THEN named_struct('out', concat(s.out, '$BpeSep',
+                             element_at(__a, i), element_at(__a, i + 1)), 'skip', true)
+                    ELSE named_struct('out',
+                           concat(s.out, '$BpeSep', element_at(__a, i)), 'skip', false)
+                  END,
+                  s -> s.out), 2) END""").as("seq"),
+              col("freq"))
+            .localCheckpoint()
+        }
+      }
+      out.result()
     }
+    import s.implicits._
+    learned.toDF("merge_idx", "lhs", "rhs", "pair_n")
+      .select(col("merge_idx"), col("lhs"), col("rhs"),
+        concat(col("lhs"), col("rhs")).as("merged"), col("pair_n"))
+      .orderBy("merge_idx")
+      .cache()
+  }
 
   /** The DuckDB training-round CTEs (words0..words10, p_k, b_k) shared by
     * t19's merge-table oracle and t20's encoder oracle. All MATERIALIZED:

@@ -17,6 +17,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.api.RadoHydro
+import graft.ingest.Archives
 
 /** DataSourceV2 for directories of ESRI ASCII grid rasters (plain `.asc` or
   * inside `.tar`/`.tar.gz`/`.gz` archives) — the SURVEY X1 stretch goal: the
@@ -147,7 +148,7 @@ class AsciiGridPartitionReader(path: Path, conf: Configuration, datasource: Stri
     val name = path.getName
     def until(hi: Int) = if (hi == Int.MaxValue) Int.MaxValue else hi + 1
     val spec = RadoHydro.ScanSpec(datasource, (rowLo, until(rowHi)), (colLo, until(colHi)))
-    RadoHydro.scanFile(name, in, spec).flatMap { g =>
+    RadoHydro.scanFile(name, in, spec, new Archives.MemberBuffer).flatMap { g =>
       val tsMicros = g.ts.getTime / 1000 * 1000000L + g.ts.getNanos / 1000
       g.cells.map(c => InternalRow(tsMicros, c.row, c.col, c.value))
     }

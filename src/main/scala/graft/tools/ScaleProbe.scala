@@ -202,22 +202,19 @@ object ScaleProbe {
     }
     println(f"[graph-probe] pageRankConverged iters=$iters sec=$convSec%.1f per_round=${convSec / math.max(1, iters)}%.3f")
     // Broadcast-overflow gate parity AT PROBE SCALE: force the shuffle-join
-    // rank rounds by dropping the node floor to 1 (the same prop override
-    // GraphShuffleGateSpec uses), rebuild the graph artifacts under the new
-    // layout, and require bit-identical top-20 ranks from both modes for
-    // both PageRank variants. This is the scale-mode evidence the spec's
-    // sf0.001 fixture can't give: a 10x-bench edge list meeting the
-    // node-sized rank shuffle.
-    def ranks(name: String) = graft.SparkEntry.queries(name)(spark, dir)
-      .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
-    val (bcastN1, bcastN2) = (ranks("n1_pagerank"), ranks("n2_weighted_pagerank"))
-    val ((shufN1, shufN2), shufSec) = Probe.withProps("graft.graph.broadcastFloorNodes" -> "1") {
-      ArtifactCache.invalidate(spark, dir)
-      secs((ranks("n1_pagerank"), ranks("n2_weighted_pagerank")))
-    }
-    ArtifactCache.invalidate(spark, dir)
-    val parity = shufN1 == bcastN1 && shufN2 == bcastN2
-    println(f"[graph-probe] shuffle-mode gate parity=$parity sec=$shufSec%.1f (n1+n2, incl. artifact rebuild)")
+    // rank rounds with a node floor of 1 (as GraphShuffleGateSpec does),
+    // which builds the thin edge layout beside the fat one, and require
+    // bit-identical whole rank frames from both modes for both PageRank
+    // variants. This is the scale-mode evidence the spec's sf0.001 fixture
+    // can't give: a 10x-bench edge list meeting the node-sized rank shuffle.
+    import graft.operators.GraphOps
+    def ranks(nodeFloor: Long) =
+      Seq(GraphOps.n1RankFrame(spark, dir, nodeFloor), GraphOps.n2RankFrame(spark, dir, nodeFloor))
+        .map(_.orderBy("node").collect().toSeq)
+    val bcast = ranks(GraphOps.BroadcastFloorNodes)
+    val (shuf, shufSec) = secs(ranks(1L))
+    val parity = shuf == bcast
+    println(f"[graph-probe] shuffle-mode gate parity=$parity sec=$shufSec%.1f (n1+n2, incl. thin edge build)")
     println(s"""{"probe":"graph_scale","n_orders":$nOrders,"edge_partitions":$edgeParts,"converged":{"iters":$iters,"sec":$convSec,"per_round_sec":${convSec / math.max(1, iters)}},"gate_parity":$parity,"gate_shuffle_sec":$shufSec,"shuffle_total_mb":${meter.counts.shuffleBytes / 1e6},$parts}""")
   }
 
@@ -333,8 +330,8 @@ object ScaleProbe {
   // ---------------------------------------------------------------------------
   // `bpe` — BPE TRAINING ABOVE THE DRIVER FLOOR: synthesizes a corpus whose
   // VOCABULARY (not row count) is the scale axis — ~nWords distinct
-  // pseudo-random 3-8 letter words, 16 per document — so t19's merge loop
-  // crosses graft.bpe.driverFloorVocab and exercises the DISTRIBUTED rounds
+  // pseudo-random 3-8 letter words, 16 per document — so the merge loop can
+  // cross its driver floor and exercise the DISTRIBUTED rounds
   // at their design point (the sf corpora top out at a 31-word vocab, where
   // the driver path always wins). Reports both modes' wall time and requires
   // bit-identical merge tables — the same both-modes evidence contract as
@@ -362,21 +359,14 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     }
     // the merge table under a driver floor of `floor` vocab rows
-    def ranks(floor: Long) = Probe.withProps("graft.bpe.driverFloorVocab" -> floor.toString) {
-      ArtifactCache.invalidate(spark, dir)
-      secs(graft.SparkEntry.queries("t19_bpe_train")(spark, dir)
-        .collect().toSeq
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4))))
-    }
-    // force the distributed branch first (the default driver floor is 8M
-    // rows — above any probe vocab — so without the explicit floor both
-    // legs would take the driver path and parity would be trivially true),
-    // then the forced driver mode
-    val ((dist, distSec), (drv, drvSec)) = Probe.withProps(
-        "graft.bpe.merges" -> totalMerges.toString, "graft.bpe.batch" -> batch.toString) {
-      (ranks(1L), ranks(Long.MaxValue))
-    }
-    ArtifactCache.invalidate(spark, dir)
+    def ranks(floor: Long) = secs(graft.operators.TextOps.bpeTrain(spark, dir, floor, totalMerges, batch)
+      .collect().toSeq
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4))))
+    // force the distributed branch first (t19's driver floor is 8M rows —
+    // above any probe vocab — so without the explicit floor both legs would
+    // take the driver path and parity would be trivially true), then the
+    // forced driver mode
+    val ((dist, distSec), (drv, drvSec)) = (ranks(1L), ranks(Long.MaxValue))
     val parity = dist == drv
     if (totalMerges <= 20)
       println(s"[bpe-probe] merges=${dist.map(m => m._4 + ":" + m._5).mkString(",")}")

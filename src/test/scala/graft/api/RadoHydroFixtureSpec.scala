@@ -173,33 +173,53 @@ class RadoHydroFixtureSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(df.count() == 10L * Rows * Cols)
   }
 
-  test("the scan task allocates less than half the uncompressed size of a 900x900 archive") {
-    val members = (0 until 6).map { h =>
-      val sb = new StringBuilder(900 * 900 * 4)
-      sb ++= "ncols 900\nnrows 900\nxllcorner -523462.0\nyllcorner -4658645.0\ncellsize 1000.0\nNODATA_value -1.0\n"
-      for (r <- 0 until 900) {
-        var c = 0
-        while (c < 900) { if (c > 0) sb += ' '; sb.append((r * 31 + c * 17 + h * 7) % 1000); c += 1 }
-        sb += '\n'
-      }
-      Archives.Member(f"RW_20180101_$h%02d50.asc", sb.toString.getBytes("US-ASCII"))
+  /** A daily tar of six 900x900 ESRI ASCII hours (about 3 MB each). */
+  private def bigTar(day: Int): Array[Byte] = Archives.tar((0 until 6).map { h =>
+    val sb = new StringBuilder(900 * 900 * 4)
+    sb ++= "ncols 900\nnrows 900\nxllcorner -523462.0\nyllcorner -4658645.0\ncellsize 1000.0\nNODATA_value -1.0\n"
+    for (r <- 0 until 900) {
+      var c = 0
+      while (c < 900) { if (c > 0) sb += ' '; sb.append((r * 31 + c * 17 + h * 7 + day) % 1000); c += 1 }
+      sb += '\n'
     }
-    val tar = Archives.tar(members)
-    val archive = gzip(tar)
-    val spec = RadoHydro.ScanSpec("radolan", (400, 430), (400, 430))
-    val slots = SpatialPipeline.Slots(Array.range(0, 30 * 30), 30) // every window cell covered
-    def decode(): Int =
-      RadoHydro.gridRows("RW-20180101.tar.gz", new ByteArrayInputStream(archive), spec, slots, maskNodata = true)
-        .flatMap(_.readings(slots)).size
-    assert(decode() == 6 * 30 * 30)
+    Archives.Member(f"RW_201801$day%02d_$h%02d50.asc", sb.toString.getBytes("US-ASCII"))
+  })
+  private val bigSpec = RadoHydro.ScanSpec("radolan", (400, 430), (400, 430))
+  private val bigSlots = SpatialPipeline.Slots(Array.range(0, 30 * 30), 30) // every window cell covered
+
+  /** Bytes this thread allocates running `f`. */
+  private def allocatedBy[T](f: => T): Long = {
     val mx = java.lang.management.ManagementFactory.getThreadMXBean
       .asInstanceOf[com.sun.management.ThreadMXBean]
     val id = Thread.currentThread().getId
     val before = mx.getThreadAllocatedBytes(id)
-    decode()
-    val allocated = mx.getThreadAllocatedBytes(id) - before
+    f
+    mx.getThreadAllocatedBytes(id) - before
+  }
+
+  test("the scan task allocates less than half the uncompressed size of a 900x900 archive") {
+    val tar = bigTar(1)
+    val archive = gzip(tar)
+    def decode(): Int =
+      RadoHydro.gridRows("RW-20180101.tar.gz", new ByteArrayInputStream(archive), bigSpec, bigSlots,
+        maskNodata = true, new Archives.MemberBuffer).flatMap(_.readings(bigSlots)).size
+    assert(decode() == 6 * 30 * 30)
+    val allocated = allocatedBy(decode())
     info(s"allocated $allocated bytes decoding ${tar.length} uncompressed bytes")
     assert(allocated < tar.length / 2)
+  }
+
+  test("one scan task reads its archives into one buffer: the second allocates far less than the first") {
+    val dir = Files.createTempDirectory("rado_task")
+    val paths = Seq(1, 2).map(day => Files.write(dir.resolve(f"RW-201801$day%02d.tar.gz"), gzip(bigTar(day))).toString)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    def task() = RadoHydro.scanTask(paths.iterator, conf, bigSpec, bigSlots, maskNodata = true)
+    assert(task().map(_.file).toSeq == Seq.fill(6)("RW-20180101.tar.gz") ++ Seq.fill(6)("RW-20180102.tar.gz"))
+    val rows = task() // warm: the Hadoop FileSystem and the decoders are loaded
+    val first = allocatedBy((1 to 6).foreach(_ => rows.next()))
+    val second = allocatedBy(rows.foreach(_ => ()))
+    info(s"allocated $first bytes for the first archive, $second for the second")
+    assert(second < first / 2)
   }
 }
 

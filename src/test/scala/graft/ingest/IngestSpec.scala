@@ -233,7 +233,7 @@ class ArchivesSpec extends AnyFunSuite {
     val bytes = Archives.tar(Seq(Archives.Member("grid.asc", Array.fill[Byte](1024)(5))))
     System.arraycopy("100000000000".getBytes("US-ASCII"), 0, bytes, 124, 12) // 8 GiB, octal
     def decode(): String = intercept[IllegalArgumentException] {
-      Archives.members("d.tar", new java.io.ByteArrayInputStream(bytes)).foreach(_ => ())
+      Archives.members("d.tar", new java.io.ByteArrayInputStream(bytes), new Archives.MemberBuffer).foreach(_ => ())
     }.getMessage
     decode() // class loading
     val (msg, n) = allocated(decode())
@@ -247,17 +247,17 @@ class ArchivesSpec extends AnyFunSuite {
   test("a flipped CRC byte in the gzip trailer of a .tar.gz throws through the streaming path") {
     val members = Seq(Archives.Member("RW_20180101_0050.asc", Array.fill[Byte](3000)('7')))
     val good = gzip(Archives.tar(members))
-    assert(Archives.members("d.tar.gz", new java.io.ByteArrayInputStream(good)).map(_.length).toSeq == Seq(3000))
+    assert(Archives.members("d.tar.gz", new java.io.ByteArrayInputStream(good), new Archives.MemberBuffer).map(_.length).toSeq == Seq(3000))
     val bad = good.clone()
     bad(bad.length - 8) = (bad(bad.length - 8) ^ 0x01).toByte // first CRC32 byte
     intercept[java.util.zip.ZipException] {
-      Archives.members("d.tar.gz", new java.io.ByteArrayInputStream(bad)).foreach(_ => ())
+      Archives.members("d.tar.gz", new java.io.ByteArrayInputStream(bad), new Archives.MemberBuffer).foreach(_ => ())
     }
   }
 
   test("streamed members equal two expand passes: .gz members, and a monthly tar pruned by day") {
     def streamed(name: String, b: Array[Byte], keep: String => Boolean) =
-      Archives.members(name, new java.io.ByteArrayInputStream(b), keep)
+      Archives.members(name, new java.io.ByteArrayInputStream(b), new Archives.MemberBuffer, keep)
         .map(m => m.name -> new String(m.bytes, 0, m.length)).toSeq
     def twoPass(name: String, b: Array[Byte], keep: String => Boolean) =
       Archives.expand(name, b).filter(m => keep(m.name)).flatMap(m => Archives.expand(m.name, m.bytes))

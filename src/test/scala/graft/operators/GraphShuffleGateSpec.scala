@@ -8,15 +8,16 @@ import graft.tools.PlanAudit
 /** Pins the PageRank broadcast-overflow fallback (round-7 verdict #2): the
   * data-derived gate that switches every per-round rank join from broadcast
   * to a node-sized shuffle against the src-hash-partitioned edge cache once
-  * the OBSERVED node count clears [[GraphOps.broadcastFloorNodes]].
+  * the OBSERVED node count clears the node floor.
   *
   * Three claims, each load-bearing at web scale:
-  *  1. the gate's flip point is exactly the floor (and the floor is
-  *     overridable, which is how this spec forces the scale path on a
-  *     64-node fixture);
+  *  1. the gate's flip point is exactly the floor (and the floor is an
+  *     argument, which is how this spec forces the scale path on a 64-node
+  *     fixture);
   *  2. shuffle mode produces BIT-IDENTICAL ranks to broadcast mode for both
   *     PageRank variants — integer fixed-point arithmetic has no
-  *     order-dependence, so the physical strategy cannot leak into results;
+  *     order-dependence, so the physical strategy cannot leak into results —
+  *     and one session serves both edge layouts, whichever it built first;
   *  3. shuffle mode's round plan actually contains no broadcast join (the
   *     rank frame meets the edge cache via shuffle), proven on the live
   *     plan tree, not the rendered string.
@@ -24,104 +25,47 @@ import graft.tools.PlanAudit
 class GraphShuffleGateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
-  private val FloorKey = "graft.graph.broadcastFloorNodes"
 
-  private def withFloor[T](v: Option[String])(f: => T): T = {
-    val prev = sys.props.get(FloorKey)
-    v match {
-      case Some(x) => sys.props(FloorKey) = x
-      case None => sys.props.remove(FloorKey)
-    }
-    // the memoized edge cache's layout (coalesced vs hash-partitioned)
-    // follows the gate, so artifacts must rebuild under the new floor
-    ArtifactCache.invalidate(spark, sf)
-    try f
-    finally {
-      prev match {
-        case Some(x) => sys.props(FloorKey) = x
-        case None => sys.props.remove(FloorKey)
-      }
-      ArtifactCache.invalidate(spark, sf)
-    }
+  private def ranks(nodeFloor: Long) =
+    Seq(GraphOps.n1RankFrame(spark, sf, nodeFloor), GraphOps.n2RankFrame(spark, sf, nodeFloor))
+      .map(_.orderBy("node").collect().toSeq)
+
+  private def roundNodes(nodeFloor: Long) = {
+    val round = GraphOps.probeRound(spark, sf, nodeFloor)
+    round.write.format("noop").mode("overwrite").save()
+    PlanAudit.liveNodes(round.queryExecution.executedPlan)
   }
+
+  private def broadcasts(nodeFloor: Long): Boolean =
+    roundNodes(nodeFloor).exists(_.isInstanceOf[BroadcastHashJoinExec])
 
   test("gate flips exactly at the observed-node floor, and the floor is overridable") {
-    assert(GraphOps.broadcastRanks(GraphOps.broadcastFloorNodes))
-    assert(!GraphOps.broadcastRanks(GraphOps.broadcastFloorNodes + 1))
-    val prev = sys.props.get(FloorKey)
-    try {
-      sys.props(FloorKey) = "7"
-      assert(GraphOps.broadcastFloorNodes === 7L)
-      assert(GraphOps.broadcastRanks(7L) && !GraphOps.broadcastRanks(8L))
-    } finally prev match {
-      case Some(x) => sys.props(FloorKey) = x
-      case None => sys.props.remove(FloorKey)
-    }
+    val nNodes = GraphOps.graphCounts(spark, sf).nNodes
+    assert(broadcasts(nNodes), "a graph AT the floor must broadcast its rank joins")
+    assert(!broadcasts(nNodes - 1), "a graph one node over the floor must shuffle")
   }
 
-  test("shuffle-mode ranks are bit-identical to broadcast mode for n1 and n2") {
-    def run(): (Seq[(String, Long)], Seq[(String, Long)]) = {
-      def ranks(q: String) = GraphOps.queries(q)(spark, sf)
-        .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
-      (ranks("n1_pagerank"), ranks("n2_weighted_pagerank"))
-    }
-    val (b1, b2) = withFloor(None)(run()) // default floor: broadcast mode
-    val (s1, s2) = withFloor(Some("1"))(run()) // every graph is "too big"
-    assert(s1 === b1, "n1 diverged between broadcast and shuffle rank joins")
-    assert(s2 === b2, "n2 diverged between broadcast and shuffle rank joins")
-  }
-
-  test("a floor flip AFTER the artifact build cannot desync queries from the cache layout") {
-    // the edge cache's columns/partitioning are fixed at build; queries gate
-    // on the layout RECORDED then (graphMeta.fatEdges), so a live prop flip
-    // without an artifact rebuild must neither throw (thin cache + broadcast
-    // plan would miss dst_outdeg) nor change results
-    def ranks(q: String) = GraphOps.queries(q)(spark, sf)
-      .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
-    def flipped[T](v: String)(f: => T): T = { // NO ArtifactCache.invalidate
-      val prev = sys.props.get(FloorKey)
-      sys.props(FloorKey) = v
-      try f
-      finally prev match {
-        case Some(x) => sys.props(FloorKey) = x
-        case None => sys.props.remove(FloorKey)
-      }
-    }
-    withFloor(None) { // FAT cache built under the default floor
-      val b1 = ranks("n1_pagerank")
-      val b2 = ranks("n2_weighted_pagerank")
-      flipped("1") { // prop now says shuffle mode; the fat cache still rules
-        assert(ranks("n1_pagerank") === b1)
-        assert(ranks("n2_weighted_pagerank") === b2)
-      }
-    }
-    withFloor(Some("1")) { // THIN cache built above the floor
-      val s1 = ranks("n1_pagerank")
-      flipped(Long.MaxValue.toString) { // prop says broadcast; thin cache rules
-        assert(ranks("n1_pagerank") === s1)
-      }
-    }
+  test("one session serves both edge layouts in either order with bit-identical n1 and n2 ranks") {
+    // a fresh artifact state before each order, so its first layout is
+    // the one built first
+    ArtifactCache.invalidate(spark, sf)
+    val fatFirst = Seq(ranks(GraphOps.BroadcastFloorNodes), ranks(1L)) // 1: every graph is "too big"
+    ArtifactCache.invalidate(spark, sf)
+    val thinFirst = Seq(ranks(1L), ranks(GraphOps.BroadcastFloorNodes))
+    assert(fatFirst.head.forall(_.nonEmpty))
+    (fatFirst.tail ++ thinFirst).foreach(r =>
+      assert(r === fatFirst.head, "n1/n2 diverged between broadcast and shuffle rank joins"))
   }
 
   test("above the floor the round plan joins ranks by shuffle, not broadcast") {
-    withFloor(Some("1")) {
-      val round = GraphOps.probeRound(spark, sf)
-      round.write.format("noop").mode("overwrite").save()
-      val nodes = PlanAudit.liveNodes(round.queryExecution.executedPlan)
-      assert(!nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]),
-        "rank join still broadcasts above the node floor")
-      assert(nodes.exists(n => n.isInstanceOf[ShuffledHashJoinExec]
-          || n.isInstanceOf[SortMergeJoinExec]),
-        "no shuffle-side join found in the scale-mode round plan")
-    }
+    val nodes = roundNodes(1L)
+    assert(!nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      "rank join still broadcasts above the node floor")
+    assert(nodes.exists(n => n.isInstanceOf[ShuffledHashJoinExec]
+        || n.isInstanceOf[SortMergeJoinExec]),
+      "no shuffle-side join found in the scale-mode round plan")
     // and below the floor (the default on this fixture) the broadcast plan
     // is intact — the gate is a switch, not a regression
-    withFloor(None) {
-      val round = GraphOps.probeRound(spark, sf)
-      round.write.format("noop").mode("overwrite").save()
-      val nodes = PlanAudit.liveNodes(round.queryExecution.executedPlan)
-      assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]),
-        "bench-scale round lost its broadcast rank join")
-    }
+    assert(broadcasts(GraphOps.BroadcastFloorNodes), "bench-scale round lost its broadcast rank join")
   }
 }

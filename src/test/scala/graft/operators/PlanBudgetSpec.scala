@@ -50,7 +50,7 @@ class PlanBudgetSpec extends AnyFunSuite {
       "d10_decontaminate" -> Budget(4, 0),
       "d11_dup_spans" -> Budget(5, 0),
       "d12_incremental" -> Budget(4, 0),
-      "d13_embed_decontaminate" -> Budget(9, 4),
+      "d13_embed_decontaminate" -> Budget(3, 0),
       "d1_exact_dedup" -> Budget(2, 0),
       "d2_minhash_sigs" -> Budget(1, 0),
       "d3_minhash_pairs" -> Budget(1, 0),
@@ -58,7 +58,7 @@ class PlanBudgetSpec extends AnyFunSuite {
       "d5_ngram_jaccard" -> Budget(2, 0),
       "d6_embed_cosine" -> Budget(1, 0),
       "d7_simhash_pairs" -> Budget(2, 0),
-      "d8_embed_lsh_dedup" -> Budget(6, 2),
+      "d8_embed_lsh_dedup" -> Budget(3, 0),
       "d9_dedup_groups" -> Budget(1, 0),
       "e1_kmeans" -> Budget(1, 0),
       "e2_semdedup" -> Budget(3, 0),
@@ -104,13 +104,13 @@ class PlanBudgetSpec extends AnyFunSuite {
       "s10_date_sequence" -> Budget(1, 0),
       "s10_nprobe_calibrate" -> Budget(6, 5),
       "s1_cosine_topk" -> Budget(2, 1),
-      "s2_lsh_ann" -> Budget(9, 4),
+      "s2_lsh_ann" -> Budget(3, 0),
       "s3_ivf_ann" -> Budget(2, 0),
       "s4_scalar_quant" -> Budget(2, 1),
       "s5_pq_adc" -> Budget(2, 1),
       "s6_mmr_rerank" -> Budget(1, 0),
       "s7_ivfpq_ann" -> Budget(2, 0),
-      "s8_ann_recall" -> Budget(21, 9),
+      "s8_ann_recall" -> Budget(9, 1),
       "s9_filtered_ann" -> Budget(2, 0),
       "st1_tumbling_window" -> Budget(2, 0),
       "st2_sliding_window" -> Budget(2, 0),

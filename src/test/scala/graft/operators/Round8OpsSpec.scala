@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.TestSpark
 
@@ -15,29 +15,18 @@ class Round8OpsSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def runT19(): Seq[(Int, String, String, String, Long)] =
-    TextOps.queries("t19_bpe_train")(spark, sf)
-      .collect()
+    merges(TextOps.queries("t19_bpe_train")(spark, sf))
+
+  private def merges(table: DataFrame): Seq[(Int, String, String, String, Long)] =
+    table.collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
       .toSeq
 
   test("t19 gate parity: driver-collected and distributed merge loops agree") {
-    ArtifactCache.invalidate(spark, sf)
-    val driver = runT19() // default floor: vocab is tiny -> driver path
+    val driver = runT19() // t19's driver floor: vocab is tiny -> driver path
     assert(driver.nonEmpty && driver.size <= 10)
-    val floorKey = "graft.bpe.driverFloorVocab"
-    val prev = sys.props.get(floorKey)
-    sys.props(floorKey) = "0" // force the distributed rounds
-    ArtifactCache.invalidate(spark, sf)
-    try {
-      val dist = runT19()
-      assert(dist === driver)
-    } finally {
-      prev match {
-        case Some(v) => sys.props(floorKey) = v
-        case None => sys.props.remove(floorKey)
-      }
-      ArtifactCache.invalidate(spark, sf)
-    }
+    // driver floor 0 forces the distributed rounds
+    assert(merges(TextOps.bpeTrain(spark, sf, 0L, TextOps.BpeMerges, 1)) === driver)
   }
 
   test("t19 merges re-derive from a third, array-based greedy implementation") {

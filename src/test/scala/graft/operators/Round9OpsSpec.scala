@@ -42,50 +42,21 @@ class Round9OpsSpec extends AnyFunSuite {
     (2, "w", "e", "we", 6L),
     (3, "qw", "e", "qwe", 3L))
 
-  private def runT19(dir: String): Seq[(Int, String, String, String, Long)] =
-    TextOps.queries("t19_bpe_train")(spark, dir)
+  /** The merge table of `dir`'s corpus, merged on the driver below
+    * `driverFloor` vocab rows and in distributed rounds above it. */
+  private def train(dir: String, driverFloor: Long, batch: Int = 1)
+      : Seq[(Int, String, String, String, Long)] =
+    TextOps.bpeTrain(spark, dir, driverFloor, TextOps.BpeMerges, batch)
       .collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
       .toSeq
 
   test("t19 exact-symbol merges: chained picks do not alias substring boundaries (driver mode)") {
-    val floorKey = "graft.bpe.driverFloorVocab"
-    val prev = sys.props.get(floorKey)
-    sys.props(floorKey) = Long.MaxValue.toString
-    ArtifactCache.invalidate(spark, chainDir)
-    try assert(runT19(chainDir) === expectedChain)
-    finally {
-      prev match {
-        case Some(v) => sys.props(floorKey) = v
-        case None => sys.props.remove(floorKey)
-      }
-      ArtifactCache.invalidate(spark, chainDir)
-    }
+    assert(train(chainDir, Long.MaxValue) === expectedChain)
   }
 
   test("t19 exact-symbol merges: chained picks do not alias substring boundaries (distributed mode)") {
-    val floorKey = "graft.bpe.driverFloorVocab"
-    val prev = sys.props.get(floorKey)
-    sys.props(floorKey) = "0" // force the distributed rounds
-    ArtifactCache.invalidate(spark, chainDir)
-    try assert(runT19(chainDir) === expectedChain)
-    finally {
-      prev match {
-        case Some(v) => sys.props(floorKey) = v
-        case None => sys.props.remove(floorKey)
-      }
-      ArtifactCache.invalidate(spark, chainDir)
-    }
-  }
-
-  private def withProps(kv: (String, String)*)(body: => Unit): Unit = {
-    val prev = kv.map { case (k, _) => k -> sys.props.get(k) }
-    kv.foreach { case (k, v) => sys.props(k) = v }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => sys.props(k) = v
-      case (k, None) => sys.props.remove(k)
-    }
+    assert(train(chainDir, 0L) === expectedChain) // floor 0 forces the distributed rounds
   }
 
   test("t19 batched merges (independent-prefix pick) reproduce strict greedy when rejections force it") {
@@ -93,13 +64,8 @@ class Round9OpsSpec extends AnyFunSuite {
     // the winner), so a batch of 3 degenerates to 1 accepted pick per
     // round — the batched loop must still emit the exact strict table, in
     // both modes
-    for (floor <- Seq("0", Long.MaxValue.toString)) {
-      withProps("graft.bpe.batch" -> "3", "graft.bpe.driverFloorVocab" -> floor) {
-        ArtifactCache.invalidate(spark, chainDir)
-        try assert(runT19(chainDir) === expectedChain, s"floor=$floor")
-        finally ArtifactCache.invalidate(spark, chainDir)
-      }
-    }
+    for (floor <- Seq(0L, Long.MaxValue))
+      assert(train(chainDir, floor, batch = 3) === expectedChain, s"floor=$floor")
   }
 
   test("t19 batched merges pack independent pairs into one round with exact counts") {
@@ -115,13 +81,8 @@ class Round9OpsSpec extends AnyFunSuite {
         lit(text.length.toLong).as("n_chars"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val expected = Seq((1, "a", "b", "ab", 5L), (2, "c", "d", "cd", 3L))
-    for (floor <- Seq("0", Long.MaxValue.toString)) {
-      withProps("graft.bpe.batch" -> "2", "graft.bpe.driverFloorVocab" -> floor) {
-        ArtifactCache.invalidate(spark, dir)
-        try assert(runT19(dir) === expected, s"floor=$floor")
-        finally ArtifactCache.invalidate(spark, dir)
-      }
-    }
+    for (floor <- Seq(0L, Long.MaxValue))
+      assert(train(dir, floor, batch = 2) === expected, s"floor=$floor")
   }
 
   /** Independent reference encoder: the classic min-rank-pair iteration
@@ -153,7 +114,6 @@ class Round9OpsSpec extends AnyFunSuite {
 
   test("t20 encode matches the independent min-rank-iteration encoder on the sf corpus") {
     val sf = "/root/testdata/sf0.001"
-    ArtifactCache.invalidate(spark, sf)
     val ranks = TextOps.queries("t19_bpe_train")(spark, sf).collect()
       .map(r => (r.getString(1), r.getString(2)) -> r.getInt(0)).toMap
     val got = TextOps.queries("t20_bpe_encode")(spark, sf).collect()
@@ -174,22 +134,12 @@ class Round9OpsSpec extends AnyFunSuite {
   }
 
   test("brute-force baseline refuses corpora beyond the declared driver-collect ceiling") {
-    val key = "graft.brute.maxRows"
-    val prev = sys.props.get(key)
-    sys.props(key) = "3" // tiny ceiling so the sf fixture trips it
-    try {
-      val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-        .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      val ex = intercept[IllegalArgumentException] {
-        BruteForce.cosinePairs(e, 0.38).collect()
-      }
-      assert(ex.getMessage.contains("d8_embed_lsh_dedup"),
-        s"guard must name the scale path: ${ex.getMessage}")
-    } finally {
-      prev match {
-        case Some(v) => sys.props(key) = v
-        case None => sys.props.remove(key)
-      }
+    val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+    val ex = intercept[IllegalArgumentException] {
+      BruteForce.cosinePairs(e, 0.38, maxRows = 3).collect() // tiny ceiling: the sf fixture trips it
     }
+    assert(ex.getMessage.contains("d8_embed_lsh_dedup"),
+      s"guard must name the scale path: ${ex.getMessage}")
   }
 }
