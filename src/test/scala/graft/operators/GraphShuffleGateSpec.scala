@@ -17,7 +17,7 @@ import graft.tools.PlanAudit
   *  2. shuffle mode produces BIT-IDENTICAL ranks to broadcast mode for both
   *     PageRank variants — integer fixed-point arithmetic has no
   *     order-dependence, so the physical strategy cannot leak into results —
-  *     and one session serves both edge layouts, whichever it built first;
+  *     and a floor flip after one layout's build cannot desync the other;
   *  3. shuffle mode's round plan actually contains no broadcast join (the
   *     rank frame meets the edge cache via shuffle), proven on the live
   *     plan tree, not the rendered string.
@@ -45,16 +45,26 @@ class GraphShuffleGateSpec extends AnyFunSuite {
     assert(!broadcasts(nNodes - 1), "a graph one node over the floor must shuffle")
   }
 
-  test("one session serves both edge layouts in either order with bit-identical n1 and n2 ranks") {
-    // a fresh artifact state before each order, so its first layout is
-    // the one built first
+  test("shuffle-mode ranks are bit-identical to broadcast mode for n1 and n2") {
     ArtifactCache.invalidate(spark, sf)
-    val fatFirst = Seq(ranks(GraphOps.BroadcastFloorNodes), ranks(1L)) // 1: every graph is "too big"
+    val broadcast = ranks(GraphOps.BroadcastFloorNodes)
+    ArtifactCache.invalidate(spark, sf)
+    val shuffle = ranks(1L) // 1: every graph is "too big"
+    assert(broadcast.forall(_.nonEmpty))
+    assert(shuffle === broadcast, "n1/n2 diverged between broadcast and shuffle rank joins")
+  }
+
+  test("a floor flip AFTER the artifact build cannot desync queries from the cache layout") {
+    // each layout is its own artifact, so a query at the other floor reads
+    // (or builds) the layout it needs, whichever was built first in the
+    // session; a fresh artifact state before each order keeps the order real
+    ArtifactCache.invalidate(spark, sf)
+    val fatFirst = Seq(ranks(GraphOps.BroadcastFloorNodes), ranks(1L))
     ArtifactCache.invalidate(spark, sf)
     val thinFirst = Seq(ranks(1L), ranks(GraphOps.BroadcastFloorNodes))
     assert(fatFirst.head.forall(_.nonEmpty))
     (fatFirst.tail ++ thinFirst).foreach(r =>
-      assert(r === fatFirst.head, "n1/n2 diverged between broadcast and shuffle rank joins"))
+      assert(r === fatFirst.head, "n1/n2 changed with the order the edge layouts were built in"))
   }
 
   test("above the floor the round plan joins ranks by shuffle, not broadcast") {
